@@ -797,10 +797,12 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                 Seq("src", "dst"), "left_anti")
             }
             eprops.foreach { case (k, v) => rows = rows.withColumn(k, lit(v)) }
-            val n = rows.count()
+            // materialized by the count's own job (see the MATCH…INSERT
+            // path): the anti-join stays out of the edge table's lineage
+            val (delta, n) = graft.graph.PropertyGraph.materializedCount(rows)
             if (n > 0) {
               val et = graft.graph.EdgeType(etype, srcO.label, dstO.label)
-              currentGraph = Some(graph2.insertEdges(graph, etype, et, rows))
+              currentGraph = Some(graph2.insertEdges(graph, etype, et, delta))
             }
             (etype, n,
               if (n == 0L) "Duplicate edge detected: 1 duplicate(s) skipped"
@@ -927,10 +929,14 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
           }
           edgeProps.foreach { case (k, v) =>
             rows = rows.withColumn(k, lit(v)) }
-          val n = rows.count()
+          // the new rows are materialized by the job that counts them:
+          // left lazy, they embed the MATCH and the anti-join against the
+          // table's previous version, so every insert doubled the edge
+          // table's lineage and each later read and save re-ran all of it
+          val (delta, n) = graft.graph.PropertyGraph.materializedCount(rows)
           val et = graft.graph.EdgeType(label,
             varLabels.getOrElse(xVar, ""), varLabels.getOrElse(yVar, ""))
-          currentGraph = Some(graph2.insertEdges(graph, label, et, rows))
+          currentGraph = Some(graph2.insertEdges(graph, label, et, delta))
           n
         }
         var total = 0L
@@ -1096,9 +1102,11 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
           currentGraph = Some(graph2.deleteEdges(graph, label, pred))
           Seq(affected).toDF("edges_deleted")
         } else {
-          val affected = graph.nodeScan(label, Some(pred)).count()
-          currentGraph = Some(graph2.deleteNodes(graph, label, pred, detach))
-          Seq(affected).toDF("nodes_deleted")
+          // the doomed ids are materialized by the job that counts them
+          val doomed = graft.graph.PropertyGraph.materializedCount(
+            graph.nodeScan(label, Some(pred)).select(col("id")))
+          currentGraph = Some(graph2.deleteNodesIn(graph, label, doomed, detach))
+          Seq(doomed._2).toDF("nodes_deleted")
         }
 
       case CatalogStmt(op, kind, rawSchema, g, typed, ifNotExists, cascade) =>
@@ -1584,13 +1592,13 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
         // cast back to each table's own id type (the union may have
         // widened mixed Long/string ids to string)
         def perUnionLabel(v: String)(
-            apply: (String, DataFrame) => Unit): Long = {
+            apply: (String, (DataFrame, Long)) => Unit): Long = {
           graph.nodeTables.keys.toSeq.sorted.foreach { lbl =>
             val idT = graph.nodeTables(lbl).schema("id").dataType
-            val ids = bdf.filter(col(s"${v}_label") === lit(lbl))
-              .select(col(s"${v}_id").cast(idT).as("id")).distinct()
-              .transform(graft.graph.PropertyGraph.materialized)
-            if (ids.count() > 0) apply(lbl, ids)
+            val ids = graft.graph.PropertyGraph.materializedCount(
+              bdf.filter(col(s"${v}_label") === lit(lbl))
+                .select(col(s"${v}_id").cast(idT).as("id")).distinct())
+            if (ids._2 > 0) apply(lbl, ids)
           }
           // the mutation applies once per label TABLE (a multi-label
           // node is the same id row in every table, see the INSERT
@@ -1611,9 +1619,8 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                     // (emptyHop): zero rows, nothing to delete
                     if (!graph.edgeTables.contains(eb.primary)) 0L
                     else {
-                      val eids = bdf.select(col(s"${target}_eid").as("eid"))
-                        .distinct().transform(graft.graph.PropertyGraph.materialized)
-                      val c = eids.count()
+                      val (eids, c) = graft.graph.PropertyGraph.materializedCount(
+                        bdf.select(col(s"${target}_eid").as("eid")).distinct())
                       currentGraph = Some(
                         graph2.deleteEdgesIn(graph, eb.primary, eids))
                       c
@@ -1622,11 +1629,9 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                     var g = graph
                     var total = 0L
                     eb.types.foreach { t =>
-                      val eids = bdf
-                        .filter(col(s"${target}_label") === lit(t))
-                        .select(col(s"${target}_eid").as("eid"))
-                        .distinct().transform(graft.graph.PropertyGraph.materialized)
-                      val c = eids.count()
+                      val (eids, c) = graft.graph.PropertyGraph.materializedCount(
+                        bdf.filter(col(s"${target}_label") === lit(t))
+                          .select(col(s"${target}_eid").as("eid")).distinct())
                       if (c > 0) { g = graph2.deleteEdgesIn(g, t, eids) }
                       total += c
                     }
@@ -1643,11 +1648,10 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                 Seq(n).toDF("nodes_deleted")
               case _ =>
                 val label = nodeLabelOf(target)
-                val ids = bdf.select(col(s"${target}_id").as("id")).distinct()
-                  .transform(graft.graph.PropertyGraph.materialized)
-                val n = ids.count()
+                val ids = graft.graph.PropertyGraph.materializedCount(
+                  bdf.select(col(s"${target}_id").as("id")).distinct())
                 currentGraph = Some(graph2.deleteNodesIn(graph, label, ids, detach))
-                Seq(n).toDF("nodes_deleted")
+                Seq(ids._2).toDF("nodes_deleted")
             }
           case "SET" =>
             // SET clauses may target several pipeline variables
@@ -1736,18 +1740,18 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                 bindings.get(v) match {
                   case Some(compiler.UnionNode) =>
                     total += perUnionLabel(v) { (lbl, ids) =>
-                      val withNulls = prs.foldLeft(ids)((d, pr) =>
+                      val withNulls = prs.foldLeft(ids._1)((d, pr) =>
                         d.withColumn(pr.prop, lit(null)))
                       g = graph2.setNodePropsFrom(g, lbl, withNulls,
                         prs.map(_.prop))
                     }
                   case _ =>
                     val label = nodeLabelOf(v)
-                    val updates = bdf.select(col(s"${v}_id").as("id"))
-                      .distinct().transform(graft.graph.PropertyGraph.materialized)
+                    val (updates, n) = graft.graph.PropertyGraph.materializedCount(
+                      bdf.select(col(s"${v}_id").as("id")).distinct())
                     val withNulls = prs.foldLeft(updates)((d, pr) =>
                       d.withColumn(pr.prop, lit(null)))
-                    total += updates.count()
+                    total += n
                     g = graph2.setNodePropsFrom(g, label, withNulls,
                       prs.map(_.prop))
                 }

@@ -68,7 +68,8 @@ object ProfileR21 {
           .filter(col("doc_id") < 20)
           .select((col("doc_id") + 1000000L).as("id"), col("text"))
         val batch = docs.unionByName(run2extra)
-        val n = 3; val numHashes = 32; val nBands = 8
+        import graft.queries.PipelineQueries.{NearBands, NearHashes, NearN}
+        val (n, numHashes, nBands) = (NearN, NearHashes, NearBands)
         val rpb = numHashes / nBands
         val sigs = batch
           .select(col("id"), graft.dedup.Dedup.shingleHashes(col("text"), n).as("shingles"))

@@ -770,7 +770,7 @@ object ScaleProbe {
       // probes run one single-row DML on a persisted customer label and
       // save incrementally; the *_bucketed variant's label carries a
       // 16-bucket clustered index, so the save rewrites ONLY the touched
-      // bucket(s) and hard-links the rest (GraphCatalog.writeBucketScoped)
+      // bucket(s) and hard-links the rest (GraphCatalog.touchedBuckets)
       // while the *_full variant pays the label's whole clustered
       // rewrite. The gap between the two rows is the incremental-
       // maintenance dividend the bucketed layout exists for at 100 TB.

@@ -19,13 +19,20 @@ object Analytics {
 
   /** Free the block-manager blocks behind a localCheckpoint'd frame.
     * Dataset.unpersist only touches CacheManager entries, not checkpoint
-    * RDDs — reach the LogicalRDD leaf and unpersist its RDD directly.
-    * Only safe once every frame derived from it has been materialized.
+    * RDDs — reach the LogicalRDD leaf and unpersist the checkpointed RDD
+    * directly: the leaf's own RDD for a `localCheckpoint` result, or the
+    * first persisted RDD below the row-conversion RDDs of a re-wrapped
+    * frame ([[PropertyGraph.materialized]]). Only safe once every frame
+    * derived from it has been materialized.
     */
   private[graph] def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        var r: org.apache.spark.rdd.RDD[_] = lr.rdd
+        while (r != null &&
+            r.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+          r = r.dependencies.headOption.map(_.rdd).orNull
+        if (r != null) r.unpersist(blocking = false)
       case _ => ()
     }
 

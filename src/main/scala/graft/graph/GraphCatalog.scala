@@ -120,6 +120,19 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     */
   def saveGraph(schema: String, name: String, g: PropertyGraph,
       force: Boolean = false): Unit = {
+    // the save's jobs run under its own job group; the caller's group,
+    // description and interrupt flag come back on every exit path
+    val sc = spark.sparkContext
+    val callerProps =
+      GraphCatalog.JobProps.map(k => k -> sc.getLocalProperty(k))
+    val group = s"graft-save-${GraphCatalog.saveIds.incrementAndGet()}"
+    try saveGraphIn(schema, name, g, force, sc, group)
+    finally callerProps.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  private def saveGraphIn(schema: String, name: String, g: PropertyGraph,
+      force: Boolean, sc: org.apache.spark.SparkContext,
+      group: String): Unit = {
     val dir = graphDir(schema, name)
     val staging = s"$warehouse/$schema/.staging_${name}_${System.nanoTime}"
     // Incremental path: the graph was loaded from this very directory and
@@ -184,55 +197,78 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     // failed write task fails the save before the marker is written.
     // The bucket-SCOPED attempt chain of an incremental save stays one
     // task per dataset (the mirror's scoped arm is gated on the main
-    // outcome); the expensive case — full main + full mirror on a
-    // force/initial save — splits into two independent tasks.
+    // outcome and shares the dataset's touched keys); the expensive
+    // case — full main + full mirror on a force/initial save — splits
+    // into two independent tasks.
+    // Every job of the save runs in ONE job group, so the first failed
+    // write cancels its peers' running jobs; each task names its step in
+    // the job description.
+    def inGroup(desc: String): Unit = sc.setJobGroup(group, desc)
+    def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
     val writeTasks: Seq[() => Seq[(String, Double)]] =
       datasets.filter { case (ds, _) => dirtySet.contains(ds) }
         .flatMap { case (ds, df) =>
           val t = typed(df)
+          val mirName = s"${GraphCatalog.MirrorPrefix}$ds"
           val hasMirror = mirrorOptSpec(ds, t).isDefined
           def mainFull(): Seq[(String, Double)] = {
             val t0 = System.nanoTime()
-            spark.sparkContext.setJobDescription(s"save $ds (full)")
+            inGroup(s"save $ds (full)")
             writeClustered(ds, t, s"$staging/$ds")
-            Seq((s"write:$ds:full", (System.nanoTime() - t0) / 1e9))
+            Seq((s"write:$ds:full", secs(t0)))
           }
           def mirrorFull(): Seq[(String, Double)] = {
             val t0 = System.nanoTime()
-            spark.sparkContext.setJobDescription(
-              s"save ${GraphCatalog.MirrorPrefix}$ds (full)")
+            inGroup(s"save $mirName (full)")
             writeMirror(ds, t, staging)
-            Seq((s"write:${GraphCatalog.MirrorPrefix}$ds:full",
-              (System.nanoTime() - t0) / 1e9))
+            Seq((s"write:$mirName:full", secs(t0)))
           }
           // bucket-scoped path first: when the dataset has a bucketed
           // index with persisted boundaries AND the mutations recorded
           // their touched identity keys, rewrite only the touched range
           // buckets and hard-link the rest — O(touched buckets) instead
           // of O(table), the incremental-maintenance economics of
-          // [[reclusterBuckets]] applied at the copy-on-write boundary
+          // [[reclusterBuckets]] applied at the copy-on-write boundary.
+          // Adjacency duality (opt-in `mirror = true`): the edge
+          // dataset's dual-keyed mirror stages alongside it —
+          // bucket-scoped when the main write was and the mirror's
+          // preconditions hold, full otherwise; a no-op when the option
+          // is off (a stale mirror then vanishes at the swap)
           def scopedChain(): Seq[(String, Double)] = {
             val out = Seq.newBuilder[(String, Double)]
-            val t0 = System.nanoTime()
-            spark.sparkContext.setJobDescription(s"save $ds (incremental)")
-            val scoped = writeBucketScoped(ds, t, dir, staging, g)
-            if (!scoped) writeClustered(ds, t, s"$staging/$ds")
-            out += ((s"write:$ds:${if (scoped) "bucket_scoped" else "full"}",
-              (System.nanoTime() - t0) / 1e9))
-            // adjacency duality (opt-in `mirror = true`): the edge
-            // dataset's dual-keyed mirror stages alongside it —
-            // bucket-scoped when the main write was and the mirror's
-            // preconditions hold, full otherwise; a no-op when the
-            // option is off (a stale mirror then vanishes at the swap)
-            if (hasMirror) {
+            val keys = g.touchedKeysFor(ds).map(new SaveKeys(_))
+            /** One layout: the touched-bucket step (`buckets:<name>`,
+              * recorded when the layout and the keys allow an attempt),
+              * then the scoped write or, failing any precondition, the
+              * full one. True when the write was bucket-scoped. */
+            def attempt(name: String,
+                layout: Option[GraphCatalog.ScopedLayout])(
+                full: => Unit): Boolean = {
+              inGroup(s"save $name (incremental)")
+              val plan = (for (l <- layout; k <- keys) yield {
+                val t0 = System.nanoTime()
+                val p = touchedBuckets(l, ds, t, dir, k, g)
+                out += ((s"buckets:$name", secs(t0)))
+                p.map(l -> _)
+              }).flatten
               val t1 = System.nanoTime()
-              val mScoped = scoped &&
-                writeMirrorBucketScoped(ds, t, dir, staging, g)
-              if (!mScoped) writeMirror(ds, t, staging)
-              out += ((s"write:${GraphCatalog.MirrorPrefix}$ds:" +
-                (if (mScoped) "bucket_scoped" else "full"),
-                (System.nanoTime() - t1) / 1e9))
+              plan match {
+                case Some((l, (touched, bucketDirs))) =>
+                  writeScoped(l, t, staging, touched, bucketDirs)
+                case None => full
+              }
+              val kind = if (plan.isDefined) "bucket_scoped" else "full"
+              out += ((s"write:$name:$kind", secs(t1)))
+              plan.isDefined
             }
+            try {
+              val mainScoped = attempt(ds, mainLayout(ds, t))(
+                writeClustered(ds, t, s"$staging/$ds"))
+              if (hasMirror)
+                attempt(mirName,
+                  if (mainScoped) mirrorLayout(ds, t) else None)(
+                  writeMirror(ds, t, staging))
+            } finally keys.foreach(_.release())
             out.result()
           }
           if (incremental) Seq(() => scopedChain())
@@ -257,12 +293,16 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
             def call(): Seq[(String, Double)] = tk()
           }))
         // stage entries keep task-submission order; the first failed
-        // write fails the whole save (before the commit marker)
-        futs.foreach { f =>
-          try stages ++= f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException => throw e.getCause
-          }
+        // write fails the whole save (before the commit marker), and its
+        // peers' running jobs are cancelled before the pool is torn down
+        try futs.foreach(f => stages ++= f.get())
+        catch {
+          case e: Throwable =>
+            sc.cancelJobGroup(group)
+            throw (e match {
+              case ee: java.util.concurrent.ExecutionException => ee.getCause
+              case other => other
+            })
         }
       } finally pool.shutdownNow()
     }
@@ -398,43 +438,82 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** Bucket-scoped incremental write of one dirty dataset into staging.
+  private def persistedBounds(ixName: String, optKey: String, df: DataFrame,
+      keyCol: String): Option[Seq[org.apache.spark.sql.Column]] =
+    listIndexOptions(ixName).toMap.get(optKey).filter(_.nonEmpty)
+      .map(decodeBounds(_, stringKeyed(df, keyCol))).filter(_.nonEmpty)
+
+  /** The main `__ixb` layout of `ds`: its bucketed index's columns and
+    * persisted `__bounds` (None before the first layout build). */
+  private def mainLayout(ds: String,
+      df: DataFrame): Option[GraphCatalog.ScopedLayout] =
+    bucketedSpec(ds, df).flatMap { case (ixName, cols, _) =>
+      persistedBounds(ixName, "__bounds", df, cols.head)
+        .map(GraphCatalog.ScopedLayout(ds, cols.head, cols, _))
+    }
+
+  /** The mirror layout of edge dataset `ds` (see [[mirrorOptSpec]]),
+    * keyed on the other endpoint under `__bounds_mirror`. */
+  private def mirrorLayout(ds: String,
+      df: DataFrame): Option[GraphCatalog.ScopedLayout] =
+    mirrorOptSpec(ds, df).flatMap { case (ixName, mk, _) =>
+      persistedBounds(ixName, "__bounds_mirror", df, mk).map(
+        GraphCatalog.ScopedLayout(s"${GraphCatalog.MirrorPrefix}$ds", mk,
+          Seq(mk), _))
+    }
+
+  /** A dirty dataset's touched-key frame for the span of one save.
+    * [[materialized]] runs its lineage at most once — on first use, by the
+    * first layout that must join the keys — and the mirror layout reuses
+    * the result; [[release]] frees the checkpoint when the dataset's
+    * writes are done.
+    */
+  private final class SaveKeys(val raw: DataFrame) {
+    private var mat: Option[(DataFrame, Long)] = None
+    def materialized: (DataFrame, Long) = mat.getOrElse {
+      val m = PropertyGraph.materializedCount(raw)
+      mat = Some(m)
+      m
+    }
+    def release(): Unit = mat.foreach(m => Analytics.unpersistCheckpoint(m._1))
+  }
+
+  /** The touched-bucket step of a bucket-scoped save, for one layout of
+    * dirty dataset `ds`: Some((touched bucket ids, live bucket
+    * directories)) when the scoped write applies, None when the caller
+    * must rewrite the layout in full.
     *
-    * Applicable when (a) the dataset carries a bucketed index whose
-    * range boundaries are already persisted, (b) the live directory is
-    * already in the bucketed `__ixb=K/` layout, and (c) every mutation
-    * since load recorded its touched identity keys
-    * ([[PropertyGraph.touchedKeys]]). The touched keys map to bucket
-    * ids through the stored boundaries — on BOTH the pre- and
-    * post-mutation key values, so a SET on the indexed column that
-    * moves a row between buckets rewrites both its source and target
-    * bucket. Untouched buckets enter staging as hard links.
+    * Applicable when (a) the layout's boundaries are already persisted,
+    * (b) the live directory is already in the bucketed `__ixb=K/`
+    * layout, (c) every mutation since load recorded its touched identity
+    * keys ([[PropertyGraph.touchedKeys]]), (d) the schema is unchanged,
+    * and (e) the touched buckets are at most half the layout. The keys
+    * hold the pre- AND post-mutation identities of every touched row, so
+    * the touched buckets are:
+    *  - when the layout is keyed on the identity column itself (`id` of
+    *    a node label, `eid` of an edge type): the keys' own buckets,
+    *    computed straight from the key frame in one job — no join
+    *    against the live files or the mutated frame;
+    *  - otherwise: the buckets of the key column's value on the touched
+    *    rows, before (live files) and after (mutated frame) — a SET that
+    *    moves a row between buckets rewrites both. The key frame is
+    *    materialized once ([[SaveKeys]]) and broadcast by its exact size
+    *    into both joins.
     *
     * This is the 100 TB maintenance story the bucketed layout exists
     * for: a DML touching one bucket of a 100K-file label costs one
-    * bucket's rewrite plus link metadata, not an O(table) range
-    * shuffle. Returns false (caller falls back to the monolithic
-    * [[writeClustered]]) whenever any precondition fails.
+    * bucket's rewrite plus link metadata, not an O(table) range shuffle.
     */
-  private def writeBucketScoped(ds: String, df: DataFrame, liveDir: String,
-      staging: String, g: PropertyGraph): Boolean = {
+  private def touchedBuckets(layout: GraphCatalog.ScopedLayout, ds: String,
+      df: DataFrame, liveDir: String, keys: SaveKeys, g: PropertyGraph)
+      : Option[(Set[Int], Seq[java.nio.file.Path])] = {
     import org.apache.spark.sql.functions.col
-    val keys = g.touchedKeysFor(ds).orNull
-    if (keys == null) return false
-    val spec = bucketedSpec(ds, df).orNull
-    if (spec == null) return false
-    val (ixName, cols, _) = spec
-    val bounds = listIndexOptions(ixName).toMap.get("__bounds")
-      .filter(_.nonEmpty)
-      .map(decodeBounds(_, stringKeyed(df, cols.head))).orNull
-    if (bounds == null || bounds.isEmpty) return false
     val idCol = if (ds.startsWith("nodes_")) "id" else "eid"
-    if (!df.columns.contains(idCol)) return false
-    val oldPath = Paths.get(s"$liveDir/$ds")
-    if (!Files.exists(oldPath)) return false
+    val oldPath = Paths.get(s"$liveDir/${layout.dirName}")
+    if (!df.columns.contains(idCol) || !Files.exists(oldPath)) return None
     val bucketDirs = listDir(oldPath)
       .filter(_.getFileName.toString.startsWith(s"$BucketCol="))
-    if (bucketDirs.isEmpty) return false // live layout not bucketed yet
+    if (bucketDirs.isEmpty) return None // live layout not bucketed yet
     val old = spark.read.parquet(oldPath.toString)
     // SCHEMA-CHANGE gate: hard-linked buckets keep their original file
     // schema, so a bucket-scoped save of a frame whose schema moved
@@ -447,28 +526,47 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     val oldSchema = old.drop(BucketCol).schema
       .map(f => (f.name, f.dataType)).toSet
     val newSchema = df.schema.map(f => (f.name, f.dataType)).toSet
-    if (oldSchema != newSchema) return false
-    // index-key values of the touched rows, pre- and post-mutation.
-    // The schema gate above guarantees old and df agree on the id type,
-    // so casting the TINY key side once (recorded as string, the union
-    // type across id-widening — see GraphMutations.keyFrame) joins both
-    // scans natively — no per-row string rendering, and no ANSI hazard
-    // casting widened string ids to bigint (widening changes the
-    // schema, which already bailed)
-    val keysTyped = keys.select(
-      col("__k").cast(df.schema(idCol).dataType).as("__k"))
-    def keyVals(f: DataFrame) =
-      f.join(keysTyped, f(idCol) === col("__k"), "left_semi")
-        .select(col(cols.head))
-    val touchedBuckets = keyVals(old).union(keyVals(df))
-      .select(bucketExpr(col(cols.head), bounds).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    if (oldSchema != newSchema) return None
+    // keys are recorded as strings (the union type across id-widening —
+    // see GraphMutations.keyFrame); the schema gate above guarantees the
+    // live files and df agree on the id type, so the TINY key side casts
+    // once and both sides compare natively
+    val idType = df.schema(idCol).dataType
+    val bucketOf = bucketExpr(col("__v"), layout.bounds)
+    val touched =
+      if (layout.keyCol == idCol)
+        GraphCatalog.distinctInts(
+          keys.raw.select(col("__k").cast(idType).as("__v")).select(bucketOf))
+      else {
+        val (k, n) = keys.materialized
+        if (n == 0) Set.empty[Int]
+        else {
+          val kb = g.broadcastIfBoundedRows(n,
+            k.select(col("__k").cast(idType).as("__k")))
+          def keyVals(f: DataFrame) =
+            f.join(kb, f(idCol) === kb("__k"), "left_semi")
+              .select(col(layout.keyCol).as("__v"))
+          GraphCatalog.distinctInts(
+            keyVals(old).union(keyVals(df)).select(bucketOf))
+        }
+      }
     // cost gate: when a mutation touched most of the buckets anyway,
     // the monolithic range-shuffle rewrite is cheaper than per-bucket
     // writes plus links — bucket-scoping is for the sparse-delta case
-    if (touchedBuckets.size * 2 > bounds.size + 1) return false
-    if (touchedBuckets.isEmpty) // mutations matched no rows
-      Files.createDirectories(Paths.get(s"$staging/$ds"))
+    if (touched.size * 2 > layout.bounds.size + 1) None
+    else Some((touched, bucketDirs))
+  }
+
+  /** Write the touched buckets of one layout into staging and hard-link
+    * every other live bucket directory.
+    */
+  private def writeScoped(layout: GraphCatalog.ScopedLayout, df: DataFrame,
+      staging: String, touched: Set[Int],
+      bucketDirs: Seq[java.nio.file.Path]): Unit = {
+    import org.apache.spark.sql.functions.col
+    val target = s"$staging/${layout.dirName}"
+    if (touched.isEmpty) // mutations matched no rows
+      Files.createDirectories(Paths.get(target))
     else
       // the touched-range filter FIRST: plain key-range comparisons push
       // to the underlying parquet scan (and BucketPrune maps their
@@ -479,20 +577,18 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       // stayed O(table). The bucketExpr isin filter stays as the exact
       // arbiter (same boundaries, so the range pred is equivalent by
       // construction; see touchedRangePred's equivalence note).
-      df.filter(touchedRangePred(col(cols.head), bounds, touchedBuckets))
-        .withColumn(BucketCol, bucketExpr(col(cols.head), bounds))
-        .filter(col(BucketCol)
-          .isin(touchedBuckets.toSeq.map(Integer.valueOf): _*))
+      df.filter(touchedRangePred(col(layout.keyCol), layout.bounds, touched))
+        .withColumn(BucketCol, bucketExpr(col(layout.keyCol), layout.bounds))
+        .filter(col(BucketCol).isin(touched.toSeq.map(Integer.valueOf): _*))
         .repartition(col(BucketCol))
-        .sortWithinPartitions((BucketCol +: cols).map(col): _*)
+        .sortWithinPartitions((BucketCol +: layout.sortCols).map(col): _*)
         .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-        .parquet(s"$staging/$ds")
+        .parquet(target)
     bucketDirs.foreach { d =>
       val k = d.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
-      if (!touchedBuckets.contains(k))
-        linkTree(d, Paths.get(s"$staging/$ds/${d.getFileName}"))
+      if (!touched.contains(k))
+        linkTree(d, Paths.get(s"$target/${d.getFileName}"))
     }
-    true
   }
 
   private def deleteRecursive(p: java.nio.file.Path): Unit =
@@ -787,65 +883,6 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
         .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
         .parquet(s"$stagingDir/${GraphCatalog.MirrorPrefix}$ds")
     }
-
-  /** Bucket-scoped incremental write of an edge dataset's MIRROR —
-    * [[writeBucketScoped]]'s economics applied to the dual layout: the
-    * touched rows' OTHER-endpoint key values (pre and post mutation) map
-    * to mirror buckets through the mirror boundaries; only those are
-    * rewritten, the rest hard-link from the live mirror. Returns false
-    * (caller writes the mirror in full) when any precondition fails.
-    */
-  private def writeMirrorBucketScoped(ds: String, df: DataFrame,
-      liveDir: String, staging: String, g: PropertyGraph): Boolean = {
-    import org.apache.spark.sql.functions.col
-    val (name, mk, _) = mirrorOptSpec(ds, df).getOrElse(return false)
-    val keys = g.touchedKeysFor(ds).orNull
-    if (keys == null) return false
-    val bounds = listIndexOptions(name).toMap.get("__bounds_mirror")
-      .filter(_.nonEmpty)
-      .map(decodeBounds(_, stringKeyed(df, mk))).orNull
-    if (bounds == null || bounds.isEmpty) return false
-    if (!df.columns.contains("eid")) return false
-    val mirName = s"${GraphCatalog.MirrorPrefix}$ds"
-    val oldPath = Paths.get(s"$liveDir/$mirName")
-    if (!Files.exists(oldPath)) return false
-    val bucketDirs = listDir(oldPath)
-      .filter(_.getFileName.toString.startsWith(s"$BucketCol="))
-    if (bucketDirs.isEmpty) return false
-    val old = spark.read.parquet(oldPath.toString)
-    // same schema-change gate as the main layout: hard-linked buckets
-    // keep their original file schema
-    val oldSchema = old.drop(BucketCol).schema
-      .map(f => (f.name, f.dataType)).toSet
-    val newSchema = df.schema.map(f => (f.name, f.dataType)).toSet
-    if (oldSchema != newSchema) return false
-    val keysTyped = keys.select(
-      col("__k").cast(df.schema("eid").dataType).as("__k"))
-    def keyVals(f: DataFrame) =
-      f.join(keysTyped, f("eid") === col("__k"), "left_semi")
-        .select(col(mk))
-    val touchedBuckets = keyVals(old).union(keyVals(df))
-      .select(bucketExpr(col(mk), bounds).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    if (touchedBuckets.size * 2 > bounds.size + 1) return false
-    if (touchedBuckets.isEmpty)
-      Files.createDirectories(Paths.get(s"$staging/$mirName"))
-    else
-      df.filter(touchedRangePred(col(mk), bounds, touchedBuckets))
-        .withColumn(BucketCol, bucketExpr(col(mk), bounds))
-        .filter(col(BucketCol)
-          .isin(touchedBuckets.toSeq.map(Integer.valueOf): _*))
-        .repartition(col(BucketCol))
-        .sortWithinPartitions(col(BucketCol), col(mk))
-        .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-        .parquet(s"$staging/$mirName")
-    bucketDirs.foreach { d =>
-      val k = d.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
-      if (!touchedBuckets.contains(k))
-        linkTree(d, Paths.get(s"$staging/$mirName/${d.getFileName}"))
-    }
-    true
-  }
 
   /** Register a loaded edge dataset's MIRROR with the pruning rule (the
     * dual of [[registerPrune]]): keyed on the mirror directory, spec on
@@ -1405,13 +1442,43 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
 
 object GraphCatalog {
   /** Per-stage wall clock of the LAST [[GraphCatalog.saveGraph]] on this
-    * JVM: `(label, seconds)` rows — `write:<dataset>:<bucket_scoped|full>`
-    * per dirty dataset, `link_clean` for the hard-link pass, `swap` for
-    * the rename-aside promotion. Diagnostic single-slot (same contract
-    * as PropertyGraph.lastPathPrune): ScaleProbe's dml_save rows print
-    * it so a warehouse-write regression names its stage.
+    * JVM: `(label, seconds)` rows — per dirty dataset (and per mirror
+    * layout) of an incremental save `buckets:<dataset>` for the
+    * touched-bucket step when one was attempted, then
+    * `write:<dataset>:<bucket_scoped|full>`; `link_clean` for the
+    * hard-link pass, `swap` for the rename-aside promotion. Diagnostic
+    * single-slot (same contract as PropertyGraph.lastPathPrune):
+    * ScaleProbe's dml_save rows print it so a warehouse-write regression
+    * names its stage.
     */
   @volatile var lastSaveStages: Seq[(String, Double)] = Seq.empty
+
+  /** One bucketed layout a dirty dataset persists in, as the
+    * bucket-scoped save sees it: the staging/live directory name, the
+    * bucket key, the in-bucket sort columns and the persisted boundaries.
+    * The main layout and an edge dataset's mirror differ only in these.
+    */
+  private[graph] final case class ScopedLayout(dirName: String,
+      keyCol: String, sortCols: Seq[String],
+      bounds: Seq[org.apache.spark.sql.Column])
+
+  /** Source of per-save job-group ids (`graft-save-<n>`). */
+  private[graph] val saveIds = new java.util.concurrent.atomic.AtomicLong
+
+  /** The SparkContext local properties `setJobGroup` writes — saved
+    * before a save takes its job group and restored after it. */
+  private[graph] val JobProps = Seq("spark.jobGroup.id",
+    "spark.job.description", "spark.job.interruptOnCancel")
+
+  /** Distinct values of a one-int-column frame in ONE job: each task
+    * returns its partition's distinct set and the collect unions them.
+    * For bucket ids, so at most (tasks × buckets) ints are collected
+    * whatever the frame's row count.
+    */
+  private[graph] def distinctInts(df: DataFrame): Set[Int] =
+    df.queryExecution.toRdd
+      .mapPartitions(it => it.map(_.getInt(0)).toSet.iterator)
+      .collect().toSet
 
   /** Serializes first-build boundary computation+persist across the
     * concurrent staging-write tasks (see bucketBounds) — the

@@ -168,11 +168,27 @@ object GraphMutations {
       assignments: Map[String, Column]): PropertyGraph = {
     val t = g.nodeTables(label)
     val updated = applyAssigns(t, pred, assignments)
-    // touched keys = the TRUE-arm of the match predicate, the same rows
-    // applyAssigns rewrites (3VL: NULL-predicate rows keep their values)
     g.mutated(g.nodeTables + (label -> updated), g.edgeTables,
       Set(s"nodes_$label"),
-      Map(s"nodes_$label" -> keyFrame(t.filter(pred), "id")))
+      Map(s"nodes_$label" -> assignedKeys(t, pred, assignments, "id")))
+  }
+
+  /** Touched keys of a MATCH … SET: the TRUE-arm of the match predicate,
+    * the same rows applyAssigns rewrites (3VL: NULL-predicate rows keep
+    * their values). An assignment to the identity column itself moves
+    * the row to a new key — and, when the bucketed index leads on that
+    * column, to another bucket — so the post-mutation key (the assigned
+    * value, evaluated on the pre-statement row exactly as applyAssigns
+    * does) is recorded beside the old one. With only the old key the
+    * save would rewrite the source bucket and hard-link a stale target
+    * bucket, losing the row.
+    */
+  private def assignedKeys(t: DataFrame, pred: Column,
+      assignments: Map[String, Column], idCol: String): DataFrame = {
+    val matched = t.filter(pred)
+    val before = keyFrame(matched, idCol)
+    assignments.get(idCol).fold(before)(v =>
+      before.union(matched.select(v.cast("string").as("__k"))))
   }
 
   /** Apply every item of one SET atomically against the PRE-statement
@@ -227,36 +243,31 @@ object GraphMutations {
     * edges go too — both via anti-joins, no driver iteration.
     */
   def deleteNodes(g: PropertyGraph, label: String, pred: Column,
-      detach: Boolean = false): PropertyGraph = {
-    val t = g.nodeTables(label)
-    deleteNodesDoomed(g, label, t.filter(pred).select(col("id")), detach)
-  }
+      detach: Boolean = false): PropertyGraph =
+    deleteNodesIn(g, label, PropertyGraph.materializedCount(
+      g.nodeTables(label).filter(pred).select(col("id"))), detach)
 
-  /** DELETE nodes whose ids appear in `ids` (column `id`) — the
-    * MutationPipeline path (executor.rs:7186): the pipeline computes the
-    * doomed set, this applies it.
+  /** DELETE the nodes whose ids make up `ids` — a
+    * [[PropertyGraph.materializedCount]] result (one-column `id` frame,
+    * its row count), so the caller reads the statement's affected count
+    * off the same job that materialized the set. The MutationPipeline
+    * path (executor.rs:7186) computes the doomed set, this applies it.
+    *
+    * Materialized, the doomed set joins every later plan as a small
+    * LogicalRDD leaf instead of re-running the MATCH that found it: the
+    * node table, each detached edge table and their touched keys stay
+    * free of earlier table versions, and no CacheManager entry outlives
+    * the graph version that uses it.
     */
-  def deleteNodesIn(g: PropertyGraph, label: String, ids: DataFrame,
-      detach: Boolean): PropertyGraph =
-    deleteNodesDoomed(g, label, ids.select(col("id")).distinct(), detach)
-
-  private def deleteNodesDoomed(g: PropertyGraph, label: String,
-      doomed0: DataFrame, detach: Boolean): PropertyGraph = {
+  def deleteNodesIn(g: PropertyGraph, label: String,
+      ids: (DataFrame, Long), detach: Boolean): PropertyGraph = {
     val t = g.nodeTables(label)
-    // the doomed set usually DERIVES from `t` (MATCH … DELETE filters the
-    // same table), so its `id` resolves to the same attribute as t("id");
-    // alias it so every join below is an explicit cross-frame equi-join,
-    // not a trivially-true same-attribute predicate Spark has to
-    // disambiguate (and WARN about) itself
-    // cache() only when this doomed-set plan isn't already in the cache
-    // manager — re-running the same DELETE (bench passes, replayed
-    // scripts) canonicalizes to the same plan, and a blind re-cache emits
-    // the CacheManager "already cached" warning and churns the registry
-    val doomed0Aliased = doomed0.select(col("id").as("__doomed_id"))
-    val doomed =
-      if (doomed0Aliased.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        doomed0Aliased.cache()
-      else doomed0Aliased
+    // the materialized frame carries fresh attribute ids, but `__doomed_id`
+    // keeps every join below an explicit cross-frame equi-join no matter
+    // what the caller passed. A materialized frame has no size statistics,
+    // so the broadcast decision comes from its exact row count
+    val doomed = g.broadcastIfBoundedRows(ids._2,
+      ids._1.select(col("id").as("__doomed_id")))
     val incidentTables = g.edgeTables.filter { case (_, (et, _)) =>
       et.srcLabel == label || et.dstLabel == label
     }
@@ -285,8 +296,9 @@ object GraphMutations {
       if (detach) incidentTables.keySet.map(l => s"edges_$l")
       else Set.empty[String]
     // touched keys: the doomed node ids; per detached edge table, the
-    // eids of the incident edges being removed (semi-join lineage —
-    // lazy, only evaluated if a bucketed save needs the bucket map)
+    // eids of the incident edges being removed (a semi-join of that
+    // table's pre-delete version with the materialized doomed set — lazy,
+    // evaluated once by a bucketed save)
     var keys = Map(s"nodes_$label" -> doomed.select(
       col("__doomed_id").cast("string").as("__k")))
     if (detach) incidentTables.foreach { case (l, (et, e)) =>
@@ -324,7 +336,8 @@ object GraphMutations {
   /** DELETE edges whose eids appear in `eids` (column `eid`). */
   def deleteEdgesIn(g: PropertyGraph, label: String, eids: DataFrame): PropertyGraph = {
     val (et, e) = g.edgeTables(label)
-    // aliased for the same shared-lineage reason as deleteNodesDoomed
+    // aliased so the anti-join is an explicit cross-frame equi-join (the
+    // eids usually derive from `e` itself)
     val doomed = eids.select(col("eid").as("__doomed_eid")).distinct()
     val kept = e.join(doomed, e("eid") === doomed("__doomed_eid"), "left_anti")
     g.mutated(g.nodeTables, g.edgeTables + (label -> (et, kept)),
@@ -355,9 +368,13 @@ object GraphMutations {
     }
     val cleaned = joined.drop("__matched", "__uid")
       .drop(props.map(p => s"__new_$p"): _*)
+    // the updates table is keyed by the PRE-mutation id; an update of the
+    // id itself records no key frame, so the next save rewrites the
+    // dataset in full (see assignedKeys for the hazard)
     g.mutated(g.nodeTables + (label -> cleaned), g.edgeTables,
       Set(s"nodes_$label"),
-      Map(s"nodes_$label" -> keyFrame(updates, "id")))
+      if (props.contains("id")) Map.empty
+      else Map(s"nodes_$label" -> keyFrame(updates, "id")))
   }
 
   /** MATCH … SET on edge properties. */
@@ -368,7 +385,7 @@ object GraphMutations {
     g.mutated(g.nodeTables, g.edgeTables + (label -> (et, updated)),
       Set(s"edges_$label"),
       if (e.columns.contains("eid"))
-        Map(s"edges_$label" -> keyFrame(e.filter(pred), "eid"))
+        Map(s"edges_$label" -> assignedKeys(e, pred, assignments, "eid"))
       else Map.empty)
   }
 
@@ -395,6 +412,7 @@ object GraphMutations {
       .drop(props.map(p => s"__new_$p"): _*)
     g.mutated(g.nodeTables, g.edgeTables + (label -> (et, cleaned)),
       Set(s"edges_$label"),
-      Map(s"edges_$label" -> keyFrame(updates, "eid")))
+      if (props.contains("eid")) Map.empty // as in setNodePropsFrom
+      else Map(s"edges_$label" -> keyFrame(updates, "eid")))
   }
 }

@@ -242,15 +242,24 @@ final class PropertyGraph(
   /** Per-dataset identity keys touched since load, for bucket-scoped
     * incremental saves: dataset name → Some(one-column `__k` frame of
     * the STRING-rendered identity keys — `id` for nodes, `eid` for
-    * edges — every mutation so far touched) or None when some mutation
-    * rewrote the dataset in a way no key set describes (full-column
-    * casts on id-type widening, unknown provenance). At save time
-    * [[GraphCatalog.saveGraph]] maps these keys to range buckets
-    * through a bucketed index's stored boundaries and rewrites ONLY the
-    * touched buckets, hard-linking the rest — O(touched buckets), not
-    * O(table). Driver-side bookkeeping, lazily evaluated (the frames
-    * are narrow selects over mutation lineages; nothing runs unless a
-    * bucketed save needs them).
+    * edges — every mutation so far touched, pre- AND post-mutation: a
+    * SET on the identity column records the row's new key too) or None
+    * when some mutation rewrote the dataset in a way no key set
+    * describes (full-column casts on id-type widening, unknown
+    * provenance). At save time [[GraphCatalog.saveGraph]] maps these
+    * keys to range buckets through a bucketed index's stored boundaries
+    * and rewrites ONLY the touched buckets, hard-linking the rest —
+    * O(touched buckets), not O(table).
+    *
+    * The per-statement parts are cheap to evaluate by construction: an
+    * edge INSERT's rows and a node DELETE's doomed ids are
+    * [[PropertyGraph.materialized]] frames (materialized by the job that
+    * counts the statement's affected rows), so a key frame never embeds
+    * an earlier table version through an insert's anti-join. The union
+    * stays lazy until the save, which evaluates it once per dirty
+    * dataset: straight to bucket ids when the bucketed index leads on
+    * the identity column, otherwise materialized once and joined against
+    * the live files and the mutated frame.
     */
   @transient private[graph] var touchedKeys: Map[String, Option[DataFrame]] =
     Map.empty
@@ -284,6 +293,10 @@ final class PropertyGraph(
     * AQE re-measures join sides from real shuffle bytes at runtime.
     * Superseded checkpoint blocks are freed by the ContextCleaner once
     * older graph versions (rollback snapshots) drop out of scope.
+    *
+    * `keys` carries each touched dataset's key frame for this statement
+    * (see [[touchedKeys]]); a dataset touched without one poisons to a
+    * full rewrite at the next save.
     */
   private[graph] def mutated(newNodes: Map[String, DataFrame],
       newEdges: Map[String, (EdgeType, DataFrame)],
@@ -940,9 +953,29 @@ object PropertyGraph {
     * schema × row-count model instead, and AQE re-measures joins from
     * real shuffle bytes at runtime.
     */
-  def materialized(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  def materialized(df: DataFrame): DataFrame = materializedCount(df)._1
+
+  /** [[materialized]] plus the frame's row count, both from ONE job: the
+    * executed plan's rows are marked for local checkpointing and the
+    * count that fills the checkpoint is the count returned. A DML
+    * statement that must report its affected rows materializes its delta
+    * (edge INSERT rows, a DELETE's doomed ids) this way, so handing the
+    * save a lineage-free delta costs no job beyond the count the
+    * statement always ran — a `Dataset.count()` is itself one job more
+    * under AQE (its final single-partition aggregate), so the statement
+    * usually runs one job fewer than counting the lazy frame did.
+    */
+  def materializedCount(df: DataFrame): (DataFrame, Long) = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+    rows.localCheckpoint()
+    val n = rows.count()
+    val schema = df.schema
+    val external = rows.mapPartitions { it =>
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(schema)
+      it.map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row])
+    }
+    (df.sparkSession.createDataFrame(external, schema), n)
   }
 
   /** Copy-on-write layers a dataset may accumulate before [[PropertyGraph.mutated]]

@@ -94,22 +94,36 @@ object MirrorSwap extends Rule[LogicalPlan] with PredicateHelper {
   // alongside BucketPrune's registry on every save/drop; each USE
   // re-instances the cached relation so two swapped scans in one plan
   // (a self-join) never share attribute ids.
-  // cache entries carry a cheap freshness token (root-dir mtime + the
-  // _SUCCESS marker's mtime): invalidation normally arrives through
+  // cache entries carry a cheap freshness token (root-dir mtime, the
+  // _SUCCESS marker's mtime, and the newest mtime among the first-level
+  // `__ixb=*` bucket directories): invalidation normally arrives through
   // [[invalidateUnder]] from the catalog's write sites, but an
   // out-of-band overwrite of a warehouse path would otherwise serve a
   // relation whose file index lists dead files (r20 verdict "what's
-  // wrong" #4). Two stat calls per cache hit — still no parquet-footer
-  // IO in the optimizer's fixed-point loop.
+  // wrong" #4). Replacing the part files inside one bucket directory
+  // leaves the root and `_SUCCESS` untouched and bumps only that
+  // bucket directory's mtime. One directory listing plus a stat per
+  // entry per cache hit — still no parquet-footer IO in the
+  // optimizer's fixed-point loop.
   private val relCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, LogicalRelation)]
+    scala.collection.concurrent.TrieMap
+      .empty[String, ((Long, Long, Long), LogicalRelation)]
 
-  private def freshnessToken(dir: String): (Long, Long) = {
+  private def freshnessToken(dir: String): (Long, Long, Long) = {
     def mtime(p: java.nio.file.Path): Long =
       try java.nio.file.Files.getLastModifiedTime(p).toMillis
       catch { case _: Exception => -1L }
+    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(dir)
-    (mtime(root), mtime(root.resolve("_SUCCESS")))
+    val buckets =
+      try {
+        val s = java.nio.file.Files.list(root)
+        try s.iterator.asScala
+          .filter(_.getFileName.toString.startsWith("__ixb="))
+          .map(mtime).foldLeft(-1L)(math.max)
+        finally s.close()
+      } catch { case _: java.io.IOException => -1L }
+    (mtime(root), mtime(root.resolve("_SUCCESS")), buckets)
   }
 
   /** Drop cached mirror relations under `dir` — called wherever
@@ -164,16 +178,16 @@ object MirrorSwap extends Rule[LogicalPlan] with PredicateHelper {
     val canon = java.nio.file.Paths.get(mirrorPath)
       .toAbsolutePath.normalize.toString
     val token = freshnessToken(mirrorPath)
-    relCache.get(canon).filter { case (t1, t2, _) =>
-      (t1, t2) == token || { relCache.remove(canon); false }
-    }.map(_._3).orElse {
+    relCache.get(canon).filter { case (t, _) =>
+      t == token || { relCache.remove(canon); false }
+    }.map(_._2).orElse {
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(mirrorPath)))
         None
       else {
         val built = spark.read.parquet(mirrorPath)
           .queryExecution.analyzed
           .collectFirst { case r: LogicalRelation => r }
-        built.foreach(r => relCache.put(canon, (token._1, token._2, r)))
+        built.foreach(r => relCache.put(canon, (token, r)))
         built
       }
     }.map(_.newInstance())

@@ -276,4 +276,201 @@ class BucketedIndexSpec extends AnyFunSuite {
     assert(bucketDirs(wh).size == 8)
     assert(cat.loadGraph("ix", "g1").nodeTables("customer").count() == 4200L)
   }
+
+  /** A customer/orders/PLACED warehouse: customer bucketed on its
+    * identity `id`, PLACED on `src` (a non-identity key), orders plain;
+    * 8 buckets each. Returns (catalog, warehouse, nodes, orders, edges).
+    */
+  private def idKeyedFixture() = {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-bucketid").toString
+    val cat = new GraphCatalog(spark, wh)
+    val nodes = (1L to 4000L).map(i => (i, (i * 7919 % 10000).toDouble))
+      .toDF("id", "acctbal")
+    val orders = (1L to 400L).map(i => (100000L + i, i * 1.5))
+      .toDF("id", "price")
+    val edges = (1L to 400L).map(i => (i * 9 % 4000 + 1, 100000L + i, i))
+      .toDF("src", "dst", "eid")
+    val g = new PropertyGraph(Map("customer" -> nodes, "orders" -> orders),
+      Map("PLACED" -> (EdgeType("PLACED", "customer", "orders"), edges)))
+    cat.createSchema("ix")
+    cat.createIndex("cust_id", "nodes_customer", Seq("id"))
+    cat.setIndexOption("cust_id", "buckets", "8")
+    cat.createIndex("placed_src", "edges_PLACED", Seq("src"))
+    cat.setIndexOption("placed_src", "buckets", "8")
+    cat.saveGraph("ix", "g1", g, force = true)
+    (cat, wh, nodes, orders, edges)
+  }
+
+  private def layoutStamps(wh: String, ds: String): Map[String, Map[String, Long]] =
+    new java.io.File(s"$wh/ix/g1/$ds").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("__ixb="))
+      .map(d => d.getName -> fileStamps(d)).toMap
+
+  /** Bucket directory of every `key` value of a persisted layout. */
+  private def bucketOfKey(wh: String, ds: String, key: String): Map[Long, String] =
+    spark.read.parquet(s"$wh/ix/g1/$ds").select(col(key), col("__ixb"))
+      .collect().map(r => r.getLong(0) -> s"__ixb=${r.getInt(1)}").toMap
+
+  test("SET on the identity column of an id-bucketed label keeps the row: " +
+      "the post-mutation key's bucket is rewritten, not hard-linked stale") {
+    val (_, wh, _, _, _) = idKeyedFixture()
+    val t = graft.GraphLiteSpark.open(spark, wh).session("u")
+      .useGraph("/ix/g1")
+    val before = layoutStamps(wh, "nodes_customer")
+    Thread.sleep(1100) // mtime granularity
+    // id 10 sits in bucket 0, id 5000 lands above the top boundary: the
+    // row moves between buckets, and both must rewrite
+    t.execute("MATCH (c:customer {id: 10}) SET c.id = 5000")
+    t.saveGraphAs("/ix/g1")
+    assert(GraphCatalog.lastSaveStages.map(_._1)
+      .contains("write:nodes_customer:bucket_scoped"))
+    val changed = before.keys.filter(b => layoutStamps(wh, "nodes_customer")(b) !=
+      before(b)).toSeq.sorted
+    assert(changed.size == 2, s"source and target bucket must rewrite: $changed")
+    val v = graft.GraphLiteSpark.open(spark, wh).session("v")
+      .useGraph("/ix/g1")
+    assert(v.gql("MATCH (c:customer) RETURN count(c) AS n")
+      .collect().head.getLong(0) == 4000L)
+    assert(v.gql("MATCH (c:customer {id: 5000}) RETURN c.acctbal AS b")
+      .collect().map(_.getDouble(0)).toSeq == Seq((10L * 7919 % 10000).toDouble))
+    assert(v.gql("MATCH (c:customer {id: 10}) RETURN count(c) AS n")
+      .collect().head.getLong(0) == 0L)
+  }
+
+  test("mixed DML over an id-keyed node layout and a src-keyed edge " +
+      "layout: one incremental save rewrites exactly the touched buckets " +
+      "and the reloaded graph equals a plain-DataFrame model") {
+    import spark.implicits._
+    val (_, wh, nodes, orders, edges) = idKeyedFixture()
+    val t = graft.GraphLiteSpark.open(spark, wh).session("u")
+      .useGraph("/ix/g1")
+    val custBefore = layoutStamps(wh, "nodes_customer")
+    val edgeBefore = layoutStamps(wh, "edges_PLACED")
+    val custBucket0 = bucketOfKey(wh, "nodes_customer", "id")
+    val edgeBucket0 = bucketOfKey(wh, "edges_PLACED", "src")
+    Thread.sleep(1100)
+    // customer 2 places the new order 900001; customer 10 (src of the
+    // edge to order 100001) is detach-deleted; customer 3000 is updated
+    val doomedEdges = edges.filter($"src" === 10L).select("src").collect()
+      .map(_.getLong(0)).toSet
+    assert(doomedEdges == Set(10L), "fixture: customer 10 has an edge")
+    t.execute("MATCH (c:customer {id: 3000}) SET c.acctbal = 1.5")
+    t.execute("INSERT (:orders {id: 900001, price: 7.25})")
+    t.execute("MATCH (c:customer {id: 2}), (o:orders {id: 900001}) " +
+      "INSERT (c)-[:PLACED]->(o)")
+    t.execute("MATCH (c:customer {id: 10}) DETACH DELETE c")
+    t.saveGraphAs("/ix/g1")
+    val stages = GraphCatalog.lastSaveStages.map(_._1)
+    Seq("nodes_customer", "edges_PLACED").foreach { ds =>
+      assert(stages.contains(s"buckets:$ds"), s"no touched-bucket step: $stages")
+      assert(stages.contains(s"write:$ds:bucket_scoped"), s"$ds not scoped: $stages")
+    }
+    // touched = buckets the touched keys occupied before OR occupy after
+    val custBucket1 = bucketOfKey(wh, "nodes_customer", "id")
+    val edgeBucket1 = bucketOfKey(wh, "edges_PLACED", "src")
+    val wantCust = Seq(3000L, 10L).flatMap(k =>
+      custBucket0.get(k) ++ custBucket1.get(k)).toSet
+    val wantEdge = Seq(2L, 10L).flatMap(k =>
+      edgeBucket0.get(k) ++ edgeBucket1.get(k)).toSet
+    def changed(before: Map[String, Map[String, Long]], ds: String) = {
+      val after = layoutStamps(wh, ds)
+      assert(after.keySet == before.keySet, s"$ds bucket set changed")
+      before.keys.filter(b => after(b) != before(b)).toSet
+    }
+    assert(changed(custBefore, "nodes_customer") == wantCust)
+    assert(changed(edgeBefore, "edges_PLACED") == wantEdge)
+    assert(wantCust.size < 8 && wantEdge.size < 8)
+    // the model: the same four statements over plain DataFrames
+    val wantNodes = nodes.filter($"id" =!= 10L)
+      .withColumn("acctbal", when($"id" === 3000L, 1.5).otherwise($"acctbal"))
+    val eid = graft.text.TextAnalysis.stableHash60(
+      concat_ws("#", lit("PLACED"), lit(2L), lit(900001L)))
+    val wantEdges = edges.filter($"src" =!= 10L).unionByName(
+      Seq((2L, 900001L)).toDF("src", "dst").withColumn("eid", eid))
+    val wantOrders = orders.unionByName(Seq((900001L, 7.25)).toDF("id", "price"))
+    val g = graft.GraphLiteSpark.open(spark, wh).session("v")
+      .useGraph("/ix/g1").graph
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    assert(rows(g.nodeTables("customer"), "id", "acctbal") ==
+      rows(wantNodes, "id", "acctbal"))
+    assert(rows(g.nodeTables("orders"), "id", "price") ==
+      rows(wantOrders, "id", "price"))
+    assert(rows(g.edgeTables("PLACED")._2, "src", "dst", "eid") ==
+      rows(wantEdges, "src", "dst", "eid"))
+  }
+
+  test("edge INSERT and DETACH DELETE leave no earlier table version on " +
+      "the build side of a join: the edge table scans its files once and " +
+      "its touched keys embed no insert anti-join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val (_, wh, _, _, _) = idKeyedFixture()
+    val t = graft.GraphLiteSpark.open(spark, wh).session("u")
+      .useGraph("/ix/g1")
+    t.execute("INSERT (:orders {id: 900001, price: 7.25})")
+    t.execute("MATCH (c:customer {id: 2}), (o:orders {id: 900001}) " +
+      "INSERT (c)-[:PLACED]->(o)")
+    t.execute("MATCH (c:customer {id: 3}), (o:orders {id: 900001}) " +
+      "INSERT (c)-[:PLACED]->(o)")
+    t.execute("MATCH (o:orders {id: 100001}) DETACH DELETE o")
+    val g = t.graph
+    def edgeScans(p: LogicalPlan): Int = p.collect {
+      case r: LogicalRelation if (r.relation match {
+        case fs: HadoopFsRelation =>
+          fs.location.rootPaths.exists(_.toString.contains("edges_PLACED"))
+        case _ => false
+      }) => 1
+    }.sum
+    def joinsOverEdges(p: LogicalPlan): Seq[LogicalPlan] =
+      p.collect { case j: Join if edgeScans(j.right) > 0 => j }
+    val table = g.edgeTables("PLACED")._2.queryExecution.analyzed
+    val keys = g.touchedKeysFor("edges_PLACED").get.queryExecution.analyzed
+    assert(edgeScans(table) == 1, s"edge table lineage re-reads its files:\n$table")
+    assert(joinsOverEdges(table).isEmpty, s"join over an earlier version:\n$table")
+    assert(joinsOverEdges(keys).isEmpty, s"key frame joins an earlier version:\n$keys")
+    // the statements' results still hold
+    assert(g.edgeTables("PLACED")._2.filter(col("dst") === 900001L).count() == 2L)
+    assert(g.edgeTables("PLACED")._2.filter(col("dst") === 100001L).count() == 0L)
+  }
+
+  test("a save runs its jobs in one job group and restores the caller's " +
+      "job group and description, serial and concurrent") {
+    val (_, wh, _, _, _) = idKeyedFixture()
+    val sc = spark.sparkContext
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try Seq("1", "3").foreach { par =>
+      spark.conf.set("spark.graft.save.parallelism", par)
+      val gls = graft.GraphLiteSpark.open(spark, wh)
+      val t = gls.session("u").useGraph("/ix/g1")
+      t.execute("MATCH (c:customer {id: 20}) SET c.acctbal = 2.5")
+      t.execute("MATCH (c:customer {id: 2}), (o:orders {id: 100002}) " +
+        s"INSERT (c)-[:PLACED {p: $par}]->(o)")
+      sc.setJobGroup("caller-group", "caller description")
+      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+      groups.clear()
+      // the catalog call alone: saveGraphAs's reload runs its own
+      // (schema-inference) jobs under the caller's group
+      gls.catalog.saveGraph("ix", "g1", t.graph)
+      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+      assert(sc.getLocalProperty("spark.job.description") == "caller description")
+      import scala.jdk.CollectionConverters._
+      val seen = groups.asScala.toSet
+      assert(seen.size == 1 && seen.head.startsWith("graft-save-"),
+        s"parallelism $par: save jobs ran under groups $seen")
+      sc.clearJobGroup()
+    } finally {
+      spark.conf.unset("spark.graft.save.parallelism")
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+  }
 }

@@ -216,6 +216,41 @@ class MirrorSwapSpec extends AnyFunSuite {
     assert(q2.count() == 1L)
   }
 
+  test("a part-file rewrite inside one mirror bucket directory is " +
+      "detected by the relation cache (bucket-directory mtimes are part " +
+      "of the freshness token)") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    def list(d: Path): Seq[Path] = {
+      val s = Files.list(d); try s.iterator.asScala.toSeq finally s.close()
+    }
+    val g = fixture(mirror = true)
+    val e = g.edgeTables("nx")._2
+    val q1 = e.filter(col("dst") === 777L)
+    assert(q1.queryExecution.executedPlan.toString.contains(".mirror_edges_nx"))
+    assert(q1.count() == 1L)
+    // replace the part files of the bucket holding dst 777 — same rows,
+    // new file names — without touching the mirror root or its _SUCCESS
+    val mirDir = java.nio.file.Paths.get(
+      s"${g.origin.get}/${GraphCatalog.MirrorPrefix}edges_nx")
+    val bucket = spark.read.parquet(mirDir.toString)
+      .filter(col("dst") === 777L).select("__ixb").head().getInt(0)
+    val bdir = mirDir.resolve(s"__ixb=$bucket")
+    val rootStamp = Files.getLastModifiedTime(mirDir)
+    val tmp = Files.createTempDirectory("graft-mswap-bucket").resolve("b")
+    spark.read.parquet(bdir.toString).localCheckpoint(true)
+      .write.parquet(tmp.toString)
+    list(bdir).foreach(Files.delete)
+    list(tmp).filter(_.getFileName.toString.startsWith("part-"))
+      .foreach(f => Files.move(f, bdir.resolve(f.getFileName)))
+    assert(Files.getLastModifiedTime(mirDir) == rootStamp,
+      "the rewrite must leave the mirror root's mtime as it was")
+    // a stale cached relation lists the deleted files and fails the scan
+    val q2 = e.filter(col("dst") === 777L)
+    assert(q2.queryExecution.executedPlan.toString.contains(".mirror_edges_nx"))
+    assert(q2.count() == 1L)
+  }
+
   test("swap parity on random graphs and random dst predicates " +
       "(seeded mini-fuzz)") {
     import spark.implicits._

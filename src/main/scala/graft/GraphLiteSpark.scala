@@ -745,8 +745,10 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
             org.apache.spark.sql.Row(o.props.map { case (k, v) =>
               coerce(v, schema(k).dataType) }: _*)
           }
+          // a local relation: the insert reads its keys off the plan
+          // and probes for duplicates inside its one restatement job
           val df = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.toSeq), schema)
+            scala.jdk.CollectionConverters.SeqHasAsJava(rows.toSeq).asJava, schema)
           // declared graph-type property types are authoritative: cast
           // value-inferred columns (a DECIMAL(12,2) or INT128 property
           // inserted from an integer literal must not drift the label
@@ -796,14 +798,13 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
               rows = rows.join(existing.select(col("src"), col("dst")),
                 Seq("src", "dst"), "left_anti")
             }
-            eprops.foreach { case (k, v) => rows = rows.withColumn(k, lit(v)) }
-            // materialized by the count's own job (see the MATCH…INSERT
-            // path): the anti-join stays out of the edge table's lineage
-            val (delta, n) = graft.graph.PropertyGraph.materializedCount(rows)
-            if (n > 0) {
-              val et = graft.graph.EdgeType(etype, srcO.label, dstO.label)
-              currentGraph = Some(graph2.insertEdges(graph, etype, et, delta))
-            }
+            eprops.foreach { case (k, v) =>
+              rows = rows.withColumn(k, graft.plans.RefLiteral.lit(v)) }
+            // evaluated once, by the job that restates the edge type and
+            // counts the new rows (see the MATCH…INSERT path)
+            val et = graft.graph.EdgeType(etype, srcO.label, dstO.label)
+            val (g2, n) = graph2.insertEdgesCounted(graph, etype, et, rows)
+            if (n > 0) currentGraph = Some(g2)
             (etype, n,
               if (n == 0L) "Duplicate edge detected: 1 duplicate(s) skipped"
               else null)
@@ -927,16 +928,17 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
             rows = rows.join(existing.select(col("src"), col("dst")),
               Seq("src", "dst"), "left_anti")
           }
+          // property values bind by reference: the next insert with other
+          // values reuses this one's generated code
           edgeProps.foreach { case (k, v) =>
-            rows = rows.withColumn(k, lit(v)) }
-          // the new rows are materialized by the job that counts them:
-          // left lazy, they embed the MATCH and the anti-join against the
-          // table's previous version, so every insert doubled the edge
-          // table's lineage and each later read and save re-ran all of it
-          val (delta, n) = graft.graph.PropertyGraph.materializedCount(rows)
+            rows = rows.withColumn(k, graft.plans.RefLiteral.lit(v)) }
+          // the new rows are evaluated once, by the job that restates the
+          // edge type and counts them — they join its checkpointed delta,
+          // so the MATCH and the anti-join never enter the table's lineage
           val et = graft.graph.EdgeType(label,
             varLabels.getOrElse(xVar, ""), varLabels.getOrElse(yVar, ""))
-          currentGraph = Some(graph2.insertEdges(graph, label, et, delta))
+          val (g2, n) = graph2.insertEdgesCounted(graph, label, et, rows)
+          currentGraph = Some(g2)
           n
         }
         var total = 0L
@@ -1001,9 +1003,6 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
             else !graph.nodeTables.contains(label))
           Seq(0L).toDF("properties_set")
         else {
-          val affected =
-            if (isEdge) graph.edgeScan(label, Some(pred)).count()
-            else graph.nodeScan(label, Some(pred)).count()
           // capture the matched id set from the PRE-mutation table: the
           // same statement may rewrite the very property the WHERE
           // matched on, and the label items must still apply to the rows
@@ -1011,10 +1010,12 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
           val matchedIds =
             if (labelAdds.isEmpty) null
             else graph.nodeTables(label).filter(pred).select(col("id"))
-          var g2 =
-            if (assigns.isEmpty) graph
-            else if (isEdge) graph2.setEdgeProps(graph, label, pred, assigns)
-            else graph2.setNodeProps(graph, label, pred, assigns)
+          // the affected count comes from the job that applies the SET
+          var (g2, affected) =
+            if (assigns.isEmpty)
+              (graph, graph.nodeScan(label, Some(pred)).count())
+            else if (isEdge) graph2.setEdgePropsCounted(graph, label, pred, assigns)
+            else graph2.setNodePropsCounted(graph, label, pred, assigns)
           // label adds copy the (already updated) matched rows into the
           // new label's table — multi-label scans then match them by id
           labelAdds.foreach { case (_, newLabel) =>
@@ -1056,14 +1057,14 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
           else graph.nodeTables.get(label).map(_.schema))
         if (!graph.nodeTables.contains(label))
           return Seq(0L).toDF("properties_removed")
-        val affected = graph.nodeScan(label, Some(pred)).count()
         // pre-mutation id capture, same reason as the SET label items
         val rmIds =
           if (labelRemoves.isEmpty) null
           else graph.nodeTables(label).filter(pred).select(col("id"))
-        var g2 =
-          if (props.isEmpty) graph
-          else graph2.removeNodeProps(graph, label, pred, props.map(_.prop))
+        var (g2, affected) =
+          if (props.isEmpty) (graph, graph.nodeScan(label, Some(pred)).count())
+          else graph2.setNodePropsCounted(graph, label, pred,
+            props.map(p => p.prop -> lit(null)).toMap)
         labelRemoves.foreach { case (_, rmLabel) =>
           g2 = graph2.removeNodeLabel(g2, rmIds, rmLabel)
         }
@@ -1098,15 +1099,15 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
         } else if (!isEdge && !graph.nodeTables.contains(label)) {
           Seq(0L).toDF("nodes_deleted")
         } else if (isEdge) {
-          val affected = graph.edgeScan(label, Some(pred)).count()
-          currentGraph = Some(graph2.deleteEdges(graph, label, pred))
+          val (g2, affected) = graph2.deleteEdgesCounted(graph, label, pred)
+          currentGraph = Some(g2)
           Seq(affected).toDF("edges_deleted")
         } else {
-          // the doomed ids are materialized by the job that counts them
-          val doomed = graft.graph.PropertyGraph.materializedCount(
-            graph.nodeScan(label, Some(pred)).select(col("id")))
-          currentGraph = Some(graph2.deleteNodesIn(graph, label, doomed, detach))
-          Seq(doomed._2).toDF("nodes_deleted")
+          // the doomed ids are found and counted by the job that
+          // restates the label
+          val (g2, n) = graph2.deleteNodesCounted(graph, label, pred, detach)
+          currentGraph = Some(g2)
+          Seq(n).toDF("nodes_deleted")
         }
 
       case CatalogStmt(op, kind, rawSchema, g, typed, ifNotExists, cascade) =>
@@ -1856,8 +1857,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
     val parts = path.stripPrefix("/").split("/")
     require(parts.length == 2, s"graph path must be /schema/graph, got $path")
     gls.catalog.createSchema(parts(0))
-    gls.catalog.saveGraph(parts(0), parts(1), graph, force)
-    currentGraph = Some(gls.catalog.loadGraph(parts(0), parts(1)))
+    currentGraph = Some(gls.catalog.saveAndReload(parts(0), parts(1), graph, force))
     currentName = Some(path)
   }
 
@@ -1961,7 +1961,10 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
       case Ident(`v`) => col("id")
       case Prop(other, _) => throw new GqlCompileException(
         s"DML expressions may only reference $v, got $other")
-      case NumLit(x, isInt) => if (isInt) lit(x.toLong) else lit(x.toDouble)
+      // numbers bind by reference: the next statement with other
+      // values reuses this one's generated code
+      case NumLit(x, isInt) =>
+        graft.plans.RefLiteral.lit(if (isInt) x.toLong else x.toDouble)
       case StrLit(s0) => lit(s0)
       case BoolLit(b) => lit(b)
       case NullLit() => lit(null)

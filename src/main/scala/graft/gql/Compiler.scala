@@ -2628,7 +2628,7 @@ final class Compiler(graph: PropertyGraph,
           if (neg) !c else c
         case CaseExpr(s, ws, o) => caseExpr(s, ws, o, x => compilePost(x, pc))
         case Cast(x, t) => compilePost(x, pc).cast(sparkType(t))
-        case NumLit(v, isInt) => if (isInt) lit(v.toLong) else lit(v.toDouble)
+        case n: NumLit => numLit(n)
         case StrLit(s) => lit(s)
         case BoolLit(b) => lit(b)
         case NullLit() => lit(null)
@@ -2636,10 +2636,16 @@ final class Compiler(graph: PropertyGraph,
       }
     }
 
+  /** A numeric constant, bound by reference: queries that differ only in
+    * a number share one generated class (see graft.plans.RefLiteral).
+    */
+  private def numLit(n: NumLit): Column =
+    graft.plans.RefLiteral.lit(if (n.isInt) n.v.toLong else n.v.toDouble)
+
   def compileExpr(e: Expr, ctx: Ctx): Column = e match {
     case NullLit() => lit(null)
     case BoolLit(b) => lit(b)
-    case NumLit(v, isInt) => if (isInt) lit(v.toLong) else lit(v.toDouble)
+    case n: NumLit => numLit(n)
     case StrLit(s) => lit(s)
     case ListLit(items) => array(items.map(compileExpr(_, ctx)): _*)
     case Ident(v) => ctx.bindings.get(v) match {
@@ -2648,7 +2654,7 @@ final class Compiler(graph: PropertyGraph,
       case _ => col(v)
     }
     case Param(name) => params.get(name) match {
-      case Some(v) => lit(v)
+      case Some(v) => graft.plans.RefLiteral.lit(v)
       case None => throw new GqlCompileException(
         s"unknown session parameter $$$name")
     }

@@ -128,6 +128,26 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     val group = s"graft-save-${GraphCatalog.saveIds.incrementAndGet()}"
     try saveGraphIn(schema, name, g, force, sc, group)
     finally callerProps.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    // the saved version no longer needs the checkpoints earlier
+    // statements superseded (statements never free them, so a rollback
+    // snapshot taken before the save stays readable until it)
+    g.supersededCheckpoints.foreach(Analytics.unpersistCheckpoint)
+  }
+
+  /** [[saveGraph]], then load the saved version warm: each dataset is
+    * read with the schema it was written with (no schema-inference job)
+    * and the saved graph's row-count estimates carry over, as they do
+    * across a mutation.
+    */
+  def saveAndReload(schema: String, name: String, g: PropertyGraph,
+      force: Boolean = false): PropertyGraph = {
+    saveGraph(schema, name, g, force)
+    val written = (g.nodeTables.map { case (l, df) => s"nodes_$l" -> df } ++
+      g.edgeTables.map { case (l, (_, df)) => s"edges_$l" -> df })
+      .map { case (ds, df) => ds -> GraphCatalog.writtenSchema(df.schema) }
+    val r = loadGraph(schema, name, written)
+    r.nodeCountCache ++= g.nodeCountCache
+    r
   }
 
   private def saveGraphIn(schema: String, name: String, g: PropertyGraph,
@@ -153,13 +173,64 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     // write-path regression should name its stage (staging write vs
     // hard-link vs swap) instead of moving an opaque total (r17 #5)
     val stages = Seq.newBuilder[(String, Double)]
+    Files.createDirectories(Paths.get(staging))
+    try writeStaging(dir, staging, g, incremental, dirtySet, sc, group, stages)
+    catch {
+      case e: Throwable =>
+        // a failed save leaves no staging behind (recovery at the next
+        // catalog open would delete it too, but only then)
+        awaitGroupTasks(sc, group)
+        deleteRecursive(Paths.get(staging))
+        throw e
+    }
+    val meta = g.edgeTables.map { case (label, (et, _)) =>
+      s"$label\t${et.srcLabel}\t${et.dstLabel}"
+    }.mkString("\n")
+    // _meta is the staging COMMIT MARKER: it is written last, so its
+    // presence certifies a complete staging — recovery promotes only
+    // marked stagings; the atomic write keeps the marker all-or-nothing
+    // (a torn _meta would read as a COMPLETE staging with corrupt edge
+    // metadata and get rolled forward)
+    writeAtomic(Paths.get(s"$staging/_meta"), meta)
+    val t0 = System.nanoTime()
+    commitSwap(dir, staging)
+    stages += (("swap", (System.nanoTime() - t0) / 1e9))
+    // the swap replaced this path's files — drop any pruning specs keyed
+    // under it; the next loadGraph re-registers from current options
+    graft.plans.BucketPrune.invalidateUnder(dir)
+    graft.plans.MirrorSwap.invalidateUnder(dir)
+    GraphCatalog.lastSaveStages = stages.result()
+  }
+
+  /** Wait (bounded) until no task of the save's job group still runs:
+    * a cancelled job reports its end before its killed tasks stop, and a
+    * task still running could write into the staging directory after it
+    * was deleted.
+    */
+  private def awaitGroupTasks(sc: org.apache.spark.SparkContext,
+      group: String): Unit = {
+    val st = sc.statusTracker
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def running: Boolean = st.getJobIdsForGroup(group).exists { j =>
+      st.getJobInfo(j).exists(_.stageIds.exists(s =>
+        st.getStageInfo(s).exists(_.numActiveTasks > 0)))
+    }
+    while (running && System.nanoTime() < deadline) Thread.sleep(20)
+  }
+
+  /** The write phase of a save: every dirty dataset written into
+    * `staging` (concurrently, see below), every clean one hard-linked.
+    */
+  private def writeStaging(dir: String, staging: String, g: PropertyGraph,
+      incremental: Boolean, dirtySet: Set[String],
+      sc: org.apache.spark.SparkContext, group: String,
+      stages: scala.collection.mutable.Builder[(String, Double), Seq[(String, Double)]]): Unit = {
     def staged[A](label: String)(body: => A): A = {
       val t0 = System.nanoTime()
       val r = body
       stages += ((label, (System.nanoTime() - t0) / 1e9))
       r
     }
-    Files.createDirectories(Paths.get(staging))
     val datasets: Seq[(String, DataFrame)] =
       g.nodeTables.toSeq.map { case (l, df) => (s"nodes_$l", df) } ++
         g.edgeTables.toSeq.map { case (l, (_, df)) => (s"edges_$l", df) }
@@ -203,7 +274,10 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     // Every job of the save runs in ONE job group, so the first failed
     // write cancels its peers' running jobs; each task names its step in
     // the job description.
-    def inGroup(desc: String): Unit = sc.setJobGroup(group, desc)
+    // interruptible: a cancelled peer must stop writing into the staging
+    // directory the failed save is about to delete
+    def inGroup(desc: String): Unit =
+      sc.setJobGroup(group, desc, interruptOnCancel = true)
     def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
     val writeTasks: Seq[() => Seq[(String, Double)]] =
       datasets.filter { case (ds, _) => dirtySet.contains(ds) }
@@ -236,18 +310,17 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           // is off (a stale mirror then vanishes at the swap)
           def scopedChain(): Seq[(String, Double)] = {
             val out = Seq.newBuilder[(String, Double)]
-            val keys = g.touchedKeysFor(ds).map(new SaveKeys(_))
             /** One layout: the touched-bucket step (`buckets:<name>`,
-              * recorded when the layout and the keys allow an attempt),
-              * then the scoped write or, failing any precondition, the
-              * full one. True when the write was bucket-scoped. */
+              * recorded when the layout allows an attempt), then the
+              * scoped write or, failing any precondition, the full one.
+              * True when the write was bucket-scoped. */
             def attempt(name: String,
                 layout: Option[GraphCatalog.ScopedLayout])(
                 full: => Unit): Boolean = {
               inGroup(s"save $name (incremental)")
-              val plan = (for (l <- layout; k <- keys) yield {
+              val plan = (for (l <- layout; d <- g.scopedDelta(ds)) yield {
                 val t0 = System.nanoTime()
-                val p = touchedBuckets(l, ds, t, dir, k, g)
+                val p = touchedBuckets(l, ds, t, dir, d, g)
                 out += ((s"buckets:$name", secs(t0)))
                 p.map(l -> _)
               }).flatten
@@ -261,14 +334,12 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
               out += ((s"write:$name:$kind", secs(t1)))
               plan.isDefined
             }
-            try {
-              val mainScoped = attempt(ds, mainLayout(ds, t))(
-                writeClustered(ds, t, s"$staging/$ds"))
-              if (hasMirror)
-                attempt(mirName,
-                  if (mainScoped) mirrorLayout(ds, t) else None)(
-                  writeMirror(ds, t, staging))
-            } finally keys.foreach(_.release())
+            val mainScoped = attempt(ds, mainLayout(ds, t))(
+              writeClustered(ds, t, s"$staging/$ds"))
+            if (hasMirror)
+              attempt(mirName,
+                if (mainScoped) mirrorLayout(ds, t) else None)(
+                writeMirror(ds, t, staging))
             out.result()
           }
           if (incremental) Seq(() => scopedChain())
@@ -288,22 +359,34 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           val th = new Thread(r, "graft-save-write"); th.setDaemon(true); th
         })
       try {
-        val futs = writeTasks.map(tk =>
-          pool.submit(new java.util.concurrent.Callable[Seq[(String, Double)]] {
-            def call(): Seq[(String, Double)] = tk()
-          }))
-        // stage entries keep task-submission order; the first failed
-        // write fails the whole save (before the commit marker), and its
-        // peers' running jobs are cancelled before the pool is torn down
-        try futs.foreach(f => stages ++= f.get())
-        catch {
+        val done = new java.util.concurrent.ExecutorCompletionService[
+          (Int, Seq[(String, Double)])](pool)
+        val futs = writeTasks.zipWithIndex.map { case (tk, i) =>
+          done.submit(new java.util.concurrent.Callable[(Int, Seq[(String, Double)])] {
+            def call(): (Int, Seq[(String, Double)]) = (i, tk())
+          })
+        }
+        // writes are awaited in COMPLETION order, so the first failed
+        // write fails the save (before the commit marker) at once: its
+        // peers' running jobs, and any job they would start next, are
+        // cancelled before the pool is torn down. Stage entries keep
+        // task-submission order.
+        val out = new Array[Seq[(String, Double)]](futs.size)
+        try futs.indices.foreach { _ =>
+          val (i, r) = done.take().get()
+          out(i) = r
+        } catch {
           case e: Throwable =>
-            sc.cancelJobGroup(group)
+            sc.cancelJobGroupAndFutureJobs(group)
+            // the peers end once their cancelled jobs do; only then is
+            // nothing left writing into the staging directory
+            futs.foreach(f => scala.util.Try(f.get()))
             throw (e match {
               case ee: java.util.concurrent.ExecutionException => ee.getCause
               case other => other
             })
         }
+        out.foreach(stages ++= _)
       } finally pool.shutdownNow()
     }
     staged("link_clean") {
@@ -321,21 +404,6 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
         }
       }
     }
-    val meta = g.edgeTables.map { case (label, (et, _)) =>
-      s"$label\t${et.srcLabel}\t${et.dstLabel}"
-    }.mkString("\n")
-    // _meta is the staging COMMIT MARKER: it is written last, so its
-    // presence certifies a complete staging — recovery promotes only
-    // marked stagings; the atomic write keeps the marker all-or-nothing
-    // (a torn _meta would read as a COMPLETE staging with corrupt edge
-    // metadata and get rolled forward)
-    writeAtomic(Paths.get(s"$staging/_meta"), meta)
-    staged("swap")(commitSwap(dir, staging))
-    // the swap replaced this path's files — drop any pruning specs keyed
-    // under it; the next loadGraph re-registers from current options
-    graft.plans.BucketPrune.invalidateUnder(dir)
-    graft.plans.MirrorSwap.invalidateUnder(dir)
-    GraphCatalog.lastSaveStages = stages.result()
   }
 
   /** Promote `staging` to the live directory by rename-aside — the same
@@ -462,22 +530,6 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           Seq(mk), _))
     }
 
-  /** A dirty dataset's touched-key frame for the span of one save.
-    * [[materialized]] runs its lineage at most once — on first use, by the
-    * first layout that must join the keys — and the mirror layout reuses
-    * the result; [[release]] frees the checkpoint when the dataset's
-    * writes are done.
-    */
-  private final class SaveKeys(val raw: DataFrame) {
-    private var mat: Option[(DataFrame, Long)] = None
-    def materialized: (DataFrame, Long) = mat.getOrElse {
-      val m = PropertyGraph.materializedCount(raw)
-      mat = Some(m)
-      m
-    }
-    def release(): Unit = mat.foreach(m => Analytics.unpersistCheckpoint(m._1))
-  }
-
   /** The touched-bucket step of a bucket-scoped save, for one layout of
     * dirty dataset `ds`: Some((touched bucket ids, live bucket
     * directories)) when the scoped write applies, None when the caller
@@ -485,71 +537,54 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     *
     * Applicable when (a) the layout's boundaries are already persisted,
     * (b) the live directory is already in the bucketed `__ixb=K/`
-    * layout, (c) every mutation since load recorded its touched identity
-    * keys ([[PropertyGraph.touchedKeys]]), (d) the schema is unchanged,
-    * and (e) the touched buckets are at most half the layout. The keys
-    * hold the pre- AND post-mutation identities of every touched row, so
-    * the touched buckets are:
-    *  - when the layout is keyed on the identity column itself (`id` of
-    *    a node label, `eid` of an edge type): the keys' own buckets,
-    *    computed straight from the key frame in one job — no join
-    *    against the live files or the mutated frame;
-    *  - otherwise: the buckets of the key column's value on the touched
-    *    rows, before (live files) and after (mutated frame) — a SET that
-    *    moves a row between buckets rewrites both. The key frame is
-    *    materialized once ([[SaveKeys]]) and broadcast by its exact size
-    *    into both joins.
+    * layout, (c) the dataset's mutations since load are one
+    * [[LabelDelta]] (no whole-table rewrite), (d) the schema is the one
+    * recorded at load, and (e) the touched buckets are at most half the
+    * layout. The touched buckets are `bucketOf(layout key)` over the
+    * delta's checkpoint — the current version of every inserted or
+    * updated row and the pre-image of every base row it superseded or
+    * deleted — plus the base rows an endpoint hide removed (the hide's
+    * values themselves when the layout is keyed on that endpoint,
+    * otherwise a filtered read of the base). No join against the live
+    * files: one job over a small checkpoint.
     *
     * This is the 100 TB maintenance story the bucketed layout exists
     * for: a DML touching one bucket of a 100K-file label costs one
     * bucket's rewrite plus link metadata, not an O(table) range shuffle.
     */
   private def touchedBuckets(layout: GraphCatalog.ScopedLayout, ds: String,
-      df: DataFrame, liveDir: String, keys: SaveKeys, g: PropertyGraph)
+      df: DataFrame, liveDir: String, d: LabelDelta, g: PropertyGraph)
       : Option[(Set[Int], Seq[java.nio.file.Path])] = {
     import org.apache.spark.sql.functions.col
-    val idCol = if (ds.startsWith("nodes_")) "id" else "eid"
+    val kc = layout.keyCol
     val oldPath = Paths.get(s"$liveDir/${layout.dirName}")
-    if (!df.columns.contains(idCol) || !Files.exists(oldPath)) return None
+    if (!df.columns.contains(kc) || !d.store.columns.contains(kc) ||
+        !Files.exists(oldPath)) return None
     val bucketDirs = listDir(oldPath)
       .filter(_.getFileName.toString.startsWith(s"$BucketCol="))
     if (bucketDirs.isEmpty) return None // live layout not bucketed yet
-    val old = spark.read.parquet(oldPath.toString)
     // SCHEMA-CHANGE gate: hard-linked buckets keep their original file
     // schema, so a bucket-scoped save of a frame whose schema moved
     // (id-type widening, added/removed/retyped property columns) would
     // leave a MIXED-schema dataset — unreadable for type changes
     // (INT64 files beside BINARY files) and silently column-dropping
-    // for additions (the reader samples one footer). Any schema drift
-    // falls back to the monolithic rewrite, which rewrites every file
-    // under the new schema.
-    val oldSchema = old.drop(BucketCol).schema
-      .map(f => (f.name, f.dataType)).toSet
-    val newSchema = df.schema.map(f => (f.name, f.dataType)).toSet
-    if (oldSchema != newSchema) return None
-    // keys are recorded as strings (the union type across id-widening —
-    // see GraphMutations.keyFrame); the schema gate above guarantees the
-    // live files and df agree on the id type, so the TINY key side casts
-    // once and both sides compare natively
-    val idType = df.schema(idCol).dataType
-    val bucketOf = bucketExpr(col("__v"), layout.bounds)
-    val touched =
-      if (layout.keyCol == idCol)
-        GraphCatalog.distinctInts(
-          keys.raw.select(col("__k").cast(idType).as("__v")).select(bucketOf))
-      else {
-        val (k, n) = keys.materialized
-        if (n == 0) Set.empty[Int]
-        else {
-          val kb = g.broadcastIfBoundedRows(n,
-            k.select(col("__k").cast(idType).as("__k")))
-          def keyVals(f: DataFrame) =
-            f.join(kb, f(idCol) === kb("__k"), "left_semi")
-              .select(col(layout.keyCol).as("__v"))
-          GraphCatalog.distinctInts(
-            keyVals(old).union(keyVals(df)).select(bucketOf))
-        }
+    // for additions (the reader samples one footer). Any drift from the
+    // schema recorded at load falls back to the monolithic rewrite,
+    // which rewrites every file under the new schema.
+    def cols(s: org.apache.spark.sql.types.StructType) =
+      s.map(f => (f.name, f.dataType)).toSet
+    if (!g.loadedSchemas.get(ds).exists(s => cols(s) == cols(df.schema)))
+      return None
+    val keyType = df.schema(kc).dataType
+    def vals(f: DataFrame, c: String) = f.select(col(c).cast(keyType).as("__v"))
+    val hidden = d.tomb.toSeq.filter { case (c, k) => c != d.key && k.count > 0 }
+      .map { case (c, k) =>
+        if (c == kc) Keys.frame(spark, k, d.base.schema(c).dataType).toDF(c)
+        else Keys.pick(d.base, c, k)
       }
+    val touched = GraphCatalog.distinctInts(
+      (vals(d.store, kc) +: hidden.map(vals(_, kc))).reduce(_ union _)
+        .select(bucketExpr(col("__v"), layout.bounds)))
     // cost gate: when a mutation touched most of the buckets anyway,
     // the monolithic range-shuffle rewrite is cheaper than per-bucket
     // writes plus links — bucket-scoping is for the sparse-delta case
@@ -1020,7 +1055,14 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
         }
     }
 
-  def loadGraph(schema: String, name: String): PropertyGraph = {
+  def loadGraph(schema: String, name: String): PropertyGraph =
+    loadGraph(schema, name, Map.empty)
+
+  /** Load with the file schema of the datasets in `known` given rather
+    * than inferred (inference runs a Spark job per dataset).
+    */
+  private def loadGraph(schema: String, name: String,
+      known: Map[String, org.apache.spark.sql.types.StructType]): PropertyGraph = {
     val dir = graphDir(schema, name)
     val p = Paths.get(dir)
     require(Files.exists(p), s"no such graph: $schema/$name")
@@ -1029,13 +1071,15 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     // it is storage metadata, not graph data. Before the drop, register
     // the dataset's pruning spec (lead key + persisted boundaries) so
     // key predicates over this scan prune to their bucket directories.
+    def read(ds: String): DataFrame = known.get(ds)
+      .fold(spark.read)(spark.read.schema(_)).parquet(s"$dir/$ds")
     def noBucket(ds: String, df: DataFrame): DataFrame =
       if (df.columns.contains(BucketCol)) {
         registerPrune(ds, df, s"$dir/$ds")
         df.drop(BucketCol)
       } else df
     val nodes = entries.filter(_.startsWith("nodes_")).map { e =>
-      e.stripPrefix("nodes_") -> noBucket(e, spark.read.parquet(s"$dir/$e"))
+      e.stripPrefix("nodes_") -> noBucket(e, read(e))
     }.toMap
     val meta = if (Files.exists(Paths.get(s"$dir/_meta")))
       Files.readString(Paths.get(s"$dir/_meta")).split("\n").filter(_.nonEmpty)
@@ -1045,7 +1089,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     val edges = entries.filter(_.startsWith("edges_")).map { e =>
       val label = e.stripPrefix("edges_")
       val et = meta.getOrElse(label, EdgeType(label, "", ""))
-      val df = noBucket(e, spark.read.parquet(s"$dir/$e"))
+      val df = noBucket(e, read(e))
       // dual-keyed mirror (mirror = true layouts): register its pruning
       // spec too, so traversals can prune the OTHER orientation's branch
       registerMirror(e, df, dir)
@@ -1053,7 +1097,10 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     }.toMap
     // loaded graphs know their origin and start clean — mutations mark
     // the touched datasets so saves back to the same path go incremental
-    new PropertyGraph(nodes, edges, Some(dir), Some(Set.empty))
+    val g = new PropertyGraph(nodes, edges, Some(dir), Some(Set.empty))
+    g.loadedSchemas = nodes.map { case (l, df) => s"nodes_$l" -> df.schema } ++
+      edges.map { case (l, (_, df)) => s"edges_$l" -> df.schema }
+    g
   }
 
   def dropSchema(schema: String): Boolean = {
@@ -1475,6 +1522,16 @@ object GraphCatalog {
     * For bucket ids, so at most (tasks × buckets) ints are collected
     * whatever the frame's row count.
     */
+  /** The schema a frame is persisted with: untyped all-NULL columns
+    * (NullType) are written as strings.
+    */
+  private[graph] def writtenSchema(
+      s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{NullType, StringType, StructType}
+    StructType(s.fields.map(f =>
+      if (f.dataType == NullType) f.copy(dataType = StringType) else f))
+  }
+
   private[graph] def distinctInts(df: DataFrame): Set[Int] =
     df.queryExecution.toRdd
       .mapPartitions(it => it.map(_.getInt(0)).toSet.iterator)

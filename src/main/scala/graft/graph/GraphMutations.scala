@@ -2,28 +2,197 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{NullType, StringType}
 
 /** DML over property graphs, copy-on-write (SURVEY.md §2.11 mapping of
   * the reference's write engine, exec/write_engine/operations/):
-  * every mutation returns a NEW PropertyGraph whose tables are derived
-  * DataFrames; persisting a version is `GraphCatalog.saveGraph` (the
-  * snapshot-isolation analog of the reference's WAL+txn machinery —
-  * interactive multi-statement transactions are documented out of scope,
-  * SURVEY.md §7.4.4).
+  * every mutation returns a NEW PropertyGraph; persisting a version is
+  * `GraphCatalog.saveGraph` (the snapshot-isolation analog of the
+  * reference's WAL+txn machinery — interactive multi-statement
+  * transactions are documented out of scope, SURVEY.md §7.4.4).
   *
-  * All operations are single narrow transformations or anti-joins — no
-  * collect, no driver-side loops; they scale with the table, not the
-  * mutation count.
+  * A statement on a label with an identity column (`id` of a node label,
+  * `eid` of an edge type) restates that label's [[LabelDelta]] in ONE
+  * job: the rows it hits are computed against the current view, the new
+  * delta and the superseded base rows' pre-images are checkpointed, and
+  * the job's accumulator returns the affected count and keys. The label
+  * then reads as `base ⊖ tomb ⊕ delta` — the same plan shape after every
+  * statement (DuckDB keeps updates as version data beside unchanged base
+  * storage the same way). Labels without an identity column, and id-type
+  * widening, replace the table as a whole.
   */
 object GraphMutations {
+  import LabelDelta.{Hit, IsGhost, Keep, New, tag}
 
-  /** One-column `__k` frame of STRING-rendered identity keys — the
-    * shape [[PropertyGraph.touchedKeys]] accumulates (string so frames
-    * union across id-type widening) and
-    * [[GraphCatalog.saveGraph]]'s bucket-scoped writes join back on.
+  private def union(frames: Seq[DataFrame], what: => String): DataFrame =
+    SchemaReconcile.union(frames, what)
+
+  /** The mutation state of dataset `ds` (table `df`): the graph's, or a
+    * fresh one over `df`; None when `df` has no identity column.
     */
-  private def keyFrame(df: DataFrame, idCol: String): DataFrame =
-    df.select(col(idCol).cast("string").as("__k"))
+  private def stateOf(g: PropertyGraph, ds: String, df: DataFrame): Option[LabelDelta] = {
+    val key = if (ds.startsWith("nodes_")) "id" else "eid"
+    if (!df.columns.contains(key)) None
+    else Some(g.deltaFor(ds).getOrElse(LabelDelta.fresh(df, key)))
+  }
+
+  /** `g` with `restated` datasets reading their new views and
+    * `rewritten` ones replaced as a whole. */
+  private def commit(g: PropertyGraph, restated: Map[String, LabelDelta],
+      rewritten: Map[String, DataFrame] = Map.empty,
+      edgeTypes: Map[String, EdgeType] = Map.empty): PropertyGraph = {
+    var nn = g.nodeTables
+    var ne = g.edgeTables
+    def put(ds: String, df: DataFrame): Unit =
+      if (ds.startsWith("nodes_")) nn += ds.stripPrefix("nodes_") -> df
+      else {
+        val l = ds.stripPrefix("edges_")
+        ne += l -> (edgeTypes.getOrElse(l, ne(l)._1), df)
+      }
+    restated.foreach { case (ds, d) => put(ds, d.view) }
+    rewritten.foreach { case (ds, df) => put(ds, df) }
+    g.mutated(nn, ne, restated.keySet ++ rewritten.keySet, restated, rewritten.keySet)
+  }
+
+  private def run(d: LabelDelta, tagged: DataFrame): (LabelDelta, LabelDelta.Outcome) = {
+    val o = LabelDelta.restate(tagged, d.key)
+    (d.restated(o), o)
+  }
+
+  private def ghosts(d: LabelDelta): DataFrame = tag(d.ghostRows, Keep | IsGhost)
+
+  /** `ids` (column `key`, any duplicates) as a distinct join side typed
+    * like `df`'s key, broadcast by its exact count when known. */
+  private def keySide(df: DataFrame, key: String, ids: DataFrame,
+      n: Option[Long]): DataFrame = {
+    val k = ids.select(col(key).cast(df.schema(key).dataType).as("__mk")).distinct()
+    n.fold(k)(c => PropertyGraph.broadcastIfBoundedRows(c, k))
+  }
+
+  /** Whether assigning changed the type of a typed column. A SET is one
+    * CASE over every row of the label, so the whole column takes the
+    * new type (NULL-typed columns simply adopt it); a view cannot re-type
+    * its base rows, so such a statement replaces the label as a whole.
+    */
+  private def retyped(before: DataFrame, after: DataFrame): Boolean =
+    after.schema.fields.exists(f => before.columns.contains(f.name) && {
+      val b = before.schema(f.name).dataType
+      b != NullType && b != f.dataType
+    })
+
+  /** A retyping SET applied to the whole table, materialized so the
+    * plan stays bounded. */
+  private def wholeTable(g: PropertyGraph, ds: String, table: DataFrame,
+      assigned: DataFrame, pred: Column): (PropertyGraph, Long) = {
+    val n = table.filter(pred).count()
+    (commit(g, Map.empty, Map(ds -> PropertyGraph.materialized(
+      assigned.drop(LabelDelta.Tag)))), n)
+  }
+
+  // ---- the statement kinds, each one restatement job ----
+
+  /** Hit = rows matching `pred` (TRUE only, 3VL); each assignment is
+    * applied to them, the base ones leave a ghost. */
+  private def setBy(d: LabelDelta, pred: Column,
+      assignments: Map[String, Column]): (LabelDelta, LabelDelta.Outcome) = {
+    val hitBase = d.visibleBase.filter(pred)
+    val live = union(Seq(hitBase, d.visibleDelta), s"SET on ${d.key}-keyed rows")
+    run(d, union(Seq(applyAssigns(live, pred, assignments),
+      tag(hitBase, Keep | IsGhost), ghosts(d)), "SET"))
+  }
+
+  /** Hit = rows matching `pred` (TRUE only); they leave the view. */
+  private def deleteBy(d: LabelDelta, pred: Column): (LabelDelta, LabelDelta.Outcome) =
+    run(d, union(Seq(tag(d.visibleDelta, pred, Hit, Keep),
+      tag(d.visibleBase.filter(pred), Keep | IsGhost | Hit), ghosts(d)), "DELETE"))
+
+  /** Hit = rows whose key is in `ids`; they leave the view. */
+  private def deleteByKeys(d: LabelDelta, ids: DataFrame,
+      n: Option[Long]): (LabelDelta, LabelDelta.Outcome) = {
+    val vb = d.visibleBase
+    val bs = keySide(vb, d.key, ids, n)
+    val hitBase = vb.join(bs, vb(d.key) === bs("__mk"), "left_semi")
+    val dv = d.visibleDelta
+    val ds = keySide(dv, d.key, ids, n).withColumn("__mv", lit(true))
+    val dTagged = dv.join(ds, dv(d.key) === ds("__mk"), "left_outer")
+    run(d, union(Seq(tag(dTagged, col("__mv"), Hit, Keep).drop("__mk", "__mv"),
+      tag(hitBase, Keep | IsGhost | Hit), ghosts(d)), "DELETE"))
+  }
+
+  /** `rows` join the delta. With `probe` (the driver-known keys of the
+    * rows), the hits are the view rows already holding one of them. */
+  private def insertInto(d: LabelDelta, rows: DataFrame,
+      probe: Option[InlineKeys]): (LabelDelta, LabelDelta.Outcome) = {
+    val dv = d.visibleDelta
+    val parts = probe match {
+      case None => Seq(tag(dv, Keep))
+      case Some(p) => Seq(
+        tag(dv, Keys.memberOf(d.key, p), Keep | Hit, Keep),
+        tag(Keys.pick(d.visibleBase, d.key, p), Hit))
+    }
+    run(d, union(parts ++ Seq(tag(rows, Keep | New), ghosts(d)), "INSERT"))
+  }
+
+  /** The update rows of a SET-from: `(__uid, __new_<prop>…, __matched)`. */
+  private def updateSide(updates: DataFrame, key: String,
+      props: Seq[String]): DataFrame =
+    props.foldLeft(updates.select((col(key) +: props.map(col)): _*))(
+      (x, p) => x.withColumnRenamed(p, s"__new_$p"))
+      .withColumn("__matched", lit(true)).withColumnRenamed(key, "__uid")
+
+  /** `df` with the update rows `u` applied by key, tagged (matched rows
+    * are hits). */
+  private def assignFrom(df: DataFrame, key: String, u: DataFrame,
+      props: Seq[String]): DataFrame = {
+    var joined = df.join(u, df(key) === u("__uid"), "left_outer")
+    props.foreach { p =>
+      joined =
+        if (joined.columns.contains(p) && joined.schema(p).dataType != NullType)
+          joined.withColumn(p, when(col("__matched"), col(s"__new_$p")).otherwise(col(p)))
+        else joined.withColumn(p, when(col("__matched"), col(s"__new_$p")))
+    }
+    tag(joined, col("__matched"), Keep | Hit, Keep)
+      .drop("__matched", "__uid").drop(props.map(p => s"__new_$p"): _*)
+  }
+
+  /** Hit = rows whose key has an update row; `props` take the update's
+    * values (including genuine NULLs — hence the match flag). A
+    * retyping update replaces the table as a whole (see [[retyped]]). */
+  private def setFrom(g: PropertyGraph, ds: String, table: DataFrame,
+      updates: DataFrame, props: Seq[String]): PropertyGraph = {
+    val d = stateOf(g, ds, table).get
+    val key = d.key
+    val u = updateSide(updates, key, props)
+    val whole = assignFrom(table, key, u, props)
+    if (retyped(table, whole))
+      commit(g, Map.empty, Map(ds -> PropertyGraph.materialized(whole.drop(LabelDelta.Tag))))
+    else {
+      val vb = d.visibleBase
+      val hitBase = vb.join(u.select(col("__uid")), vb(key) === u("__uid"), "left_semi")
+      val live = union(Seq(hitBase, d.visibleDelta), s"SET on $key-keyed rows")
+      commit(g, Map(ds -> run(d, union(Seq(assignFrom(live, key, u, props),
+        tag(hitBase, Keep | IsGhost), ghosts(d)), "SET"))._1))
+    }
+  }
+
+  /** Driver-held keys of `rows` when it is a local relation (a literal
+    * INSERT): read off the plan, no job. */
+  private def localKeys(rows: DataFrame, key: String): Option[InlineKeys] =
+    rows.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val i = l.output.indexWhere(_.name == key)
+        if (i < 0) None
+        else {
+          val dt = l.output(i).dataType
+          val s = new java.util.HashSet[Any]()
+          l.data.foreach(r => if (!r.isNullAt(i)) s.add(r.get(i, dt) match {
+            case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
+            case v => v
+          }))
+          Some(InlineKeys(s))
+        }
+      case _ => None
+    }
 
   /** INSERT nodes (write_engine/operations/insert.rs analog). Rows must
     * carry an `id` column; duplicate ids with existing rows are rejected
@@ -37,48 +206,56 @@ object GraphMutations {
     * Double — and 60-bit hash identities exceed Double's 2^53 exact-int
     * range, silently corrupting the join. Casting Long→String here uses
     * the same rendering as the eid `concat_ws` convention, so eids stay
-    * stable.
+    * stable. A widening replaces the label and those edge tables as a
+    * whole (every row changed).
     */
   def insertNodes(g: PropertyGraph, label: String, rows: DataFrame,
       failOnDuplicate: Boolean = true): PropertyGraph = {
-    val updated = g.nodeTables.get(label) match {
-      case None => rows
+    val ds = s"nodes_$label"
+    g.nodeTables.get(label) match {
+      case None => commit(g, Map.empty, Map(ds -> rows))
       case Some(existing) =>
-        if (failOnDuplicate) {
+        val (idOld, idNew) = (existing.schema("id").dataType, rows.schema("id").dataType)
+        val probe = if (failOnDuplicate) localKeys(rows, "id") else None
+        if (failOnDuplicate && (probe.isEmpty || idOld != idNew)) {
           // compare through string when the incoming id type differs from
           // the table's (a string id arriving at a Long-id label) — the
           // raw join would ANSI-cast 'u3' to BIGINT and throw before the
           // union gets a chance to widen the column
           val dups =
-            if (rows.schema("id").dataType == existing.schema("id").dataType)
-              rows.join(existing.select("id"), "id")
+            if (idOld == idNew) rows.join(existing.select("id"), "id")
             else rows.select(col("id").cast("string").as("id"))
               .join(existing.select(col("id").cast("string").as("id")), "id")
           if (!dups.isEmpty)
             throw new IllegalArgumentException(
               s"duplicate node id(s) on insert into $label")
         }
-        SchemaReconcile.union(Seq(existing, rows),
-          s"INSERT into node label $label")
+        val widened = SchemaReconcile.widerType(idOld, idNew)
+          .exists(w => w != idOld)
+        if (widened) {
+          val updated = union(Seq(existing, rows), s"INSERT into node label $label")
+          var rewritten = Map(ds -> updated)
+          if (updated.schema("id").dataType == StringType)
+            g.edgeTables.foreach { case (l, (et, e)) =>
+              var out = e
+              if (et.srcLabel == label && out.schema("src").dataType != StringType)
+                out = out.withColumn("src", col("src").cast(StringType))
+              if (et.dstLabel == label && out.schema("dst").dataType != StringType)
+                out = out.withColumn("dst", col("dst").cast(StringType))
+              if (!(out eq e)) rewritten += s"edges_$l" -> out
+            }
+          commit(g, Map.empty, rewritten)
+        } else {
+          val d = stateOf(g, ds, existing).get
+          val (nd, o) = insertInto(d, rows, if (idOld == idNew) probe else None)
+          if (o.hits > 0) {
+            Analytics.unpersistCheckpoint(o.store)
+            throw new IllegalArgumentException(
+              s"duplicate node id(s) on insert into $label")
+          }
+          commit(g, Map(ds -> nd))
+        }
     }
-    import org.apache.spark.sql.types.StringType
-    var touched = Set(s"nodes_$label")
-    val newEdges =
-      if (updated.schema("id").dataType != StringType) g.edgeTables
-      else g.edgeTables.map { case (l, (et, e)) =>
-        var out = e
-        if (et.srcLabel == label && out.schema("src").dataType != StringType)
-          out = out.withColumn("src", col("src").cast(StringType))
-        if (et.dstLabel == label && out.schema("dst").dataType != StringType)
-          out = out.withColumn("dst", col("dst").cast(StringType))
-        if (!(out eq e)) touched += s"edges_$l"
-        l -> (et, out)
-      }
-    // inserted ids are the touched keys for this label; the edge tables
-    // an id-widening cast rewrote get NO key frame (every row changed —
-    // they poison to full rewrite, which is what that cast needs)
-    g.mutated(g.nodeTables + (label -> updated), newEdges, touched,
-      Map(s"nodes_$label" -> keyFrame(rows, "id")))
   }
 
   /** INSERT edges. Rows carry (src, dst, eid, props…).
@@ -90,8 +267,15 @@ object GraphMutations {
     * equi-joins on one type.
     */
   def insertEdges(g: PropertyGraph, label: String, et: EdgeType,
-      rows: DataFrame): PropertyGraph = {
-    import org.apache.spark.sql.types.StringType
+      rows: DataFrame): PropertyGraph = insertEdgesCounted(g, label, et, rows)._1
+
+  /** [[insertEdges]] plus the number of rows inserted, counted by the
+    * job that restates the edge type — `rows` may stay lazy (a MATCH,
+    * an anti-join against the current edges): they are evaluated once,
+    * inside that job.
+    */
+  def insertEdgesCounted(g: PropertyGraph, label: String, et: EdgeType,
+      rows: DataFrame): (PropertyGraph, Long) = {
     def idIsString(lbl: String): Boolean =
       g.nodeTables.get(lbl).exists(_.schema("id").dataType == StringType)
     var aligned = rows
@@ -99,20 +283,25 @@ object GraphMutations {
       aligned = aligned.withColumn("src", col("src").cast(StringType))
     if (idIsString(et.dstLabel) && aligned.schema("dst").dataType != StringType)
       aligned = aligned.withColumn("dst", col("dst").cast(StringType))
-    val updated = g.edgeTables.get(label) match {
-      case None => (et, aligned)
-      case Some((t, existing)) =>
-        // inserting a property under a different type widens the table
-        // column to the common supertype (dynamic-value parity; an
-        // irreconcilable type errors here, before any row lands)
-        (t, SchemaReconcile.union(Seq(existing, aligned),
-          s"INSERT into edge type $label"))
+    val ds = s"edges_$label"
+    g.edgeTables.get(label) match {
+      case None =>
+        val (t, n) = PropertyGraph.materializedCount(aligned)
+        (commit(g, Map.empty, Map(ds -> t), Map(label -> et)), n)
+      case Some((_, existing)) => stateOf(g, ds, existing) match {
+        case Some(d) =>
+          // inserting a property under a different type widens the view's
+          // column to the common supertype (dynamic-value parity; an
+          // irreconcilable type errors in the union, before any row lands)
+          val (nd, o) = insertInto(d, aligned, None)
+          (commit(g, Map(ds -> nd)), o.added)
+        case None =>
+          val (m, n) = PropertyGraph.materializedCount(aligned)
+          val t = PropertyGraph.materialized(
+            union(Seq(existing, m), s"INSERT into edge type $label"))
+          (commit(g, Map.empty, Map(ds -> t)), n)
+      }
     }
-    g.mutated(g.nodeTables, g.edgeTables + (label -> updated),
-      Set(s"edges_$label"),
-      if (aligned.columns.contains("eid"))
-        Map(s"edges_$label" -> keyFrame(aligned, "eid"))
-      else Map.empty)
   }
 
   /** SET v:NewLabel (SetItem::Label, ast.rs:925-928): add `newLabel` to
@@ -129,16 +318,13 @@ object GraphMutations {
   def addNodeLabel(g: PropertyGraph, label: String, matchedIds: DataFrame,
       newLabel: String): PropertyGraph = {
     val rows = g.nodeTables(label).join(matchedIds.select("id"), Seq("id"))
-    val updated = g.nodeTables.get(newLabel) match {
-      case None => rows
+    val ds = s"nodes_$newLabel"
+    g.nodeTables.get(newLabel) match {
+      case None => commit(g, Map.empty, Map(ds -> rows))
       case Some(existing) =>
-        SchemaReconcile.union(Seq(existing,
-          rows.join(existing.select(col("id")), Seq("id"), "left_anti")),
-          s"SET :$newLabel")
+        val fresh = rows.join(existing.select(col("id")), Seq("id"), "left_anti")
+        commit(g, Map(ds -> insertInto(stateOf(g, ds, existing).get, fresh, None)._1))
     }
-    g.mutated(g.nodeTables + (newLabel -> updated), g.edgeTables,
-      Set(s"nodes_$newLabel"),
-      Map(s"nodes_$newLabel" -> keyFrame(matchedIds, "id")))
   }
 
   /** REMOVE v:Label (RemoveItem::Label, ast.rs:943-948): drop
@@ -150,14 +336,12 @@ object GraphMutations {
     */
   def removeNodeLabel(g: PropertyGraph, matchedIds: DataFrame,
       rmLabel: String): PropertyGraph = {
+    val ds = s"nodes_$rmLabel"
     g.nodeTables.get(rmLabel) match {
       case None => g
       case Some(existing) =>
-        val updated =
-          existing.join(matchedIds.select("id"), Seq("id"), "left_anti")
-        g.mutated(g.nodeTables + (rmLabel -> updated), g.edgeTables,
-          Set(s"nodes_$rmLabel"),
-          Map(s"nodes_$rmLabel" -> keyFrame(matchedIds, "id")))
+        commit(g, Map(ds -> deleteByKeys(stateOf(g, ds, existing).get,
+          matchedIds.select("id"), None)._1))
     }
   }
 
@@ -165,30 +349,21 @@ object GraphMutations {
     * each property column its new expression; other rows unchanged.
     */
   def setNodeProps(g: PropertyGraph, label: String, pred: Column,
-      assignments: Map[String, Column]): PropertyGraph = {
-    val t = g.nodeTables(label)
-    val updated = applyAssigns(t, pred, assignments)
-    g.mutated(g.nodeTables + (label -> updated), g.edgeTables,
-      Set(s"nodes_$label"),
-      Map(s"nodes_$label" -> assignedKeys(t, pred, assignments, "id")))
-  }
+      assignments: Map[String, Column]): PropertyGraph =
+    setNodePropsCounted(g, label, pred, assignments)._1
 
-  /** Touched keys of a MATCH … SET: the TRUE-arm of the match predicate,
-    * the same rows applyAssigns rewrites (3VL: NULL-predicate rows keep
-    * their values). An assignment to the identity column itself moves
-    * the row to a new key — and, when the bucketed index leads on that
-    * column, to another bucket — so the post-mutation key (the assigned
-    * value, evaluated on the pre-statement row exactly as applyAssigns
-    * does) is recorded beside the old one. With only the old key the
-    * save would rewrite the source bucket and hard-link a stale target
-    * bucket, losing the row.
-    */
-  private def assignedKeys(t: DataFrame, pred: Column,
-      assignments: Map[String, Column], idCol: String): DataFrame = {
-    val matched = t.filter(pred)
-    val before = keyFrame(matched, idCol)
-    assignments.get(idCol).fold(before)(v =>
-      before.union(matched.select(v.cast("string").as("__k"))))
+  /** [[setNodeProps]] plus the number of rows `pred` matched, from the
+    * same job. */
+  def setNodePropsCounted(g: PropertyGraph, label: String, pred: Column,
+      assignments: Map[String, Column]): (PropertyGraph, Long) = {
+    val ds = s"nodes_$label"
+    val t = g.nodeTables(label)
+    val whole = applyAssigns(t, pred, assignments)
+    if (retyped(t, whole)) wholeTable(g, ds, t, whole, pred)
+    else {
+      val (nd, o) = setBy(stateOf(g, ds, t).get, pred, assignments)
+      (commit(g, Map(ds -> nd)), o.hits)
+    }
   }
 
   /** Apply every item of one SET atomically against the PRE-statement
@@ -200,7 +375,8 @@ object GraphMutations {
     * fuzz as `MATCH (n:L {s: 1}) SET n.s = 4, n.name = 'x'` silently
     * skipping the second item (after `s` became 4, the re-resolved
     * `{s: 1}` matched nothing). The reference applies all items of a
-    * statement to the matched row snapshot (match_set.rs).
+    * statement to the matched row snapshot (match_set.rs). The result
+    * is tagged for a restatement: matched rows are hits.
     */
   private def applyAssigns(df: DataFrame, pred: Column,
       assignments: Map[String, Column]): DataFrame = {
@@ -209,7 +385,8 @@ object GraphMutations {
       case (d, ((_, v), i)) => d.withColumn(s"__val_$i", v) }
     val assigned = items.zipWithIndex.foldLeft(frozen) {
       case (d, ((k, _), i)) => applyAssign(d, col("__matched"), k -> col(s"__val_$i")) }
-    assigned.drop("__matched").drop(items.indices.map(i => s"__val_$i"): _*)
+    tag(assigned, col("__matched"), Keep | Hit, Keep)
+      .drop("__matched").drop(items.indices.map(i => s"__val_$i"): _*)
   }
 
   /** One property assignment. A target column that is all-NULL with no
@@ -223,8 +400,7 @@ object GraphMutations {
   private def applyAssign(df: DataFrame, pred: Column,
       kv: (String, Column)): DataFrame = {
     val (k, v) = kv
-    if (df.columns.contains(k) &&
-        df.schema(k).dataType != org.apache.spark.sql.types.NullType)
+    if (df.columns.contains(k) && df.schema(k).dataType != NullType)
       df.withColumn(k, when(pred, v).otherwise(col(k)))
     else df.withColumn(k, when(pred, v)) // new/untyped property: NULL elsewhere
   }
@@ -240,110 +416,111 @@ object GraphMutations {
   /** DELETE [DETACH] nodes (delete.rs / match_delete.rs analog).
     * Without DETACH, deleting a node with incident edges is an error
     * (ISO GQL semantics the reference enforces); with DETACH, incident
-    * edges go too — both via anti-joins, no driver iteration.
+    * edges go too.
     */
   def deleteNodes(g: PropertyGraph, label: String, pred: Column,
       detach: Boolean = false): PropertyGraph =
-    deleteNodesIn(g, label, PropertyGraph.materializedCount(
-      g.nodeTables(label).filter(pred).select(col("id"))), detach)
+    deleteNodesCounted(g, label, pred, detach)._1
+
+  /** [[deleteNodes]] plus the number of nodes deleted, counted by the
+    * job that restates the label — the statement's only job when the
+    * doomed ids stay driver-held.
+    */
+  def deleteNodesCounted(g: PropertyGraph, label: String, pred: Column,
+      detach: Boolean): (PropertyGraph, Long) = {
+    val ds = s"nodes_$label"
+    val (nd, o) = deleteBy(stateOf(g, ds, g.nodeTables(label)).get, pred)
+    val doomed = o.hitKeys.getOrElse {
+      val (f, n) = PropertyGraph.materializedCount(
+        g.nodeTables(label).filter(pred).select(col("id").as("__k")))
+      FrameKeys(f, n)
+    }
+    (detached(g, label, ds -> nd, o.store, doomed, detach), o.hits)
+  }
 
   /** DELETE the nodes whose ids make up `ids` — a
     * [[PropertyGraph.materializedCount]] result (one-column `id` frame,
-    * its row count), so the caller reads the statement's affected count
-    * off the same job that materialized the set. The MutationPipeline
-    * path (executor.rs:7186) computes the doomed set, this applies it.
-    *
-    * Materialized, the doomed set joins every later plan as a small
-    * LogicalRDD leaf instead of re-running the MATCH that found it: the
-    * node table, each detached edge table and their touched keys stay
-    * free of earlier table versions, and no CacheManager entry outlives
-    * the graph version that uses it.
+    * its row count). The MutationPipeline path (executor.rs:7186)
+    * computes the doomed set, this applies it.
     */
   def deleteNodesIn(g: PropertyGraph, label: String,
       ids: (DataFrame, Long), detach: Boolean): PropertyGraph = {
-    val t = g.nodeTables(label)
-    // the materialized frame carries fresh attribute ids, but `__doomed_id`
-    // keeps every join below an explicit cross-frame equi-join no matter
-    // what the caller passed. A materialized frame has no size statistics,
-    // so the broadcast decision comes from its exact row count
-    val doomed = g.broadcastIfBoundedRows(ids._2,
-      ids._1.select(col("id").as("__doomed_id")))
-    val incidentTables = g.edgeTables.filter { case (_, (et, _)) =>
-      et.srcLabel == label || et.dstLabel == label
-    }
+    val ds = s"nodes_$label"
+    val (nd, o) = deleteByKeys(stateOf(g, ds, g.nodeTables(label)).get,
+      ids._1, Some(ids._2))
+    val doomed = o.hitKeys.getOrElse(
+      FrameKeys(ids._1.select(col("id").as("__k")), ids._2))
+    detached(g, label, ds -> nd, o.store, doomed, detach)
+  }
+
+  /** Apply a node DELETE's restated label to `g`, and its `doomed` ids
+    * to the incident edge types: with DETACH they hide the edges by
+    * endpoint (no job — the view filters base and delta rows by the
+    * driver-held ids); without, any incident edge is an error.
+    */
+  private def detached(g: PropertyGraph, label: String,
+      node: (String, LabelDelta), store: DataFrame, doomed: Keys,
+      detach: Boolean): PropertyGraph = {
+    val incident = if (doomed.count == 0) Map.empty[String, (EdgeType, DataFrame)]
+      else g.edgeTables.filter { case (_, (et, _)) =>
+        et.srcLabel == label || et.dstLabel == label }
     if (!detach) {
-      val hasIncident = incidentTables.exists { case (_, (et, e)) =>
-        val srcHit = et.srcLabel == label &&
-          !e.join(doomed, e("src") === doomed("__doomed_id"), "left_semi").isEmpty
-        val dstHit = et.dstLabel == label &&
-          !e.join(doomed, e("dst") === doomed("__doomed_id"), "left_semi").isEmpty
-        srcHit || dstHit
+      val hasIncident = incident.exists { case (_, (et, e)) =>
+        (et.srcLabel == label && !Keys.pick(e, "src", doomed).isEmpty) ||
+          (et.dstLabel == label && !Keys.pick(e, "dst", doomed).isEmpty)
       }
-      if (hasIncident)
+      if (hasIncident) {
+        Analytics.unpersistCheckpoint(store)
         throw new IllegalStateException(
           s"cannot DELETE $label nodes with incident edges — use DETACH DELETE")
+      }
+      return commit(g, Map(node))
     }
-    val newNodes = t.join(doomed, t("id") === doomed("__doomed_id"), "left_anti")
-    val newEdges = g.edgeTables.map { case (l, (et, e)) =>
-      var out = e
-      if (detach && et.srcLabel == label)
-        out = out.join(doomed, out("src") === doomed("__doomed_id"), "left_anti")
-      if (detach && et.dstLabel == label)
-        out = out.join(doomed, out("dst") === doomed("__doomed_id"), "left_anti")
-      l -> (et, out)
-    }
-    val touchedEdges =
-      if (detach) incidentTables.keySet.map(l => s"edges_$l")
-      else Set.empty[String]
-    // touched keys: the doomed node ids; per detached edge table, the
-    // eids of the incident edges being removed (a semi-join of that
-    // table's pre-delete version with the materialized doomed set — lazy,
-    // evaluated once by a bucketed save)
-    var keys = Map(s"nodes_$label" -> doomed.select(
-      col("__doomed_id").cast("string").as("__k")))
-    if (detach) incidentTables.foreach { case (l, (et, e)) =>
-      if (e.columns.contains("eid")) {
-        var parts = Seq.empty[DataFrame]
-        if (et.srcLabel == label)
-          parts :+= e.join(doomed, e("src") === doomed("__doomed_id"),
-            "left_semi").select(col("eid"))
-        if (et.dstLabel == label)
-          parts :+= e.join(doomed, e("dst") === doomed("__doomed_id"),
-            "left_semi").select(col("eid"))
-        keys += s"edges_$l" -> keyFrame(parts.reduce(_ union _), "eid")
+    var restated = Map(node)
+    var rewritten = Map.empty[String, DataFrame]
+    incident.foreach { case (l, (et, e)) =>
+      val ends = Seq("src" -> et.srcLabel, "dst" -> et.dstLabel)
+        .collect { case (c, `label`) => c }
+      stateOf(g, s"edges_$l", e) match {
+        case Some(d) =>
+          restated += s"edges_$l" -> ends.foldLeft(d)((x, c) => x.hideEndpoint(c, doomed))
+        case None =>
+          rewritten += s"edges_$l" -> PropertyGraph.materialized(
+            ends.foldLeft(e)((x, c) => Keys.hide(x, c, doomed)))
       }
     }
-    g.mutated(g.nodeTables + (label -> newNodes), newEdges,
-      touchedEdges + s"nodes_$label", keys)
+    commit(g, restated, rewritten)
   }
 
   /** DELETE edges matching a predicate. Only rows where `pred` evaluates
     * to TRUE are removed — under SQL 3VL, `!pred` is NULL (not TRUE) when
     * `pred` is NULL, so a plain `filter(!pred)` would silently drop
-    * NULL-predicate rows too. Keep rows where pred is not TRUE.
+    * NULL-predicate rows too.
     */
-  def deleteEdges(g: PropertyGraph, label: String, pred: Column): PropertyGraph = {
-    val (et, e) = g.edgeTables(label)
-    val kept = e.filter(!coalesce(pred, lit(false)))
-    g.mutated(g.nodeTables, g.edgeTables + (label -> (et, kept)),
-      Set(s"edges_$label"),
-      if (e.columns.contains("eid"))
-        Map(s"edges_$label" ->
-          keyFrame(e.filter(coalesce(pred, lit(false))), "eid"))
-      else Map.empty)
+  def deleteEdges(g: PropertyGraph, label: String, pred: Column): PropertyGraph =
+    deleteEdgesCounted(g, label, pred)._1
+
+  /** [[deleteEdges]] plus the number of edges deleted. */
+  def deleteEdgesCounted(g: PropertyGraph, label: String,
+      pred: Column): (PropertyGraph, Long) = {
+    val ds = s"edges_$label"
+    val e = g.edgeTables(label)._2
+    stateOf(g, ds, e) match {
+      case Some(d) =>
+        val (nd, o) = deleteBy(d, pred)
+        (commit(g, Map(ds -> nd)), o.hits)
+      case None =>
+        val n = e.filter(pred).count()
+        (commit(g, Map.empty, Map(ds ->
+          PropertyGraph.materialized(e.filter(!coalesce(pred, lit(false)))))), n)
+    }
   }
 
   /** DELETE edges whose eids appear in `eids` (column `eid`). */
   def deleteEdgesIn(g: PropertyGraph, label: String, eids: DataFrame): PropertyGraph = {
-    val (et, e) = g.edgeTables(label)
-    // aliased so the anti-join is an explicit cross-frame equi-join (the
-    // eids usually derive from `e` itself)
-    val doomed = eids.select(col("eid").as("__doomed_eid")).distinct()
-    val kept = e.join(doomed, e("eid") === doomed("__doomed_eid"), "left_anti")
-    g.mutated(g.nodeTables, g.edgeTables + (label -> (et, kept)),
-      Set(s"edges_$label"),
-      Map(s"edges_$label" ->
-        doomed.select(col("__doomed_eid").cast("string").as("__k"))))
+    val ds = s"edges_$label"
+    commit(g, Map(ds -> deleteByKeys(stateOf(g, ds, g.edgeTables(label)._2).get,
+      eids.select("eid"), None)._1))
   }
 
   /** SET properties from a computed updates table `(id, <prop>, …)` — the
@@ -353,40 +530,26 @@ object GraphMutations {
     */
   def setNodePropsFrom(g: PropertyGraph, label: String, updates: DataFrame,
       props: Seq[String]): PropertyGraph = {
-    val t = g.nodeTables(label)
-    var u = props.foldLeft(updates.select((col("id") +:
-      props.map(col)): _*))((d, p) => d.withColumnRenamed(p, s"__new_$p"))
-    u = u.withColumn("__matched", lit(true)).withColumnRenamed("id", "__uid")
-    var joined = t.join(u, t("id") === u("__uid"), "left_outer")
-    props.foreach { p =>
-      joined =
-        if (joined.columns.contains(p) &&
-            joined.schema(p).dataType != org.apache.spark.sql.types.NullType)
-          joined.withColumn(p,
-            when(col("__matched"), col(s"__new_$p")).otherwise(col(p)))
-        else joined.withColumn(p, when(col("__matched"), col(s"__new_$p")))
-    }
-    val cleaned = joined.drop("__matched", "__uid")
-      .drop(props.map(p => s"__new_$p"): _*)
-    // the updates table is keyed by the PRE-mutation id; an update of the
-    // id itself records no key frame, so the next save rewrites the
-    // dataset in full (see assignedKeys for the hazard)
-    g.mutated(g.nodeTables + (label -> cleaned), g.edgeTables,
-      Set(s"nodes_$label"),
-      if (props.contains("id")) Map.empty
-      else Map(s"nodes_$label" -> keyFrame(updates, "id")))
+    setFrom(g, s"nodes_$label", g.nodeTables(label), updates, props)
   }
 
   /** MATCH … SET on edge properties. */
   def setEdgeProps(g: PropertyGraph, label: String, pred: Column,
-      assignments: Map[String, Column]): PropertyGraph = {
-    val (et, e) = g.edgeTables(label)
-    val updated = applyAssigns(e, pred, assignments)
-    g.mutated(g.nodeTables, g.edgeTables + (label -> (et, updated)),
-      Set(s"edges_$label"),
-      if (e.columns.contains("eid"))
-        Map(s"edges_$label" -> assignedKeys(e, pred, assignments, "eid"))
-      else Map.empty)
+      assignments: Map[String, Column]): PropertyGraph =
+    setEdgePropsCounted(g, label, pred, assignments)._1
+
+  /** [[setEdgeProps]] plus the number of edges `pred` matched. */
+  def setEdgePropsCounted(g: PropertyGraph, label: String, pred: Column,
+      assignments: Map[String, Column]): (PropertyGraph, Long) = {
+    val ds = s"edges_$label"
+    val e = g.edgeTables(label)._2
+    val whole = applyAssigns(e, pred, assignments)
+    stateOf(g, ds, e) match {
+      case Some(d) if !retyped(e, whole) =>
+        val (nd, o) = setBy(d, pred, assignments)
+        (commit(g, Map(ds -> nd)), o.hits)
+      case _ => wholeTable(g, ds, e, whole, pred)
+    }
   }
 
   /** SET edge properties from a computed updates table `(eid, <prop>, …)`
@@ -395,24 +558,6 @@ object GraphMutations {
     */
   def setEdgePropsFrom(g: PropertyGraph, label: String, updates: DataFrame,
       props: Seq[String]): PropertyGraph = {
-    val (et, e) = g.edgeTables(label)
-    var u = props.foldLeft(updates.select((col("eid") +:
-      props.map(col)): _*))((d, p) => d.withColumnRenamed(p, s"__new_$p"))
-    u = u.withColumn("__matched", lit(true)).withColumnRenamed("eid", "__ueid")
-    var joined = e.join(u, e("eid") === u("__ueid"), "left_outer")
-    props.foreach { p =>
-      joined =
-        if (joined.columns.contains(p) &&
-            joined.schema(p).dataType != org.apache.spark.sql.types.NullType)
-          joined.withColumn(p,
-            when(col("__matched"), col(s"__new_$p")).otherwise(col(p)))
-        else joined.withColumn(p, when(col("__matched"), col(s"__new_$p")))
-    }
-    val cleaned = joined.drop("__matched", "__ueid")
-      .drop(props.map(p => s"__new_$p"): _*)
-    g.mutated(g.nodeTables, g.edgeTables + (label -> (et, cleaned)),
-      Set(s"edges_$label"),
-      if (props.contains("eid")) Map.empty // as in setNodePropsFrom
-      else Map(s"edges_$label" -> keyFrame(updates, "eid")))
+    setFrom(g, s"edges_$label", g.edgeTables(label)._2, updates, props)
   }
 }

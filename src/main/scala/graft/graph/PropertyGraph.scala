@@ -45,6 +45,24 @@ final case class EdgeType(label: String, srcLabel: String, dstLabel: String)
   * predicates push down to parquet, and src/dst stay 8-byte join keys.
   * Cross-label identity (for identity-based set ops, executor.rs:7865-7894)
   * is the (label, id) pair.
+  *
+  * View contract of a mutated label. A label that DML touched (through
+  * [[GraphMutations]]) reads as `base ⊖ T ⊕ D` ([[LabelDelta]]):
+  *  - `base` is the frame as loaded or built, untouched, so literal
+  *    predicates still reach its scan (parquet pushdown, bucket pruning);
+  *  - `T` hides base rows by identity key (and, for edges, by the
+  *    endpoint of a DETACH-deleted node) — driver-held and bound by
+  *    reference while its exact count fits the broadcast gate's
+  *    rows × width model, an anti-join against a checkpoint beyond it;
+  *  - `D` is one checkpoint of the current versions of the inserted and
+  *    updated rows, re-materialized by the statement that changes it.
+  * The view's plan has the same shape after one statement or after
+  * many: reads and DML reuse generated code and plan height is flat.
+  * Each statement runs in one job that also counts its affected rows;
+  * a save rewrites the buckets of `T ∪ D` and releases the checkpoints
+  * earlier statements superseded (statements release nothing, so a
+  * rollback snapshot stays readable). Id-type widening and edge types
+  * without an `eid` replace the label as a whole instead.
   */
 final class PropertyGraph(
     val nodeTables: Map[String, DataFrame],
@@ -152,7 +170,7 @@ final class PropertyGraph(
     * or embedding vectors can exceed executor memory — those defer to
     * AQE's size-measured decision instead of a forced hint.
     */
-  val broadcastByteLimit: Long = 100L << 20
+  val broadcastByteLimit: Long = PropertyGraph.BroadcastByteLimit
   def broadcastIfSmall(label: String, df: DataFrame): DataFrame =
     broadcastIfSmallRows(nodeCount(label), df)
 
@@ -166,12 +184,8 @@ final class PropertyGraph(
     * aggregate was 20K rows). Row bound × schema-width model, saturated
     * like the stats gate; over the limit defers to AQE unchanged.
     */
-  def broadcastIfBoundedRows(rowBound: Long, df: DataFrame): DataFrame = {
-    val est =
-      try Math.multiplyExact(rowBound, estimatedRowBytes(df.schema))
-      catch { case _: ArithmeticException => Long.MaxValue }
-    if (est <= broadcastByteLimit) broadcast(df) else df
-  }
+  def broadcastIfBoundedRows(rowBound: Long, df: DataFrame): DataFrame =
+    PropertyGraph.broadcastIfBoundedRows(rowBound, df)
   /** Same gate for a frame spanning several labels (union scans): the
     * caller supplies the summed row estimate.
     */
@@ -186,9 +200,7 @@ final class PropertyGraph(
     // multiplyExact: deep nested schemas multiply width 128× per array
     // level, and a silent Long wrap would read as "tiny table" (the exact
     // OOM this gate prevents) — saturate instead.
-    val schemaEst =
-      try Math.multiplyExact(rowEstimate, estimatedRowBytes(df.schema))
-      catch { case _: ArithmeticException => Long.MaxValue }
+    val schemaEst = PropertyGraph.boundedBytes(rowEstimate, df.schema)
     val planStats = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val statsKnown = planStats >= 0 && planStats < BigInt(1L << 50)
     val under = schemaEst <= broadcastByteLimit &&
@@ -196,30 +208,8 @@ final class PropertyGraph(
     if (under) broadcast(df) else df
   }
 
-  /** Conservative per-row width from the schema: exact for fixed-width
-    * primitives, pessimistic for variable-length types (strings,
-    * binary, arrays have no static size — assume wide rather than OOM
-    * a forced broadcast). Catalyst's own defaultSize is optimistic the
-    * other way (array<float> = 4 B), which is exactly the failure mode
-    * this gate exists to prevent.
-    */
-  private[graph] def estimatedRowBytes(schema: org.apache.spark.sql.types.StructType): Long = {
-    import org.apache.spark.sql.types._
-    def width(dt: DataType): Long = dt match {
-      case BooleanType | ByteType => 1L
-      case ShortType => 2L
-      case IntegerType | FloatType | DateType => 4L
-      case LongType | DoubleType | TimestampType | TimestampNTZType => 8L
-      case _: DecimalType => 16L
-      case StringType => 48L
-      case BinaryType => 512L
-      case ArrayType(et, _) => 128L * width(et)
-      case MapType(kt, vt, _) => 16L * (width(kt) + width(vt))
-      case StructType(fields) => fields.map(f => width(f.dataType)).sum
-      case _ => 64L
-    }
-    math.max(8L, width(schema))
-  }
+  private[graph] def estimatedRowBytes(schema: org.apache.spark.sql.types.StructType): Long =
+    PropertyGraph.estimatedRowBytes(schema)
 
   /** Compiled-plan cache, keyed by an operator-shape string — e.g. the
     * oriented edge-type unions a GQL hop compiles: repeated hops over
@@ -232,120 +222,67 @@ final class PropertyGraph(
   def cachedPlan(key: String)(build: => DataFrame): DataFrame =
     planCache.getOrElseUpdate(key, build)
 
-  /** Copy-on-write layers stacked on each dataset since it was last
-    * materialized. Inherited (and advanced) by [[mutated]]; reset to 0
-    * when the table compacts. Transient: a deserialized copy starts
-    * from an empty map, which only delays the next compaction.
+  /** Per-dataset mutation state since load (dataset name → its
+    * [[LabelDelta]]): every label a DML statement touched reads as the
+    * view `base ⊖ tomb ⊕ delta`, whose plan has the same shape after one
+    * statement or after many, so reads and DML reuse generated code and
+    * plan height never grows. A bucketed save rewrites exactly the
+    * buckets of the delta's rows, its ghosts and the endpoint-hidden base
+    * rows. Transient: a deserialized copy starts without it, which only
+    * makes its next save a full rewrite.
     */
-  @transient private var mutationDepths: Map[String, Int] = Map.empty
-
-  /** Per-dataset identity keys touched since load, for bucket-scoped
-    * incremental saves: dataset name → Some(one-column `__k` frame of
-    * the STRING-rendered identity keys — `id` for nodes, `eid` for
-    * edges — every mutation so far touched, pre- AND post-mutation: a
-    * SET on the identity column records the row's new key too) or None
-    * when some mutation rewrote the dataset in a way no key set
-    * describes (full-column casts on id-type widening, unknown
-    * provenance). At save time [[GraphCatalog.saveGraph]] maps these
-    * keys to range buckets through a bucketed index's stored boundaries
-    * and rewrites ONLY the touched buckets, hard-linking the rest —
-    * O(touched buckets), not O(table).
-    *
-    * The per-statement parts are cheap to evaluate by construction: an
-    * edge INSERT's rows and a node DELETE's doomed ids are
-    * [[PropertyGraph.materialized]] frames (materialized by the job that
-    * counts the statement's affected rows), so a key frame never embeds
-    * an earlier table version through an insert's anti-join. The union
-    * stays lazy until the save, which evaluates it once per dirty
-    * dataset: straight to bucket ids when the bucketed index leads on
-    * the identity column, otherwise materialized once and joined against
-    * the live files and the mutated frame.
+  @transient private[graph] var deltas: Map[String, LabelDelta] = Map.empty
+  /** Datasets rewritten as a whole since load (id-type widening, edge
+    * tables without an `eid`, labels that did not exist): a save writes
+    * them in full.
     */
-  @transient private[graph] var touchedKeys: Map[String, Option[DataFrame]] =
+  @transient private[graph] var rebased: Set[String] = Set.empty
+  /** Every checkpoint the statements since load created (stores and
+    * large key sets), so a save can release the superseded ones.
+    */
+  @transient private[graph] var checkpoints: Vector[DataFrame] = Vector.empty
+  /** The schema of each dataset as loaded — the file schema a
+    * bucket-scoped save must keep.
+    */
+  @transient private[graph] var loadedSchemas: Map[String, org.apache.spark.sql.types.StructType] =
     Map.empty
-  @transient private var touchedKeyDepth: Map[String, Int] = Map.empty
 
-  private[graph] def touchedKeysFor(ds: String): Option[DataFrame] =
-    Option(touchedKeys).getOrElse(Map.empty).get(ds).flatten
+  private[graph] def deltaFor(ds: String): Option[LabelDelta] =
+    Option(deltas).flatMap(_.get(ds))
 
-  /** Copy with mutated tables, accumulating the touched dataset names.
-    *
-    * Bounds the copy-on-write plan HEIGHT: a long interactive DML
-    * session (the reference's transactional tests run hundreds of
-    * sequential statements — txn manager.rs applies each to the live
-    * store) stacks one withColumn/filter/union layer per statement on
-    * the same table, so analysis cost grows per statement and Catalyst's
-    * treeString generation eventually overflows the driver stack (found
-    * by DmlDifferentialFuzzSpec at ~600 chained statements). Every
-    * [[PropertyGraph.compactAfterMutations]]-th touch of a dataset
-    * materializes it with an eager localCheckpoint — plan height stays
-    * O(threshold) at an amortized 1/threshold extra jobs per statement.
-    * The checkpointed RDD is then re-wrapped in a FRESH DataFrame on
-    * purpose: Spark's LogicalRDD inherits the origin plan's statistics
-    * through a checkpoint, and after chained DML joins those are
-    * multiplicative BigInt products whose digit count doubles per
-    * statement — by a few hundred statements merely MULTIPLYING them
-    * during stats propagation dominates all planning (found as
-    * Karatsuba/ToomCook3 frames in the fuzz run's profile). The re-wrap
-    * resets stats to the unknown-default sentinel, which is safe here:
-    * [[broadcastIfSmallRows]] treats stats ≥ 2^50 as unknown and sizes
-    * forced broadcasts from nodeCountCache × schema width instead, and
-    * AQE re-measures join sides from real shuffle bytes at runtime.
-    * Superseded checkpoint blocks are freed by the ContextCleaner once
-    * older graph versions (rollback snapshots) drop out of scope.
-    *
-    * `keys` carries each touched dataset's key frame for this statement
-    * (see [[touchedKeys]]); a dataset touched without one poisons to a
-    * full rewrite at the next save.
+  /** The state a bucket-scoped save of `ds` reads: None once the dataset
+    * was rewritten as a whole since load.
+    */
+  private[graph] def scopedDelta(ds: String): Option[LabelDelta] =
+    if (Option(rebased).exists(_.contains(ds))) None else deltaFor(ds)
+
+  /** The checkpoints this graph no longer reads. */
+  private[graph] def supersededCheckpoints: Seq[DataFrame] = {
+    val current = Option(deltas).getOrElse(Map.empty).values.flatMap(_.frames).toSeq
+    Option(checkpoints).getOrElse(Vector.empty)
+      .filterNot(c => current.exists(_ eq c))
+  }
+
+  /** Copy with mutated tables: `restated` gives the new state of each
+    * dataset a statement restated (its table is that state's view),
+    * `rewritten` the datasets whose table was replaced as a whole. Row
+    * counts are inherited as estimates; nothing is released here, so an
+    * earlier graph version (a transaction's rollback snapshot) stays
+    * readable.
     */
   private[graph] def mutated(newNodes: Map[String, DataFrame],
       newEdges: Map[String, (EdgeType, DataFrame)],
       touched: Set[String],
-      keys: Map[String, DataFrame] = Map.empty): PropertyGraph = {
-    var nn = newNodes
-    var ne = newEdges
-    var depths = if (mutationDepths == null) Map.empty[String, Int] else mutationDepths
-    def compacted(df: DataFrame): DataFrame = PropertyGraph.materialized(df)
-    touched.foreach { name =>
-      val n = depths.getOrElse(name, 0) + 1
-      if (n >= PropertyGraph.compactAfterMutations) {
-        if (name.startsWith("nodes_")) {
-          val lbl = name.stripPrefix("nodes_")
-          nn.get(lbl).foreach(df => nn += lbl -> compacted(df))
-        } else {
-          val lbl = name.stripPrefix("edges_")
-          ne.get(lbl).foreach { case (et, df) =>
-            ne += lbl -> (et, compacted(df)) }
-        }
-        depths += name -> 0
-      } else depths += name -> n
-    }
-    val g = new PropertyGraph(nn, ne, origin, dirty.map(_ ++ touched))
-    g.mutationDepths = depths
+      restated: Map[String, LabelDelta] = Map.empty,
+      rewritten: Set[String] = Set.empty): PropertyGraph = {
+    val g = new PropertyGraph(newNodes, newEdges, origin, dirty.map(_ ++ touched))
     g.nodeCountCache ++= nodeCountCache // inherit stats as estimates
-    // accumulate touched identity keys per dataset: a mutation that
-    // supplies no key frame for a dataset it touched poisons that
-    // dataset to full-rewrite; a union chain deeper than the cap also
-    // poisons (at that churn the full rewrite is cheaper than tracking)
-    val prevKeys = Option(touchedKeys).getOrElse(Map.empty)
-    val prevDepth = Option(touchedKeyDepth).getOrElse(Map.empty)
-    var accKeys = prevKeys
-    var accDepth = prevDepth
-    touched.foreach { ds =>
-      val merged: Option[DataFrame] = (prevKeys.get(ds), keys.get(ds)) match {
-        case (Some(None), _) => None
-        case (_, None) => None
-        case _ if prevDepth.getOrElse(ds, 0) >=
-          PropertyGraph.touchedKeyDepthCap => None
-        case (None, Some(k)) => Some(k)
-        case (Some(Some(p)), Some(k)) =>
-          scala.util.Try(p.union(k.toDF(p.columns: _*))).toOption
-      }
-      accKeys += ds -> merged
-      accDepth += ds -> (prevDepth.getOrElse(ds, 0) + 1)
-    }
-    g.touchedKeys = accKeys
-    g.touchedKeyDepth = accDepth
+    g.deltas = Option(deltas).getOrElse(Map.empty) -- rewritten ++ restated
+    g.rebased = Option(rebased).getOrElse(Set.empty) ++ rewritten
+    val known = Option(checkpoints).getOrElse(Vector.empty)
+    g.checkpoints = known ++ restated.values.flatMap(_.frames)
+      .filterNot(f => known.exists(_ eq f))
+    g.loadedSchemas = Option(loadedSchemas).getOrElse(Map.empty)
     g
   }
 
@@ -945,9 +882,8 @@ object PropertyGraph {
     * mutation pipelines those are multiplicative size-only join
     * products — BigInts whose digit count compounds per statement — and
     * a derived frame carrying them re-inflates every stored table it is
-    * joined back into (see [[PropertyGraph.mutated]]'s compaction note;
-    * found by the DML differential fuzz freezing in BigInteger
-    * multiplication during stats propagation). The bare re-wrap resets
+    * joined back into (found by the DML differential fuzz freezing in
+    * BigInteger multiplication during stats propagation). The bare re-wrap resets
     * stats to the unknown-default sentinel; forced broadcasts size
     * themselves from [[PropertyGraph!.broadcastIfSmallRows]]'s
     * schema × row-count model instead, and AQE re-measures joins from
@@ -978,20 +914,49 @@ object PropertyGraph {
     (df.sparkSession.createDataFrame(external, schema), n)
   }
 
-  /** Copy-on-write layers a dataset may accumulate before [[PropertyGraph.mutated]]
-    * materializes it (see that method's scaladoc). Low enough that plan
-    * height stays trivially analyzable, high enough that a typical
-    * multi-statement transaction (reference txn tests run 5-20
-    * statements) pays at most one compaction job.
-    */
-  private[graph] val compactAfterMutations = 12
+  /** Byte budget of a forced broadcast (see [[PropertyGraph!.broadcastIfSmall]]). */
+  val BroadcastByteLimit: Long = 100L << 20
 
-  /** Statements per dataset after which touched-key tracking gives up
-    * and the next save rewrites that dataset in full: the key frames
-    * accumulate one union layer per statement, and past this churn a
-    * full clustered rewrite is cheaper than analyzing the chain.
+  /** Conservative per-row width from the schema: exact for fixed-width
+    * primitives, pessimistic for variable-length types (strings,
+    * binary, arrays have no static size — assume wide rather than OOM
+    * a forced broadcast). Catalyst's own defaultSize is optimistic the
+    * other way (array<float> = 4 B), which is exactly the failure mode
+    * this gate exists to prevent.
     */
-  private[graph] val touchedKeyDepthCap = 64
+  def estimatedRowBytes(schema: org.apache.spark.sql.types.StructType): Long = {
+    import org.apache.spark.sql.types._
+    def width(dt: DataType): Long = dt match {
+      case BooleanType | ByteType => 1L
+      case ShortType => 2L
+      case IntegerType | FloatType | DateType => 4L
+      case LongType | DoubleType | TimestampType | TimestampNTZType => 8L
+      case _: DecimalType => 16L
+      case StringType => 48L
+      case BinaryType => 512L
+      case ArrayType(et, _) => 128L * width(et)
+      case MapType(kt, vt, _) => 16L * (width(kt) + width(vt))
+      case StructType(fields) => fields.map(f => width(f.dataType)).sum
+      case _ => 64L
+    }
+    math.max(8L, width(schema))
+  }
+
+
+  /** `rows` × [[estimatedRowBytes]], saturated: deep nested schemas
+    * multiply width 128× per array level, and a silent Long wrap would
+    * read as "tiny table" — the exact OOM the broadcast gate prevents.
+    */
+  def boundedBytes(rows: Long, schema: org.apache.spark.sql.types.StructType): Long =
+    try Math.multiplyExact(rows, estimatedRowBytes(schema))
+    catch { case _: ArithmeticException => Long.MaxValue }
+
+  /** Force-broadcast a frame whose row count the caller knows or bounds
+    * (see [[PropertyGraph!.broadcastIfBoundedRows]]) when the schema-width
+    * model fits the byte budget; over it, AQE decides unchanged.
+    */
+  def broadcastIfBoundedRows(rowBound: Long, df: DataFrame): DataFrame =
+    if (boundedBytes(rowBound, df.schema) <= BroadcastByteLimit) broadcast(df) else df
 
   /** Diagnostic trace of the LAST [[PropertyGraph.paths]] call's
     * frontier-driven bucket pruning: one `(bucketIds, executedPlan)`

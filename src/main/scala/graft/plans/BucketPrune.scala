@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{NumericType, StringType}
+import org.apache.spark.sql.types.{IntegerType, NumericType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Read-side partition pruning for the bucketed clustered layout.
@@ -168,7 +168,10 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
   private def inPred(ixb: Attribute, ids: Set[Int]): Expression =
     // an unsatisfiable predicate (ids empty — e.g. `key = NULL`) keeps a
     // well-formed IN that matches no partition
-    In(ixb, (if (ids.isEmpty) Seq(-1) else ids.toSeq.sorted).map(Literal(_)))
+    // well-formed IN that matches no partition. Bucket ids bind by
+    // reference, so queries pruned to different buckets share code
+    In(ixb, (if (ids.isEmpty) Seq(-1) else ids.toSeq.sorted)
+      .map(i => new RefLiteral(i, IntegerType)))
 
   /** [[bucketSet]] for sibling rules ([[MirrorSwap]] asks whether a
     * predicate is servable under a given layout's key before swapping

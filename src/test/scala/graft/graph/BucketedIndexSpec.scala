@@ -426,13 +426,41 @@ class BucketedIndexSpec extends AnyFunSuite {
     def joinsOverEdges(p: LogicalPlan): Seq[LogicalPlan] =
       p.collect { case j: Join if edgeScans(j.right) > 0 => j }
     val table = g.edgeTables("PLACED")._2.queryExecution.analyzed
-    val keys = g.touchedKeysFor("edges_PLACED").get.queryExecution.analyzed
+    // the save's touched buckets come from the edge type's delta checkpoint
+    val keys = g.deltaFor("edges_PLACED").get.store.queryExecution.analyzed
     assert(edgeScans(table) == 1, s"edge table lineage re-reads its files:\n$table")
     assert(joinsOverEdges(table).isEmpty, s"join over an earlier version:\n$table")
     assert(joinsOverEdges(keys).isEmpty, s"key frame joins an earlier version:\n$keys")
     // the statements' results still hold
     assert(g.edgeTables("PLACED")._2.filter(col("dst") === 900001L).count() == 2L)
     assert(g.edgeTables("PLACED")._2.filter(col("dst") === 100001L).count() == 0L)
+  }
+
+  test("a save after DETACH DELETE logs no misplaced join-hint warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val (_, wh, _, _, _) = idKeyedFixture()
+    val t = graft.GraphLiteSpark.open(spark, wh).session("u").useGraph("/ix/g1")
+    t.execute("MATCH (c:customer {id: 2}), (o:orders {id: 100003}) " +
+      "INSERT (c)-[:PLACED]->(o)")
+    t.execute("MATCH (o:orders {id: 100003}) DETACH DELETE o")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-hint-capture", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val log = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
+    log.addAppender(app)
+    try t.saveGraphAs("/ix/g1")
+    finally { log.removeAppender(app); app.stop() }
+    import scala.jdk.CollectionConverters._
+    assert(!seen.asScala.exists(_.contains("join hint")), seen.asScala.mkString("\n"))
+    assert(t.gql("MATCH (c:customer)-[:PLACED]->(o:orders {id: 100003}) " +
+      "RETURN count(c) AS n").collect().head.getLong(0) == 0L)
   }
 
   test("a save runs its jobs in one job group and restores the caller's " +

@@ -853,9 +853,9 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
             val idDt = rows.schema("id").dataType
             if (idDt != org.apache.spark.sql.types.StringType)
               rows = rows.withColumn("id", col("id").cast("long"))
-            rows = graft.graph.PropertyGraph.materialized(rows)
-            total += rows.count()
-            g = graph2.insertNodes(g, label, rows)
+            val (m, n) = graft.graph.PropertyGraph.materializedCount(rows)
+            total += n
+            g = graph2.insertNodes(g, label, m)
           } else {
             // content-hash id, bit-identical to the driver-side
             // contentHash: low 60 bits of the first 16 hex digits of
@@ -1623,7 +1623,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                       val (eids, c) = graft.graph.PropertyGraph.materializedCount(
                         bdf.select(col(s"${target}_eid").as("eid")).distinct())
                       currentGraph = Some(
-                        graph2.deleteEdgesIn(graph, eb.primary, eids))
+                        graph2.deleteEdgesIn(graph, eb.primary, (eids, c)))
                       c
                     }
                   } else {
@@ -1633,7 +1633,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                       val (eids, c) = graft.graph.PropertyGraph.materializedCount(
                         bdf.filter(col(s"${target}_label") === lit(t))
                           .select(col(s"${target}_eid").as("eid")).distinct())
-                      if (c > 0) { g = graph2.deleteEdgesIn(g, t, eids) }
+                      if (c > 0) { g = graph2.deleteEdgesIn(g, t, (eids, c)) }
                       total += c
                     }
                     currentGraph = Some(g)
@@ -1676,13 +1676,11 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                     // per matched type; eids are only unique per type
                     def applyType(t: String, rows: DataFrame): Unit =
                       if (graph.edgeTables.contains(t)) {
-                        val updates = rows
-                          .groupBy(col(s"${v}_eid").as("eid"))
-                          .agg(valueCols.head, valueCols.tail: _*)
-                          .transform(graft.graph.PropertyGraph.materialized)
-                        val c = updates.count()
+                        val (updates, c) = graft.graph.PropertyGraph.materializedCount(
+                          rows.groupBy(col(s"${v}_eid").as("eid"))
+                            .agg(valueCols.head, valueCols.tail: _*))
                         if (c > 0)
-                          g = graph2.setEdgePropsFrom(g, t, updates, props)
+                          g = graph2.setEdgePropsFrom(g, t, (updates, c), props)
                         total += c
                       }
                     if (eb.types.size == 1) applyType(eb.primary, bdf)
@@ -1691,13 +1689,12 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                   case Some(compiler.UnionNode) =>
                     graph.nodeTables.keys.toSeq.sorted.foreach { lbl =>
                       val idT = graph.nodeTables(lbl).schema("id").dataType
-                      val updates = bdf
+                      val (updates, c) = graft.graph.PropertyGraph.materializedCount(bdf
                         .filter(col(s"${v}_label") === lit(lbl))
                         .groupBy(col(s"${v}_id").cast(idT).as("id"))
-                        .agg(valueCols.head, valueCols.tail: _*)
-                        .transform(graft.graph.PropertyGraph.materialized)
-                      if (updates.count() > 0)
-                        g = graph2.setNodePropsFrom(g, lbl, updates, props)
+                        .agg(valueCols.head, valueCols.tail: _*))
+                      if (c > 0)
+                        g = graph2.setNodePropsFrom(g, lbl, (updates, c), props)
                     }
                     // count logical nodes, not per-label-table rows — a
                     // multi-label node is the same id row in every table
@@ -1705,11 +1702,11 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                       .distinct().count()
                   case _ =>
                     val label = nodeLabelOf(v)
-                    val updates = bdf.groupBy(col(s"${v}_id").as("id"))
-                      .agg(valueCols.head, valueCols.tail: _*)
-                      .transform(graft.graph.PropertyGraph.materialized)
-                    total += updates.count()
-                    g = graph2.setNodePropsFrom(g, label, updates, props)
+                    val (updates, c) = graft.graph.PropertyGraph.materializedCount(
+                      bdf.groupBy(col(s"${v}_id").as("id"))
+                        .agg(valueCols.head, valueCols.tail: _*))
+                    total += c
+                    g = graph2.setNodePropsFrom(g, label, (updates, c), props)
                 }
             }
             // SET v:Label items (after property groups — labels copy the
@@ -1743,7 +1740,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                     total += perUnionLabel(v) { (lbl, ids) =>
                       val withNulls = prs.foldLeft(ids._1)((d, pr) =>
                         d.withColumn(pr.prop, lit(null)))
-                      g = graph2.setNodePropsFrom(g, lbl, withNulls,
+                      g = graph2.setNodePropsFrom(g, lbl, (withNulls, ids._2),
                         prs.map(_.prop))
                     }
                   case _ =>
@@ -1753,7 +1750,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
                     val withNulls = prs.foldLeft(updates)((d, pr) =>
                       d.withColumn(pr.prop, lit(null)))
                     total += n
-                    g = graph2.setNodePropsFrom(g, label, withNulls,
+                    g = graph2.setNodePropsFrom(g, label, (withNulls, n),
                       prs.map(_.prop))
                 }
             }

@@ -128,10 +128,6 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     val group = s"graft-save-${GraphCatalog.saveIds.incrementAndGet()}"
     try saveGraphIn(schema, name, g, force, sc, group)
     finally callerProps.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-    // the saved version no longer needs the checkpoints earlier
-    // statements superseded (statements never free them, so a rollback
-    // snapshot taken before the save stays readable until it)
-    g.supersededCheckpoints.foreach(Analytics.unpersistCheckpoint)
   }
 
   /** [[saveGraph]], then load the saved version warm: each dataset is

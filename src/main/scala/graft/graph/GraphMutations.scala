@@ -54,8 +54,9 @@ object GraphMutations {
     g.mutated(nn, ne, restated.keySet ++ rewritten.keySet, restated, rewritten.keySet)
   }
 
-  private def run(d: LabelDelta, tagged: DataFrame): (LabelDelta, LabelDelta.Outcome) = {
-    val o = LabelDelta.restate(tagged, d.key)
+  private def run(d: LabelDelta, tagged: DataFrame,
+      hitKeys: Boolean = false): (LabelDelta, LabelDelta.Outcome) = {
+    val o = LabelDelta.restate(tagged, d.key, hitKeys)
     (d.restated(o), o)
   }
 
@@ -101,35 +102,51 @@ object GraphMutations {
       tag(hitBase, Keep | IsGhost), ghosts(d)), "SET"))
   }
 
-  /** Hit = rows matching `pred` (TRUE only); they leave the view. */
-  private def deleteBy(d: LabelDelta, pred: Column): (LabelDelta, LabelDelta.Outcome) =
+  /** Hit = rows matching `pred` (TRUE only); they leave the view. With
+    * `hitKeys` the job also returns their keys (a node DELETE's doomed
+    * ids). */
+  private def deleteBy(d: LabelDelta, pred: Column,
+      hitKeys: Boolean = false): (LabelDelta, LabelDelta.Outcome) =
     run(d, union(Seq(tag(d.visibleDelta, pred, Hit, Keep),
-      tag(d.visibleBase.filter(pred), Keep | IsGhost | Hit), ghosts(d)), "DELETE"))
+      tag(d.visibleBase.filter(pred), Keep | IsGhost | Hit), ghosts(d)), "DELETE"),
+      hitKeys)
 
-  /** Hit = rows whose key is in `ids`; they leave the view. */
-  private def deleteByKeys(d: LabelDelta, ids: DataFrame,
-      n: Option[Long]): (LabelDelta, LabelDelta.Outcome) = {
+  /** `ids` (column `key`) split over the view: (delta rows with `__mv`
+    * true where their key is among `ids`, the base rows whose key is). */
+  private def matchKeys(d: LabelDelta, ids: DataFrame,
+      n: Option[Long]): (DataFrame, DataFrame) = {
     val vb = d.visibleBase
     val bs = keySide(vb, d.key, ids, n)
-    val hitBase = vb.join(bs, vb(d.key) === bs("__mk"), "left_semi")
     val dv = d.visibleDelta
     val ds = keySide(dv, d.key, ids, n).withColumn("__mv", lit(true))
-    val dTagged = dv.join(ds, dv(d.key) === ds("__mk"), "left_outer")
-    run(d, union(Seq(tag(dTagged, col("__mv"), Hit, Keep).drop("__mk", "__mv"),
-      tag(hitBase, Keep | IsGhost | Hit), ghosts(d)), "DELETE"))
+    (dv.join(ds, dv(d.key) === ds("__mk"), "left_outer").drop("__mk"),
+      vb.join(bs, vb(d.key) === bs("__mk"), "left_semi"))
   }
 
-  /** `rows` join the delta. With `probe` (the driver-known keys of the
-    * rows), the hits are the view rows already holding one of them. */
+  /** Hit = rows whose key is in `ids`; they leave the view. */
+  private def deleteByKeys(d: LabelDelta, ids: DataFrame, n: Option[Long],
+      hitKeys: Boolean = false): (LabelDelta, LabelDelta.Outcome) = {
+    val (dTagged, hitBase) = matchKeys(d, ids, n)
+    run(d, union(Seq(tag(dTagged, col("__mv"), Hit, Keep).drop("__mv"),
+      tag(hitBase, Keep | IsGhost | Hit), ghosts(d)), "DELETE"), hitKeys)
+  }
+
+  /** `rows` join the delta. With `probe`, the hits are the view rows
+    * already holding one of the rows' keys — read off the plan for a
+    * literal INSERT, otherwise joined inside the same job. */
   private def insertInto(d: LabelDelta, rows: DataFrame,
-      probe: Option[InlineKeys]): (LabelDelta, LabelDelta.Outcome) = {
+      probe: Boolean): (LabelDelta, LabelDelta.Outcome) = {
     val dv = d.visibleDelta
-    val parts = probe match {
-      case None => Seq(tag(dv, Keep))
-      case Some(p) => Seq(
-        tag(dv, Keys.memberOf(d.key, p), Keep | Hit, Keep),
-        tag(Keys.pick(d.visibleBase, d.key, p), Hit))
-    }
+    val parts =
+      if (!probe) Seq(tag(dv, Keep))
+      else localKeys(rows, d.key).filter(p => Keys.inline(p.count)) match {
+        case Some(p) => Seq(
+          tag(dv, Keys.memberOf(dv, d.key, p), Keep | Hit, Keep),
+          tag(Keys.pick(d.visibleBase, d.key, p), Hit))
+        case None =>
+          val (dTagged, hitBase) = matchKeys(d, rows.select(d.key), None)
+          Seq(tag(dTagged, col("__mv"), Keep | Hit, Keep).drop("__mv"), tag(hitBase, Hit))
+      }
     run(d, union(parts ++ Seq(tag(rows, Keep | New), ghosts(d)), "INSERT"))
   }
 
@@ -159,10 +176,13 @@ object GraphMutations {
     * values (including genuine NULLs — hence the match flag). A
     * retyping update replaces the table as a whole (see [[retyped]]). */
   private def setFrom(g: PropertyGraph, ds: String, table: DataFrame,
-      updates: DataFrame, props: Seq[String]): PropertyGraph = {
+      updates: DataFrame, rows: Option[Long], props: Seq[String]): PropertyGraph = {
     val d = stateOf(g, ds, table).get
     val key = d.key
-    val u = updateSide(updates, key, props)
+    // joined twice in the statement's job; broadcast by its exact count
+    // when the caller knows it
+    val u = rows.fold(updateSide(updates, key, props))(n =>
+      PropertyGraph.broadcastIfBoundedRows(n, updateSide(updates, key, props)))
     val whole = assignFrom(table, key, u, props)
     if (retyped(table, whole))
       commit(g, Map.empty, Map(ds -> PropertyGraph.materialized(whole.drop(LabelDelta.Tag))))
@@ -189,7 +209,7 @@ object GraphMutations {
             case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
             case v => v
           }))
-          Some(InlineKeys(s))
+          Some(InlineKeys(s, dt))
         }
       case _ => None
     }
@@ -216,23 +236,18 @@ object GraphMutations {
       case None => commit(g, Map.empty, Map(ds -> rows))
       case Some(existing) =>
         val (idOld, idNew) = (existing.schema("id").dataType, rows.schema("id").dataType)
-        val probe = if (failOnDuplicate) localKeys(rows, "id") else None
-        if (failOnDuplicate && (probe.isEmpty || idOld != idNew)) {
-          // compare through string when the incoming id type differs from
-          // the table's (a string id arriving at a Long-id label) — the
-          // raw join would ANSI-cast 'u3' to BIGINT and throw before the
-          // union gets a chance to widen the column
-          val dups =
-            if (idOld == idNew) rows.join(existing.select("id"), "id")
-            else rows.select(col("id").cast("string").as("id"))
-              .join(existing.select(col("id").cast("string").as("id")), "id")
-          if (!dups.isEmpty)
-            throw new IllegalArgumentException(
-              s"duplicate node id(s) on insert into $label")
-        }
         val widened = SchemaReconcile.widerType(idOld, idNew)
           .exists(w => w != idOld)
         if (widened) {
+          // a widening rewrites the label and runs no restatement job, so
+          // duplicates are checked here — through string when the ids
+          // differ in type (a string id arriving at a Long-id label): the
+          // raw join would ANSI-cast 'u3' to BIGINT and throw before the
+          // union gets a chance to widen the column
+          if (failOnDuplicate && !rows.select(col("id").cast("string").as("id"))
+              .join(existing.select(col("id").cast("string").as("id")), "id").isEmpty)
+            throw new IllegalArgumentException(
+              s"duplicate node id(s) on insert into $label")
           val updated = union(Seq(existing, rows), s"INSERT into node label $label")
           var rewritten = Map(ds -> updated)
           if (updated.schema("id").dataType == StringType)
@@ -247,7 +262,7 @@ object GraphMutations {
           commit(g, Map.empty, rewritten)
         } else {
           val d = stateOf(g, ds, existing).get
-          val (nd, o) = insertInto(d, rows, if (idOld == idNew) probe else None)
+          val (nd, o) = insertInto(d, rows, failOnDuplicate)
           if (o.hits > 0) {
             Analytics.unpersistCheckpoint(o.store)
             throw new IllegalArgumentException(
@@ -293,7 +308,7 @@ object GraphMutations {
           // inserting a property under a different type widens the view's
           // column to the common supertype (dynamic-value parity; an
           // irreconcilable type errors in the union, before any row lands)
-          val (nd, o) = insertInto(d, aligned, None)
+          val (nd, o) = insertInto(d, aligned, probe = false)
           (commit(g, Map(ds -> nd)), o.added)
         case None =>
           val (m, n) = PropertyGraph.materializedCount(aligned)
@@ -323,7 +338,7 @@ object GraphMutations {
       case None => commit(g, Map.empty, Map(ds -> rows))
       case Some(existing) =>
         val fresh = rows.join(existing.select(col("id")), Seq("id"), "left_anti")
-        commit(g, Map(ds -> insertInto(stateOf(g, ds, existing).get, fresh, None)._1))
+        commit(g, Map(ds -> insertInto(stateOf(g, ds, existing).get, fresh, probe = false)._1))
     }
   }
 
@@ -429,7 +444,7 @@ object GraphMutations {
   def deleteNodesCounted(g: PropertyGraph, label: String, pred: Column,
       detach: Boolean): (PropertyGraph, Long) = {
     val ds = s"nodes_$label"
-    val (nd, o) = deleteBy(stateOf(g, ds, g.nodeTables(label)).get, pred)
+    val (nd, o) = deleteBy(stateOf(g, ds, g.nodeTables(label)).get, pred, hitKeys = true)
     val doomed = o.hitKeys.getOrElse {
       val (f, n) = PropertyGraph.materializedCount(
         g.nodeTables(label).filter(pred).select(col("id").as("__k")))
@@ -447,7 +462,7 @@ object GraphMutations {
       ids: (DataFrame, Long), detach: Boolean): PropertyGraph = {
     val ds = s"nodes_$label"
     val (nd, o) = deleteByKeys(stateOf(g, ds, g.nodeTables(label)).get,
-      ids._1, Some(ids._2))
+      ids._1, Some(ids._2), hitKeys = true)
     val doomed = o.hitKeys.getOrElse(
       FrameKeys(ids._1.select(col("id").as("__k")), ids._2))
     detached(g, label, ds -> nd, o.store, doomed, detach)
@@ -517,10 +532,20 @@ object GraphMutations {
   }
 
   /** DELETE edges whose eids appear in `eids` (column `eid`). */
-  def deleteEdgesIn(g: PropertyGraph, label: String, eids: DataFrame): PropertyGraph = {
+  def deleteEdgesIn(g: PropertyGraph, label: String, eids: DataFrame): PropertyGraph =
+    deleteEdgesIn(g, label, eids, None)
+
+  /** [[deleteEdgesIn]] of a [[PropertyGraph.materializedCount]] result
+    * (one-column `eid` frame, its row count). */
+  def deleteEdgesIn(g: PropertyGraph, label: String,
+      eids: (DataFrame, Long)): PropertyGraph =
+    deleteEdgesIn(g, label, eids._1, Some(eids._2))
+
+  private def deleteEdgesIn(g: PropertyGraph, label: String, eids: DataFrame,
+      n: Option[Long]): PropertyGraph = {
     val ds = s"edges_$label"
     commit(g, Map(ds -> deleteByKeys(stateOf(g, ds, g.edgeTables(label)._2).get,
-      eids.select("eid"), None)._1))
+      eids.select("eid"), n)._1))
   }
 
   /** SET properties from a computed updates table `(id, <prop>, …)` — the
@@ -529,9 +554,14 @@ object GraphMutations {
     * would lose — hence the match flag).
     */
   def setNodePropsFrom(g: PropertyGraph, label: String, updates: DataFrame,
-      props: Seq[String]): PropertyGraph = {
-    setFrom(g, s"nodes_$label", g.nodeTables(label), updates, props)
-  }
+      props: Seq[String]): PropertyGraph =
+    setFrom(g, s"nodes_$label", g.nodeTables(label), updates, None, props)
+
+  /** [[setNodePropsFrom]] of a [[PropertyGraph.materializedCount]] result
+    * (the updates table, its row count). */
+  def setNodePropsFrom(g: PropertyGraph, label: String,
+      updates: (DataFrame, Long), props: Seq[String]): PropertyGraph =
+    setFrom(g, s"nodes_$label", g.nodeTables(label), updates._1, Some(updates._2), props)
 
   /** MATCH … SET on edge properties. */
   def setEdgeProps(g: PropertyGraph, label: String, pred: Column,
@@ -557,7 +587,11 @@ object GraphMutations {
     * [[setNodePropsFrom]] with the edge identity key.
     */
   def setEdgePropsFrom(g: PropertyGraph, label: String, updates: DataFrame,
-      props: Seq[String]): PropertyGraph = {
-    setFrom(g, s"edges_$label", g.edgeTables(label)._2, updates, props)
-  }
+      props: Seq[String]): PropertyGraph =
+    setFrom(g, s"edges_$label", g.edgeTables(label)._2, updates, None, props)
+
+  /** [[setEdgePropsFrom]] of a [[PropertyGraph.materializedCount]] result. */
+  def setEdgePropsFrom(g: PropertyGraph, label: String,
+      updates: (DataFrame, Long), props: Seq[String]): PropertyGraph =
+    setFrom(g, s"edges_$label", g.edgeTables(label)._2, updates._1, Some(updates._2), props)
 }

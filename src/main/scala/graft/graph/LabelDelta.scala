@@ -62,46 +62,73 @@ object KeyNotIn {
 private[graph] sealed trait Keys {
   def count: Long
 }
-/** Held by the driver, in Catalyst's internal value form. */
-private[graph] final case class InlineKeys(set: java.util.Set[Any]) extends Keys {
+/** Held by the driver, in Catalyst's internal value form of type `dt`. */
+private[graph] final case class InlineKeys(set: java.util.Set[Any], dt: DataType)
+    extends Keys {
   def count: Long = set.size.toLong
+
+  /** These keys as values of type `target` — what a column of that type
+    * holds for them. A key the type cannot represent (an out-of-range
+    * number, a non-numeric string for a numeric column) matches no row
+    * of it, so it is left out.
+    */
+  def as(target: DataType): InlineKeys =
+    if (target == dt || set.isEmpty) this
+    else {
+      import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+      val tz = Option(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+      val out = new java.util.HashSet[Any]()
+      set.forEach { v =>
+        val c = Cast(Literal(v, dt), target, tz, EvalMode.TRY).eval()
+        if (c != null) out.add(c)
+      }
+      InlineKeys(out, target)
+    }
 }
 /** A one-column `__k` frame over a checkpoint, with its exact count. */
 private[graph] final case class FrameKeys(df: DataFrame, count: Long) extends Keys
 
 private[graph] object Keys {
-  val none: Keys = InlineKeys(java.util.Collections.emptySet[Any]())
+  val none: Keys = InlineKeys(java.util.Collections.emptySet[Any](), NullType)
 
-  /** Whether `n` keys of type `dt` stay driver-held: the broadcast
-    * gate's rows × width model ([[PropertyGraph.boundedBytes]]).
+  /** The most keys a driver-held set holds. A set costs ~50-60 B per
+    * boxed key on the driver, and it is serialized into the task binary
+    * of every stage that reads the view (~10 B per key), so it stays in
+    * the kilobytes; a larger set is a checkpoint the view anti-joins.
     */
-  def inline(n: Long, dt: DataType): Boolean =
-    PropertyGraph.boundedBytes(n, StructType(Seq(StructField("__k", dt)))) <=
-      PropertyGraph.BroadcastByteLimit
+  val InlineLimit = 4096
+
+  def inline(n: Long): Boolean = n <= InlineLimit
+
+  /** The `__k` column of a frame of keys as type `dt` (NULL where the
+    * type cannot represent a key, which matches no row). */
+  private def typed(k: DataFrame, dt: DataType, as: String): DataFrame =
+    k.select(col("__k").try_cast(dt).as(as))
 
   /** Rows of `df` whose `c` is NOT among `keys`. A frame of keys joins
     * as an anti-join, broadcast by its exact count — the hint sits on
     * the join input only.
     */
   def hide(df: DataFrame, c: String, keys: Keys): DataFrame = keys match {
-    case InlineKeys(s) =>
-      df.filter(KeyNotIn.column(c, s))
+    case k: InlineKeys =>
+      df.filter(KeyNotIn.column(c, k.as(df.schema(c).dataType).set))
     case FrameKeys(k, n) =>
       val side = PropertyGraph.broadcastIfBoundedRows(n,
-        k.select(col("__k").cast(df.schema(c).dataType).as(s"__h_$c")))
+        typed(k, df.schema(c).dataType, s"__h_$c"))
       df.join(side, df(c) === side(s"__h_$c"), "left_anti")
   }
 
-  /** Whether column `c` is among the driver-held `keys` (false for NULL). */
-  def memberOf(c: String, keys: InlineKeys): Column =
-    !KeyNotIn.column(c, keys.set)
+  /** Whether `df`'s column `c` is among the driver-held `keys` (false
+    * for NULL). */
+  def memberOf(df: DataFrame, c: String, keys: InlineKeys): Column =
+    !KeyNotIn.column(c, keys.as(df.schema(c).dataType).set)
 
   /** Rows of `df` whose `c` IS among `keys`. */
   def pick(df: DataFrame, c: String, keys: Keys): DataFrame = keys match {
-    case k: InlineKeys => df.filter(memberOf(c, k))
+    case k: InlineKeys => df.filter(memberOf(df, c, k))
     case FrameKeys(k, n) =>
       val side = PropertyGraph.broadcastIfBoundedRows(n,
-        k.select(col("__k").cast(df.schema(c).dataType).as(s"__h_$c")))
+        typed(k, df.schema(c).dataType, s"__h_$c"))
       df.join(side, df(c) === side(s"__h_$c"), "left_semi")
   }
 
@@ -109,22 +136,23 @@ private[graph] object Keys {
     * driver-held form).
     */
   def frame(spark: SparkSession, keys: Keys, dt: DataType): DataFrame = keys match {
-    case FrameKeys(k, _) => k.select(col("__k").cast(dt).as("__k"))
-    case InlineKeys(s) =>
+    case FrameKeys(k, _) => typed(k, dt, "__k")
+    case k: InlineKeys =>
       import scala.jdk.CollectionConverters._
-      val rows = s.asScala.toSeq.map(v =>
+      val rows = k.as(dt).set.asScala.toSeq.map(v =>
         Row(CatalystTypeConverters.convertToScala(v, dt)))
       spark.createDataFrame(rows.asJava, StructType(Seq(StructField("__k", dt))))
   }
 
-  /** Union of two key sets of type `dt`: driver-held while the model
+  /** Union of two key sets, as type `dt`: driver-held while the count
     * allows it, otherwise one materialized frame (never a growing union).
     */
   def union(spark: SparkSession, a: Keys, b: Keys, dt: DataType): Keys = (a, b) match {
     case (_, k) if k.count == 0 => a
     case (k, _) if k.count == 0 => b
-    case (InlineKeys(x), InlineKeys(y)) if inline(x.size.toLong + y.size, dt) =>
-      val s = new java.util.HashSet[Any](x); s.addAll(y); InlineKeys(s)
+    case (x: InlineKeys, y: InlineKeys) if inline(x.count + y.count) =>
+      val s = new java.util.HashSet[Any](x.as(dt).set); s.addAll(y.as(dt).set)
+      InlineKeys(s, dt)
     case _ =>
       val (df, n) = PropertyGraph.materializedCount(
         frame(spark, a, dt).union(frame(spark, b, dt)).distinct())
@@ -177,12 +205,6 @@ private[graph] final case class LabelDelta(
   def view: DataFrame =
     SchemaReconcile.union(Seq(visibleBase, visibleDelta), s"the view of $key-keyed rows")
 
-  /** Checkpoint-backed frames this state holds (released by a save once
-    * superseded).
-    */
-  def frames: Seq[DataFrame] =
-    store +: (tomb.values ++ drop.values).collect { case FrameKeys(df, _) => df }.toSeq
-
   /** Hide base and delta rows whose `c` is among `keys` (a DETACH DELETE
     * on an incident edge label).
     */
@@ -218,22 +240,27 @@ private[graph] object LabelDelta {
     LabelDelta(df, key, empty, 0L, Map.empty, Map.empty)
   }
 
-  /** What one restatement job found. `ghostKeys` / `hitKeys` are None
-    * when the keys outgrew the driver-held form.
+  /** What one restatement job found. `ghostKeys` is None when the keys
+    * outgrew the driver-held form, `hitKeys` also when they were not
+    * asked for.
     */
   final case class Outcome(store: DataFrame, ghosts: Long,
       ghostKeys: Option[InlineKeys], hits: Long, hitKeys: Option[InlineKeys],
       added: Long)
 
   /** Counts and bounded key sets gathered by a restatement job (a key
-    * set is dropped — None — once it outgrows `cap`).
+    * set is dropped — null — once it outgrows [[Keys.InlineLimit]]; the
+    * hit keys are gathered only when `collectHits`).
     */
-  private final class RestateState(cap: Long) extends Serializable {
+  private final class RestateState(collectHits: Boolean) extends Serializable {
+    private def cap: Int = Keys.InlineLimit
     var hits, added, ghosts = 0L
-    var hitKeys: java.util.HashSet[Any] = new java.util.HashSet[Any]()
+    var hitKeys: java.util.HashSet[Any] =
+      if (collectHits) new java.util.HashSet[Any]() else null
     var ghostKeys: java.util.HashSet[Any] = new java.util.HashSet[Any]()
     def isZero: Boolean = hits == 0 && added == 0 && ghosts == 0 &&
-      hitKeys != null && hitKeys.isEmpty && ghostKeys != null && ghostKeys.isEmpty
+      ghostKeys != null && ghostKeys.isEmpty &&
+      (!collectHits || (hitKeys != null && hitKeys.isEmpty))
     private def addKey(s: java.util.HashSet[Any], k: Any): java.util.HashSet[Any] =
       if (s == null || s.size >= cap) null
       else { if (k != null) s.add(k); s }
@@ -256,14 +283,14 @@ private[graph] object LabelDelta {
   /** [[RestateState]] as an accumulator. It is updated in the job's
     * result stage, where Spark applies each task's update exactly once.
     */
-  private final class RestateAcc(cap: Long)
+  private final class RestateAcc(collectHits: Boolean)
       extends org.apache.spark.util.AccumulatorV2[(Int, Any), RestateState] {
-    private var st = new RestateState(cap)
+    private var st = new RestateState(collectHits)
     override def isZero: Boolean = st.isZero
     override def copy(): RestateAcc = {
-      val c = new RestateAcc(cap); c.st.merge(st); c
+      val c = new RestateAcc(collectHits); c.st.merge(st); c
     }
-    override def reset(): Unit = st = new RestateState(cap)
+    override def reset(): Unit = st = new RestateState(collectHits)
     override def add(v: (Int, Any)): Unit = st.add(v._1, v._2)
     override def merge(
         o: org.apache.spark.util.AccumulatorV2[(Int, Any), RestateState]): Unit =
@@ -276,10 +303,10 @@ private[graph] object LabelDelta {
     * (delta rows and ghosts) and the rows the statement hit. The rows
     * marked [[Keep]] are local-checkpointed — in one partition while the
     * schema × rows model fits a file split — and the job's accumulator
-    * returns the hit count, the inserted count and the hit and ghost
-    * keys (driver-held while the broadcast gate's model allows).
+    * returns the hit count, the inserted count, the ghost keys and, with
+    * `hitKeys`, the hit keys (each driver-held while few enough).
     */
-  def restate(tagged: DataFrame, key: String): Outcome = {
+  def restate(tagged: DataFrame, key: String, hitKeys: Boolean = false): Outcome = {
     val spark = tagged.sparkSession
     val schema = tagged.schema
     val tagIdx = schema.fieldIndex(Tag)
@@ -289,13 +316,10 @@ private[graph] object LabelDelta {
     val types = schema.fields.map(_.dataType)
     val outSchema = StructType(cols.map(schema.fields(_)) :+
       StructField(Ghost, BooleanType, nullable = false))
-    val cap = {
-      val w = PropertyGraph.estimatedRowBytes(StructType(Seq(StructField("__k", keyType))))
-      math.max(1L, PropertyGraph.BroadcastByteLimit / w)
-    }
-    val acc = new RestateAcc(cap)
+    val acc = new RestateAcc(hitKeys)
     spark.sparkContext.register(acc)
-    val rows = interpreted(spark)(tagged.queryExecution.toRdd).mapPartitions { it =>
+    val plan = tagged.queryExecution.analyzed
+    val rows = interpreted(spark)(_.sessionState.executePlan(plan).toRdd).mapPartitions { it =>
       it.flatMap { r =>
         val t = r.getInt(tagIdx)
         val k = if (r.isNullAt(keyIdx)) null else r.get(keyIdx, keyType) match {
@@ -319,7 +343,7 @@ private[graph] object LabelDelta {
       }
     }
     rows.localCheckpoint()
-    val kept = interpreted(spark)(rows.count())
+    val kept = interpreted(spark)(_ => rows.count())
     val split = spark.sessionState.conf.filesMaxPartitionBytes
     val parts =
       if (PropertyGraph.boundedBytes(kept, outSchema) <= split) rows.coalesce(1) else rows
@@ -330,27 +354,22 @@ private[graph] object LabelDelta {
     val store = spark.createDataFrame(external, outSchema)
     val a = acc.value
     Outcome(store, a.ghosts,
-      Option(a.ghostKeys).map(s => InlineKeys(s)), a.hits,
-      Option(a.hitKeys).map(s => InlineKeys(s)), a.added)
+      Option(a.ghostKeys).map(InlineKeys(_, keyType)), a.hits,
+      Option(a.hitKeys).map(InlineKeys(_, keyType)), a.added)
   }
 
-  /** Plan and run `body` without code generation. A statement's job
+  /** Plan and run `body` without code generation, in a session that
+    * mirrors `spark`'s settings ([[org.apache.spark.sql.graft.Sessions]]):
+    * the shared session's conf is not touched. A statement's job
     * touches a handful of rows — its hits and a small delta — so
     * compiling its plan costs more than the compiled code saves, and each
     * class it compiled would take a slot in Spark's codegen cache
     * (100 entries by default) that the read path's classes need to stay
     * compiled across statements.
     */
-  private def interpreted[A](spark: SparkSession)(body: => A): A = {
-    val conf = spark.conf
-    val off = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val prev = off.map { case (k, _) => k -> conf.getOption(k) }
-    off.foreach { case (k, v) => conf.set(k, v) }
-    try org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])(body)
-    finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
-  }
+  private def interpreted[A](spark: SparkSession)(
+      body: org.apache.spark.sql.classic.SparkSession => A): A =
+    org.apache.spark.sql.graft.Sessions.withoutCodegen(spark)(body)
 
   def tag(df: DataFrame, bits: Int): DataFrame = df.withColumn(Tag, lit(bits))
   def tag(df: DataFrame, hit: Column, onHit: Int, otherwise: Int): DataFrame =

@@ -52,16 +52,18 @@ final case class EdgeType(label: String, srcLabel: String, dstLabel: String)
   *    predicates still reach its scan (parquet pushdown, bucket pruning);
   *  - `T` hides base rows by identity key (and, for edges, by the
   *    endpoint of a DETACH-deleted node) — driver-held and bound by
-  *    reference while its exact count fits the broadcast gate's
-  *    rows × width model, an anti-join against a checkpoint beyond it;
+  *    reference while its exact count is at most
+  *    [[Keys.InlineLimit]], an anti-join against a checkpoint beyond it;
   *  - `D` is one checkpoint of the current versions of the inserted and
   *    updated rows, re-materialized by the statement that changes it.
   * The view's plan has the same shape after one statement or after
   * many: reads and DML reuse generated code and plan height is flat.
   * Each statement runs in one job that also counts its affected rows;
-  * a save rewrites the buckets of `T ∪ D` and releases the checkpoints
-  * earlier statements superseded (statements release nothing, so a
-  * rollback snapshot stays readable). Id-type widening and edge types
+  * a save rewrites the buckets of `T ∪ D`. Nothing releases a
+  * superseded checkpoint eagerly: an earlier graph version (a
+  * transaction's rollback snapshot, a lazy result of an earlier query)
+  * may still read it, so its blocks go when that version becomes
+  * unreachable (ContextCleaner). Id-type widening and edge types
   * without an `eid` replace the label as a whole instead.
   */
 final class PropertyGraph(
@@ -237,10 +239,6 @@ final class PropertyGraph(
     * them in full.
     */
   @transient private[graph] var rebased: Set[String] = Set.empty
-  /** Every checkpoint the statements since load created (stores and
-    * large key sets), so a save can release the superseded ones.
-    */
-  @transient private[graph] var checkpoints: Vector[DataFrame] = Vector.empty
   /** The schema of each dataset as loaded — the file schema a
     * bucket-scoped save must keep.
     */
@@ -255,13 +253,6 @@ final class PropertyGraph(
     */
   private[graph] def scopedDelta(ds: String): Option[LabelDelta] =
     if (Option(rebased).exists(_.contains(ds))) None else deltaFor(ds)
-
-  /** The checkpoints this graph no longer reads. */
-  private[graph] def supersededCheckpoints: Seq[DataFrame] = {
-    val current = Option(deltas).getOrElse(Map.empty).values.flatMap(_.frames).toSeq
-    Option(checkpoints).getOrElse(Vector.empty)
-      .filterNot(c => current.exists(_ eq c))
-  }
 
   /** Copy with mutated tables: `restated` gives the new state of each
     * dataset a statement restated (its table is that state's view),
@@ -279,9 +270,6 @@ final class PropertyGraph(
     g.nodeCountCache ++= nodeCountCache // inherit stats as estimates
     g.deltas = Option(deltas).getOrElse(Map.empty) -- rewritten ++ restated
     g.rebased = Option(rebased).getOrElse(Set.empty) ++ rewritten
-    val known = Option(checkpoints).getOrElse(Vector.empty)
-    g.checkpoints = known ++ restated.values.flatMap(_.frames)
-      .filterNot(f => known.exists(_ eq f))
     g.loadedSchemas = Option(loadedSchemas).getOrElse(Map.empty)
     g
   }

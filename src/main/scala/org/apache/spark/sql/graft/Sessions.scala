@@ -1,0 +1,41 @@
+package org.apache.spark.sql.graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.SQLExecution
+
+/** Jobs planned and run without code generation, without touching the
+  * caller's conf: other threads of the same session read that conf
+  * concurrently, and two jobs restoring it in the wrong order would
+  * leave code generation off for good.
+  */
+object Sessions {
+  private val NoCodegen = Map("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** One work session per caller session (same SparkContext and shared
+    * state, its own conf); weak on the caller. */
+  private val work = new java.util.WeakHashMap[classic.SparkSession, classic.SparkSession]()
+
+  /** Run `body` with a session whose conf is `spark`'s plus code
+    * generation switched off — active, and propagated to the tasks of
+    * the jobs `body` runs.
+    */
+  def withoutCodegen[A](spark: SparkSession)(body: classic.SparkSession => A): A = {
+    val caller = spark.asInstanceOf[classic.SparkSession]
+    val w = work.synchronized {
+      Option(work.get(caller)).getOrElse {
+        val s = caller.newSession(); work.put(caller, s); s
+      }
+    }
+    val conf = w.sessionState.conf
+    conf.synchronized {
+      val want = caller.sessionState.conf.getAllConfs ++ NoCodegen
+      conf.getAllConfs.keys.foreach(k => if (!want.contains(k)) conf.unsetConf(k))
+      want.foreach { case (k, v) =>
+        if (conf.getConfString(k, null) != v) conf.setConfString(k, v)
+      }
+    }
+    w.withActive(SQLExecution.withSQLConfPropagated(w)(body(w)))
+  }
+}

@@ -1120,7 +1120,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
             s"relative graph name '${g.getOrElse("")}' needs " +
               "SESSION SET SCHEMA first"))
         // "_"/"." prefixes are the warehouse's metadata namespace
-        // (_graph_types, _security, .staging_*) — a schema or graph so
+        // (_graph_types, _security, .tmp_*) — a schema or graph so
         // named would be invisible to listings and DROP SCHEMA /_graph_types
         // CASCADE would delete the graph-type catalog
         (schema +: g.toSeq).find(n => n.startsWith("_") || n.startsWith("."))

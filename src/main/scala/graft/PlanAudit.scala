@@ -393,6 +393,21 @@ object PlanAudit {
       "hier-IVF probes posting lists via cid equi-join; no CartesianProduct",
       p => !p.contains("CartesianProduct") && p.contains("cid"))
 
+    // e10 batch probe: the probe Generate runs INSIDE a whole-stage
+    // codegen span, streamed against the broadcast corpus side
+    // (plans/r21/e10_hier_probe_batch_final_executed.txt). Graded on the
+    // AQE final plan: the unexecuted plan never shows codegen markers.
+    {
+      val df = qs("e10_hier_probe_batch")(spark, sfDir)
+      df.collect()
+      val ok = df.queryExecution.executedPlan.toString.linesIterator.exists(
+        """\*\(\d+\) Generate explode\(graft_hier_probe_gen""".r
+          .findFirstIn(_).isDefined)
+      if (!ok) failures += 1
+      out ++= s"- ${if (ok) "PASS" else "FAIL"} `e10_hier_probe_batch` — probe Generate inside WholeStageCodegen\n"
+      println(s"${if (ok) "PASS" else "FAIL"} e10_hier_probe_batch — Generate in WholeStageCodegen")
+    }
+
     check("d12_stratified_split", qs("d12_stratified_split")(spark, sfDir),
       "hash-keyed sampling adds no hash exchange (narrow map + filter)",
       p => p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 0)

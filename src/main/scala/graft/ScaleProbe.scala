@@ -240,7 +240,7 @@ object ScaleProbe {
     val reloadS = (System.nanoTime() - reload0) / 1e9
     // stage decomposition (r17 #5): one line per measured save, so a
     // write-path regression names its stage — write (bucket_scoped vs
-    // full), clean-dataset hard-link, swap rename, reload
+    // full), clean-dataset hard-link, pointer commit, reload
     val st = graft.graph.GraphCatalog.lastSaveStages
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")
     println(f"""{"stage_probe":"dml_save_$variant","save_total":${

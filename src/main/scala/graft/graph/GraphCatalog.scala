@@ -9,10 +9,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Spark-native analog of the reference's `StorageManager` /
   * `MultiGraphManager` (storage/storage_manager.rs:42-64, get_graph:153,
   * save_graph:209): graphs live under `/<schema>/<graph>/` paths, persisted
-  * as parquet — `nodes_<label>/` and `edges_<label>/` datasets plus a tiny
-  * `_meta` file recording edge endpoints. Saves are copy-on-write (Spark
-  * overwrite), giving snapshot semantics instead of the reference's WAL
-  * (txn/wal.rs) — documented divergence, SURVEY.md §7.3.
+  * as parquet. Each save writes an immutable VERSION directory
+  * `<graph>/v<n>/` — `nodes_<label>/` and `edges_<label>/` datasets plus
+  * a tiny `_meta` file recording edge endpoints — and commits it by one
+  * atomic write of the `<graph>/_current` pointer. Readers keep the
+  * version they loaded while a writer commits the next one (snapshot
+  * isolation via immutable versions instead of the reference's WAL,
+  * txn/wal.rs — documented divergence, SURVEY.md §7.3); versions no
+  * pointer names are removed at the next catalog open.
   */
 final class GraphCatalog(spark: SparkSession, warehouse: String) {
 
@@ -32,11 +36,10 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     * same-directory `.tmp_` sibling first, then a single rename replaces
     * the target. `Files.writeString` in place would truncate-then-write —
     * a crash mid-write loses EVERY row of `_indexes` / `_security` / a
-    * graph-type def, the torn-write class the data-directory swap was
-    * hardened against (VERDICT r16 #1); metadata deserves the same
-    * guarantee. Readers never see the `.tmp_` name (all catalog listings
-    * skip "."-prefixed entries), and stale temps from a crash are swept
-    * at catalog open.
+    * graph-type def (VERDICT r16 #1). The same write commits a graph
+    * version through its `_current` pointer. Readers never see the
+    * `.tmp_` name (all catalog listings skip "."-prefixed entries), and
+    * stale temps from a crash are swept at catalog open.
     */
   private def writeAtomic(p: java.nio.file.Path, content: String): Unit = {
     Files.createDirectories(p.getParent)
@@ -62,12 +65,11 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           f.getFileName.toString.startsWith(".tmp_")).foreach(Files.delete(_))
       }
 
-  // catalog open = recovery point: roll any save swap a crash
-  // interrupted forward (complete staging exists) or back (.old
-  // survives) before the first statement touches the warehouse —
-  // the moral equivalent of the reference's WAL recovery pass
-  // (txn/recovery.rs) for this copy-on-write design
-  recoverSwaps()
+  // catalog open = recovery point: drop what no pointer names before
+  // the first statement touches the warehouse — the counterpart of the
+  // reference's WAL recovery pass (txn/recovery.rs), with nothing to
+  // roll forward or back
+  collectGarbage()
   sweepTmp()
 
   // install the read-side bucket-pruning optimizer rule once per session:
@@ -96,7 +98,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     if (!Files.exists(p)) Seq.empty
     else listDir(p).filter(Files.isDirectory(_))
       .map(_.getFileName.toString)
-      // "."-prefixed = staging/history; "_"-prefixed = catalog metadata
+      // "."-prefixed = temps/history; "_"-prefixed = catalog metadata
       // (_graph_types, _procedures) — neither is a user schema (found by
       // DdlCatalogFuzzSpec: CREATE GRAPH TYPE made _graph_types appear
       // in gql.list_schemas)
@@ -110,13 +112,12 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       .map(_.getFileName.toString).filterNot(_.startsWith(".")).sorted
   }
 
-  /** Save a graph version. Writes go to a hidden staging dir first, then
-    * the target dir is swapped in whole: this (a) lets a copy-on-write
-    * graph whose tables still lazily read the target path be saved back to
-    * it — Spark refuses a direct overwrite of a path being read — and
-    * (b) drops stale `nodes_* / edges_*` datasets of labels that no longer
-    * exist in the graph, which a per-table overwrite would resurrect on
-    * the next load.
+  /** Save a graph version: a new version directory holding exactly
+    * `g`'s datasets (so labels that no longer exist are dropped), then
+    * one pointer write commits it. Saving back to the path `g` was
+    * loaded from is safe while its tables, or any earlier frame, still
+    * lazily read the loaded version: that version's files are never
+    * touched.
     */
   def saveGraph(schema: String, name: String, g: PropertyGraph,
       force: Boolean = false): Unit = {
@@ -150,57 +151,90 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       force: Boolean, sc: org.apache.spark.SparkContext,
       group: String): Unit = {
     val dir = graphDir(schema, name)
-    val staging = s"$warehouse/$schema/.staging_${name}_${System.nanoTime}"
-    // Incremental path: the graph was loaded from this very directory and
-    // tracked which datasets its mutations touched — rewrite only those;
-    // clean datasets are renamed through staging (a metadata move, no
-    // data copied or shuffled). At 100 TB a one-label mutation then costs
-    // one label's rewrite. `force` (REINDEX) rewrites everything so new
-    // clustered layouts apply to every dataset.
-    val incremental = !force && g.origin.contains(dir) &&
-      g.dirty.isDefined && Files.exists(Paths.get(dir))
+    // Incremental path: the graph was loaded from a version of this very
+    // graph and tracked which datasets its mutations touched — rewrite
+    // only those; clean datasets are hard-linked from that version (no
+    // data copied or shuffled), so the new version is exactly the
+    // session's graph even when another session committed in between.
+    // At 100 TB a one-label mutation then costs one label's rewrite.
+    // `force` (REINDEX) rewrites everything so new clustered layouts
+    // apply to every dataset.
+    val base = g.origin.filter(o => !force && g.dirty.isDefined &&
+      Paths.get(o).getParent == Paths.get(dir) && Files.isDirectory(Paths.get(o)))
     val dirtySet: Set[String] =
-      if (incremental) g.dirty.get
+      if (base.isDefined) g.dirty.get
       else g.nodeTables.keySet.map(l => s"nodes_$l") ++
         g.edgeTables.keySet.map(l => s"edges_$l")
     // per-stage wall clock of THIS save, published to
     // [[GraphCatalog.lastSaveStages]] — the warehouse-write board rows
     // (gql32/34/35 class) are parquet-rewrite-dominated, and a future
-    // write-path regression should name its stage (staging write vs
-    // hard-link vs swap) instead of moving an opaque total (r17 #5)
+    // write-path regression should name its stage (version write vs
+    // hard-link vs commit) instead of moving an opaque total (r17 #5)
     val stages = Seq.newBuilder[(String, Double)]
-    Files.createDirectories(Paths.get(staging))
-    try writeStaging(dir, staging, g, incremental, dirtySet, sc, group, stages)
-    catch {
+    val version = newVersion(dir)
+    try {
+      writeVersion(base, version.toString, g, dirtySet, sc, group, stages)
+      val meta = g.edgeTables.map { case (label, (et, _)) =>
+        s"$label\t${et.srcLabel}\t${et.dstLabel}"
+      }.mkString("\n")
+      base.map(b => Paths.get(s"$b/_meta"))
+        .filter(m => Files.exists(m) && Files.readString(m) == meta) match {
+        // unchanged edge metadata is linked like a clean dataset
+        case Some(m) => Files.createLink(version.resolve("_meta"), m)
+        case None => Files.writeString(version.resolve("_meta"), meta)
+      }
+    } catch {
       case e: Throwable =>
-        // a failed save leaves no staging behind (recovery at the next
-        // catalog open would delete it too, but only then)
+        // a failed save leaves no version behind (the next catalog open
+        // would delete it too, but only then)
         awaitGroupTasks(sc, group)
-        deleteRecursive(Paths.get(staging))
+        deleteRecursive(version)
+        // nor, after a failed first save, an empty graph directory
+        if (listDir(Paths.get(dir)).isEmpty) Files.delete(Paths.get(dir))
         throw e
     }
-    val meta = g.edgeTables.map { case (label, (et, _)) =>
-      s"$label\t${et.srcLabel}\t${et.dstLabel}"
-    }.mkString("\n")
-    // _meta is the staging COMMIT MARKER: it is written last, so its
-    // presence certifies a complete staging — recovery promotes only
-    // marked stagings; the atomic write keeps the marker all-or-nothing
-    // (a torn _meta would read as a COMPLETE staging with corrupt edge
-    // metadata and get rolled forward)
-    writeAtomic(Paths.get(s"$staging/_meta"), meta)
     val t0 = System.nanoTime()
-    commitSwap(dir, staging)
-    stages += (("swap", (System.nanoTime() - t0) / 1e9))
-    // the swap replaced this path's files — drop any pruning specs keyed
-    // under it; the next loadGraph re-registers from current options
-    graft.plans.BucketPrune.invalidateUnder(dir)
-    graft.plans.MirrorSwap.invalidateUnder(dir)
+    commit(schema, name, version)
+    stages += (("commit", (System.nanoTime() - t0) / 1e9))
     GraphCatalog.lastSaveStages = stages.result()
+  }
+
+  /** A new, empty version directory under graph directory `dir`:
+    * `v<n>` for the least n above every version there. The directory
+    * create is atomic, so two concurrent saves never share one.
+    */
+  private def newVersion(dir: String): java.nio.file.Path = {
+    val d = Files.createDirectories(Paths.get(dir))
+    val top = listDir(d).flatMap(_.getFileName.toString.stripPrefix("v")
+      .toIntOption).maxOption.getOrElse(0)
+    Iterator.from(top + 1).map(n => d.resolve(s"v$n")).find { v =>
+      try { Files.createDirectory(v); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    }.get
+  }
+
+  /** Make `version` the current version of graph `schema/name`: ONE
+    * atomic pointer write, so a crash leaves either the old or the new
+    * version current. The superseded version stays on disk — every
+    * frame still reading it keeps working — until the next catalog
+    * open; its pruning specs are dropped now (its frames then run
+    * unpruned, which is still correct), so they do not pile up one per
+    * save.
+    */
+  private def commit(schema: String, name: String,
+      version: java.nio.file.Path): Unit = {
+    val prev = GraphCatalog.versionDir(warehouse, schema, name)
+    writeAtomic(Paths.get(graphDir(schema, name), GraphCatalog.Current),
+      version.getFileName.toString)
+    prev.foreach { p =>
+      graft.plans.BucketPrune.invalidateUnder(p)
+      graft.plans.MirrorSwap.invalidateUnder(p)
+    }
   }
 
   /** Wait (bounded) until no task of the save's job group still runs:
     * a cancelled job reports its end before its killed tasks stop, and a
-    * task still running could write into the staging directory after it
+    * task still running could write into the version directory after it
     * was deleted.
     */
   private def awaitGroupTasks(sc: org.apache.spark.SparkContext,
@@ -215,10 +249,12 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
   }
 
   /** The write phase of a save: every dirty dataset written into
-    * `staging` (concurrently, see below), every clean one hard-linked.
+    * `version` (concurrently, see below), every clean one hard-linked
+    * from `base`, the version an incremental save's graph was loaded
+    * from.
     */
-  private def writeStaging(dir: String, staging: String, g: PropertyGraph,
-      incremental: Boolean, dirtySet: Set[String],
+  private def writeVersion(base: Option[String], version: String,
+      g: PropertyGraph, dirtySet: Set[String],
       sc: org.apache.spark.SparkContext, group: String,
       stages: scala.collection.mutable.Builder[(String, Double), Seq[(String, Double)]]): Unit = {
     def staged[A](label: String)(body: => A): A = {
@@ -230,15 +266,10 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     val datasets: Seq[(String, DataFrame)] =
       g.nodeTables.toSeq.map { case (l, df) => (s"nodes_$l", df) } ++
         g.edgeTables.toSeq.map { case (l, (_, df)) => (s"edges_$l", df) }
-    // two passes: every dirty dataset is WRITTEN before clean datasets
-    // are LINKED — a dirty table's lineage may lazily read a clean
-    // table's files (e.g. inserted edges derived from a node scan).
-    // Clean datasets enter staging as hard links (no data copy) rather
-    // than moves, so the live dir stays complete until [[commitSwap]]'s
-    // rename-aside promotion — a crash anywhere mid-save either leaves
-    // the old graph fully intact (before the first rename) or leaves a
-    // state [[recoverSwaps]] rolls forward/back at the next catalog
-    // open; no window loses both versions.
+    // two passes: dirty datasets are written, then clean datasets enter
+    // the version as hard links (no data copy). Nothing in `base`
+    // changes, so a crash anywhere mid-save leaves an unnamed version
+    // the next catalog open deletes, and the old version current.
     // untyped all-NULL columns (SET x = NULL / REMOVE of a never-written
     // name) persist as string at the WRITE boundary only: Spark 4 can
     // round-trip NullType parquet, but external warehouse readers can't.
@@ -252,16 +283,15 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
         else d)
     // Dirty writes run as CONCURRENT Spark jobs (guide §2.6 — actions
     // are only sequential because the driver calls them sequentially):
-    // every dirty write reads LIVE files and writes its own disjoint
-    // STAGING subtree, so the main writes of different datasets, and an
-    // edge dataset's main + mirror pair, are pairwise independent. The
-    // serial chain left most of the box idle through each write's
-    // commit/tail phase (measured r21: gql38's four full writes summed
-    // 3.3 s serial with sub-second stages each). 2-3 jobs in flight
-    // back-fill each other's stragglers; FIFO scheduling gives the
-    // earlier job resources first. The crash contract is unchanged —
-    // staging only promotes after the `_meta` marker below, and any
-    // failed write task fails the save before the marker is written.
+    // every dirty write reads committed files and writes its own
+    // disjoint subtree of the new version, so the main writes of
+    // different datasets, and an edge dataset's main + mirror pair, are
+    // pairwise independent. The serial chain left most of the box idle
+    // through each write's commit/tail phase (measured r21: gql38's four
+    // full writes summed 3.3 s serial with sub-second stages each). 2-3
+    // jobs in flight back-fill each other's stragglers; FIFO scheduling
+    // gives the earlier job resources first. Any failed write task fails
+    // the save before its pointer is written.
     // The bucket-SCOPED attempt chain of an incremental save stays one
     // task per dataset (the mirror's scoped arm is gated on the main
     // outcome and shares the dataset's touched keys); the expensive
@@ -270,7 +300,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     // Every job of the save runs in ONE job group, so the first failed
     // write cancels its peers' running jobs; each task names its step in
     // the job description.
-    // interruptible: a cancelled peer must stop writing into the staging
+    // interruptible: a cancelled peer must stop writing into the version
     // directory the failed save is about to delete
     def inGroup(desc: String): Unit =
       sc.setJobGroup(group, desc, interruptOnCancel = true)
@@ -284,13 +314,13 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           def mainFull(): Seq[(String, Double)] = {
             val t0 = System.nanoTime()
             inGroup(s"save $ds (full)")
-            writeClustered(ds, t, s"$staging/$ds")
+            writeClustered(ds, t, s"$version/$ds")
             Seq((s"write:$ds:full", secs(t0)))
           }
           def mirrorFull(): Seq[(String, Double)] = {
             val t0 = System.nanoTime()
             inGroup(s"save $mirName (full)")
-            writeMirror(ds, t, staging)
+            writeMirror(ds, t, version)
             Seq((s"write:$mirName:full", secs(t0)))
           }
           // bucket-scoped path first: when the dataset has a bucketed
@@ -300,10 +330,10 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           // of O(table), the incremental-maintenance economics of
           // [[reclusterBuckets]] applied at the copy-on-write boundary.
           // Adjacency duality (opt-in `mirror = true`): the edge
-          // dataset's dual-keyed mirror stages alongside it —
+          // dataset's dual-keyed mirror is written alongside it —
           // bucket-scoped when the main write was and the mirror's
           // preconditions hold, full otherwise; a no-op when the option
-          // is off (a stale mirror then vanishes at the swap)
+          // is off (a stale mirror then stays out of the new version)
           def scopedChain(): Seq[(String, Double)] = {
             val out = Seq.newBuilder[(String, Double)]
             /** One layout: the touched-bucket step (`buckets:<name>`,
@@ -316,14 +346,14 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
               inGroup(s"save $name (incremental)")
               val plan = (for (l <- layout; d <- g.scopedDelta(ds)) yield {
                 val t0 = System.nanoTime()
-                val p = touchedBuckets(l, ds, t, dir, d, g)
+                val p = touchedBuckets(l, ds, t, base.get, d, g)
                 out += ((s"buckets:$name", secs(t0)))
                 p.map(l -> _)
               }).flatten
               val t1 = System.nanoTime()
               plan match {
                 case Some((l, (touched, bucketDirs))) =>
-                  writeScoped(l, t, staging, touched, bucketDirs)
+                  writeScoped(l, t, version, touched, bucketDirs)
                 case None => full
               }
               val kind = if (plan.isDefined) "bucket_scoped" else "full"
@@ -331,14 +361,14 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
               plan.isDefined
             }
             val mainScoped = attempt(ds, mainLayout(ds, t))(
-              writeClustered(ds, t, s"$staging/$ds"))
+              writeClustered(ds, t, s"$version/$ds"))
             if (hasMirror)
               attempt(mirName,
                 if (mainScoped) mirrorLayout(ds, t) else None)(
-                writeMirror(ds, t, staging))
+                writeMirror(ds, t, version))
             out.result()
           }
-          if (incremental) Seq(() => scopedChain())
+          if (base.isDefined) Seq(() => scopedChain())
           else if (hasMirror) Seq(() => mainFull(), () => mirrorFull())
           else Seq(() => mainFull())
         }
@@ -375,7 +405,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           case e: Throwable =>
             sc.cancelJobGroupAndFutureJobs(group)
             // the peers end once their cancelled jobs do; only then is
-            // nothing left writing into the staging directory
+            // nothing left writing into the version directory
             futs.foreach(f => scala.util.Try(f.get()))
             throw (e match {
               case ee: java.util.concurrent.ExecutionException => ee.getCause
@@ -386,121 +416,73 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       } finally pool.shutdownNow()
     }
     staged("link_clean") {
-      datasets.foreach { case (ds, df) =>
+      for (b <- base; (ds, df) <- datasets) {
         if (!dirtySet.contains(ds)) {
-          linkTree(Paths.get(s"$dir/$ds"), Paths.get(s"$staging/$ds"))
+          linkTree(Paths.get(s"$b/$ds"), Paths.get(s"$version/$ds"))
           // a clean edge dataset's mirror is clean too — link, don't
           // copy. Gated on the option still being ON: after
           // `SET OPTION mirror = false` the next save must DROP the 2×
           // storage even when the dataset itself never went dirty
           // (ADVICE r19 — the opt-out otherwise never reclaims space).
-          val m = Paths.get(s"$dir/${GraphCatalog.MirrorPrefix}$ds")
+          val m = Paths.get(s"$b/${GraphCatalog.MirrorPrefix}$ds")
           if (Files.exists(m) && mirrorOptSpec(ds, df).isDefined)
-            linkTree(m, Paths.get(s"$staging/${GraphCatalog.MirrorPrefix}$ds"))
+            linkTree(m, Paths.get(s"$version/${GraphCatalog.MirrorPrefix}$ds"))
         }
       }
     }
   }
 
-  /** Promote `staging` to the live directory by rename-aside — the same
-    * protocol IncrementalDedup's compaction swap uses
-    * (IncrementalDedup.recoverCompaction): live → `.old_<name>`,
-    * staging → live, delete `.old`. Each step is a single rename, so
-    * every crash window leaves a state [[recoverSwaps]] rolls forward
-    * (complete staging present) or back (`.old` present) at the next
-    * catalog open. The previous protocol — recursive-delete live, then
-    * move — had an O(files) window (seconds at 100K-file labels) where
-    * a crash left NO live directory and an orphaned staging nothing
-    * recovered (VERDICT r16).
-    */
-  private def commitSwap(dir: String, staging: String): Unit = {
-    val live = Paths.get(dir)
-    val old = live.resolveSibling(s".old_${live.getFileName}")
-    deleteRecursive(old) // leftover of an older, already-recovered swap
-    if (Files.exists(live)) Files.move(live, old)
-    Files.move(Paths.get(staging), live)
-    deleteRecursive(old)
-  }
-
-  /** Parse `.staging_<name>_<nanos>` — the nanos suffix never contains
-    * an underscore, so the LAST underscore is the separator even when
-    * the graph name itself has underscores or trailing digits.
-    */
-  private def parseStaging(fname: String): Option[(String, Long)] = {
-    val base = fname.stripPrefix(".staging_")
-    val i = base.lastIndexOf('_')
-    if (!fname.startsWith(".staging_") || i <= 0) None
-    else scala.util.Try(base.substring(i + 1).toLong).toOption
-      .map(n => (base.substring(0, i), n))
-  }
-
-  /** Roll every interrupted [[saveGraph]] swap forward or back — run
-    * once at catalog open. Per graph name in each schema directory:
-    *  - live present → the swap committed (or never started): delete a
-    *    leftover `.old_<name>` and any stale stagings; live wins.
-    *  - live absent, a COMPLETE staging present (`_meta` marker
-    *    written) → the crash hit between the two renames: roll FORWARD
-    *    by promoting the newest complete staging, then drop `.old`.
-    *  - live absent, no complete staging, `.old_<name>` present → roll
-    *    BACK: restore `.old` as live.
-    * Incomplete stagings (no `_meta`) are always deleted.
+  /** Delete what no pointer names — run once at catalog open. In each
+    * graph directory that holds a `_current` pointer, everything but the
+    * pointer and the version it names goes: superseded versions, a
+    * version a crash left unnamed, torn `.tmp_` pointers. A graph whose
+    * first save never committed has no pointer; its versions and temps
+    * go, and so does the directory once empty (the datasets of a
+    * warehouse written before versioned saves sit directly in the graph
+    * directory and stay). A version becomes current only through the
+    * pointer, so nothing rolls forward or back.
     *
-    * Assumes the catalog's single-writer discipline (snapshot
-    * semantics, SURVEY.md §7.3): recovery at open must not race a save
-    * in flight from another live session on the same warehouse — the
-    * same assumption the reference's WAL recovery makes at database
-    * open (txn/recovery.rs).
+    * Superseded versions are never deleted while a catalog runs: frames
+    * that still read them keep working. That needs the catalog's
+    * single-writer discipline (snapshot semantics, SURVEY.md §7.3): an
+    * open must not race a save in flight, or a read of a superseded
+    * version, from another live session on the same warehouse — the
+    * assumption the reference's WAL recovery makes at database open
+    * (txn/recovery.rs).
     */
-  private def recoverSwaps(): Unit = {
+  private def collectGarbage(): Unit = {
     val root = Paths.get(warehouse)
-    if (!Files.exists(root)) return
-    listDir(root).filter(Files.isDirectory(_)).foreach { schemaDir =>
-      val entries = listDir(schemaDir).map(_.getFileName.toString)
-      val stagings: Map[String, Seq[(Long, java.nio.file.Path)]] =
-        entries.flatMap(parseStaging).groupBy(_._1).map { case (n, xs) =>
-          n -> xs.map { case (_, nanos) =>
-            // re-resolve full path (parse gave name+nanos only)
-            (nanos, schemaDir.resolve(s".staging_${n}_$nanos"))
-          }.sortBy(-_._1)
+    if (Files.isDirectory(root)) for {
+      schemaDir <- listDir(root)
+      schema = schemaDir.getFileName.toString
+      // "_"/"." entries are catalog metadata, not schemas
+      if Files.isDirectory(schemaDir) && !schema.startsWith("_") &&
+        !schema.startsWith(".")
+      graph <- listDir(schemaDir) if Files.isDirectory(graph)
+    } {
+      val keep: String => Boolean =
+        GraphCatalog.versionDir(warehouse, schema,
+          graph.getFileName.toString) match {
+          case Some(v) =>
+            Set(GraphCatalog.Current, Paths.get(v).getFileName.toString)
+          case None => n => !n.startsWith("v") && !n.startsWith(".tmp_")
         }
-      val oldNames = entries.filter(_.startsWith(".old_"))
-        .map(_.stripPrefix(".old_"))
-      (stagings.keySet ++ oldNames).foreach { name =>
-        val live = schemaDir.resolve(name)
-        val old = schemaDir.resolve(s".old_$name")
-        val stag = stagings.getOrElse(name, Seq.empty)
-        if (Files.exists(live)) {
-          deleteRecursive(old)
-          stag.foreach { case (_, p) => deleteRecursive(p) }
-        } else {
-          val complete = stag.find { case (_, p) =>
-            Files.exists(p.resolve("_meta")) }
-          complete match {
-            case Some((_, p)) => // roll forward, then drop the backup
-              Files.move(p, live)
-              deleteRecursive(old)
-            case None => // roll back when a backup exists
-              if (Files.exists(old)) Files.move(old, live)
-          }
-          stag.filterNot(complete.contains)
-            .foreach { case (_, p) => deleteRecursive(p) }
-        }
-      }
+      listDir(graph).filterNot(p => keep(p.getFileName.toString))
+        .foreach(deleteRecursive)
+      if (listDir(graph).isEmpty) Files.delete(graph)
     }
   }
 
-  /** Mirror `src` under `dst` as hard links — a metadata move, no data
-    * copied; the live directory stays complete until the atomic swap.
+  /** Mirror `src` under `dst` as hard links — a metadata operation, no
+    * data copied, and `src` itself is left as it was.
     */
   private def linkTree(src: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    Files.createDirectories(dst)
-    listDir(src).foreach { f =>
-      val t = dst.resolve(f.getFileName)
-      if (Files.isDirectory(f)) linkTree(f, t)
-      else Files.createLink(t, f)
+      dst: java.nio.file.Path): Unit =
+    if (!Files.isDirectory(src)) Files.createLink(dst, src)
+    else {
+      Files.createDirectories(dst)
+      listDir(src).foreach(f => linkTree(f, dst.resolve(f.getFileName)))
     }
-  }
 
   private def persistedBounds(ixName: String, optKey: String, df: DataFrame,
       keyCol: String): Option[Seq[org.apache.spark.sql.Column]] =
@@ -527,12 +509,12 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     }
 
   /** The touched-bucket step of a bucket-scoped save, for one layout of
-    * dirty dataset `ds`: Some((touched bucket ids, live bucket
-    * directories)) when the scoped write applies, None when the caller
-    * must rewrite the layout in full.
+    * dirty dataset `ds`: Some((touched bucket ids, bucket directories of
+    * the base version `baseDir`)) when the scoped write applies, None
+    * when the caller must rewrite the layout in full.
     *
     * Applicable when (a) the layout's boundaries are already persisted,
-    * (b) the live directory is already in the bucketed `__ixb=K/`
+    * (b) the base version is already in the bucketed `__ixb=K/`
     * layout, (c) the dataset's mutations since load are one
     * [[LabelDelta]] (no whole-table rewrite), (d) the schema is the one
     * recorded at load, and (e) the touched buckets are at most half the
@@ -541,7 +523,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     * updated row and the pre-image of every base row it superseded or
     * deleted — plus the base rows an endpoint hide removed (the hide's
     * values themselves when the layout is keyed on that endpoint,
-    * otherwise a filtered read of the base). No join against the live
+    * otherwise a filtered read of the base). No join against the base
     * files: one job over a small checkpoint.
     *
     * This is the 100 TB maintenance story the bucketed layout exists
@@ -549,16 +531,16 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     * bucket's rewrite plus link metadata, not an O(table) range shuffle.
     */
   private def touchedBuckets(layout: GraphCatalog.ScopedLayout, ds: String,
-      df: DataFrame, liveDir: String, d: LabelDelta, g: PropertyGraph)
+      df: DataFrame, baseDir: String, d: LabelDelta, g: PropertyGraph)
       : Option[(Set[Int], Seq[java.nio.file.Path])] = {
     import org.apache.spark.sql.functions.col
     val kc = layout.keyCol
-    val oldPath = Paths.get(s"$liveDir/${layout.dirName}")
+    val oldPath = Paths.get(s"$baseDir/${layout.dirName}")
     if (!df.columns.contains(kc) || !d.store.columns.contains(kc) ||
         !Files.exists(oldPath)) return None
     val bucketDirs = listDir(oldPath)
       .filter(_.getFileName.toString.startsWith(s"$BucketCol="))
-    if (bucketDirs.isEmpty) return None // live layout not bucketed yet
+    if (bucketDirs.isEmpty) return None // base layout not bucketed yet
     // SCHEMA-CHANGE gate: hard-linked buckets keep their original file
     // schema, so a bucket-scoped save of a frame whose schema moved
     // (id-type widening, added/removed/retyped property columns) would
@@ -588,20 +570,20 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     else Some((touched, bucketDirs))
   }
 
-  /** Write the touched buckets of one layout into staging and hard-link
-    * every other live bucket directory.
+  /** Write the touched buckets of one layout into `version` and
+    * hard-link every other bucket directory of `bucketDirs`.
     */
   private def writeScoped(layout: GraphCatalog.ScopedLayout, df: DataFrame,
-      staging: String, touched: Set[Int],
+      version: String, touched: Set[Int],
       bucketDirs: Seq[java.nio.file.Path]): Unit = {
     import org.apache.spark.sql.functions.col
-    val target = s"$staging/${layout.dirName}"
+    val target = s"$version/${layout.dirName}"
     if (touched.isEmpty) // mutations matched no rows
       Files.createDirectories(Paths.get(target))
     else
       // the touched-range filter FIRST: plain key-range comparisons push
       // to the underlying parquet scan (and BucketPrune maps their
-      // disjunction to an __ixb partition filter on the live bucketed
+      // disjunction to an __ixb partition filter on the base bucketed
       // layout), so rewriting one touched bucket READS one bucket
       // directory instead of scanning the whole table to produce it —
       // without this the write side was O(touched) but the read side
@@ -799,7 +781,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     listIndexOptions(ixName).toMap.get(optKey) match {
       case Some(s) if s.nonEmpty => decodeBounds(s, stringKey)
       // compute-and-persist runs under a lock with a re-check: the
-      // concurrent staging writes (main and mirror layouts persist
+      // concurrent version writes (main and mirror layouts persist
       // their boundary options independently, different datasets may
       // share the `_index_options` file) would otherwise race the
       // read-modify-write in setIndexOption and lose one side's
@@ -897,14 +879,14 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       }.map(mk => (name, mk, b))
     }
 
-  /** Write the mirror of an edge dataset into `stagingDir` (no-op when
+  /** Write the mirror of an edge dataset into `versionDir` (no-op when
     * the dataset carries no `mirror = true` bucketed index): same rows,
     * clustered on the OTHER endpoint under its own persisted boundaries
     * (`__bounds_mirror` on the same index — stable across incremental
     * rewrites exactly like the main layout's).
     */
   private def writeMirror(ds: String, df: DataFrame,
-      stagingDir: String): Unit =
+      versionDir: String): Unit =
     mirrorOptSpec(ds, df).foreach { case (name, mk, b) =>
       import org.apache.spark.sql.functions.col
       val bounds = bucketBounds(name, df, mk, b, "__bounds_mirror")
@@ -912,7 +894,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
         .repartition(col(BucketCol))
         .sortWithinPartitions(col(BucketCol), col(mk))
         .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-        .parquet(s"$stagingDir/${GraphCatalog.MirrorPrefix}$ds")
+        .parquet(s"$versionDir/${GraphCatalog.MirrorPrefix}$ds")
     }
 
   /** Register a loaded edge dataset's MIRROR with the pruning rule (the
@@ -981,44 +963,35 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
   /** Rewrite ONLY the named range buckets of a bucketed table — the
     * incremental maintenance primitive: a DML delta maps to bucket ids
     * through the stored boundaries, and each unit re-sorts one bucket's
-    * rows in place via dynamic partition overwrite. Unit cost is
-    * O(bucket), not O(table); units are independently schedulable and
-    * resumable, which is what a 100K-file label needs. The bucket's
-    * rows pass through a localCheckpoint so the write does not read the
-    * files it replaces.
+    * rows. Unit cost is O(bucket), not O(table); units are
+    * independently schedulable and resumable, which is what a 100K-file
+    * label needs. Commits a new graph version like a save: the named
+    * buckets are written into it, everything else is hard-linked from
+    * the current version, whose files any lazy reader keeps reading.
     */
   def reclusterBuckets(schema: String, name: String, table: String,
       bucketIds: Seq[Int]): Unit = {
-    import org.apache.spark.sql.functions.col
-    val dir = s"${graphDir(schema, name)}/$table"
-    require(Files.exists(Paths.get(dir)), s"no such dataset: $dir")
+    val cur = GraphCatalog.versionDir(warehouse, schema, name)
+      .getOrElse(graphDir(schema, name))
+    val src = Paths.get(s"$cur/$table")
+    require(Files.exists(src), s"no such dataset: $src")
     // resolve the BUCKETED index (buckets option + persisted bounds),
     // not merely the first index on the table — with two indexes,
     // first-match could re-sort buckets on the WRONG key and silently
     // destroy the in-bucket order the layout exists for
-    val probe = spark.read.parquet(dir)
-    val (_, cols, _) = bucketedSpec(table, probe).getOrElse(
+    val df = spark.read.parquet(src.toString).drop(BucketCol)
+    val layout = mainLayout(table, df).getOrElse(
       throw new IllegalArgumentException(s"no bucketed index on $table"))
-    // checkpoint BEFORE the sort: the write must not read the files it
-    // replaces, and a checkpoint would not preserve the sort order the
-    // partitioned writer needs (it would re-sort on __ixb alone)
-    val rows = probe
-      .filter(col(BucketCol).isin(bucketIds.map(Integer.valueOf): _*))
-      .repartition(col(BucketCol))
-      .localCheckpoint(true)
-      .sortWithinPartitions((BucketCol +: cols).map(col): _*)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rows.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(dir)
-    finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      Analytics.unpersistCheckpoint(rows)
+    val rest = listDir(Paths.get(cur)).filterNot(_.getFileName.toString == table)
+    val version = newVersion(graphDir(schema, name))
+    try {
+      writeScoped(layout, df, version.toString, bucketIds.toSet,
+        listDir(src).filter(_.getFileName.toString.startsWith(s"$BucketCol=")))
+      rest.foreach(p => linkTree(p, version.resolve(p.getFileName)))
+    } catch {
+      case e: Throwable => deleteRecursive(version); throw e
     }
+    commit(schema, name, version)
   }
 
   /** Register a loaded bucketed dataset with the read-side pruning rule:
@@ -1059,7 +1032,10 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     */
   private def loadGraph(schema: String, name: String,
       known: Map[String, org.apache.spark.sql.types.StructType]): PropertyGraph = {
-    val dir = graphDir(schema, name)
+    // the version the pointer names (a warehouse written before
+    // versioned saves keeps its datasets in the graph directory itself)
+    val dir = GraphCatalog.versionDir(warehouse, schema, name)
+      .getOrElse(graphDir(schema, name))
     val p = Paths.get(dir)
     require(Files.exists(p), s"no such graph: $schema/$name")
     val entries = listDir(p).map(_.getFileName.toString)
@@ -1091,8 +1067,9 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       registerMirror(e, df, dir)
       label -> (et, df)
     }.toMap
-    // loaded graphs know their origin and start clean — mutations mark
-    // the touched datasets so saves back to the same path go incremental
+    // loaded graphs know their origin version and start clean —
+    // mutations mark the touched datasets so saves back to the same
+    // graph go incremental
     val g = new PropertyGraph(nodes, edges, Some(dir), Some(Set.empty))
     g.loadedSchemas = nodes.map { case (l, df) => s"nodes_$l" -> df.schema } ++
       edges.map { case (l, (_, df)) => s"edges_$l" -> df.schema }
@@ -1489,15 +1466,28 @@ object GraphCatalog {
     * layout) of an incremental save `buckets:<dataset>` for the
     * touched-bucket step when one was attempted, then
     * `write:<dataset>:<bucket_scoped|full>`; `link_clean` for the
-    * hard-link pass, `swap` for the rename-aside promotion. Diagnostic
+    * hard-link pass, `commit` for the pointer write. Diagnostic
     * single-slot (same contract as PropertyGraph.lastPathPrune):
     * ScaleProbe's dml_save rows print it so a warehouse-write regression
     * names its stage.
     */
   @volatile var lastSaveStages: Seq[(String, Double)] = Seq.empty
 
+  /** Name of the pointer file in a graph directory: it holds the name
+    * of the graph's current version directory. */
+  private[graph] val Current = "_current"
+
+  /** The current version directory of graph `schema/name` in
+    * `warehouse`, when a save has committed one. */
+  private[graft] def versionDir(warehouse: String, schema: String,
+      name: String): Option[String] = {
+    val p = Paths.get(s"$warehouse/$schema/$name/$Current")
+    if (!Files.exists(p)) None
+    else Some(s"$warehouse/$schema/$name/${Files.readString(p).trim}")
+  }
+
   /** One bucketed layout a dirty dataset persists in, as the
-    * bucket-scoped save sees it: the staging/live directory name, the
+    * bucket-scoped save sees it: the dataset directory name, the
     * bucket key, the in-bucket sort columns and the persisted boundaries.
     * The main layout and an edge dataset's mirror differ only in these.
     */
@@ -1534,7 +1524,7 @@ object GraphCatalog {
       .collect().toSet
 
   /** Serializes first-build boundary computation+persist across the
-    * concurrent staging-write tasks (see bucketBounds) — the
+    * concurrent version-write tasks (see bucketBounds) — the
     * `_index_options` read-modify-write must not lose an update when
     * main and mirror layouts persist their boundaries in parallel.
     */

@@ -21,16 +21,6 @@ package graft.multimodal
   */
 object RealCodec {
 
-  // ImageIO's default stream cache is DISK-backed: every ImageIO.read/
-  // write creates and deletes a temp file, so 32 concurrent decode
-  // tasks over tiny in-memory payloads serialize on filesystem churn —
-  // measured as m02's INVERSE core scaling (32 cores 2.6× slower than
-  // 8, r20 scaling block). All payloads here are byte arrays; the
-  // memory-backed cache is strictly correct and removes two file
-  // create/delete pairs per image. JVM-wide static, set once when the
-  // first task loads this object (each executor JVM re-runs this init).
-  javax.imageio.ImageIO.setUseCache(false)
-
   private def u16(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
   private def u32(b: Array[Byte], o: Int): Long =
@@ -216,8 +206,10 @@ object RealCodec {
       img.setRGB(x, y, rgb)
     }
     val bos = new java.io.ByteArrayOutputStream()
-    require(javax.imageio.ImageIO.write(img, "png", bos),
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try require(javax.imageio.ImageIO.write(img, "png", out),
       "PNG: no JDK writer available")
+    finally out.close() // flushes into bos
     bos.toByteArray
   }
 
@@ -228,8 +220,17 @@ object RealCodec {
   def decodeRaster(bytes: Array[Byte]): BmpInfo = sniff(bytes) match {
     case "bmp" => decodeBmp(bytes)
     case "png" | "jpeg" | "gif" =>
+      // ImageIO's default stream cache is DISK-backed: a read or write
+      // over a plain java.io stream creates and deletes a temp file, so
+      // 32 concurrent decode tasks over tiny in-memory payloads
+      // serialize on filesystem churn — measured as m02's INVERSE core
+      // scaling (32 cores 2.6× slower than 8, r20 scaling block). The
+      // payloads are byte arrays, so graft's own codec calls pass
+      // memory-cached image streams and leave ImageIO's JVM-wide cache
+      // setting to the embedding application.
       val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
+        new javax.imageio.stream.MemoryCacheImageInputStream(
+          new java.io.ByteArrayInputStream(bytes)))
       require(img != null, "imageio: decoder returned null")
       val (w, h) = (img.getWidth, img.getHeight)
       val pixels = new Array[Int](w * h * 3)

@@ -22,10 +22,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * the reverse lookup becomes an O(touched buckets) read.
   *
   * Correctness: the mirror holds exactly the main layout's rows by the
-  * save protocol (written from the same frame in the same staging,
+  * save protocol (written from the same frame into the same version,
   * hard-linked together when clean, both invalidated by
-  * [[BucketPrune.invalidateUnder]] on every save and re-registered only
-  * at loadGraph from the post-swap state), so swapping relations never
+  * [[BucketPrune.invalidateUnder]] when a save supersedes their version
+  * and registered only at loadGraph), so swapping relations never
   * changes results — only which clustering serves the scan. The
   * original output attribute ids are preserved through an aliasing
   * Project, so upstream references bind unchanged. The `__ixb` column

@@ -185,7 +185,7 @@ object GqlQueries {
     // persistent parquet warehouse round-trip (storage/providers/
     // parquet.rs analog): save a subgraph as a named catalog version,
     // reload it cold, and query across its edge — proves the
-    // staging-swap writer and the loader agree on schema + contents
+    // versioned writer and the loader agree on schema + contents
     "gql19_storage_roundtrip" -> ((s: SparkSession, d: String) => {
       import graft.graph.{EdgeType, PropertyGraph}
       val g = TpchGraph.build(s, d)

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import graft.graph.{EdgeType, PropertyGraph}
 
 /** Shared SparkSession + the reference test datasets, reproduced exactly
@@ -16,6 +18,8 @@ object SparkFixture {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // plan-text assertions grep scan locations: print them whole
+      .config("spark.sql.maxMetadataStringLength", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -64,9 +68,28 @@ object SparkFixture {
       Map("TestNode" -> nodes),
       Map("CONNECTS_TO" -> (EdgeType("CONNECTS_TO", "TestNode", "TestNode"), edges)))
   }
+}
 
-  def gqlSession(g: PropertyGraph = fraudGraph): GqlSession =
-    GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-wh").toString)
+/** The temporary directories of one suite — warehouses, dedup state,
+  * stream inputs — all named `graft-<tag>…` under the system temp
+  * directory and deleted when the suite ends.
+  */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A new empty directory, deleted after the suite. */
+  def tempDir(tag: String): Path = {
+    val p = Files.createTempDirectory(s"graft-$tag")
+    made.add(p)
+    p
+  }
+
+  /** A session over `g` on a warehouse of its own. */
+  def gqlSession(g: PropertyGraph = SparkFixture.fraudGraph): GqlSession =
+    GraphLiteSpark.open(SparkFixture.spark, tempDir("wh").toString)
       .session("test").useGraph(g)
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally made.forEach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
 }

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for aggregation: random GROUP BY (nullable key, or
   * none) × random WHERE × the full aggregate set, against a model that
@@ -12,7 +12,7 @@ import graft.SparkFixture
   * one row (count 0, sums null — ISO empty-match semantics the oracle
   * pins only for fixed shapes in q25).
   */
-class AggDifferentialFuzzSpec extends AnyFunSuite {
+class AggDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val rows: Seq[(Long, Any, Any)] = (1L to 24L).map { i =>
@@ -31,8 +31,7 @@ class AggDifferentialFuzzSpec extends AnyFunSuite {
           org.apache.spark.sql.Row(r._1, r._2, r._3)): _*), schema)
       new graft.graph.PropertyGraph(Map("N" -> df), Map.empty)
     }
-    graft.GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-aggfuzz").toString)
+    graft.GraphLiteSpark.open(spark, tempDir("aggfuzz").toString)
       .session("u").useGraph(g)
   }
 

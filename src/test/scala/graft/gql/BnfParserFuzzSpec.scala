@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Grammar-driven parser/compiler fuzz: random statements generated
   * FROM the ISO GQL BNF (grammar/ISO_GQL_Grammar_BNF.txt, 92
@@ -19,7 +19,7 @@ import graft.SparkFixture
   * is ISO-standard grammar content, not engine code); the suite
   * cancels cleanly when the file is absent.
   */
-class BnfParserFuzzSpec extends AnyFunSuite {
+class BnfParserFuzzSpec extends AnyFunSuite with TempDirs {
   private val GrammarPath = "/root/reference/grammar/ISO_GQL_Grammar_BNF.txt"
 
   // ---- BNF AST ----
@@ -237,8 +237,7 @@ class BnfParserFuzzSpec extends AnyFunSuite {
       Map("Person" -> Seq((1L, "ann"), (2L, "bo")).toDF("id", "name")),
       Map("KNOWS" -> (graft.graph.EdgeType("KNOWS", "Person", "Person"),
         Seq((1L, 2L, 10L)).toDF("src", "dst", "eid"))))
-    graft.GraphLiteSpark.open(SparkFixture.spark, java.nio.file.Files
-      .createTempDirectory("graft-bnffuzz").toString)
+    graft.GraphLiteSpark.open(SparkFixture.spark, tempDir("bnffuzz").toString)
       .session("u").useGraph(g)
   }
 

@@ -1,15 +1,15 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Result/subquery cache subsystem (reference graphlite/src/cache/:
   * result_cache.rs QueryResultCache, subquery_cache.rs, invalidation.rs
   * versioned + write-through strategies).
   */
-class CacheSpec extends AnyFunSuite {
+class CacheSpec extends AnyFunSuite with TempDirs {
 
-  private def freshSession() = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+  private def freshSession() = gqlSession(SparkFixture.fraudGraph)
 
   private def stats(s: graft.GqlSession, cache: String): Map[String, Long] = {
     val row = s.call("gql.result_cache_stats").collect()
@@ -160,7 +160,7 @@ class CacheSpec extends AnyFunSuite {
 
   test("catalog-listing cache: version-invalidated per session " +
       "(catalog_cache_throughput.rs; CHANGELOG.md:22)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-catcache").toString
+    val wh = tempDir("catcache").toString
     val gls = graft.GraphLiteSpark.open(SparkFixture.spark, wh)
     val a = gls.session("a")
     a.execute("CREATE SCHEMA /s1")

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for the DDL/catalog statement surface — the last
   * unfuzzed statement family (r16 verdict #6). Random sequences of
@@ -22,7 +22,7 @@ import graft.SparkFixture
   * security_role_user_tests.rs. Seed via GRAFT_DDL_FUZZ_SEED, count via
   * GRAFT_DDL_FUZZ_N.
   */
-class DdlCatalogFuzzSpec extends AnyFunSuite {
+class DdlCatalogFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val nStatements =
@@ -33,7 +33,7 @@ class DdlCatalogFuzzSpec extends AnyFunSuite {
 
   test(s"$nStatements random DDL/catalog statements stay in lockstep " +
       "with a model catalog (listings + error outcomes + enforcement)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-ddlfuzz").toString
+    val wh = tempDir("ddlfuzz").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     // the driver user is NEVER created as a catalog USER, so it stays the
     // embedding application for the admin gate (fails open by design —

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential DML fuzz: seeded random simple-DML statements run
   * against BOTH the engine and a ~60-line model interpreter holding the
@@ -22,7 +22,7 @@ import graft.SparkFixture
   * the OLD edge's properties, edge SET rewrites matched edges' props,
   * multi-item SET applies all items to the matched rows.
   */
-class DmlDifferentialFuzzSpec extends AnyFunSuite {
+class DmlDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
 
   private type Props = Map[String, Any] // "s" -> Long | "name" -> String; null = removed
   private case class Model(
@@ -37,7 +37,7 @@ class DmlDifferentialFuzzSpec extends AnyFunSuite {
     sys.env.getOrElse("GRAFT_DML_FUZZ_N", "250").toInt
 
   test(s"$nStatements random DML statements keep engine and model in lockstep") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-dmlfuzz").toString
+    val wh = tempDir("dmlfuzz").toString
     val t = graft.GraphLiteSpark.open(SparkFixture.spark, wh).session("u")
     t.execute("CREATE GRAPH /main/dml_fuzz")
     t.execute("SESSION SET GRAPH /main/dml_fuzz")

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Inline-property predicates on the simple DML paths, pinned on
   * MULTI-ROW graphs. The reference's own DML tests use inline props
@@ -13,10 +13,10 @@ import graft.SparkFixture
   * the label). Every case here puts SIBLING rows next to the target so
   * an over-broad mutation fails loudly.
   */
-class DmlPredicateSpec extends AnyFunSuite {
+class DmlPredicateSpec extends AnyFunSuite with TempDirs {
 
   private def fresh(tag: String) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft-dmlpred-$tag").toString
+    val wh = tempDir(s"dmlpred-$tag").toString
     val t = graft.GraphLiteSpark.open(SparkFixture.spark, wh).session("u")
     t.execute(s"CREATE GRAPH /main/$tag")
     t.execute(s"SESSION SET GRAPH /main/$tag")

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.graph.{EdgeType, PropertyGraph}
 
 /** Dynamic-property and multi-type-edge semantics (reference Value model:
@@ -11,7 +11,7 @@ import graft.graph.{EdgeType, PropertyGraph}
   * and TYPE() must consult the per-row type — never just the first
   * matched type's schema.
   */
-class DynamicSemanticsSpec extends AnyFunSuite {
+class DynamicSemanticsSpec extends AnyFunSuite with TempDirs {
   private def spark = SparkFixture.spark
 
   /** Two edge types with DISJOINT property sets: Transaction carries
@@ -36,7 +36,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
           (EdgeType("Referral", "Account", "Merchant"), referrals)))
   }
 
-  private lazy val s = SparkFixture.gqlSession(mixedGraph)
+  private lazy val s = gqlSession(mixedGraph)
 
   test("property on a non-head edge type reads real per-row values") {
     // t spans Transaction|Referral; bonus exists only on Referral.
@@ -82,7 +82,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
     // pattern_tests.rs:151,509 on the fraud fixture: 100 Transaction +
     // 50 Purchase edges; an unknown member of the union contributes
     // nothing rather than erroring
-    val f = graft.SparkFixture.gqlSession()
+    val f = gqlSession()
     assert(f.gql("MATCH (a:Account)-[r:Transaction|Purchase]->(m:Merchant) " +
       "RETURN count(r) AS n").collect().head.getLong(0) == 150L)
     assert(f.gql("MATCH ()-[r:Transaction|Purchase|NONEXISTENT]->() " +
@@ -118,7 +118,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
   }
 
   private def freshCatalogSession() = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-dynsem").toString
+    val wh = tempDir("dynsem").toString
     graft.GraphLiteSpark.open(spark, wh).session("u")
   }
 
@@ -175,7 +175,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
 
   test("DROP GRAPH detaches sessions attached via non-canonical paths") {
     // managed (pool) sessions are the cross-session detach surface
-    val wh = java.nio.file.Files.createTempDirectory("graft-dynsem").toString
+    val wh = tempDir("dynsem").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val sid = gls.createSession("u")
     val t = gls.getSession(sid).get
@@ -206,7 +206,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
   }
 
   test("explicit-union DELETE and SET mutate every listed type") {
-    val d = SparkFixture.gqlSession(mixedGraph)
+    val d = gqlSession(mixedGraph)
     // SET through the union writes both types' tables
     val set = d.execute("MATCH (a:Account)-[t:Transaction|Referral]->" +
       "(m:Merchant) SET t.seen = true").collect().head.getLong(0)
@@ -234,7 +234,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
           Seq((1L, 1L, 1L, 5.0)).toDF("src", "dst", "eid", "amount")),
         "Refund" -> (EdgeType("Refund", "Merchant", "Account"),
           Seq((1L, 1L, 1L, 2.0)).toDF("src", "dst", "eid", "amount"))))
-    val d = SparkFixture.gqlSession(g)
+    val d = gqlSession(g)
     val n = d.execute("MATCH (a:Account)-[t]->(m:Merchant) " +
       "SET t.checked = true").collect().head.getLong(0)
     assert(n == 1L, s"SET matched $n edges, expected only the Transaction")
@@ -259,7 +259,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
   test("mutation expression referencing e.eid compiles (no duplicate projection)") {
     // an edge binding's expansion already carries <e>_eid — the pipeline
     // must not add a second e_eid ReturnItem (ambiguous-reference crash)
-    val d = SparkFixture.gqlSession(mixedGraph)
+    val d = gqlSession(mixedGraph)
     val n = d.execute("MATCH (a:Account)-[t:Transaction]->(m:Merchant) " +
       "SET t.tag = t.eid").collect().head.getLong(0)
     assert(n == 2L, s"SET affected $n of 2 Transaction edges")
@@ -306,7 +306,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
     // both orderings route through the pipeline: item order must not
     // change which path (or error) a statement gets
     def run(set: String): Long = {
-      val d = SparkFixture.gqlSession(mixedGraph)
+      val d = gqlSession(mixedGraph)
       d.execute(s"MATCH (a:Account)-[t:Transaction]->(m:Merchant) $set")
         .collect().head.getLong(0)
     }
@@ -338,7 +338,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
   }
 
   test("DELETE through a multi-type edge variable deletes in every type") {
-    val d = SparkFixture.gqlSession(mixedGraph)
+    val d = gqlSession(mixedGraph)
     val n = d.execute("MATCH (a:Account)-[t]->(m:Merchant) DELETE t")
       .collect().head.getLong(0)
     assert(n == 4L) // 2 Transaction + 2 Referral
@@ -369,7 +369,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
   }
 
   test("bigint/string property across edge types reconciles to string") {
-    val d = SparkFixture.gqlSession(hetGraph())
+    val d = gqlSession(hetGraph())
     val rows = d.gql(
       "MATCH (:Account)-[t:WIRE|NOTE]->(:Account) " +
         "RETURN t.amount AS amt ORDER BY amt")
@@ -380,7 +380,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
   }
 
   test("bigint/double property across edge types widens numerically") {
-    val d = SparkFixture.gqlSession(hetGraph())
+    val d = gqlSession(hetGraph())
     val rows = d.gql(
       "MATCH (:Account)-[t:WIRE|FEE]->(:Account) " +
         "RETURN t.amount AS amt ORDER BY amt")
@@ -389,7 +389,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
   }
 
   test("heterogeneous DML widens the stored column, rows land intact") {
-    val d = SparkFixture.gqlSession(hetGraph())
+    val d = gqlSession(hetGraph())
     // WIRE.amount is bigint; inserting a string amount widens the table
     // column to string instead of corrupting or crashing
     d.execute("MATCH (a:Account {id: 3}), (b:Account {id: 4}) " +
@@ -410,7 +410,7 @@ class DynamicSemanticsSpec extends AnyFunSuite {
       Map("Account" -> accounts),
       Map("X" -> (EdgeType("X", "Account", "Account"), xs),
         "Y" -> (EdgeType("Y", "Account", "Account"), ys)))
-    val d = SparkFixture.gqlSession(g)
+    val d = gqlSession(g)
     val ex = intercept[GqlCompileException] {
       d.gql("MATCH (:Account)-[t:X|Y]->(:Account) RETURN t.amount AS amt")
     }

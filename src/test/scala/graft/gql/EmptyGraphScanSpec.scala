@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Scans that resolve to NO table must yield the empty result, not an
   * analysis error — the reference treats unknown labels as empty matches
@@ -11,11 +11,11 @@ import graft.SparkFixture
   * `n_id` both as the explicit id column AND as the used-prop "id",
   * and Spark failed the query with AMBIGUOUS_REFERENCE.
   */
-class EmptyGraphScanSpec extends AnyFunSuite {
+class EmptyGraphScanSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private def freshSession() = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-emptyg").toString
+    val wh = tempDir("emptyg").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val t = gls.session("driver")
     t.execute("CREATE GRAPH /s0/g0")

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Plan-equivalence properties over the GQL surface: the same logical
   * pattern written in syntactically different ways (orientation flips,
@@ -10,8 +10,8 @@ import graft.SparkFixture
   * compiler's rewrites — anchor-selection reversal, orientation × label
   * pruning, endpoint guards — which must never change results.
   */
-class EquivalenceSpec extends AnyFunSuite {
-  private lazy val s = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+class EquivalenceSpec extends AnyFunSuite with TempDirs {
+  private lazy val s = gqlSession(SparkFixture.fraudGraph)
 
   private def rows(q: String): Set[String] =
     s.gql(q).collect().map(_.mkString("|")).toSet
@@ -77,7 +77,7 @@ class EquivalenceSpec extends AnyFunSuite {
   }
 
   test("seeded NEXT chain equals the inline join formulation") {
-    val t = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val t = gqlSession(SparkFixture.fraudGraph)
     val inline = rows("MATCH (a:Account)-[t:Transaction]->(m:Merchant) " +
       "WHERE a.balance >= 4800 RETURN m.id AS mid ORDER BY mid")
     val chained = t.execute(

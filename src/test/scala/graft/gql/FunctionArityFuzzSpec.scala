@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Wrong-arity sweep over the ENTIRE function registry: every function
   * the engine lists (SystemProcedures.gqlFunctions — the same names
@@ -12,15 +12,14 @@ import graft.SparkFixture
   * most registry functions crashed wrong-arity calls with
   * IndexOutOfBoundsException out of the dispatch's arg indexing.
   */
-class FunctionArityFuzzSpec extends AnyFunSuite {
+class FunctionArityFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val t = {
     import SparkFixture.spark.implicits._
     val g = new graft.graph.PropertyGraph(
       Map("Person" -> Seq((1L, "ann")).toDF("id", "name")),
       Map("KNOWS" -> (graft.graph.EdgeType("KNOWS", "Person", "Person"),
         Seq((1L, 1L, 10L)).toDF("src", "dst", "eid"))))
-    graft.GraphLiteSpark.open(SparkFixture.spark, java.nio.file.Files
-      .createTempDirectory("graft-arityfuzz").toString)
+    graft.GraphLiteSpark.open(SparkFixture.spark, tempDir("arityfuzz").toString)
       .session("u").useGraph(g)
   }
 

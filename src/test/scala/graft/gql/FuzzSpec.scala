@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Deterministic mutation fuzz over the statement surface: mutated
   * queries must fail with the engine's own error types (GqlParse/
@@ -9,10 +9,10 @@ import graft.SparkFixture
   * variables/columns) — never a MatchError, NPE, or stack overflow.
   * Seeded RNG keeps every run identical.
   */
-class FuzzSpec extends AnyFunSuite {
+class FuzzSpec extends AnyFunSuite with TempDirs {
 
   test("1200 mutated statements never crash the engine") {
-    val s = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val s = gqlSession(SparkFixture.fraudGraph)
     val seeds = Seq(
       "MATCH (a:Account) WHERE a.balance > 1000 RETURN a.name, a.balance ORDER BY a.name LIMIT 5",
       "MATCH (a:Account)-[t:Transaction]->(m:Merchant) WITH m, count(t) AS n WHERE n > 3 RETURN m.name, n",
@@ -65,7 +65,7 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("never-written property reads as NULL (dynamic property model)") {
-    val s = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val s = gqlSession(SparkFixture.fraudGraph)
     // no Account row carries `balanc` — the reference's Value model
     // returns Null for absent properties instead of erroring
     val rows = s.gql("MATCH (a:Account) WHERE a.id = 1 " +
@@ -83,7 +83,7 @@ class FuzzSpec extends AnyFunSuite {
     // every step must either reconcile (common supertype) or fail with a
     // compile-time error — never a CAST_INVALID_INPUT from deep inside a
     // stage, and reads afterwards must see every inserted row
-    val s = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val s = gqlSession(SparkFixture.fraudGraph)
     val values = Seq("1", "2.5", "'three'", "true", "[1, 2]", "'4'",
       "7", "'mixed bag'")
     val rnd = new scala.util.Random(7)

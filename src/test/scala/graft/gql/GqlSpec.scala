@@ -2,15 +2,15 @@ package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** GQL end-to-end over the fraud fixture — expected values mirror the
   * reference's integration tests (aggregation_tests.rs:26-41,
   * dql_tests.rs:27-40: count(Account)=50, active=45, transactions=100,
   * sum(amount)=6360 exactly for the deterministic generator).
   */
-class GqlSpec extends AnyFunSuite {
-  private lazy val s = SparkFixture.gqlSession()
+class GqlSpec extends AnyFunSuite with TempDirs {
+  private lazy val s = gqlSession()
 
   private def one(q: String): Any = s.gql(q).collect().head.get(0)
 
@@ -157,7 +157,7 @@ class GqlSpec extends AnyFunSuite {
   }
 
   test("simple dataset chain traversal") {
-    val sim = SparkFixture.gqlSession(SparkFixture.simpleGraph)
+    val sim = gqlSession(SparkFixture.simpleGraph)
     assert(sim.gql("MATCH (n:TestNode) RETURN count(n) AS c").collect()
       .head.getLong(0) == 20L)
     // variable-length path over the 1→2→…→10 chain

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for quantified comparisons `x op ALL|ANY|SOME
   * (subquery)`: random operators, quantifiers, inner filters,
@@ -19,7 +19,7 @@ import graft.SparkFixture
   * Seed env-tunable via GRAFT_QUANT_FUZZ_SEED, cases via
   * GRAFT_QUANT_FUZZ_N.
   */
-class QuantifiedCmpDifferentialFuzzSpec extends AnyFunSuite {
+class QuantifiedCmpDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val seed =
@@ -57,8 +57,7 @@ class QuantifiedCmpDifferentialFuzzSpec extends AnyFunSuite {
     val g = new graft.graph.PropertyGraph(
       Map("N" -> n, "M" -> m),
       Map("R" -> (graft.graph.EdgeType("R", "N", "M"), e)))
-    graft.GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-quantfuzz").toString)
+    graft.GraphLiteSpark.open(spark, tempDir("quantfuzz").toString)
       .session("u").useGraph(g)
   }
 

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.graph.PropertyGraph
 
 /** The reference README walkthrough (readme_examples_test.rs) run
@@ -9,10 +9,10 @@ import graft.graph.PropertyGraph
   * ids), MATCH…INSERT relationship creation with properties, and the
   * pattern-matching queries a first-time reference user runs.
   */
-class ReadmeParitySpec extends AnyFunSuite {
+class ReadmeParitySpec extends AnyFunSuite with TempDirs {
 
   private def setup(): graft.GqlSession = {
-    val s = SparkFixture.gqlSession(
+    val s = gqlSession(
       new PropertyGraph(Map.empty, Map.empty))
     s.execute("INSERT (:Person {name: 'Alice', age: 30, city: 'NYC'}), " +
       "(:Person {name: 'Bob', age: 25, city: 'NYC'}), " +
@@ -61,7 +61,7 @@ class ReadmeParitySpec extends AnyFunSuite {
 
   test("inline edge INSERT creates nodes + edge; duplicates warn " +
       "(duplicate_edge_warning_test.rs)") {
-    val s = SparkFixture.gqlSession(new PropertyGraph(Map.empty, Map.empty))
+    val s = gqlSession(new PropertyGraph(Map.empty, Map.empty))
     val r1 = s.execute("INSERT (:User {uid: 'u1'})-[:FOLLOWS " +
       "{since: '2020-01-01'}]->(:User {uid: 'u2'})").collect()
     // one User row (2 nodes) + one FOLLOWS row (1 edge), no warnings
@@ -90,7 +90,7 @@ class ReadmeParitySpec extends AnyFunSuite {
 
   test("INSERT identifier reuse creates no spurious nodes " +
       "(insert_node_identifier_regression_test.rs)") {
-    val s = SparkFixture.gqlSession(new PropertyGraph(Map.empty, Map.empty))
+    val s = gqlSession(new PropertyGraph(Map.empty, Map.empty))
     s.execute("INSERT (n:Person {name: 'Alice Smith'}), " +
       "(m:Person {name: 'Bob Johnson'}), (n)-[r:KNOWS]->(m)")
     // exactly 2 nodes — no third empty node for the bare (n)/(m) reuse
@@ -212,7 +212,7 @@ class ReadmeParitySpec extends AnyFunSuite {
   }
 
   test("multi-hop and multi-path MATCH…INSERT (pattern_tests.rs path setup)") {
-    val s = SparkFixture.gqlSession(new PropertyGraph(Map.empty, Map.empty))
+    val s = gqlSession(new PropertyGraph(Map.empty, Map.empty))
     s.execute("INSERT (:PathNode {id: 1, tag: 'A'}), (:PathNode {id: 2, tag: 'B'}), " +
       "(:PathNode {id: 3, tag: 'C'}), (:PathNode {id: 4, tag: 'D'}), " +
       "(:PathNode {id: 5, tag: 'E'})")

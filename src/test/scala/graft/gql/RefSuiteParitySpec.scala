@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Parity sweep over reference integration-test files not already
   * mirrored elsewhere: match_with_tests.rs (MATCH…WITH…INSERT),
@@ -10,10 +10,10 @@ import graft.SparkFixture
   * and expected values are transcribed from the reference tests; only
   * the fixture plumbing is ours.
   */
-class RefSuiteParitySpec extends AnyFunSuite {
+class RefSuiteParitySpec extends AnyFunSuite with TempDirs {
 
   private def freshSession() = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-refsuite").toString
+    val wh = tempDir("refsuite").toString
     graft.GraphLiteSpark.open(SparkFixture.spark, wh).session("u")
   }
 
@@ -209,7 +209,7 @@ class RefSuiteParitySpec extends AnyFunSuite {
   // ---- fixture_tests.rs:344-431 (fraud fixture WITH aggregations) ----
 
   test("WITH aggregation filters and nested DISTINCT aggregation") {
-    val t = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val t = gqlSession(SparkFixture.fraudGraph)
     // every merchant has exactly 5 of the 100 transactions
     val rows = t.gql(
       "MATCH (a:Account)-[tx:Transaction]->(m:Merchant) " +
@@ -586,7 +586,7 @@ class RefSuiteParitySpec extends AnyFunSuite {
   // drop instead of silently ignoring, and the statement succeeds) ----
 
   test("bulk edge SET with an edge label item succeeds, label is a no-op") {
-    val t = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val t = gqlSession(SparkFixture.fraudGraph)
     val expected = t.gql("MATCH (:Account)-[tx:Transaction]->(:Merchant) " +
       "WHERE tx.amount < 60 RETURN count(tx) AS n").collect().head.getLong(0)
     assert(expected > 0 && expected < 100) // the predicate is selective
@@ -603,7 +603,7 @@ class RefSuiteParitySpec extends AnyFunSuite {
   // transaction stats computed in the pipeline feed the assignment) ----
 
   test("WITH aggregation feeds SET expressions per matched account") {
-    val t = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val t = gqlSession(SparkFixture.fraudGraph)
     // every account has exactly 2 of the 100 transactions
     t.execute("MATCH (a:Account)-[tx:Transaction]->(m:Merchant) " +
       "WITH a, count(tx) AS transaction_count, avg(tx.amount) AS avg_amount " +

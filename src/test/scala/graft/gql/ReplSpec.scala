@@ -3,15 +3,16 @@ package graft.gql
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, PrintStream}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{Repl, SparkFixture}
+import graft.TempDirs
 
 /** Drives [[graft.Repl]]'s read-eval loop through piped streams —
   * the CliFixture pattern from the reference's gql-cli tests, without a
   * subprocess.
   */
-class ReplSpec extends AnyFunSuite {
+class ReplSpec extends AnyFunSuite with TempDirs {
 
   private def drive(input: String): String = {
-    val session = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+    val session = gqlSession(SparkFixture.fraudGraph)
     val out = new ByteArrayOutputStream()
     Repl.run(session, new ByteArrayInputStream(input.getBytes("UTF-8")),
       new PrintStream(out, true, "UTF-8"))

@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for scalar subqueries: random correlated
   * aggregates (COUNT/SUM/MIN/MAX over an edge-correlated set) and
@@ -22,7 +22,7 @@ import graft.SparkFixture
   * Seed env-tunable via GRAFT_SCALARSUB_FUZZ_SEED, cases via
   * GRAFT_SCALARSUB_FUZZ_N.
   */
-class ScalarSubqueryDifferentialFuzzSpec extends AnyFunSuite {
+class ScalarSubqueryDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val seed =
@@ -56,8 +56,7 @@ class ScalarSubqueryDifferentialFuzzSpec extends AnyFunSuite {
     val g = new graft.graph.PropertyGraph(
       Map("N" -> n, "M" -> m),
       Map("R" -> (graft.graph.EdgeType("R", "N", "M"), e)))
-    graft.GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-scalarsubfuzz").toString)
+    graft.GraphLiteSpark.open(spark, tempDir("scalarsubfuzz").toString)
       .session("u").useGraph(g)
   }
 

@@ -2,6 +2,7 @@ package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{GraphLiteSpark, SessionMode, SparkFixture}
+import graft.TempDirs
 
 /** Session management modes (reference session/mode.rs + manager.rs):
   * Instance keeps a per-coordinator pool; Global shares one pool per
@@ -9,9 +10,9 @@ import graft.{GraphLiteSpark, SessionMode, SparkFixture}
   * mirror SessionManager: create/get/remove/active ids/count/expiry
   * cleanup and the DROP GRAPH stale-session invalidation.
   */
-class SessionModeSpec extends AnyFunSuite {
+class SessionModeSpec extends AnyFunSuite with TempDirs {
   private def wh(): String =
-    java.nio.file.Files.createTempDirectory("graft-sm").toString
+    tempDir("sm").toString
 
   test("Instance mode isolates session pools per coordinator (mode.rs:8-10)") {
     val w = wh()

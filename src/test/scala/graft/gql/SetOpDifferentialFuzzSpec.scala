@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for set operations between full queries: random
   * left-associative chains of UNION / INTERSECT / EXCEPT (each ± ALL,
@@ -19,7 +19,7 @@ import graft.SparkFixture
   * Seed env-tunable via GRAFT_SETOP_FUZZ_SEED, cases via
   * GRAFT_SETOP_FUZZ_N.
   */
-class SetOpDifferentialFuzzSpec extends AnyFunSuite {
+class SetOpDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val seed =
@@ -44,8 +44,7 @@ class SetOpDifferentialFuzzSpec extends AnyFunSuite {
       java.util.Arrays.asList(rows.map(r =>
         org.apache.spark.sql.Row(r._1, r._2, r._3)): _*), schema)
     val g = new graft.graph.PropertyGraph(Map("N" -> df), Map.empty)
-    graft.GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-setopfuzz").toString)
+    graft.GraphLiteSpark.open(spark, tempDir("setopfuzz").toString)
       .session("u").useGraph(g)
   }
 

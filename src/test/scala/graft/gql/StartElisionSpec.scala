@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Start-node elision (mirror of the dst-node elision): a constraint-free
   * start — anonymous or never property-read, no labels, no inline props,
@@ -9,7 +9,7 @@ import graft.SparkFixture
   * the identity. Pins both the PLAN property (no join anywhere in
   * `()-[t:T]->()`) and result parity with the unelided spelling.
   */
-class StartElisionSpec extends AnyFunSuite {
+class StartElisionSpec extends AnyFunSuite with TempDirs {
   private lazy val g = SparkFixture.fraudGraph
   private def compile(q: String) =
     new Compiler(g).compile(Parser.parse(q))
@@ -84,7 +84,7 @@ class StartElisionSpec extends AnyFunSuite {
   }
 
   test("anonymous-endpoint DELETE removes the right edges") {
-    val s = SparkFixture.gqlSession()
+    val s = gqlSession()
     val n = s.execute("MATCH ()-[t:Purchase]->() DELETE t")
       .collect().head.getLong(0)
     assert(n == 50L)

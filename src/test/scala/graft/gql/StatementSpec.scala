@@ -1,15 +1,15 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** GQL statement surface: INSERT / MATCH SET / REMOVE / DELETE / DDL /
   * SESSION — semantics mirror the reference's dml_tests.rs and
   * ddl_independent_tests.rs shapes.
   */
-class StatementSpec extends AnyFunSuite {
+class StatementSpec extends AnyFunSuite with TempDirs {
 
-  private def freshSession() = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+  private def freshSession() = gqlSession(SparkFixture.fraudGraph)
 
   test("INSERT literal nodes") {
     val s = freshSession()
@@ -720,20 +720,21 @@ class StatementSpec extends AnyFunSuite {
   test("incremental save rewrites only mutated label datasets") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val wh = Files.createTempDirectory("graft-inc").toString
+    val wh = tempDir("inc").toString
     val s = graft.GraphLiteSpark.open(graft.SparkFixture.spark, wh)
       .session("test").useGraph(graft.SparkFixture.fraudGraph)
     s.execute("CREATE SCHEMA /inc")
     s.saveGraphAs("/inc/g") // first save: full write, session now on-disk
     def parts(ds: String): Seq[String] =
-      Files.list(Paths.get(wh, "inc", "g", ds)).iterator.asScala
+      Files.list(Paths.get(graft.graph.GraphCatalog.versionDir(wh, "inc", "g").get, ds))
+        .iterator.asScala
         .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq.sorted
     val merchantsBefore = parts("nodes_Merchant")
     val accountsBefore = parts("nodes_Account")
     val txBefore = parts("edges_Transaction")
     s.execute("MATCH (a:Account) WHERE a.id = 1 SET a.balance = 1.0")
     s.saveGraphAs("/inc/g")
-    // untouched datasets were renamed in place (same part files); the
+    // untouched datasets were hard-linked (same part files); the
     // mutated one was rewritten (fresh part UUIDs)
     assert(parts("nodes_Merchant") == merchantsBefore)
     assert(parts("edges_Transaction") == txBefore)

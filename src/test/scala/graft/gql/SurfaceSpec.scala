@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Round-2 GQL surface: set operations, LET/FOR/FILTER, EXISTS in
   * arbitrary boolean positions, IS predicates, PROPERTIES/SOURCE/
@@ -10,8 +10,8 @@ import graft.SparkFixture
   * simple_let_test.rs / role_management_tests.rs shapes on the fraud
   * fixture (test_fixture.rs:135-190).
   */
-class SurfaceSpec extends AnyFunSuite {
-  private def fresh() = SparkFixture.gqlSession(SparkFixture.fraudGraph)
+class SurfaceSpec extends AnyFunSuite with TempDirs {
+  private def fresh() = gqlSession(SparkFixture.fraudGraph)
   private lazy val s = fresh()
 
   private def one(q: String): Any = s.gql(q).collect().head.get(0)
@@ -118,7 +118,7 @@ class SurfaceSpec extends AnyFunSuite {
   // ---- path variables + path-type prefixes (ast.rs:275-313) ----
 
   test("path variables bind the node-id array per path") {
-    val t = SparkFixture.gqlSession(SparkFixture.simpleGraph)
+    val t = gqlSession(SparkFixture.simpleGraph)
     // chain 1→2→3→4…: one row PER PATH, ordered by length
     val rows = t.gql("MATCH p = (a:TestNode {id: 1})-[:CONNECTS_TO*1..3]->" +
       "(b:TestNode) RETURN p ORDER BY SIZE(p)")
@@ -133,7 +133,7 @@ class SurfaceSpec extends AnyFunSuite {
 
   test("postfix edge quantifiers: {n}, {n,m}, {n,}, ? " +
       "(executor.rs:6435 expansion)") {
-    val t = SparkFixture.gqlSession(SparkFixture.simpleGraph)
+    val t = gqlSession(SparkFixture.simpleGraph)
     // chain 1→2→3→…: {1,3} ≡ *1..3
     assert(t.gql("MATCH (a:TestNode {id: 1})-[:CONNECTS_TO]{1,3}->" +
       "(b:TestNode) RETURN b.id AS id ORDER BY id")
@@ -153,7 +153,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("path variables span mixed rigid+quantified chains") {
-    val t = SparkFixture.gqlSession(SparkFixture.simpleGraph)
+    val t = gqlSession(SparkFixture.simpleGraph)
     // rigid then quantified: 1→2 fixed, then 1..2 more hops
     val rows = t.gql("MATCH p = (a:TestNode {id: 1})-[:CONNECTS_TO]->" +
       "(b:TestNode)-[:CONNECTS_TO*1..2]->(c:TestNode) RETURN p ORDER BY SIZE(p)")
@@ -197,7 +197,7 @@ class SurfaceSpec extends AnyFunSuite {
       Map("E" -> (graft.graph.EdgeType("E", "N", "N"),
         Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 3L), (1L, 3L, 4L))
           .toDF("src", "dst", "eid"))))
-    val t = SparkFixture.gqlSession(g)
+    val t = gqlSession(g)
     def one0(q: String): Long = t.gql(q).collect().head.getLong(0)
     // WALK (default) may return to the start
     assert(one0("MATCH (a:N {id: 1})-[:E*1..3]->(b:N) WHERE b.id = 1 " +
@@ -218,8 +218,7 @@ class SurfaceSpec extends AnyFunSuite {
 
   test("graph-free queries run without a session graph; patterns still " +
       "demand one (executor.rs:242-274)") {
-    val t = graft.GraphLiteSpark.open(SparkFixture.spark, java.nio.file
-      .Files.createTempDirectory("graft-nog").toString).session()
+    val t = graft.GraphLiteSpark.open(SparkFixture.spark, tempDir("nog").toString).session()
     assert(t.gql("RETURN 1 + 2 AS x").collect().head.getLong(0) == 3L)
     assert(t.execute("RETURN UPPER('ab') AS s").collect().head.getString(0) == "AB")
     val e = intercept[Exception](t.gql("MATCH (n:X) RETURN n"))
@@ -240,7 +239,7 @@ class SurfaceSpec extends AnyFunSuite {
       Map("E" -> (graft.graph.EdgeType("E", "N", "N"),
         Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 3L), (1L, 3L, 4L))
           .toDF("src", "dst", "eid"))))
-    val t = SparkFixture.gqlSession(g)
+    val t = gqlSession(g)
     def one0(q: String): Long = t.gql(q).collect().head.getLong(0)
     // rigid 1→3 (edge 4) then two quantified hops closing back to 3
     // necessarily reuses edge 4 (3→1→3): a WALK sees it…
@@ -474,7 +473,7 @@ class SurfaceSpec extends AnyFunSuite {
 
   test("graph-index procedures: neighbors, shortest path, reachability") {
     // simple fixture chain: 1→2→…→10 over CONNECTS_TO
-    val t = SparkFixture.gqlSession(SparkFixture.simpleGraph)
+    val t = gqlSession(SparkFixture.simpleGraph)
     val nbrs = t.execute("CALL gql.find_neighbors(CONNECTS_TO, 3, 2)")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(nbrs.toSeq == Seq((4L, 1L), (5L, 2L)))
@@ -751,7 +750,7 @@ class SurfaceSpec extends AnyFunSuite {
       Map("Account" -> accounts),
       Map("WIRE" -> (graft.graph.EdgeType("WIRE", "Account", "Account"), wires),
         "NOTE" -> (graft.graph.EdgeType("NOTE", "Account", "Account"), notes)))
-    val t = SparkFixture.gqlSession(g)
+    val t = gqlSession(g)
     def q(gq: String): Long = t.gql(gq).count()
     // UNION: eids {1,2} vs {1,3} — by value 3 rows, by identity 4
     assert(q("MATCH ()-[t:WIRE]->() RETURN t " +
@@ -779,7 +778,7 @@ class SurfaceSpec extends AnyFunSuite {
     val bs = Seq((1L, "b1"), (3L, "b3")).toDF("id", "name")
     val g = new graft.graph.PropertyGraph(
       Map("A" -> as, "B" -> bs), Map.empty)
-    val t = SparkFixture.gqlSession(g)
+    val t = gqlSession(g)
     def q(gq: String): Long = t.gql(gq).count()
     assert(q("MATCH (n:A) RETURN n UNION MATCH (m:B) RETURN m") == 4L)
     assert(q("MATCH (n:A) RETURN n INTERSECT MATCH (m:B) RETURN m") == 0L)
@@ -801,7 +800,7 @@ class SurfaceSpec extends AnyFunSuite {
     val g = new graft.graph.PropertyGraph(
       Map("X" -> xs),
       Map("X" -> (graft.graph.EdgeType("X", "X", "X"), edges)))
-    val t = SparkFixture.gqlSession(g)
+    val t = gqlSession(g)
     assert(t.gql("MATCH (n:X) RETURN n " +
       "UNION MATCH ()-[t:X]->() RETURN t").count() == 3L) // 2 nodes + 1 edge
     assert(t.gql("MATCH (n:X) RETURN n " +
@@ -1353,7 +1352,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("graph grants are enforced at attach time (security.rs ACEs)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-sec").toString
+    val wh = tempDir("sec").toString
     val gls = graft.GraphLiteSpark.open(SparkFixture.spark, wh)
     val admin = gls.session("admin").useGraph(SparkFixture.fraudGraph)
     admin.saveGraphAs("/main/secure")
@@ -1391,7 +1390,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("grants are enforced per operation (security.rs:219-246 Permission)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-sec2").toString
+    val wh = tempDir("sec2").toString
     val gls = graft.GraphLiteSpark.open(SparkFixture.spark, wh)
     val admin = gls.session("admin").useGraph(SparkFixture.fraudGraph)
     admin.saveGraphAs("/main/ops")
@@ -1435,7 +1434,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("REVOKE role FROM user is the inverse of GRANT role TO user") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-sec3").toString
+    val wh = tempDir("sec3").toString
     val gls = graft.GraphLiteSpark.open(SparkFixture.spark, wh)
     val admin = gls.session("admin").useGraph(SparkFixture.fraudGraph)
     admin.saveGraphAs("/main/roles")
@@ -1650,7 +1649,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("SESSION SET SCHEMA resolves relative graph names (+ RESET)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val wh = tempDir("schema").toString
     val gls = graft.GraphLiteSpark.open(SparkFixture.spark, wh)
     val t = gls.session("admin")
     // schema must exist (executor.rs:6819-6835 CatalogError)
@@ -1674,7 +1673,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("SESSION SET VALUE/GRAPH/TABLE parameters ($p, IF NOT EXISTS)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-params").toString
+    val wh = tempDir("params").toString
     val gls = graft.GraphLiteSpark.open(SparkFixture.spark, wh)
     val t = gls.session("admin").useGraph(SparkFixture.fraudGraph)
     // VALUE parameter is visible as $p in a follow-up MATCH
@@ -1708,7 +1707,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("SESSION RESET clears characteristics and everything") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-reset").toString
+    val wh = tempDir("reset").toString
     val gls = graft.GraphLiteSpark.open(SparkFixture.spark, wh)
     val t = gls.session("admin").useGraph(SparkFixture.fraudGraph)
     t.saveGraphAs("/main/rg")

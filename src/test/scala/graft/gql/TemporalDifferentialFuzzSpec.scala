@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import java.time.{LocalDateTime, ZoneOffset}
 
 /** Differential fuzz for the temporal registry against a lockstep model
@@ -26,15 +26,14 @@ import java.time.{LocalDateTime, ZoneOffset}
   * 609-line file; temporal_functions.rs + timezone_functions.rs are the
   * largest registry surface and get the same lockstep treatment here.
   */
-class TemporalDifferentialFuzzSpec extends AnyFunSuite {
+class TemporalDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private lazy val t = {
     import spark.implicits._
     val g = new graft.graph.PropertyGraph(
       Map("N" -> Seq(1L).toDF("id")), Map.empty)
-    graft.GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-temporalfuzz").toString)
+    graft.GraphLiteSpark.open(spark, tempDir("temporalfuzz").toString)
       .session("u").useGraph(g)
   }
 
@@ -278,8 +277,7 @@ class TemporalDifferentialFuzzSpec extends AnyFunSuite {
       import spark.implicits._
       val g = new graft.graph.PropertyGraph(
         Map("N" -> Seq(1L).toDF("id")), Map.empty)
-      val s = graft.GraphLiteSpark.open(spark, java.nio.file.Files
-        .createTempDirectory("graft-temporalfuzz-ny").toString)
+      val s = graft.GraphLiteSpark.open(spark, tempDir("temporalfuzz-ny").toString)
         .session("u").useGraph(g)
       s.execute("SESSION SET TIME ZONE 'America/New_York'")
       s

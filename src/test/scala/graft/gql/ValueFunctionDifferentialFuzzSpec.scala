@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for the VALUE semantics of the string / list /
   * graph / special function registries against a lockstep model
@@ -41,15 +41,14 @@ import graft.SparkFixture
   *
   * Seed via GRAFT_VALUEFN_FUZZ_SEED for reproduction.
   */
-class ValueFunctionDifferentialFuzzSpec extends AnyFunSuite {
+class ValueFunctionDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private lazy val t = {
     import spark.implicits._
     val g = new graft.graph.PropertyGraph(
       Map("N" -> Seq(1L).toDF("id")), Map.empty)
-    graft.GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-valuefnfuzz").toString)
+    graft.GraphLiteSpark.open(spark, tempDir("valuefnfuzz").toString)
       .session("u").useGraph(g)
   }
 

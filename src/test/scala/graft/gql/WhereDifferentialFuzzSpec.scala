@@ -1,7 +1,7 @@
 package graft.gql
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for WHERE compilation: random boolean trees
   * (AND/OR/XOR/NOT over comparisons, IS [NOT] NULL, IN, STARTS WITH)
@@ -12,7 +12,7 @@ import graft.SparkFixture
   * sit in (the reference's 3VL tables: functions/mod.rs boolean ops,
   * ISO GQL <boolean value expression>).
   */
-class WhereDifferentialFuzzSpec extends AnyFunSuite {
+class WhereDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   // rows: (id, s: Long|null, name: String|null) — nulls on both props
@@ -32,8 +32,7 @@ class WhereDifferentialFuzzSpec extends AnyFunSuite {
           org.apache.spark.sql.Row(r._1, r._2, r._3)): _*), schema)
       new graft.graph.PropertyGraph(Map("N" -> df), Map.empty)
     }
-    graft.GraphLiteSpark.open(spark, java.nio.file.Files
-      .createTempDirectory("graft-wherefuzz").toString)
+    graft.GraphLiteSpark.open(spark, tempDir("wherefuzz").toString)
       .session("u").useGraph(g)
   }
 

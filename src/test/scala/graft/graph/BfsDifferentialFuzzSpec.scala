@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for multi-source BFS (r18 — the bfs loop gained
   * the stats gate, per-level bucket pruning, and 1-vs-2-step batching
@@ -14,7 +14,7 @@ import graft.SparkFixture
   *
   * Seed env-tunable via GRAFT_BFS_FUZZ_SEED, cases via GRAFT_BFS_FUZZ_N.
   */
-class BfsDifferentialFuzzSpec extends AnyFunSuite {
+class BfsDifferentialFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val seed =
@@ -49,7 +49,7 @@ class BfsDifferentialFuzzSpec extends AnyFunSuite {
       s"(seed=$seed)") {
     import spark.implicits._
     val rnd = new scala.util.Random(seed)
-    val wh = java.nio.file.Files.createTempDirectory("graft-bfsfuzz").toString
+    val wh = tempDir("bfsfuzz").toString
     val cat = new GraphCatalog(spark, wh)
     cat.createSchema("bf")
     for (c <- 1 to nCases) {

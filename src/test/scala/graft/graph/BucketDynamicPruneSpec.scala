@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.plans.{BucketDynamicPrune, BucketPrune}
 
 /** Runtime bucket pruning for joins ([[graft.plans.BucketDynamicPrune]]):
@@ -15,7 +15,7 @@ import graft.plans.{BucketDynamicPrune, BucketPrune}
   * seeded traversal, which static pruning (BucketPruneSpec) cannot
   * reach because the dst keys are runtime values.
   */
-class BucketDynamicPruneSpec extends AnyFunSuite {
+class BucketDynamicPruneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private def scansIn(p: org.apache.spark.sql.execution.SparkPlan):
@@ -37,7 +37,7 @@ class BucketDynamicPruneSpec extends AnyFunSuite {
 
   private def fixture() = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-bdpp").toString
+    val wh = tempDir("bdpp").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).map(i => (i, (i % 97).toDouble))
       .toDF("id", "bal")

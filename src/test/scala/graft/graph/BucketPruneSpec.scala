@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.plans.BucketPrune
 
 /** Read-side bucket pruning ([[graft.plans.BucketPrune]]): a key
@@ -16,7 +16,7 @@ import graft.plans.BucketPrune
   * partition count / partition filter) and result equality against the
   * same query with pruning disabled.
   */
-class BucketPruneSpec extends AnyFunSuite {
+class BucketPruneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   /** Number of partition directories the (single) parquet scan of `df`
@@ -39,7 +39,7 @@ class BucketPruneSpec extends AnyFunSuite {
 
   private def numericFixture() = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-bprune").toString
+    val wh = tempDir("bprune").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).map(i => (i, (i * 7919 % 10000).toDouble,
       s"name$i")).toDF("id", "acctbal", "nm")
@@ -53,7 +53,7 @@ class BucketPruneSpec extends AnyFunSuite {
 
   private def stringFixture() = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-bprune-s").toString
+    val wh = tempDir("bprune-s").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1 to 4000).map(i => (f"id_$i%05d", i.toDouble))
       .toDF("id", "bal")
@@ -258,7 +258,7 @@ class BucketPruneSpec extends AnyFunSuite {
       "join (constraint propagation)") {
     import spark.implicits._
     import graft.GraphLiteSpark
-    val wh = java.nio.file.Files.createTempDirectory("graft-bprune-e").toString
+    val wh = tempDir("bprune-e").toString
     val gls = GraphLiteSpark.open(spark, wh)
     val nodes = (1L to 2000L).map(i => (i, (i % 97).toDouble))
       .toDF("id", "bal")
@@ -309,7 +309,7 @@ class BucketPruneSpec extends AnyFunSuite {
   test("GQL end to end: WHERE on the clustered key prunes the persisted " +
       "scan") {
     import graft.GraphLiteSpark
-    val wh = java.nio.file.Files.createTempDirectory("graft-bprune-gql").toString
+    val wh = tempDir("bprune-gql").toString
     val gls = GraphLiteSpark.open(spark, wh)
     import spark.implicits._
     val nodes = (1L to 4000L).map(i => (i, (i % 97).toDouble))

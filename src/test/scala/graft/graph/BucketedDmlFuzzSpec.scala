@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Differential fuzz for the BUCKET-SCOPED incremental save: random DML
   * statements against a label persisted under a bucketed clustered
@@ -19,7 +19,7 @@ import graft.SparkFixture
   * composition. Statement count via GRAFT_BUCKET_FUZZ_N, seed via
   * GRAFT_BUCKET_FUZZ_SEED.
   */
-class BucketedDmlFuzzSpec extends AnyFunSuite {
+class BucketedDmlFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val nStatements =
@@ -27,7 +27,7 @@ class BucketedDmlFuzzSpec extends AnyFunSuite {
 
   test(s"$nStatements random DML statements, each followed by a " +
       "bucket-scoped save + fresh reload, stay in lockstep with the model") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketfuzz").toString
+    val wh = tempDir("bucketfuzz").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val t = gls.session("u")
     t.execute("CREATE GRAPH /main/bfz")
@@ -50,7 +50,7 @@ class BucketedDmlFuzzSpec extends AnyFunSuite {
     var nextId = 100L
 
     def bucketDirs(): Seq[String] =
-      new java.io.File(s"$wh/main/bfz/nodes_L").listFiles()
+      new java.io.File(s"${GraphCatalog.versionDir(wh, "main", "bfz").get}/nodes_L").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("__ixb="))
         .map(_.getName).toSeq.sorted
 
@@ -126,7 +126,7 @@ class BucketedDmlFuzzSpec extends AnyFunSuite {
       "statements, each with a bucket-scoped save + fresh reload, stay " +
       "in lockstep with the model (string lead keys are the reference's " +
       "native id shape — VERDICT r16 #2)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketfuzz-s").toString
+    val wh = tempDir("bucketfuzz-s").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val t = gls.session("u")
     t.execute("CREATE GRAPH /main/sfz")
@@ -154,7 +154,7 @@ class BucketedDmlFuzzSpec extends AnyFunSuite {
     var nextId = 100L
 
     def bucketDirs(): Seq[String] =
-      new java.io.File(s"$wh/main/sfz/nodes_S").listFiles()
+      new java.io.File(s"${GraphCatalog.versionDir(wh, "main", "sfz").get}/nodes_S").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("__ixb="))
         .map(_.getName).toSeq.sorted
 

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Bucketed clustered layout (`ALTER INDEX … SET OPTION buckets = N`):
   * the 100 TB re-layout shape. The flat clustered layout is one
@@ -13,12 +13,12 @@ import graft.SparkFixture
   * rewrites ONLY the touched buckets, leaving every other bucket's
   * files byte-identical on disk.
   */
-class BucketedIndexSpec extends AnyFunSuite {
+class BucketedIndexSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private def fixture() = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketix").toString
+    val wh = tempDir("bucketix").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).map(i => (i, (i * 7919 % 10000).toDouble))
       .toDF("id", "acctbal")
@@ -30,8 +30,12 @@ class BucketedIndexSpec extends AnyFunSuite {
     (cat, wh)
   }
 
+  /** The current version directory of a graph in `wh`. */
+  private def live(wh: String, schema: String = "ix", graph: String = "g1") =
+    GraphCatalog.versionDir(wh, schema, graph).get
+
   private def bucketDirs(wh: String): Seq[java.io.File] =
-    new java.io.File(s"$wh/ix/g1/nodes_customer").listFiles()
+    new java.io.File(s"${live(wh)}/nodes_customer").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("__ixb=")).toSeq
       .sortBy(_.getName)
 
@@ -86,7 +90,7 @@ class BucketedIndexSpec extends AnyFunSuite {
   test("statement surface: SET OPTION buckets + OPTIMIZE INDEX produce " +
       "the bucketed layout") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketsql").toString
+    val wh = tempDir("bucketsql").toString
     val t = graft.GraphLiteSpark.open(spark, wh).session("u")
     val nodes = (1L to 1000L).map(i => (i, (i * 7919 % 10000).toDouble))
       .toDF("id", "acctbal")
@@ -96,7 +100,7 @@ class BucketedIndexSpec extends AnyFunSuite {
     t.execute("CREATE GRAPH INDEX bal_ix ON nodes_customer (acctbal)")
     t.execute("ALTER INDEX bal_ix SET OPTION buckets = 4")
     t.execute("OPTIMIZE INDEX bal_ix")
-    val dirs = new java.io.File(s"$wh/bix/cust/nodes_customer").listFiles()
+    val dirs = new java.io.File(s"${live(wh, "bix", "cust")}/nodes_customer").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("__ixb=")).toSeq
     assert(dirs.size == 4, s"expected 4 bucket dirs, got ${dirs.map(_.getName)}")
     val n = graft.GraphLiteSpark.open(spark, wh).session("u")
@@ -213,7 +217,7 @@ class BucketedIndexSpec extends AnyFunSuite {
       "storage/types.rs:68-72 — so the incremental-maintenance story " +
       "cannot be numeric-only, VERDICT r16 #2)") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketstr").toString
+    val wh = tempDir("bucketstr").toString
     val cat = new GraphCatalog(spark, wh)
     // string ids with embedded commas and spaces: the escaped __bounds
     // encoding must round-trip them
@@ -226,7 +230,7 @@ class BucketedIndexSpec extends AnyFunSuite {
     cat.saveGraph("ix", "g1", g, force = true)
 
     def dirs(): Seq[java.io.File] =
-      new java.io.File(s"$wh/ix/g1/nodes_customer").listFiles()
+      new java.io.File(s"${live(wh)}/nodes_customer").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("__ixb=")).toSeq
         .sortBy(_.getName)
     assert(dirs().size == 8, s"expected 8 bucket dirs, got ${dirs().map(_.getName)}")
@@ -283,7 +287,7 @@ class BucketedIndexSpec extends AnyFunSuite {
     */
   private def idKeyedFixture() = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketid").toString
+    val wh = tempDir("bucketid").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).map(i => (i, (i * 7919 % 10000).toDouble))
       .toDF("id", "acctbal")
@@ -303,13 +307,13 @@ class BucketedIndexSpec extends AnyFunSuite {
   }
 
   private def layoutStamps(wh: String, ds: String): Map[String, Map[String, Long]] =
-    new java.io.File(s"$wh/ix/g1/$ds").listFiles()
+    new java.io.File(s"${live(wh)}/$ds").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("__ixb="))
       .map(d => d.getName -> fileStamps(d)).toMap
 
   /** Bucket directory of every `key` value of a persisted layout. */
   private def bucketOfKey(wh: String, ds: String, key: String): Map[Long, String] =
-    spark.read.parquet(s"$wh/ix/g1/$ds").select(col(key), col("__ixb"))
+    spark.read.parquet(s"${live(wh)}/$ds").select(col(key), col("__ixb"))
       .collect().map(r => r.getLong(0) -> s"__ixb=${r.getInt(1)}").toMap
 
   test("SET on the identity column of an id-bucketed label keeps the row: " +

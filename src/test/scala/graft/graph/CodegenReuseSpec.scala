@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.metrics.source.CodegenMetrics
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Writes stop forcing recompiles: once each statement kind ran once, a
   * mutated label reads as a view of constant shape (`base ⊖ tomb ⊕
@@ -10,7 +10,7 @@ import graft.SparkFixture
   * keys, reads after more DML and repeated DML all reuse the generated
   * classes already compiled — Janino's compile counter does not move.
   */
-class CodegenReuseSpec extends AnyFunSuite {
+class CodegenReuseSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -19,7 +19,7 @@ class CodegenReuseSpec extends AnyFunSuite {
     * shape of the write benchmark), and a session over it. */
   private def session(): graft.GqlSession = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-codegen").toString
+    val wh = tempDir("codegen").toString
     val customers = (1L to 600L).map(i => (i, (i * 37 % 1000).toDouble))
       .toDF("id", "acctbal")
     val orders = (1L to 900L).map(i => (10000L + i, i * 1.5, "F"))

@@ -3,7 +3,7 @@ package graft.graph
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import scala.jdk.CollectionConverters._
 
 /** The view of a mutated label (`base ⊖ tomb ⊕ delta`, [[LabelDelta]]):
@@ -11,17 +11,16 @@ import scala.jdk.CollectionConverters._
   * columns of another type, and hides past the driver-held limit go
   * through a checkpoint and still read, delete and save right.
   */
-class LabelViewSpec extends AnyFunSuite {
+class LabelViewSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
   import spark.implicits._
 
   private def warehouse(): String =
-    java.nio.file.Files.createTempDirectory("graft-view").toString
+    tempDir("view").toString
 
   /** A saved customer graph with an `id`-bucketed layout, and a session
     * over it. */
-  private def savedSession(n: Long): graft.GqlSession = {
-    val wh = warehouse()
+  private def savedSession(n: Long, wh: String = warehouse()): graft.GqlSession = {
     val customers = (1L to n).map(i => (i, i.toDouble)).toDF("id", "acctbal")
     val g = new PropertyGraph(Map("customer" -> customers), Map.empty)
     val w = graft.GraphLiteSpark.open(spark, wh).session("w").useGraph(g)
@@ -51,11 +50,50 @@ class LabelViewSpec extends AnyFunSuite {
     s.execute("MATCH (c:customer {id: 1}) SET c.acctbal = 100.0")
     val lazyRead = s.gql("MATCH (c:customer {id: 1}) RETURN c.acctbal AS b")
     s.execute("MATCH (c:customer {id: 1}) SET c.acctbal = 200.0")
-    // to another path: a save over the files it reads invalidates any
-    // lazy read of the old version anyway
     s.saveGraphAs("/v/g2")
     assert(lazyRead.collect().map(_.getDouble(0)).toSeq == Seq(100.0))
     assert(balances(s)(1L) == 200.0)
+  }
+
+  test("a rollback snapshot still reads after a save to the same path") {
+    val s = savedSession(20)
+    s.execute("MATCH (c:customer {id: 1}) SET c.acctbal = 100.0")
+    s.execute("START TRANSACTION")
+    s.execute("MATCH (c:customer {id: 1}) SET c.acctbal = 200.0")
+    s.execute("MATCH (c:customer {id: 2}) SET c.acctbal = 300.0")
+    s.saveGraphAs("/v/g")
+    s.execute("ROLLBACK")
+    assert(balances(s) == Map(1L -> 100.0, 2L -> 2.0, 3L -> 3.0))
+  }
+
+  test("a lazy query result still reads after DML and a save to the same path") {
+    val s = savedSession(20)
+    s.execute("MATCH (c:customer {id: 1}) SET c.acctbal = 100.0")
+    val lazyRead = s.gql("MATCH (c:customer {id: 1}) RETURN c.acctbal AS b")
+    s.execute("MATCH (c:customer {id: 1}) SET c.acctbal = 200.0")
+    s.saveGraphAs("/v/g")
+    assert(lazyRead.collect().map(_.getDouble(0)).toSeq == Seq(100.0))
+    assert(balances(s)(1L) == 200.0)
+  }
+
+  test("a save after another session saved the same graph keeps exactly " +
+      "its own session's graph") {
+    val wh = warehouse()
+    val a = savedSession(20, wh)
+    val b = graft.GraphLiteSpark.open(spark, wh).session("b").useGraph("/v/g")
+    def bal(s: graft.GqlSession, id: Long): Double =
+      s.gql(s"MATCH (c:customer {id: $id}) RETURN c.acctbal AS b")
+        .collect().head.getDouble(0)
+    a.execute("MATCH (c:customer {id: 1}) SET c.acctbal = 100.0")
+    // b saves a change in another bucket between a's load and a's save
+    b.execute("MATCH (c:customer {id: 20}) SET c.acctbal = 300.0")
+    b.saveGraphAs("/v/g")
+    a.saveGraphAs("/v/g")
+    assert(bal(a, 1L) == 100.0 && bal(a, 20L) == 20.0)
+    // b's graph still reads the version it saved
+    assert(bal(b, 1L) == 1.0 && bal(b, 20L) == 300.0)
+    val fresh = graft.GraphLiteSpark.open(spark, wh).session("c").useGraph("/v/g")
+    assert(bal(fresh, 1L) == 100.0 && bal(fresh, 20L) == 20.0)
   }
 
   test("a statement runs without code generation and leaves the shared " +

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.plans.BucketDynamicPrune
 
 /** Mirror-aware RUNTIME pruning (r19 verdict #1/#5): an equi-join whose
@@ -15,13 +15,13 @@ import graft.plans.BucketDynamicPrune
   * [[graft.plans.MirrorSwap]]'s job; this covers the join-seeded keys no
   * static rule can see.
   */
-class MirrorDynamicPruneSpec extends AnyFunSuite {
+class MirrorDynamicPruneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   /** 4000-edge chain clustered on `src` with the dst-keyed mirror. */
   private def fixture(name: String, mirror: Boolean = true): PropertyGraph = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory(s"graft-mdpp-$name").toString
+    val wh = tempDir(s"mdpp-$name").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i, i + 1)).toDF("eid", "src", "dst")
@@ -112,7 +112,7 @@ class MirrorDynamicPruneSpec extends AnyFunSuite {
   test("GQL edge→edge chain: the reverse-keyed second hop prunes " +
       "through the mirror at runtime") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-mdpp-gql").toString
+    val wh = tempDir("mdpp-gql").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i + 1, i)).toDF("src", "dst", "eid")
@@ -151,7 +151,7 @@ class MirrorDynamicPruneSpec extends AnyFunSuite {
     import spark.implicits._
     val seed = sys.env.getOrElse("GRAFT_MDPP_FUZZ_SEED", "20260816").toLong
     val rnd = new scala.util.Random(seed)
-    val wh = java.nio.file.Files.createTempDirectory("graft-mdppf").toString
+    val wh = tempDir("mdppf").toString
     val cat = new GraphCatalog(spark, wh)
     cat.createSchema("mdf")
     for (c <- 1 to 4) {

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.plans.BucketPrune
 
 /** The dual-keyed MIRROR layout (r18 verdict #1 → r19): an edge dataset
@@ -18,7 +18,7 @@ import graft.plans.BucketPrune
   *  - incremental saves maintain the mirror bucket-scoped, and a DIRTY
   *    dataset never substitutes the (stale) persisted mirror.
   */
-class MirrorPruneSpec extends AnyFunSuite {
+class MirrorPruneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   /** 4000-node chain 1→2→…→4000, edges_nx bucketed 8-way on `src` WITH
@@ -28,7 +28,7 @@ class MirrorPruneSpec extends AnyFunSuite {
     */
   private def chainFixture(): (GraphCatalog, PropertyGraph) = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-mirror").toString
+    val wh = tempDir("mirror").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i, i + 1, 0.0))
@@ -157,8 +157,7 @@ class MirrorPruneSpec extends AnyFunSuite {
   test("incremental edge DML maintains the mirror bucket-scoped and " +
       "traversals stay correct after reload") {
     import spark.implicits._
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-mirror-gls").toString
+    val wh = tempDir("mirror-gls").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i, i + 1, 0.0))
@@ -203,8 +202,7 @@ class MirrorPruneSpec extends AnyFunSuite {
   test("GQL undirected var-length route reaches the two-branch pruned " +
       "loop (compiler wiring, gql37's shape)") {
     import spark.implicits._
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-mirror-gql").toString
+    val wh = tempDir("mirror-gql").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i + 1, i)).toDF("src", "dst", "eid")
@@ -243,7 +241,7 @@ class MirrorPruneSpec extends AnyFunSuite {
     import spark.implicits._
     val seed = sys.env.getOrElse("GRAFT_MIRROR_FUZZ_SEED", "20260816").toLong
     val rnd = new scala.util.Random(seed)
-    val wh = java.nio.file.Files.createTempDirectory("graft-mirrorf").toString
+    val wh = tempDir("mirrorf").toString
     val cat = new GraphCatalog(spark, wh)
     cat.createSchema("mf")
     for (c <- 1 to 5) {

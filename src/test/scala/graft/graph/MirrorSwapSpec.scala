@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.plans.{BucketPrune, MirrorSwap}
 
 /** [[graft.plans.MirrorSwap]]: a predicate on the NON-clustered
@@ -14,13 +14,13 @@ import graft.plans.{BucketPrune, MirrorSwap}
   * rule must never fire when the main layout already serves the
   * predicate, when no mirror exists, or on an unconstrained scan.
   */
-class MirrorSwapSpec extends AnyFunSuite {
+class MirrorSwapSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   /** 4000-edge chain clustered on `src` with the dst-keyed mirror. */
   private def fixture(mirror: Boolean): PropertyGraph = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-mswap").toString
+    val wh = tempDir("mswap").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i, i + 1)).toDF("eid", "src", "dst")
@@ -95,7 +95,7 @@ class MirrorSwapSpec extends AnyFunSuite {
   test("GQL reverse seeded hop routes through the mirror (gql34's " +
       "shape, opposite orientation)") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-mswap-gql").toString
+    val wh = tempDir("mswap-gql").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i + 1, i)).toDF("src", "dst", "eid")
@@ -120,7 +120,7 @@ class MirrorSwapSpec extends AnyFunSuite {
   test("a raw reader consuming __ixb never swaps (bucket ids differ " +
       "between the layouts)") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-mswap-ixb").toString
+    val wh = tempDir("mswap-ixb").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i, i + 1)).toDF("eid", "src", "dst")
@@ -133,7 +133,7 @@ class MirrorSwapSpec extends AnyFunSuite {
     cat.setIndexOption("msi_src", "mirror", "true")
     cat.saveGraph("msi", "chain", g, force = true)
     cat.loadGraph("msi", "chain") // registers both layouts' specs
-    val raw = spark.read.parquet(s"$wh/msi/chain/edges_nx")
+    val raw = spark.read.parquet(s"${GraphCatalog.versionDir(wh, "msi", "chain").get}/edges_nx")
     // filter at the ROOT: the plan output exposes __ixb → no swap
     val q1 = raw.filter(col("dst") === 1234L)
     assert(!q1.queryExecution.executedPlan.toString
@@ -170,7 +170,7 @@ class MirrorSwapSpec extends AnyFunSuite {
   test("mirror = false reclaims the mirror directory at the next save " +
       "even when the dataset stayed clean") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-mswap-off").toString
+    val wh = tempDir("mswap-off").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 100L).toDF("id")
     val edges = (1L until 100L).map(i => (i, i, i + 1)).toDF("eid", "src", "dst")
@@ -182,7 +182,8 @@ class MirrorSwapSpec extends AnyFunSuite {
     cat.setIndexOption("mso_src", "buckets", "4")
     cat.setIndexOption("mso_src", "mirror", "true")
     cat.saveGraph("mso", "chain", g0, force = true)
-    val mirDir = java.nio.file.Paths.get(s"$wh/mso/chain/.mirror_edges_nx")
+    def mirDir = java.nio.file.Paths.get(
+      s"${GraphCatalog.versionDir(wh, "mso", "chain").get}/.mirror_edges_nx")
     assert(java.nio.file.Files.exists(mirDir))
     // opt out, then save the UNTOUCHED loaded graph (clean-link path):
     // the disabled mirror must be dropped, not carried forward
@@ -237,7 +238,7 @@ class MirrorSwapSpec extends AnyFunSuite {
       .filter(col("dst") === 777L).select("__ixb").head().getInt(0)
     val bdir = mirDir.resolve(s"__ixb=$bucket")
     val rootStamp = Files.getLastModifiedTime(mirDir)
-    val tmp = Files.createTempDirectory("graft-mswap-bucket").resolve("b")
+    val tmp = tempDir("mswap-bucket").resolve("b")
     spark.read.parquet(bdir.toString).localCheckpoint(true)
       .write.parquet(tmp.toString)
     list(bdir).foreach(Files.delete)
@@ -256,7 +257,7 @@ class MirrorSwapSpec extends AnyFunSuite {
     import spark.implicits._
     val seed = sys.env.getOrElse("GRAFT_MSWAP_FUZZ_SEED", "20260817").toLong
     val rnd = new scala.util.Random(seed)
-    val wh = java.nio.file.Files.createTempDirectory("graft-mswapf").toString
+    val wh = tempDir("mswapf").toString
     val cat = new GraphCatalog(spark, wh)
     cat.createSchema("mf")
     for (c <- 1 to 4) {

@@ -2,12 +2,12 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** DML semantics mirror the reference's write-engine tests
   * (dml_tests.rs, duplicate_insert_test.rs, match_set/delete tests).
   */
-class MutationSpec extends AnyFunSuite {
+class MutationSpec extends AnyFunSuite with TempDirs {
   private def g = SparkFixture.fraudGraph
   private lazy val spark = SparkFixture.spark
   import GraphMutations._
@@ -89,7 +89,7 @@ class MutationSpec extends AnyFunSuite {
   }
 
   test("saveGraph to a path the graph is reading from (copy-on-write flow)") {
-    val wh = java.nio.file.Files.createTempDirectory("wh-cow").toString
+    val wh = tempDir("wh-cow").toString
     val cat = new GraphCatalog(spark, wh)
     cat.saveGraph("s", "g", g)
     // load lazily, mutate copy-on-write, save back to the SAME path
@@ -103,7 +103,7 @@ class MutationSpec extends AnyFunSuite {
   }
 
   test("saveGraph drops stale label datasets of removed labels") {
-    val wh = java.nio.file.Files.createTempDirectory("wh-stale").toString
+    val wh = tempDir("wh-stale").toString
     val cat = new GraphCatalog(spark, wh)
     cat.saveGraph("s", "g", g)
     val withoutPurchase = new PropertyGraph(g.nodeTables,
@@ -114,7 +114,7 @@ class MutationSpec extends AnyFunSuite {
   }
 
   test("catalog roundtrip of a mutated graph keeps the version") {
-    val wh = java.nio.file.Files.createTempDirectory("wh-mut").toString
+    val wh = tempDir("wh-mut").toString
     val cat = new GraphCatalog(spark, wh)
     val g2 = setNodeProps(g, "Account", col("id") === 2,
       Map("balance" -> lit(777.0)))

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.plans.BucketPrune
 
 /** Frontier-driven bucket pruning through the var-length path loop
@@ -16,7 +16,7 @@ import graft.plans.BucketPrune
   * one-time full-edge checkpoint. Results must be identical with
   * pruning disabled, across all path semantics.
   */
-class PathBucketPruneSpec extends AnyFunSuite {
+class PathBucketPruneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   /** 4000-node chain 1→2→…→4000 persisted with edges_nx bucketed 8-way
@@ -25,7 +25,7 @@ class PathBucketPruneSpec extends AnyFunSuite {
     */
   private def chainFixture(): PropertyGraph = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-pathbp").toString
+    val wh = tempDir("pathbp").toString
     val cat = new GraphCatalog(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i, i + 1)).toDF("eid", "src", "dst")
@@ -133,7 +133,7 @@ class PathBucketPruneSpec extends AnyFunSuite {
   test("GQL var-length route reaches the pruned loop (compiler wiring, " +
       "gql36's shape)") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-pathbp-gql").toString
+    val wh = tempDir("pathbp-gql").toString
     val gls = graft.GraphLiteSpark.open(spark, wh)
     val nodes = (1L to 4000L).toDF("id")
     val edges = (1L until 4000L).map(i => (i, i + 1, i)).toDF("src", "dst", "eid")
@@ -163,7 +163,7 @@ class PathBucketPruneSpec extends AnyFunSuite {
     import spark.implicits._
     val seed = sys.env.getOrElse("GRAFT_PATHBP_FUZZ_SEED", "20260818").toLong
     val rnd = new scala.util.Random(seed)
-    val wh = java.nio.file.Files.createTempDirectory("graft-pathbpf").toString
+    val wh = tempDir("pathbpf").toString
     val cat = new GraphCatalog(spark, wh)
     cat.createSchema("pf")
     for (c <- 1 to 6) {

@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Pins the compiled-plan cache semantics the hop compiler relies on
   * (PropertyGraph.cachedPlan): the oriented edge-union lineage is built
@@ -10,7 +10,7 @@ import graft.SparkFixture
   * instance whose cache starts empty, so no query can ever observe a
   * stale union built over the pre-mutation edge tables.
   */
-class PlanCacheSpec extends AnyFunSuite {
+class PlanCacheSpec extends AnyFunSuite with TempDirs {
 
   test("cachedPlan builds once per key and never re-evaluates the builder") {
     val g = SparkFixture.fraudGraph
@@ -49,7 +49,7 @@ class PlanCacheSpec extends AnyFunSuite {
   }
 
   test("DML yields a fresh graph instance with an empty plan cache") {
-    val t = SparkFixture.gqlSession()
+    val t = gqlSession()
     val before = t.graph
     before.cachedPlan("sentinel") { before.edgeScan("Transaction") }
     val n0 = t.gql(

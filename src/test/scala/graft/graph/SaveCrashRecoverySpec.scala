@@ -2,24 +2,24 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, Path}
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
-/** Crash-atomicity of the graph-save swap (VERDICT r16 #1).
+/** Crash-atomicity of the graph-save commit (VERDICT r16 #1).
   *
-  * [[GraphCatalog.saveGraph]] promotes its staging dir through
-  * rename-aside (live → `.old_<name>`, staging → live, delete `.old` —
-  * the IncrementalDedup compaction protocol), and a new catalog over
-  * the warehouse rolls any interrupted swap forward or back at open.
+  * [[GraphCatalog.saveGraph]] writes each version into a new directory
+  * `<graph>/v<id>/` and commits it with ONE atomic write of the
+  * `<graph>/_current` pointer (a `.tmp_` sibling renamed over it). A new
+  * catalog over the warehouse deletes what the pointer does not name.
   * Each test constructs the exact on-disk aftermath of a kill at one
-  * protocol point (the PipelineSpec crash-simulation idiom — the state
-  * a SIGKILL leaves is just files, so we build it directly) and
+  * point of the protocol (the PipelineSpec crash-simulation idiom — the
+  * state a SIGKILL leaves is just files, so we build it directly) and
   * asserts the next catalog open recovers a complete graph: the NEW
-  * version when the staging had committed (its `_meta` marker written),
-  * the OLD version otherwise. The reference covers this class of crash
+  * version once the pointer names it, the OLD version otherwise, with
+  * every other version gone. The reference covers this class of crash
   * with WAL recovery (graphlite/src/txn/recovery.rs); this is the
-  * copy-on-write analog.
+  * immutable-version analog.
   */
-class SaveCrashRecoverySpec extends AnyFunSuite {
+class SaveCrashRecoverySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private def mkGraph(n: Int) = {
@@ -29,24 +29,36 @@ class SaveCrashRecoverySpec extends AnyFunSuite {
   }
 
   private def fixture(name: String = "g1"): (GraphCatalog, String) = {
-    val wh = Files.createTempDirectory("graft-crash").toString
+    val wh = tempDir("crash").toString
     val cat = new GraphCatalog(spark, wh)
     cat.createSchema("s")
-    cat.saveGraph("s", name, mkGraph(5)) // live v1: 5 rows
+    cat.saveGraph("s", name, mkGraph(5)) // current v1: 5 rows
     (cat, wh)
   }
 
-  /** Build a COMPLETE v2 staging dir for `name` (the state just before
-    * the swap begins): save v2 under a scratch name and rename that
-    * saved dir — it has exactly a staging's layout (datasets + `_meta`
-    * marker last).
+  private def entries(p: Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(p)
+    try s.iterator.asScala.map(_.getFileName.toString).toSeq.sorted
+    finally s.close()
+  }
+
+  private def current(wh: String, name: String = "g1"): Path =
+    Paths.get(GraphCatalog.versionDir(wh, "s", name).get)
+
+  /** Build a COMPLETE version of `name` holding `rows` rows that no
+    * pointer names (the state just before the commit): save it under a
+    * scratch graph and move its version directory over, numbered above
+    * every version already there.
     */
-  private def plantCompleteStaging(cat: GraphCatalog, wh: String,
-      name: String, rows: Int, nanos: Long = 12345L): Path = {
-    cat.saveGraph("s", s"__scratch_$name", mkGraph(rows))
-    val staging = Paths.get(s"$wh/s/.staging_${name}_$nanos")
-    Files.move(Paths.get(s"$wh/s/__scratch_$name"), staging)
-    staging
+  private def plantVersion(cat: GraphCatalog, wh: String, name: String,
+      rows: Int): Path = {
+    cat.saveGraph("s", "scratch", mkGraph(rows))
+    val g = Files.createDirectories(Paths.get(s"$wh/s/$name"))
+    val planted = Files.move(current(wh, "scratch"),
+      g.resolve(s"v${entries(g).count(_.startsWith("v")) + 1}"))
+    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(s"$wh/s/scratch").toFile)
+    planted
   }
 
   private def rowCount(wh: String, name: String): Long = {
@@ -54,83 +66,72 @@ class SaveCrashRecoverySpec extends AnyFunSuite {
     cat2.loadGraph("s", name).nodeTables("user").count()
   }
 
-  test("clean save leaves no .old or staging leftovers") {
+  test("a reopen keeps only the pointer and its version") {
     val (cat, wh) = fixture()
+    val v1 = current(wh)
     cat.saveGraph("s", "g1", mkGraph(9))
-    val leftovers = Files.list(Paths.get(s"$wh/s"))
-    val names = try {
-      import scala.jdk.CollectionConverters._
-      leftovers.iterator.asScala.map(_.getFileName.toString).toSeq
-    } finally leftovers.close()
-    assert(names.sorted == Seq("g1"), s"unexpected entries: $names")
+    // the superseded version stays readable until the next open
+    assert(Files.exists(v1))
+    assert(entries(Paths.get(s"$wh/s")) == Seq("g1"))
     assert(rowCount(wh, "g1") == 9L)
+    assert(entries(Paths.get(s"$wh/s/g1")) ==
+      Seq(GraphCatalog.Current, current(wh).getFileName.toString).sorted)
   }
 
-  test("kill mid-staging (no _meta marker): live v1 intact, orphan " +
-      "staging swept") {
+  test("killed version write: v1 current, version swept") {
     val (_, wh) = fixture()
-    // aftermath: a partial staging — dataset dir present, NO _meta
-    val staging = Paths.get(s"$wh/s/.staging_g1_99999")
-    Files.createDirectories(staging.resolve("nodes_user"))
-    Files.writeString(staging.resolve("nodes_user/part-0.parquet"), "junk")
+    // aftermath: a partial version — dataset dir present, no pointer to it
+    val partial = Paths.get(s"$wh/s/g1/vpartial")
+    Files.createDirectories(partial.resolve("nodes_user"))
+    Files.writeString(partial.resolve("nodes_user/part-0.parquet"), "junk")
     assert(rowCount(wh, "g1") == 5L) // v1 survives
-    assert(!Files.exists(staging), "incomplete staging must be deleted")
-    assert(!Files.exists(Paths.get(s"$wh/s/.old_g1")))
+    assert(!Files.exists(partial), "an unnamed version must be deleted")
   }
 
-  test("kill between rename-aside and promote: rolls FORWARD to the " +
-      "committed staging") {
+  test("torn .tmp_ pointer: v1 current, temp swept") {
     val (cat, wh) = fixture()
-    val staging = plantCompleteStaging(cat, wh, "g1", 9)
-    // aftermath of the first rename: live moved aside, staging complete
-    Files.move(Paths.get(s"$wh/s/g1"), Paths.get(s"$wh/s/.old_g1"))
-    assert(rowCount(wh, "g1") == 9L) // v2 promoted
-    assert(!Files.exists(staging))
-    assert(!Files.exists(Paths.get(s"$wh/s/.old_g1")))
+    val v2 = plantVersion(cat, wh, "g1", 9)
+    // aftermath of a kill inside the pointer write: the temp sibling
+    // holds part of v2's name and was never renamed over `_current`
+    val tmp = Paths.get(s"$wh/s/g1/.tmp_${GraphCatalog.Current}_777")
+    Files.writeString(tmp, v2.getFileName.toString.take(1))
+    assert(rowCount(wh, "g1") == 5L)
+    assert(!Files.exists(tmp) && !Files.exists(v2))
   }
 
-  test("kill between rename-aside and promote with an INCOMPLETE " +
-      "staging: rolls BACK to .old") {
-    val (_, wh) = fixture()
-    Files.move(Paths.get(s"$wh/s/g1"), Paths.get(s"$wh/s/.old_g1"))
-    val staging = Paths.get(s"$wh/s/.staging_g1_55555")
-    Files.createDirectories(staging.resolve("nodes_user")) // no _meta
-    assert(rowCount(wh, "g1") == 5L) // v1 restored
-    assert(!Files.exists(staging))
-    assert(!Files.exists(Paths.get(s"$wh/s/.old_g1")))
-  }
-
-  test("kill between promote and .old cleanup: live v2 wins, backup " +
-      "dropped") {
+  test("version written, not pointed to: v1 current") {
     val (cat, wh) = fixture()
-    val staging = plantCompleteStaging(cat, wh, "g1", 9)
-    Files.move(Paths.get(s"$wh/s/g1"), Paths.get(s"$wh/s/.old_g1"))
-    Files.move(staging, Paths.get(s"$wh/s/g1")) // promote happened
+    val v2 = plantVersion(cat, wh, "g1", 9)
+    assert(rowCount(wh, "g1") == 5L)
+    assert(!Files.exists(v2))
+  }
+
+  test("pointer written: v2 current, v1 swept at open") {
+    val (cat, wh) = fixture()
+    val v1 = current(wh)
+    val v2 = plantVersion(cat, wh, "g1", 9)
+    // aftermath of a kill right after the rename: v1 was never deleted
+    Files.writeString(Paths.get(s"$wh/s/g1/${GraphCatalog.Current}"),
+      v2.getFileName.toString)
     assert(rowCount(wh, "g1") == 9L)
-    assert(!Files.exists(Paths.get(s"$wh/s/.old_g1")))
+    assert(Files.exists(v2) && !Files.exists(v1))
   }
 
-  test("recovery keys on the LAST underscore: graph names with " +
-      "underscores and trailing digits recover to the right dir") {
-    val wh = Files.createTempDirectory("graft-crash").toString
-    val cat = new GraphCatalog(spark, wh)
-    cat.createSchema("s")
-    cat.saveGraph("s", "g_2", mkGraph(5))
-    val staging = plantCompleteStaging(cat, wh, "g_2", 9)
-    Files.move(Paths.get(s"$wh/s/g_2"), Paths.get(s"$wh/s/.old_g_2"))
-    assert(rowCount(wh, "g_2") == 9L)
-    assert(!Files.exists(staging))
-    assert(!Files.exists(Paths.get(s"$wh/s/.old_g_2")))
-  }
-
-  test("newest complete staging wins when several survive") {
+  test("uncommitted first save leaves no graph") {
     val (cat, wh) = fixture()
-    val s1 = plantCompleteStaging(cat, wh, "g1", 7, nanos = 12345L)
-    val s2 = plantCompleteStaging(cat, wh, "g1", 9, nanos = 99999L)
-    Files.move(Paths.get(s"$wh/s/g1"), Paths.get(s"$wh/s/.old_g1"))
-    assert(rowCount(wh, "g1") == 9L) // nanos 99999 > 12345
-    assert(!Files.exists(s1) && !Files.exists(s2))
-    assert(!Files.exists(Paths.get(s"$wh/s/.old_g1")))
+    // a first save of g_2 killed before its pointer: a version, no pointer
+    plantVersion(cat, wh, "g_2", 9)
+    val cat2 = new GraphCatalog(spark, wh)
+    assert(cat2.listGraphs("s") == Seq("g1"))
+    assert(!Files.exists(Paths.get(s"$wh/s/g_2")))
+  }
+
+  test("the pointer, not recency, picks the version") {
+    val (cat, wh) = fixture()
+    val v1 = current(wh)
+    val newer = Seq(7, 9).map(plantVersion(cat, wh, "g1", _))
+    assert(rowCount(wh, "g1") == 5L)
+    assert(Files.exists(v1) && newer.forall(!Files.exists(_)))
   }
 
   // ---- metadata torn-write protection: catalog files (`_indexes`,

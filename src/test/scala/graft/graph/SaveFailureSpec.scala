@@ -2,20 +2,20 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** The failure path of a concurrent save: the first failed write cancels
-  * its peers' jobs, the save's staging directory is deleted on the spot
+  * its peers' jobs, the save's version directory is deleted on the spot
   * (not left for recovery at the next catalog open), and the caller's
   * job group and description come back.
   */
-class SaveFailureSpec extends AnyFunSuite {
+class SaveFailureSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   test("one write throws: its peer jobs are cancelled, no staging directory " +
       "is left behind, and the caller's job group comes back") {
     val sc = spark.sparkContext
-    val wh = java.nio.file.Files.createTempDirectory("graft-savefail").toString
+    val wh = tempDir("savefail").toString
     val cat = new GraphCatalog(spark, wh)
     cat.createSchema("sf")
     // the peer needs ~10 s if left to run (and stops at its next row once
@@ -67,8 +67,8 @@ class SaveFailureSpec extends AnyFunSuite {
       assert(!saveJobs.exists(_._2 == "succeeded"),
         s"a peer job of the failed save ran to completion: $saveJobs")
       assert(secs < 8.0, s"the save waited $secs s for its peer instead of cancelling it")
-      val left = new java.io.File(s"$wh/sf").list().filter(_.startsWith(".staging_"))
-      assert(left.isEmpty, s"staging left behind: ${left.mkString(", ")}")
+      val left = new java.io.File(s"$wh/sf").list()
+      assert(left.isEmpty, s"version left behind: ${left.mkString(", ")}")
       assert(!new java.io.File(s"$wh/sf/g").exists(), "a failed first save has no live graph")
       assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
       assert(sc.getLocalProperty("spark.job.description") == "caller description")

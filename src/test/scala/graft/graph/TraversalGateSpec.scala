@@ -2,7 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** The traversal local-fast-path gate must not pay a full count job per
   * call on large graphs (r17 watch item #1): statistics that already
@@ -10,7 +10,7 @@ import graft.SparkFixture
   * path with ZERO jobs, small frames count exactly ONCE (memoized), and
   * the gate's decision never changes traversal results.
   */
-class TraversalGateSpec extends AnyFunSuite {
+class TraversalGateSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   /** Jobs started while `body` runs, with the listener bus drained on
@@ -39,7 +39,7 @@ class TraversalGateSpec extends AnyFunSuite {
     */
   private def parquetGraph(): (PropertyGraph, java.nio.file.Path) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-gate")
+    val dir = tempDir("gate")
     val n = 3000L
     (0L until n).toDF("id").write.parquet(s"$dir/nodes")
     (0L until n - 1L).map(i => (i, i + 1)).toDF("src", "dst")

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.dedup.IncrementalDedup
 
 /** Retry idempotence of the cross-run dedup entry points (r18): a batch
@@ -12,11 +12,11 @@ import graft.dedup.IncrementalDedup
   * Other batches' entries still drop duplicates as before, and legacy
   * exact-state files (no rid column) keep the old always-drop rule.
   */
-class IncrementalRetrySpec extends AnyFunSuite {
+class IncrementalRetrySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private def state() =
-    java.nio.file.Files.createTempDirectory("graft-retry").toString
+    tempDir("retry").toString
 
   test("dedupeExact: re-running a committed batch returns the same " +
       "admissions; other batches still dedup against it") {

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.dedup.{Dedup, IncrementalDedup}
 
 /** Differential fuzz for the CROSS-RUN near dedup (r18, verdict #2's
@@ -17,7 +17,7 @@ import graft.dedup.{Dedup, IncrementalDedup}
   * Seed env-tunable via GRAFT_NEARDEDUP_FUZZ_SEED, cases via
   * GRAFT_NEARDEDUP_FUZZ_N.
   */
-class NearDedupFuzzSpec extends AnyFunSuite {
+class NearDedupFuzzSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   private val seed =
@@ -103,8 +103,7 @@ class NearDedupFuzzSpec extends AnyFunSuite {
     for (c <- 1 to nCases) {
       val run1 = (1L to (20L + rnd.nextInt(20))).map(doc)
       val run2 = (1000L to (1020L + rnd.nextInt(20))).map(doc)
-      val statePath = java.nio.file.Files
-        .createTempDirectory("graft-nearfuzz").toString
+      val statePath = tempDir("nearfuzz").toString
 
       val (want1, st1) = modelRun(run1, Seq.empty)
       val (want2, _) = modelRun(run2, st1)

@@ -2,12 +2,12 @@ package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.dedup.Dedup
 import graft.similarity.Similarity
 import graft.text.TextAnalysis
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
   test("token counting edge cases") {
@@ -443,19 +443,32 @@ class PipelineSpec extends AnyFunSuite {
     // and the BMP path through the same generator decodes identically
     val bmp = RealCodec.decodeRaster(RealCodec.encodeBmp24(9, 5, px))
     assert(bmp.pixels.sameElements(img.pixels))
-    // the decode path must run with ImageIO's memory-backed stream cache:
-    // the disk-backed default creates+deletes a temp file per read/write,
-    // which serialized 32 concurrent decode tasks on filesystem churn
-    // (m02's inverse core scaling, r20 verdict #3). RealCodec's class
-    // init turns it off; touching the codec above guarantees init ran.
-    assert(!javax.imageio.ImageIO.getUseCache,
-      "ImageIO file cache re-enabled - m02's 32-core collapse returns")
+    // the codec must run on memory-backed image streams: the disk-backed
+    // default creates+deletes a temp file per read/write, which
+    // serialized 32 concurrent decode tasks on filesystem churn (m02's
+    // inverse core scaling, r20 verdict #3) — and it must do so without
+    // flipping ImageIO's JVM-wide switch. With the file cache ON and its
+    // directory gone, any cached stream fails to open.
+    import javax.imageio.ImageIO
+    val (useCache, cacheDir) = (ImageIO.getUseCache, ImageIO.getCacheDirectory)
+    val gone = tempDir("imageio-cache").toFile
+    try {
+      ImageIO.setUseCache(true)
+      ImageIO.setCacheDirectory(gone)
+      assert(gone.delete())
+      val again = RealCodec.decodeRaster(RealCodec.encodePng(9, 5, px))
+      assert(again.pixels.sameElements(img.pixels),
+        "ImageIO file cache in the codec path - m02's 32-core collapse returns")
+    } finally {
+      ImageIO.setCacheDirectory(cacheDir)
+      ImageIO.setUseCache(useCache)
+    }
   }
 
   test("incremental dedup drops cross-run duplicates") {
     import spark.implicits._
     import graft.dedup.IncrementalDedup
-    val state = java.nio.file.Files.createTempDirectory("dedup-state").toString
+    val state = tempDir("dedup-state").toString
     val b1 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "completely different text about other things entirely ok"))
       .toDF("doc_id", "text")
@@ -480,8 +493,8 @@ class PipelineSpec extends AnyFunSuite {
       "commit and output commit (r15 verdict #7)") {
     import spark.implicits._
     import graft.dedup.IncrementalDedup
-    val state = java.nio.file.Files.createTempDirectory("commit-state").toString
-    val outRoot = java.nio.file.Files.createTempDirectory("commit-out").toString
+    val state = tempDir("commit-state").toString
+    val outRoot = tempDir("commit-out").toString
     val dup = "alpha beta gamma delta epsilon zeta eta theta"
     val a = Seq((1L, dup), (2L, "first batch unique text entirely"))
       .toDF("doc_id", "text")
@@ -529,7 +542,7 @@ class PipelineSpec extends AnyFunSuite {
   test("incremental near-dedup uses persisted LSH buckets across runs") {
     import spark.implicits._
     import graft.dedup.IncrementalDedup
-    val state = java.nio.file.Files.createTempDirectory("neardup-state").toString
+    val state = tempDir("neardup-state").toString
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val n1 = Seq((1L, base),
@@ -556,7 +569,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("transformWithState running totals equal the v1 port and batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evs4").toString
+    val dir = tempDir("evs4").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -585,7 +598,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("stream-stream join with watermarks equals the batch join") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evs3").toString
+    val dir = tempDir("evs3").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -605,7 +618,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("event-time timers close sessions that match batch session windows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evs6").toString
+    val dir = tempDir("evs6").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -640,7 +653,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("stream-stream anti-join and watermark dedup equal batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evs5").toString
+    val dir = tempDir("evs5").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -677,7 +690,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("system procedures") {
     val gls = graft.GraphLiteSpark.open(spark,
-      java.nio.file.Files.createTempDirectory("wh-proc").toString)
+      tempDir("wh-proc").toString)
     gls.catalog.createSchema("s1")
     val sess = gls.session("alice")
     assert(sess.call("gql.list_schemas").collect().map(_.getString(0)).toSeq == Seq("s1"))
@@ -814,7 +827,7 @@ class PipelineSpec extends AnyFunSuite {
   test("exact-KNN oracle cache hits per dataset and invalidates on rewrite") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-oracle-spec")
+    val dir = tempDir("oracle-spec")
     def writeEmb(seed: Int): Unit =
       spark.range(40).select(col("id").as("vec_id"),
           expr(s"transform(sequence(0, 7), j -> cast(sin(id * $seed + j) as float))")

@@ -2,19 +2,19 @@ package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** The Structured Streaming pipeline stages (`writeStream` queries over
   * the event and document streams), each checked against its batch
   * equivalent.
   */
-class StreamingPipelineSpec extends AnyFunSuite {
+class StreamingPipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
   /** The sf0.001 test tables the streams replay. */
   private val data = "/root/testdata/sf0.001"
 
   test("streaming windowed counts equal batch") {
-    val dir = java.nio.file.Files.createTempDirectory("evs").toString
+    val dir = tempDir("evs").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$data/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -33,11 +33,11 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("streaming document dedup equals batch and excludes history") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("dedupstream").toString
+    val dir = tempDir("dedupstream").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$data/documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    val state = java.nio.file.Files.createTempDirectory("dedupstate").toString
+    val state = tempDir("dedupstate").toString
     val batchDocs = spark.read.parquet(dir)
       .select($"doc_id", $"text")
       .withColumn("ts", timestamp_micros($"doc_id" * 1000000L))
@@ -78,16 +78,16 @@ class StreamingPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import java.nio.file.{Files, Paths}
-    val in = Files.createTempDirectory("sdcr-in").toString
-    val state = Files.createTempDirectory("sdcr-state").toString
-    val cp = Files.createTempDirectory("sdcr-cp").toString
-    val out = Files.createTempDirectory("sdcr-out").toString
+    val in = tempDir("sdcr-in").toString
+    val state = tempDir("sdcr-state").toString
+    val cp = tempDir("sdcr-cp").toString
+    val out = tempDir("sdcr-out").toString
 
     // one parquet FILE per ingest batch: maxFilesPerTrigger=1 makes each
     // file its own micro-batch, so the stop points below land between
     // and inside micro-batches
     def addFile(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = Files.createTempDirectory("sdcr-tmp").toString
+      val tmp = tempDir("sdcr-tmp").toString
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -157,7 +157,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("streaming PII scrub equals batch (stateless pipeline stage)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("docsstream").toString
+    val dir = tempDir("docsstream").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$data/documents.parquet"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
@@ -178,7 +178,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
 
   test("flatMapGroupsWithState running totals equal batch aggregation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evs2").toString
+    val dir = tempDir("evs2").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$data/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))

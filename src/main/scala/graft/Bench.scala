@@ -273,16 +273,18 @@ object Bench {
     // Written to a SIDECAR file, not the stdout line: the r17 board
     // (125 queries) pushed the line past the driver's 2 KB tail capture
     // and nulled `parsed` — the layout map was the biggest non-query
-    // term. BENCH_LAYOUT.json describes this run's inputs and sits in
-    // the repo root for the same cross-round reading.
+    // term. target/BENCH_LAYOUT.json describes this run's inputs, beside
+    // the build output so a run leaves the checkout clean (the committed
+    // BENCH_LAYOUT.json is the round-21 record).
     val layoutJson = Tables.all.map { t =>
       val (rows, files, rgs, bytes) = parquetLayout(s"$sfDir/$t.parquet")
       s""""$t":[$rows,$files,$rgs,$bytes]"""
     }.mkString(s"""{"sf":"$sfTag","layout":{""", ",", "}}")
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_LAYOUT.json"),
-      (layoutJson + "\n").getBytes("UTF-8"))
-    catch { case e: Exception =>
+    try {
+      val sidecar = java.nio.file.Paths.get("target", "BENCH_LAYOUT.json")
+      java.nio.file.Files.createDirectories(sidecar.getParent)
+      java.nio.file.Files.write(sidecar, (layoutJson + "\n").getBytes("UTF-8"))
+    } catch { case e: Exception =>
       System.err.println(s"[bench] layout sidecar unwritable: $e")
     }
     // ambient-noise band: the totals of the two timing passes over the

@@ -344,14 +344,15 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
   }
 
   /** Compile + return a GQL query as a DataFrame (lazy; actions execute
-    * distributed).
+    * distributed). A seeded first hop runs its one bounded adjacency
+    * job here (see Compiler `seededAdjacency`); [[explain]] does not.
     */
   def gql(query: String): DataFrame = {
     touch()
     requirePerm("SELECT")
     val q = Parser.parse(stripTrailingSemis(query))
     (new Compiler(queryGraph(q), sessionParams, f64Mode,
-      sessionTz = tzName).compile(q))
+      sessionTz = tzName, lookups = true).compile(q))
   }
 
   private def tzName: String = sessionTimeZone.getOrElse("UTC")
@@ -506,7 +507,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
     requirePerm("SELECT")
     def compile() = (new Compiler(queryGraph(q), sessionParams, f64Mode,
       if (resultCacheOn) Some((subqueryCache, cacheEpoch)) else None,
-      sessionTz = tzName).compile(q))
+      sessionTz = tzName, lookups = true).compile(q))
     // queries with non-deterministic functions (NOW, CURRENT_DATE, …)
     // must re-evaluate every time — a cached result would freeze the
     // clock for the TTL (result_cache.rs replays blindly; we refuse)
@@ -536,7 +537,7 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
       case QueryStmt(q) =>
         requirePerm("SELECT")
         (new Compiler(queryGraph(q), sessionParams, f64Mode,
-          sessionTz = tzName).compile(q))
+          sessionTz = tzName, lookups = true).compile(q))
 
       case InsertStmt(paths) =>
         requirePerm("INSERT")
@@ -2162,11 +2163,12 @@ final class GqlSession(private[graft] val gls: GraphLiteSpark, val user: String)
     * the Catalyst-optimized logical plan, and the final physical plan.
     *
     * Plan-only by construction: this compile runs WITHOUT the subquery
-    * cache, so an uncorrelated scalar subquery shows its lazy
-    * crossJoin(broadcast(…)) shape and EXPLAIN never launches a Spark
-    * job — where the executed statement (RESULT_CACHE ON) may instead
-    * inline the memoized scalar as a literal. The shapes are
-    * value-equivalent; CacheSpec pins the zero-job property.
+    * cache and without adjacency lookups, so an uncorrelated scalar
+    * subquery shows its lazy crossJoin(broadcast(…)) shape, a seeded
+    * hop its join plan, and EXPLAIN never launches a Spark job — where
+    * the executed statement may instead inline the memoized scalar as a
+    * literal (RESULT_CACHE ON) or join the hop's collected edges. The
+    * shapes are value-equivalent; CacheSpec pins the zero-job property.
     */
   def explain(query: String): String = {
     def timed[A](body: => A): (A, Double) = {

@@ -549,6 +549,9 @@ object PlanAudit {
       import org.apache.spark.sql.functions.col
       val wh = java.nio.file.Files.createTempDirectory("graft-pa-bprune")
         .toString
+      // the audit's scratch warehouse goes when the audit's JVM does
+      sys.addShutdownHook(
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh)))
       val cat = new graft.graph.GraphCatalog(spark, wh)
       val nodes = spark.range(1, 4001)
         .selectExpr("id", "cast(id % 97 as double) as bal")

@@ -270,7 +270,12 @@ final class Compiler(graph: PropertyGraph,
       * …) picks the zone up from spark.sql.session.timeZone, which the
       * session pins during analysis (GqlSession.withTz).
       */
-    sessionTz: String = "UTC") {
+    sessionTz: String = "UTC",
+    /** An executing compile: a seeded first hop may run one bounded job
+      * to collect its adjacency ([[seededAdjacency]]). Plan-only
+      * compiles (EXPLAIN) leave it off and stay job-free.
+      */
+    lookups: Boolean = false) {
 
   sealed trait Binding
   /** A node variable constrained to ALL of `labels` (multi-label pattern
@@ -1859,14 +1864,16 @@ final class Compiler(graph: PropertyGraph,
     val startBound = p.start.variable.exists(ctx.bindings.contains)
     val last = p.hops.last._2
     val lastBound = last.variable.exists(ctx.bindings.contains)
-    // Estimated seed cardinality of each end: a bound variable anchors at
-    // ~1 row; otherwise the label's ANALYZE rowcount (memoized on the
-    // graph), cut 10× per inline property predicate. Unknown labels
-    // (label-less ends) estimate as the whole node space. Reversing is
-    // worthwhile only with clear margin (2×) — ties keep source order,
-    // and either orientation returns identical rows (equi-join chain).
+    // Estimated seed cardinality of each end: a bound variable or an
+    // inline `id` (an identity) anchors at ~1 row; otherwise the label's
+    // ANALYZE rowcount (memoized on the graph), cut 10× per inline
+    // property predicate. Unknown labels (label-less ends) estimate as
+    // the whole node space. Reversing is worthwhile only with clear
+    // margin (2×) — ties keep source order, so a start anchored at one
+    // row stays the start without counting the other end — and either
+    // orientation returns identical rows (equi-join chain).
     def estimate(np: NodePattern, bound: Boolean): Double = {
-      if (bound) return 1.0
+      if (bound || np.props.exists(_._1 == "id")) return 1.0
       // a label-less end would need every label's count to estimate —
       // treat it as maximally unselective instead of paying those jobs
       val base = np.labels.headOption
@@ -1875,7 +1882,8 @@ final class Compiler(graph: PropertyGraph,
         .getOrElse(Double.MaxValue)
       base * math.pow(0.1, np.props.size)
     }
-    estimate(last, lastBound) * 2.0 < estimate(p.start, startBound)
+    val start = estimate(p.start, startBound)
+    start > 1.0 && estimate(last, lastBound) * 2.0 < start
   }
 
   private def reversePath(p: PathPattern): PathPattern = {
@@ -1948,6 +1956,10 @@ final class Compiler(graph: PropertyGraph,
 
     // start node
     val startVar = path.start.variable.getOrElse(fresh("n"))
+    // a path reversed to anchor at its seeded end keeps its join plan:
+    // the end-keyed read is the mirror layout's (MirrorSwap)
+    val adjacency =
+      if (path1 ne path0) None else seededAdjacency(path, startVar, ctx, df)
     // Constraint-free start elision (mirror of the dst-node elision in
     // hop): an anonymous-or-never-read start with no labels, props, or
     // prior frame, followed by a rigid first hop, needs no node-table
@@ -1959,7 +1971,14 @@ final class Compiler(graph: PropertyGraph,
     var startElided = false
     val firstEdgeRigid =
       path.hops.headOption.exists(_._1.quantifier.isEmpty)
-    if (!ctx.bindings.contains(startVar) && df.isEmpty && firstEdgeRigid &&
+    adjacency.foreach { a =>
+      // a seeded start is elided by the same invariant: its adjacency
+      // rows carry its id, and their type guarantees its label
+      startElided = true
+      ctx = Ctx(ctx.bindings + (startVar -> NodeBinding(Seq(a.label))))
+    }
+    if (adjacency.isEmpty && !ctx.bindings.contains(startVar) && df.isEmpty &&
+        firstEdgeRigid &&
         path.start.props.isEmpty && path.start.labels.isEmpty &&
         usedProps.getOrElse(startVar, Set.empty).isEmpty) {
       val e0 = path.hops.head._1
@@ -1996,14 +2015,15 @@ final class Compiler(graph: PropertyGraph,
       inferStart(path.start, path.hops.headOption.map(_._1)) match {
         case Some(labels) =>
           val scan = scanNodeMulti(labels, startVar, path.start.props, ctx)
-          val rows = labels.filter(graph.nodeTables.contains)
+          // counted only to size a cross join's broadcast
+          lazy val rows = labels.filter(graph.nodeTables.contains)
             .map(graph.nodeCount).sum
           df = Some(df.fold(scan)(
             _.crossJoin(graph.broadcastIfSmallRows(rows, scan))))
           ctx = Ctx(ctx.bindings + (startVar -> NodeBinding(labels)))
         case None =>
           val scan = scanAllLabels(startVar, path.start.props, ctx)
-          val rows = graph.nodeTables.keys.map(graph.nodeCount).sum
+          lazy val rows = graph.nodeTables.keys.map(graph.nodeCount).sum
           df = Some(df.fold(scan)(
             _.crossJoin(graph.broadcastIfSmallRows(rows, scan))))
           ctx = Ctx(ctx.bindings + (startVar -> UnionNode))
@@ -2030,7 +2050,8 @@ final class Compiler(graph: PropertyGraph,
         } else None
       val (d2, c2, nv) =
         hop(df.getOrElse(singleRow), ctx, prevVar, edge, node, sem,
-          hopPathVar, hopEdgeArr, elidedStart = startElided && i == 0)
+          hopPathVar, hopEdgeArr, elidedStart = startElided && i == 0,
+          adjacency = if (i == 0) adjacency else None)
       df = Some(d2); ctx = c2; prevVar = nv; nodeVarsB += nv
     }
     quantPathVar.foreach(pv =>
@@ -2218,13 +2239,70 @@ final class Compiler(graph: PropertyGraph,
     d
   }
 
-  /** One hop: join edge table (oriented), then bind/join the target node. */
+  /** The first hop of a path, collected: the rows of edge type `t`
+    * whose start endpoint is the seed, and their other endpoints `keys`
+    * (values of type `keyType`). */
+  private case class Adjacency(t: String, label: String, edges: DataFrame,
+      keys: Seq[Any], keyType: org.apache.spark.sql.types.DataType)
+
+  /** A seeded first hop as a key lookup — the reference's adjacency-list
+    * read (`adjacency_out`/`adjacency_in`). Applies to an executing
+    * compile of a path whose start (as written)
+    *  - is matched only by `{id: K}`, K a literal or a `$param`,
+    *  - has no prior binding and nothing else of it is read, and
+    *  - has the label of the endpoint of a single rigid edge type.
+    * Its node scan is elided (every edge endpoint exists, as the start
+    * and destination elisions assume), and ONE job collects the edge
+    * rows whose endpoint is K — a bucket-pruned read on a layout keyed
+    * on that endpoint. The hop then joins those driver-held rows, and
+    * reads the destination only through [[graft.graph.KeyIn]] on their
+    * other endpoints. None (today's join plan) past [[KeyIn.Limit]]
+    * rows.
+    */
+  private def seededAdjacency(path: PathPattern, startVar: String, ctx: Ctx,
+      df: Option[DataFrame]): Option[Adjacency] = {
+    import graft.graph.KeyIn
+    val start = path.start
+    val seed = start.props match {
+      case Seq(("id", v @ (_: NumLit | _: StrLit | _: Param))) => Some(v)
+      case _ => None
+    }
+    for {
+      v <- seed
+      if lookups && df.isEmpty && !ctx.bindings.contains(startVar)
+      if usedProps.getOrElse(startVar, Set.empty).subsetOf(Set("id"))
+      (e0, _) <- path.hops.headOption
+      if e0.quantifier.isEmpty && e0.types.size == 1 && e0.direction != Undirected
+      t = e0.types.head
+      (et, edges) <- graph.edgeTables.get(t)
+      (from, to, label) =
+        if (e0.direction == Out) ("src", "dst", et.srcLabel)
+        else ("dst", "src", et.dstLabel)
+      if start.labels.isEmpty || start.labels == Seq(label)
+      nodes <- graph.nodeTables.get(label)
+      if nodes.columns.contains("id") && edges.columns.contains(from) &&
+        edges.columns.contains(to)
+      if nodes.schema("id").dataType == edges.schema(from).dataType
+      hit = edges.filter(col(from) === compileExpr(v, ctx))
+      rows <- KeyIn.collectAtMost(hit, KeyIn.Limit)
+    } yield {
+      import scala.jdk.CollectionConverters._
+      val i = hit.schema.fieldIndex(to)
+      Adjacency(t, label,
+        hit.sparkSession.createDataFrame(rows.toSeq.asJava, hit.schema),
+        rows.toSeq.map(_.get(i)), hit.schema(to).dataType)
+    }
+  }
+
+  /** One hop: join edge table (oriented), then bind/join the target node.
+    * With `adjacency`, the first hop's edges are its collected rows. */
   private def hop(df: DataFrame, ctxIn: Ctx, fromVar: String,
       edge: EdgePattern, node: NodePattern,
       sem: PathSemantics = PathSemantics.Walk,
       pathVar: Option[String] = None,
       edgeArrVar: Option[String] = None,
-      elidedStart: Boolean = false): (DataFrame, Ctx, String) = {
+      elidedStart: Boolean = false,
+      adjacency: Option[Adjacency] = None): (DataFrame, Ctx, String) = {
     var ctx = ctxIn
     if (edge.quantifier.isDefined)
       return varLengthHop(df, ctx, fromVar, edge, node, sem, pathVar, edgeArrVar)
@@ -2297,7 +2375,7 @@ final class Compiler(graph: PropertyGraph,
     // cached on the graph — repeated hops over the same edge pattern
     // reuse the lineage; only the per-call column renames differ
     def orient(t: String, o: Direction): DataFrame = {
-      val (_, raw) = graph.edgeTables(t)
+      val raw = adjacency.filter(_.t == t).fold(graph.edgeTables(t)._2)(_.edges)
       val et = graph.edgeType(t)
       var base = raw.withColumn("__label", lit(t))
       if (named) base = base.withColumn("__esrc", col("src"))
@@ -2313,7 +2391,7 @@ final class Compiler(graph: PropertyGraph,
     }
     val cacheKey = "orient:" + combos.map { case (t, o) => s"$t/$o" }
       .mkString(",") + s":$named:$fromUnion:$needEnd"
-    var e = graph.cachedPlan(cacheKey) {
+    def oriented: DataFrame =
       // common-supertype reconciliation: the same property name may be
       // bigint on one edge type and string on another — see SchemaReconcile
       try graft.graph.SchemaReconcile.union(
@@ -2322,7 +2400,7 @@ final class Compiler(graph: PropertyGraph,
       catch { case ex: IllegalArgumentException =>
         throw new GqlCompileException(ex.getMessage)
       }
-    }
+    var e = (if (adjacency.isDefined) oriented else graph.cachedPlan(cacheKey)(oriented))
       .withColumnRenamed("__src", srcCol).withColumnRenamed("__dst", dstCol)
       .withColumnRenamed("__fromLabel", fromLabelCol)
       .withColumnRenamed("__endLabel", endLabelCol)
@@ -2393,10 +2471,19 @@ final class Compiler(graph: PropertyGraph,
           .drop(srcCol, endLabelCol), ctx, nVar)
       } else {
         val labels = if (node.labels.nonEmpty) node.labels else Seq(label)
-        val n = graph.broadcastIfSmall(labels.head,
-          scanNodeMulti(labels, nVar, node.props, ctx))
-        val out = joined.join(n, col(dstCol) === col(s"${nVar}_id"))
-          .drop(srcCol, dstCol, endLabelCol)
+        val scan = scanNodeMulti(labels, nVar, node.props, ctx)
+        val id = s"${nVar}_id"
+        val out = (adjacency match {
+          // the collected edges are broadcast, and the label is read only
+          // where their other endpoints are: KeyIn prunes it to their
+          // buckets (BucketPrune) and row groups (parquet)
+          case Some(a) =>
+            val n = if (scan.schema(id).dataType != a.keyType) scan
+              else scan.filter(graft.graph.KeyIn.column(scan, id, a.keys, a.keyType))
+            broadcast(joined).join(n, col(dstCol) === col(id))
+          case None =>
+            joined.join(graph.broadcastIfSmall(labels.head, scan), col(dstCol) === col(id))
+        }).drop(srcCol, dstCol, endLabelCol)
         (out, ctx, nVar)
       }
     }

@@ -484,17 +484,31 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       listDir(src).foreach(f => linkTree(f, dst.resolve(f.getFileName)))
     }
 
-  private def persistedBounds(ixName: String, optKey: String, df: DataFrame,
-      keyCol: String): Option[Seq[org.apache.spark.sql.Column]] =
+  private def persistedSpec(ixName: String, optKey: String, df: DataFrame,
+      keyCol: String): Option[graft.plans.BucketPrune.Spec] =
     listIndexOptions(ixName).toMap.get(optKey).filter(_.nonEmpty)
-      .map(decodeBounds(_, stringKeyed(df, keyCol))).filter(_.nonEmpty)
+      .map(specOf(keyCol, _, stringKeyed(df, keyCol))).filter(_.buckets > 1)
+
+  /** The spec of a persisted `__bounds` option: the boundaries as raw
+    * values. The layout is written, rewritten and pruned through it
+    * ([[graft.plans.BucketOf]]), so a row's bucket is one function. */
+  private def specOf(keyCol: String, raw: String,
+      stringKey: Boolean): graft.plans.BucketPrune.Spec = {
+    val parts = raw.split(",", -1).toSeq.filter(_.nonEmpty)
+    if (stringKey) graft.plans.BucketPrune.Spec(keyCol, Array.empty[Double],
+      parts.map(s => org.apache.spark.unsafe.types.UTF8String
+        .fromString(java.net.URLDecoder.decode(s, "UTF-8"))).toArray,
+      stringKey = true)
+    else graft.plans.BucketPrune.Spec(keyCol, parts.map(_.toDouble).toArray,
+      Array.empty[org.apache.spark.unsafe.types.UTF8String], stringKey = false)
+  }
 
   /** The main `__ixb` layout of `ds`: its bucketed index's columns and
     * persisted `__bounds` (None before the first layout build). */
   private def mainLayout(ds: String,
       df: DataFrame): Option[GraphCatalog.ScopedLayout] =
     bucketedSpec(ds, df).flatMap { case (ixName, cols, _) =>
-      persistedBounds(ixName, "__bounds", df, cols.head)
+      persistedSpec(ixName, "__bounds", df, cols.head)
         .map(GraphCatalog.ScopedLayout(ds, cols.head, cols, _))
     }
 
@@ -503,7 +517,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
   private def mirrorLayout(ds: String,
       df: DataFrame): Option[GraphCatalog.ScopedLayout] =
     mirrorOptSpec(ds, df).flatMap { case (ixName, mk, _) =>
-      persistedBounds(ixName, "__bounds_mirror", df, mk).map(
+      persistedSpec(ixName, "__bounds_mirror", df, mk).map(
         GraphCatalog.ScopedLayout(s"${GraphCatalog.MirrorPrefix}$ds", mk,
           Seq(mk), _))
     }
@@ -562,11 +576,11 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       }
     val touched = GraphCatalog.distinctInts(
       (vals(d.store, kc) +: hidden.map(vals(_, kc))).reduce(_ union _)
-        .select(bucketExpr(col("__v"), layout.bounds)))
+        .select(graft.plans.BucketOf.column(col("__v"), layout.spec)))
     // cost gate: when a mutation touched most of the buckets anyway,
     // the monolithic range-shuffle rewrite is cheaper than per-bucket
     // writes plus links — bucket-scoping is for the sparse-delta case
-    if (touched.size * 2 > layout.bounds.size + 1) None
+    if (touched.size * 2 > layout.spec.buckets) None
     else Some((touched, bucketDirs))
   }
 
@@ -580,23 +594,19 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     val target = s"$version/${layout.dirName}"
     if (touched.isEmpty) // mutations matched no rows
       Files.createDirectories(Paths.get(target))
-    else
-      // the touched-range filter FIRST: plain key-range comparisons push
-      // to the underlying parquet scan (and BucketPrune maps their
-      // disjunction to an __ixb partition filter on the base bucketed
-      // layout), so rewriting one touched bucket READS one bucket
-      // directory instead of scanning the whole table to produce it —
-      // without this the write side was O(touched) but the read side
-      // stayed O(table). The bucketExpr isin filter stays as the exact
-      // arbiter (same boundaries, so the range pred is equivalent by
-      // construction; see touchedRangePred's equivalence note).
-      df.filter(touchedRangePred(col(layout.keyCol), layout.bounds, touched))
-        .withColumn(BucketCol, bucketExpr(col(layout.keyCol), layout.bounds))
-        .filter(col(BucketCol).isin(touched.toSeq.map(Integer.valueOf): _*))
+    else {
+      // the touched buckets bind by reference (KeyIn), so saves that
+      // touch different buckets share their generated code; BucketPrune
+      // reads `BucketOf(key) ∈ touched` as the base layout's __ixb
+      // partition filter, so rewriting one bucket READS one bucket
+      // directory instead of scanning the whole table to produce it
+      df.filter(KeyIn.buckets(col(layout.keyCol), layout.spec, touched))
+        .withColumn(BucketCol, graft.plans.BucketOf.column(col(layout.keyCol), layout.spec))
         .repartition(col(BucketCol))
         .sortWithinPartitions((BucketCol +: layout.sortCols).map(col): _*)
         .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
         .parquet(target)
+    }
     bucketDirs.foreach { d =>
       val k = d.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
       if (!touched.contains(k))
@@ -689,51 +699,6 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
   /** The bucket-partition column name of the bucketed clustered layout. */
   val BucketCol = "__ixb"
 
-  /** Pushable predicate equivalent to `bucketExpr(c, bounds) ∈ buckets`:
-    * the explicit key range of each touched bucket, OR-ed (plus IS NULL
-    * when the last bucket is touched). Equivalence with [[bucketExpr]]'s
-    * first-match arms, per bucket k:
-    *   k = 0      → `c <= bounds(0)`
-    *   0 < k < N  → `bounds(k-1) < c <= bounds(k)`
-    *   k = N      → `c > bounds(N-1)` (NaN included — Spark orders NaN
-    *                above every value, so the `<=` arms were all false
-    *                for it too) `OR c IS NULL` (the null arm bucketExpr's
-    *                otherwise-chain ends in)
-    * Duplicate boundaries make middle buckets empty ranges in both
-    * formulations. Being plain comparisons, the ranges PUSH to the
-    * parquet scan (row-group stats on the key-sorted files) and
-    * [[graft.plans.BucketPrune]] maps the disjunction to an `__ixb`
-    * partition-filter union — so the bucket-scoped REWRITE is also a
-    * bucket-scoped READ.
-    */
-  private def touchedRangePred(c: org.apache.spark.sql.Column,
-      bounds: Seq[org.apache.spark.sql.Column],
-      buckets: Set[Int]): org.apache.spark.sql.Column = {
-    val last = bounds.size
-    buckets.toSeq.sorted.map { k =>
-      if (k == 0) c <= bounds(0)
-      else if (k == last) (c > bounds(last - 1)) || c.isNull
-      else (c > bounds(k - 1)) && (c <= bounds(k))
-    }.reduce(_ || _)
-  }
-
-  /** Range-bucket id for a key value against ascending boundary
-    * LITERALS (NULLs and values above the top boundary land in the
-    * last bucket). Boundaries arrive as Columns so numeric and string
-    * lead keys share one expression; comparisons run with Spark's own
-    * ordering for the key type, identically at layout-build time and
-    * at every later incremental rewrite — which is all bucket identity
-    * requires.
-    */
-  private def bucketExpr(c: org.apache.spark.sql.Column,
-      bounds: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, when}
-    bounds.zipWithIndex.reverse.foldLeft(
-      lit(bounds.size): org.apache.spark.sql.Column) {
-      case (acc, (b, i)) => when(c <= b, lit(i)).otherwise(acc)
-    }
-  }
-
   /** Is the bucketed layout keyed on a string column? (The reference's
     * native id type is string — storage/types.rs:68-72 — so the
     * incremental-maintenance economics must not be numeric-only,
@@ -752,16 +717,6 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       bounds.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",")
     else bounds.mkString(",")
 
-  /** Decode a persisted `__bounds` option into boundary literals typed
-    * for the lead key. */
-  private def decodeBounds(raw: String,
-      stringKey: Boolean): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.lit
-    raw.split(",", -1).toSeq.filter(_.nonEmpty).map(s =>
-      if (stringKey) lit(java.net.URLDecoder.decode(s, "UTF-8"))
-      else lit(s.toDouble))
-  }
-
   /** Stable bucket boundaries for a bucketed index: computed once from
     * the first layout build and persisted as an index option, so later
     * incremental rewrites assign the SAME ranges — shifting boundaries
@@ -770,16 +725,16 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     * seeded, size-capped sample sorted driver-side, quantile positions
     * picked from it — bounded driver memory at any table size).
     * Boundary QUALITY depends on the sample; bucket identity does not:
-    * assignment always compares through [[bucketExpr]] with Spark's
-    * ordering, so a row maps to the same bucket at build and at every
-    * later rewrite regardless of how the boundaries were chosen.
+    * assignment always goes through [[graft.plans.BucketOf]], so a row
+    * maps to the same bucket at build and at every later rewrite
+    * regardless of how the boundaries were chosen.
     */
   private def bucketBounds(ixName: String, df: DataFrame, keyCol: String,
-      buckets: Int, optKey: String = "__bounds"): Seq[org.apache.spark.sql.Column] = {
+      buckets: Int, optKey: String = "__bounds"): graft.plans.BucketPrune.Spec = {
     import org.apache.spark.sql.functions.col
     val stringKey = stringKeyed(df, keyCol)
     listIndexOptions(ixName).toMap.get(optKey) match {
-      case Some(s) if s.nonEmpty => decodeBounds(s, stringKey)
+      case Some(s) if s.nonEmpty => specOf(keyCol, s, stringKey)
       // compute-and-persist runs under a lock with a re-check: the
       // concurrent version writes (main and mirror layouts persist
       // their boundary options independently, different datasets may
@@ -789,7 +744,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       // this branch; later saves read the persisted option above.
       case _ => GraphCatalog.boundsLock.synchronized {
         listIndexOptions(ixName).toMap.get(optKey) match {
-          case Some(s) if s.nonEmpty => decodeBounds(s, stringKey)
+          case Some(s) if s.nonEmpty => specOf(keyCol, s, stringKey)
           case _ =>
             val raw: Seq[String] =
               if (stringKey) {
@@ -814,7 +769,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
                   .map(_.toString)
               }
             setIndexOption(ixName, optKey, encodeBounds(raw, stringKey))
-            decodeBounds(encodeBounds(raw, stringKey), stringKey)
+            specOf(keyCol, encodeBounds(raw, stringKey), stringKey)
         }
       }
     }
@@ -889,8 +844,8 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       versionDir: String): Unit =
     mirrorOptSpec(ds, df).foreach { case (name, mk, b) =>
       import org.apache.spark.sql.functions.col
-      val bounds = bucketBounds(name, df, mk, b, "__bounds_mirror")
-      df.withColumn(BucketCol, bucketExpr(col(mk), bounds))
+      val spec = bucketBounds(name, df, mk, b, "__bounds_mirror")
+      df.withColumn(BucketCol, graft.plans.BucketOf.column(col(mk), spec))
         .repartition(col(BucketCol))
         .sortWithinPartitions(col(BucketCol), col(mk))
         .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
@@ -909,21 +864,8 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
       if (Files.exists(Paths.get(mirDir))) {
         val stringKey = stringKeyed(df, mk)
         listIndexOptions(name).toMap.get("__bounds_mirror")
-          .filter(_.nonEmpty).foreach { raw =>
-            val parts = raw.split(",", -1).toSeq.filter(_.nonEmpty)
-            val spec =
-              if (stringKey) graft.plans.BucketPrune.Spec(mk,
-                Array.empty[Double],
-                parts.map(s => org.apache.spark.unsafe.types.UTF8String
-                  .fromString(java.net.URLDecoder.decode(s, "UTF-8")))
-                  .toArray,
-                stringKey = true)
-              else graft.plans.BucketPrune.Spec(mk,
-                parts.map(_.toDouble).toArray,
-                Array.empty[org.apache.spark.unsafe.types.UTF8String],
-                stringKey = false)
-            graft.plans.BucketPrune.register(mirDir, spec)
-          }
+          .filter(_.nonEmpty).foreach(raw =>
+            graft.plans.BucketPrune.register(mirDir, specOf(mk, raw, stringKey)))
       }
     }
 
@@ -945,12 +887,12 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
     import org.apache.spark.sql.functions.col
     bucketedSpec(table, df) match {
       case Some((name, cols, b)) =>
-        val bounds = bucketBounds(name, df, cols.head, b)
+        val spec = bucketBounds(name, df, cols.head, b)
         // sort by (bucket, key...): the partitioned writer requires rows
         // ordered by its partition columns and would otherwise inject
         // its own sort on __ixb ALONE, destroying the key order inside
         // each bucket
-        df.withColumn(BucketCol, bucketExpr(col(cols.head), bounds))
+        df.withColumn(BucketCol, graft.plans.BucketOf.column(col(cols.head), spec))
           .repartition(col(BucketCol))
           .sortWithinPartitions((BucketCol +: cols).map(col): _*)
           .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
@@ -996,9 +938,8 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
 
   /** Register a loaded bucketed dataset with the read-side pruning rule:
     * resolve its bucketed index, decode the persisted boundaries into
-    * raw values (the rule mirrors `bucketExpr`'s comparison semantics
-    * driver-side), and key the spec on the dataset directory the scan
-    * reads. Absent/typeless boundaries register nothing — pruning is an
+    * the spec the layout was written with, and key it on the dataset
+    * directory the scan reads. Absent/typeless boundaries register nothing — pruning is an
     * optimization and must never guess.
     */
   private def registerPrune(ds: String, df: DataFrame, dsDir: String): Unit =
@@ -1008,19 +949,8 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
         .isInstanceOf[org.apache.spark.sql.types.NumericType]
       listIndexOptions(ixName).toMap.get("__bounds").filter(_.nonEmpty)
         .foreach { raw =>
-          val parts = raw.split(",", -1).toSeq.filter(_.nonEmpty)
-          val spec =
-            if (stringKey) graft.plans.BucketPrune.Spec(cols.head,
-              Array.empty[Double],
-              parts.map(s => org.apache.spark.unsafe.types.UTF8String
-                .fromString(java.net.URLDecoder.decode(s, "UTF-8"))).toArray,
-              stringKey = true)
-            else graft.plans.BucketPrune.Spec(cols.head,
-              parts.map(_.toDouble).toArray,
-              Array.empty[org.apache.spark.unsafe.types.UTF8String],
-              stringKey = false)
           if (stringKey || numericKey)
-            graft.plans.BucketPrune.register(dsDir, spec)
+            graft.plans.BucketPrune.register(dsDir, specOf(cols.head, raw, stringKey))
         }
     }
 
@@ -1488,12 +1418,13 @@ object GraphCatalog {
 
   /** One bucketed layout a dirty dataset persists in, as the
     * bucket-scoped save sees it: the dataset directory name, the
-    * bucket key, the in-bucket sort columns and the persisted boundaries.
-    * The main layout and an edge dataset's mirror differ only in these.
+    * bucket key, the in-bucket sort columns and the persisted boundaries
+    * (as the spec BucketPrune registers for it). The main layout and an
+    * edge dataset's mirror differ only in these.
     */
   private[graph] final case class ScopedLayout(dirName: String,
       keyCol: String, sortCols: Seq[String],
-      bounds: Seq[org.apache.spark.sql.Column])
+      spec: graft.plans.BucketPrune.Spec)
 
   /** Source of per-save job-group ids (`graft-save-<n>`). */
   private[graph] val saveIds = new java.util.concurrent.atomic.AtomicLong

@@ -141,7 +141,7 @@ object GraphMutations {
       if (!probe) Seq(tag(dv, Keep))
       else localKeys(rows, d.key).filter(p => Keys.inline(p.count)) match {
         case Some(p) => Seq(
-          tag(dv, Keys.memberOf(dv, d.key, p), Keep | Hit, Keep),
+          tag(dv, KeyIn.member(dv, d.key, p), Keep | Hit, Keep),
           tag(Keys.pick(d.visibleBase, d.key, p), Hit))
         case None =>
           val (dTagged, hitBase) = matchKeys(d, rows.select(d.key), None)

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, InSet, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graft.{ExpressionColumns => ExpressionUtils}
@@ -56,6 +56,79 @@ object KeyNotIn {
   def column(c: String, keys: java.util.Set[Any]): Column =
     ExpressionUtils.column(KeyNotIn(ExpressionUtils.expression(col(c)), keys,
       ids.incrementAndGet()))
+}
+
+/** `child ∈ keys` over a driver-held key set bound by reference — the
+  * member test of [[KeyNotIn]]. It is an `InSet`, so Catalyst and the
+  * data sources read it as one: parquet pushes it down, and
+  * [[graft.plans.BucketPrune]] maps it, on a clustered key, to the
+  * `__ixb` partition filter of the keys' buckets. Its generated code
+  * reads the set from the references array (never Spark's inlined
+  * switch form), so the same filter over a different set reuses the
+  * compiled class. Identity is `id`, as for [[KeyNotIn]].
+  *
+  * `keys` holds Catalyst internal values of `child`'s type, no NULL.
+  */
+final class KeyIn(child: Expression, keys: Set[Any], val id: Long)
+    extends InSet(child, keys) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val set = ctx.addReferenceObj("keys", hset, "scala.collection.immutable.Set")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $set.contains($c);")
+  }
+  override def withNewChildInternal(newChild: Expression): KeyIn =
+    new KeyIn(newChild, hset, id)
+  override def hashCode: Int = 31 * child.hashCode + id.hashCode
+  override def equals(o: Any): Boolean = o match {
+    case k: KeyIn => k.id == id && k.child == child
+    case _ => false
+  }
+  override def toString: String = s"$child IN <${hset.size} keys>"
+  override def simpleString(maxFields: Int): String = toString
+  override def sql: String = s"(${child.sql} IN <${hset.size} keys>)"
+}
+
+object KeyIn {
+  private val ids = new java.util.concurrent.atomic.AtomicLong
+
+  /** `e ∈ keys` (internal values of `e`'s type). */
+  def apply(e: Expression, keys: Iterable[Any]): KeyIn =
+    new KeyIn(e, keys.iterator.filter(_ != null).toSet, ids.incrementAndGet())
+
+  /** Column `c` of `df` among `keys`, external values of type `dt`
+    * (what a collected row holds), converted to `c`'s type. */
+  def column(df: DataFrame, c: String, keys: Iterable[Any], dt: DataType): Column = {
+    val s = new java.util.HashSet[Any]()
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    keys.foreach(k => if (k != null) s.add(toCatalyst(k)))
+    member(df, c, InlineKeys(s, dt))
+  }
+
+  /** Column `c` of `df` among the driver-held `keys`. */
+  private[graph] def member(df: DataFrame, c: String, keys: InlineKeys): Column = {
+    import scala.jdk.CollectionConverters._
+    ExpressionUtils.column(KeyIn(ExpressionUtils.expression(col(c)),
+      keys.as(df.schema(c).dataType).set.asScala))
+  }
+
+  /** Column `c`'s bucket under `spec` among `ids`: read by
+    * [[graft.plans.BucketPrune]] as the `__ixb` partition filter of
+    * `ids` on a relation of that layout. */
+  def buckets(c: Column, spec: graft.plans.BucketPrune.Spec, ids: Set[Int]): Column =
+    ExpressionUtils.column(KeyIn(ExpressionUtils.expression(
+      graft.plans.BucketOf.column(c, spec)), ids))
+
+  /** The most keys a lookup holds on the driver ([[Keys.InlineLimit]]). */
+  def Limit: Int = Keys.InlineLimit
+
+  /** `df`'s rows when it has at most `limit` of them, from ONE job
+    * whose tasks each return at most `limit + 1` rows; None when it has
+    * more.
+    */
+  def collectAtMost(df: DataFrame, limit: Int): Option[Array[Row]] = {
+    val n = limit + 1
+    val rows = df.rdd.mapPartitions(_.take(n)).collect()
+    if (rows.length > limit) None else Some(rows)
+  }
 }
 
 /** The keys that hide rows of one column of a label view. */
@@ -118,14 +191,10 @@ private[graph] object Keys {
       df.join(side, df(c) === side(s"__h_$c"), "left_anti")
   }
 
-  /** Whether `df`'s column `c` is among the driver-held `keys` (false
-    * for NULL). */
-  def memberOf(df: DataFrame, c: String, keys: InlineKeys): Column =
-    !KeyNotIn.column(c, keys.as(df.schema(c).dataType).set)
-
-  /** Rows of `df` whose `c` IS among `keys`. */
+  /** Rows of `df` whose `c` IS among `keys`: a driver-held set filters
+    * through [[KeyIn]], which bucket pruning and parquet see into. */
   def pick(df: DataFrame, c: String, keys: Keys): DataFrame = keys match {
-    case k: InlineKeys => df.filter(memberOf(df, c, k))
+    case k: InlineKeys => df.filter(KeyIn.member(df, c, k))
     case FrameKeys(k, n) =>
       val side = PropertyGraph.broadcastIfBoundedRows(n,
         typed(k, df.schema(c).dataType, s"__h_$c"))

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.BucketOf
 
 /** Direction of an edge traversal — reference: ast.rs:347-353
   * (Outgoing / Incoming / Both / Undirected).
@@ -485,7 +486,7 @@ final class PropertyGraph(
         val specs = branches.map(_._1)
         val idSets = pendingIds.getOrElse {
           val aggs = specs.map(sp =>
-            collect_set(sp.bucketIdCol(col("end_id"))))
+            collect_set(BucketOf.column(col("end_id"), sp)))
           val row = frontier.agg(aggs.head, aggs.tail: _*).collect().head
           specs.indices.map(i => row.getSeq[Int](i).toSet)
         }
@@ -496,7 +497,7 @@ final class PropertyGraph(
           pruning = None // saturated — full checkpoint serves the rest
           eFull
         } else branches.zip(idSets).map { case ((sp, f), ids) =>
-          f.filter(sp.touchedRangeCol(col("src"), ids))
+          f.filter(KeyIn.buckets(col("src"), sp, ids))
         }.reduce(_ unionAll _)
     }
 
@@ -538,7 +539,7 @@ final class PropertyGraph(
         val tagged = specs.zip(accs).zipWithIndex.foldLeft(frontier) {
           case (f, ((sp, acc), i)) =>
             val rec = udf((b: Int) => { acc.add(b); b })
-            f.withColumn(s"__bk$i", rec(sp.bucketIdCol(col("end_id"))))
+            f.withColumn(s"__bk$i", rec(BucketOf.column(col("end_id"), sp)))
         }
         val qe = tagged.queryExecution
         frontier = Analytics.checkpointReset(tagged)._1
@@ -749,7 +750,7 @@ final class PropertyGraph(
       case Some(branches) =>
         val specs = branches.map(_._1)
         val idSets = pendingIds.getOrElse {
-          val aggs = specs.map(sp => collect_set(sp.bucketIdCol(col("id"))))
+          val aggs = specs.map(sp => collect_set(BucketOf.column(col("id"), sp)))
           val row = f.agg(aggs.head, aggs.tail: _*).collect().head
           specs.indices.map(i => row.getSeq[Int](i).toSet)
         }
@@ -761,7 +762,7 @@ final class PropertyGraph(
           eFull
         } else {
           val filtered = branches.zip(idSets).map { case ((sp, fr), ids) =>
-            fr.filter(sp.touchedRangeCol(col("src"), ids))
+            fr.filter(KeyIn.buckets(col("src"), sp, ids))
           }.reduce(_ unionAll _)
           work.createDataFrame(filtered.rdd, e0.schema)
         }
@@ -827,7 +828,7 @@ final class PropertyGraph(
           (specs.zip(as).zipWithIndex.foldLeft(batch) {
             case (b, ((sp, a), i)) =>
               val rec = udf((x: Int) => { a.add(x); x })
-              b.withColumn(s"__bk$i", rec(sp.bucketIdCol(col("id"))))
+              b.withColumn(s"__bk$i", rec(BucketOf.column(col("id"), sp)))
           }, as)
         case None =>
           (batch, Seq.empty[PropertyGraph.BucketSetAcc])

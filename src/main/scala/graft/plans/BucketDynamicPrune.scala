@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{DoubleType, NumericType, StringType}
@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.{DoubleType, NumericType, StringType}
   * id appears among the build side's key buckets. A bucketed-side row
   * whose key is in NO build bucket cannot equi-match any build row
   * (same boundaries, same comparison domain as the layout's
-  * [[graft.graph.GraphCatalog]] `bucketExpr`: numerics compare as
+  * [[BucketOf]]: numerics compare as
   * double, strings as UTF8 binary, NULL/NaN land in the last bucket —
   * and a NULL join key never equi-matches, so over-approximating NULL
   * to the last bucket only costs reads). Join types mirror Spark's own
@@ -106,20 +106,23 @@ object BucketDynamicPrune extends Rule[LogicalPlan] with PredicateHelper {
 
   /** A literal-bearing deterministic Filter somewhere in the subtree —
     * the seeded/selective shapes where the build side is small enough
-    * that running it twice (once as the pruning subquery) is a win.
+    * that running it twice (once as the pruning subquery) is a win —
+    * or a side read wholly from driver-held rows (a seeded hop's
+    * collected adjacency), which is small by construction.
     * IsNotNull-only filters don't count (every equi-join side has them).
     */
-  private def hasSelectiveFilter(p: LogicalPlan): Boolean = p.exists {
-    case Filter(c, _) => splitConjunctivePredicates(c).exists {
-      case _: IsNotNull => false
-      // an injected pruning subquery carries boundary literals — it must
-      // not make its own side look "selective" to the opposite direction
-      case e if e.exists(_.isInstanceOf[DynamicPruning]) => false
-      case e => e.deterministic && e.exists(_.isInstanceOf[Literal]) &&
-        e.references.nonEmpty
+  private def hasSelectiveFilter(p: LogicalPlan): Boolean =
+    p.collectLeaves().forall(_.isInstanceOf[LocalRelation]) || p.exists {
+      case Filter(c, _) => splitConjunctivePredicates(c).exists {
+        case _: IsNotNull => false
+        // an injected pruning subquery carries boundary literals — it must
+        // not make its own side look "selective" to the opposite direction
+        case e if e.exists(_.isInstanceOf[DynamicPruning]) => false
+        case e => e.deterministic && e.exists(_.isInstanceOf[Literal]) &&
+          e.references.nonEmpty
+      }
+      case _ => false
     }
-    case _ => false
-  }
 
   /** Strip numeric-to-numeric casts and resolve one Project level of
     * aliasing: the compiler's scans rename relation columns
@@ -139,9 +142,12 @@ object BucketDynamicPrune extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
 
-  /** Walk `side` down through Projects (tracking alias substitutions)
-    * and Filters to the bucketed relation whose clustered key the join
-    * key resolves to. Returns the relation and its key attribute. */
+  /** Walk `side` down through Projects (tracking alias substitutions),
+    * Filters and the first arm of a Union to the bucketed relation whose
+    * clustered key the join key resolves to. A Union's output attributes
+    * are its first arm's, so the key follows by position; the first arm
+    * is the base of a mutated label's view (`base ⊖ tomb ⊕ delta`), the
+    * others a bounded checkpoint left unpruned. */
   private def findTarget(side: LogicalPlan, sideKey: Expression):
       Option[LogicalRelation] = {
     def loop(p: LogicalPlan, key: Expression): Option[LogicalRelation] =
@@ -152,6 +158,7 @@ object BucketDynamicPrune extends Rule[LogicalPlan] with PredicateHelper {
           }.toMap
           unwrap(key, aliases).flatMap(k => loop(child, k))
         case Filter(_, child) => loop(child, key)
+        case u: Union => loop(u.children.head, key)
         case rel: LogicalRelation =>
           unwrap(key, Map.empty).filter(k =>
             rel.output.exists(_.semanticEquals(k)) && isTarget(rel, k))
@@ -240,6 +247,7 @@ object BucketDynamicPrune extends Rule[LogicalPlan] with PredicateHelper {
           }.toMap
           unwrap(key, aliases).flatMap(k => loop(child, k))
         case Filter(_, child) => loop(child, key)
+        case u: Union => loop(u.children.head, key)
         case rel: LogicalRelation =>
           for {
             k <- unwrap(key, Map.empty)
@@ -332,7 +340,7 @@ object BucketDynamicPrune extends Rule[LogicalPlan] with PredicateHelper {
       onlyInBroadcast = false)
   }
 
-  /** The layout's `bucketExpr` as a Catalyst expression over an
+  /** The layout's bucket function ([[BucketOf]]) as a Catalyst expression over an
     * arbitrary key expression: first boundary with key <= bound wins,
     * else (including NULL and NaN — all `<=` arms false/null) the last
     * bucket. Numeric keys compare in the double domain, exactly like

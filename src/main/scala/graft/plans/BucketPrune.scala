@@ -1,10 +1,14 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{IntegerType, NumericType, StringType}
+import org.apache.spark.sql.graft.{ExpressionColumns => ExpressionUtils}
+import org.apache.spark.sql.types.{DataType, DecimalType, IntegerType, NumericType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Read-side partition pruning for the bucketed clustered layout.
@@ -28,10 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Correctness: the injected conjunct is IMPLIED by the original
   * predicate, never replaces it — every surviving row still passes the
   * full filter, so a superset bucket estimate only costs performance.
-  * The driver-side bucket assignment mirrors [[GraphCatalog]]'s
-  * `bucketExpr` comparison semantics exactly: numeric keys compare in
-  * the double domain (the layout compares the key against double
-  * boundary literals, which widens the same way; primitive `<=` keeps
+  * The driver-side bucket assignment is the one the layout is written
+  * with ([[BucketOf]] evaluates the same `Spec.ofDouble`/`ofString`):
+  * numeric keys compare in the double domain (primitive `<=` keeps
   * Spark's -0.0 == 0.0 and sends NaN, like NULL, to the last bucket),
   * string keys compare as UTF8String binary order (Spark's default
   * string ordering — Java's UTF-16 compareTo would diverge above the
@@ -57,48 +60,24 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
       (if (stringKey) strBounds.length else numBounds.length) + 1
     def last: Int = buckets - 1
 
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions.{lit, when}
+    /** Whether `o` maps keys to the same buckets. */
+    def sameLayout(o: Spec): Boolean =
+      keyCol == o.keyCol && stringKey == o.stringKey &&
+        java.util.Arrays.equals(numBounds, o.numBounds) &&
+        java.util.Arrays.equals(strBounds.asInstanceOf[Array[AnyRef]],
+          o.strBounds.asInstanceOf[Array[AnyRef]])
 
-    private def boundCols: Seq[Column] =
-      if (stringKey) strBounds.toSeq.map(b => lit(b.toString))
-      else numBounds.toSeq.map(lit(_))
-
-    /** This spec's bucket id of a key COLUMN — the Column-API mirror of
-      * [[GraphCatalog]]'s build-time `bucketExpr` (first boundary with
-      * key <= bound wins; NULL and NaN fall through to the last
-      * bucket). Numeric keys compare in the double domain like the
-      * layout's double boundary literals; string keys compare in
-      * Spark's native UTF8 binary order.
-      */
-    def bucketIdCol(c: Column): Column = {
-      val key = if (stringKey) c else c.cast("double")
-      boundCols.zipWithIndex.reverse.foldLeft(lit(last): Column) {
-        case (acc, (b, i)) => when(key <= b, lit(i)).otherwise(acc)
-      }
+    /** Bucket of a numeric key in the double domain (NaN: the last). */
+    def ofDouble(d: Double): Int = {
+      val i = numBounds.indexWhere(b => d <= b)
+      if (i < 0) numBounds.length else i
     }
 
-    /** Pushable key predicate equivalent to `bucketIdCol(c) ∈ ids` —
-      * each touched bucket's explicit range, OR-ed, plus IS NULL when
-      * the last bucket is touched (same construction as
-      * GraphCatalog.touchedRangePred, from this spec's boundaries).
-      * Being plain comparisons on the clustered key, the ranges push
-      * to parquet row-group stats AND [[BucketPrune]] maps the
-      * disjunction to an `__ixb` partition filter — a frontier-derived
-      * bucket set becomes an O(touched directories) scan. An empty set
-      * yields `false` (an empty frontier reads nothing).
-      */
-    def touchedRangeCol(c: Column, ids: Set[Int]): Column =
-      if (ids.isEmpty) lit(false)
-      else {
-        val bs = boundCols
-        ids.toSeq.sorted.map { k =>
-          if (k == 0 && last == 0) lit(true) // single-bucket layout
-          else if (k == 0) c <= bs(0)
-          else if (k == last) (c > bs(last - 1)) || c.isNull
-          else (c > bs(k - 1)) && (c <= bs(k))
-        }.reduce(_ || _)
-      }
+    /** Bucket of a string key in UTF8 binary order. */
+    def ofString(u: UTF8String): Int = {
+      val i = strBounds.indexWhere(b => u.compareTo(b) <= 0)
+      if (i < 0) strBounds.length else i
+    }
   }
 
   // canonical dataset-dir path -> spec; populated by GraphCatalog.loadGraph
@@ -228,8 +207,12 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
         if (v == null) Some(Set(spec.last)) else eqSet(v)
       case In(l, list) if isKey(l) && list.forall(_.isInstanceOf[Literal]) =>
         listSet(list.map { case Literal(v, _) => v })
+      // a key set (literal, or graft's reference-bound KeyIn)
       case InSet(l, hset) if isKey(l) =>
         listSet(hset)
+      // a bucket set of this layout: the save's touched-bucket filter
+      case InSet(BucketOf(l, s), ids) if isKey(l) && s.sameLayout(spec) =>
+        Some(ids.collect { case i: Int => i })
       // range forms: rows with NULL (or NaN) keys cannot satisfy the
       // original comparison, so dropping their bucket is safe even
       // though the last bucket is where they live
@@ -254,10 +237,7 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
       // a disjunction constrains the key only when BOTH arms do — the
       // implied set is the union. Arms recurse through bucketSet, so
       // nested conjunctions work: `(k > 5 AND k <= 9) OR k IS NULL`
-      // maps to range-buckets ∪ {last}. This is also the shape the
-      // bucket-scoped maintenance read emits (GraphCatalog
-      // .touchedRangePred), which makes the one-bucket REWRITE also a
-      // one-bucket READ.
+      // maps to range-buckets ∪ {last}
       case Or(a, b) =>
         for {
           sa <- bucketSet(a, key, spec)
@@ -270,23 +250,59 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
   /** Bucket id of a literal value under `spec`, None when the literal's
     * type cannot be mapped onto the boundary domain (never guess).
     */
-  private def bucketOf(v: Any, spec: Spec): Option[Int] =
-    if (spec.stringKey) {
-      val u = v match {
-        case u8: UTF8String => u8
-        case s: String => UTF8String.fromString(s)
-        case _ => return None
-      }
-      val i = spec.strBounds.indexWhere(b => u.compareTo(b) <= 0)
-      Some(if (i < 0) spec.strBounds.length else i)
-    } else {
-      val d = v match {
-        case n: java.lang.Number => n.doubleValue()
-        case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
-        case b: Boolean => if (b) 1.0 else 0.0
-        case _ => return None
-      }
-      val i = spec.numBounds.indexWhere(b => d <= b)
-      Some(if (i < 0) spec.numBounds.length else i)
+  private[plans] def bucketOf(v: Any, spec: Spec): Option[Int] =
+    if (spec.stringKey) v match {
+      case u8: UTF8String => Some(spec.ofString(u8))
+      case s: String => Some(spec.ofString(UTF8String.fromString(s)))
+      case _ => None
+    } else v match {
+      case n: java.lang.Number => Some(spec.ofDouble(n.doubleValue()))
+      case dec: org.apache.spark.sql.types.Decimal => Some(spec.ofDouble(dec.toDouble))
+      case b: Boolean => Some(spec.ofDouble(if (b) 1.0 else 0.0))
+      case _ => None
     }
+}
+
+/** The bucket id of a key under a layout `spec` — the per-row form of
+  * [[BucketPrune]]'s driver-side mapping, and the function
+  * [[graft.graph.GraphCatalog]] writes and rewrites layouts with
+  * (numbers compare as doubles, strings in UTF8 binary order, NULL and
+  * NaN in the last bucket). The boundaries are read from the
+  * spec by reference, so the generated code is one per key type, and
+  * [[BucketPrune]] reads `BucketOf(key) ∈ ids` on a relation of the
+  * same layout as the `__ixb` partition filter of `ids`.
+  */
+final case class BucketOf(child: Expression, spec: BucketPrune.Spec)
+    extends UnaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+
+  def of(v: Any): Int =
+    if (v == null) spec.last else BucketPrune.bucketOf(v, spec).getOrElse(spec.last)
+
+  override def eval(input: InternalRow): Any = of(child.eval(input))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("bucketOf", this, classOf[BucketOf].getName)
+    val c = child.genCode(ctx)
+    val v = child.dataType match {
+      case StringType => s"$self.spec().ofString(${c.value})"
+      case _: DecimalType => s"$self.spec().ofDouble(${c.value}.toDouble())"
+      case _: NumericType => s"$self.spec().ofDouble((double) ${c.value})"
+      case _ => s"$self.of(${c.value})"
+    }
+    ev.copy(code = code"""
+      ${c.code}
+      int ${ev.value} = ${c.isNull} ? ${spec.last} : $v;""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BucketOf =
+    copy(child = newChild)
+  override def toString: String = s"bucket_of($child)"
+  override def sql: String = s"bucket_of(${child.sql})"
+}
+
+object BucketOf {
+  def column(c: org.apache.spark.sql.Column, spec: BucketPrune.Spec): org.apache.spark.sql.Column =
+    ExpressionUtils.column(BucketOf(ExpressionUtils.expression(c), spec))
 }

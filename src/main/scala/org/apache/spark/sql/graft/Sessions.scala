@@ -5,7 +5,7 @@ import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.SQLExecution
 
 /** Jobs planned and run without code generation, without touching the
-  * caller's conf: other threads of the same session read that conf
+  * caller's conf (the caller's static optimizer rules do apply): other threads of the same session read that conf
   * concurrently, and two jobs restoring it in the wrong order would
   * leave code generation off for good.
   */
@@ -28,6 +28,13 @@ object Sessions {
         val s = caller.newSession(); work.put(caller, s); s
       }
     }
+    // the caller's static rewrites (BucketPrune, MirrorSwap) prune a
+    // statement's reads as they prune a query's; BucketDynamicPrune
+    // would add a pruning subquery job to the statement's one job
+    val rules = caller.experimental.extraOptimizations
+      .filterNot(_ eq _root_.graft.plans.BucketDynamicPrune)
+    if (w.experimental.extraOptimizations != rules)
+      w.experimental.extraOptimizations = rules
     val conf = w.sessionState.conf
     conf.synchronized {
       val want = caller.sessionState.conf.getAllConfs ++ NoCodegen

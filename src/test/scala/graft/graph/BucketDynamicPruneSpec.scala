@@ -36,6 +36,13 @@ class BucketDynamicPruneSpec extends AnyFunSuite with TempDirs {
   }
 
   private def fixture() = {
+    val cat = new GraphCatalog(spark, persisted())
+    val lg = cat.loadGraph("pr", "g1")
+    (lg.nodeTables("acct"), lg.edgeTables("own")._2)
+  }
+
+  /** A warehouse holding graph `pr/g1`: `acct` bucketed on id, `own` on src. */
+  private def persisted(): String = {
     import spark.implicits._
     val wh = tempDir("bdpp").toString
     val cat = new GraphCatalog(spark, wh)
@@ -51,9 +58,12 @@ class BucketDynamicPruneSpec extends AnyFunSuite with TempDirs {
     cat.createIndex("own_src", "edges_own", Seq("src"))
     cat.setIndexOption("own_src", "buckets", "8")
     cat.saveGraph("pr", "g1", g, force = true)
-    val lg = cat.loadGraph("pr", "g1")
-    (lg.nodeTables("acct"), lg.edgeTables("own")._2)
+    wh
   }
+
+  private def dynamic(s: FileSourceScanExec): Boolean =
+    s.partitionFilters.exists(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression]))
 
   test("seeded join prunes the DST bucketed scan at runtime " +
       "(DynamicPruningExpression on __ixb)") {
@@ -167,5 +177,29 @@ class BucketDynamicPruneSpec extends AnyFunSuite with TempDirs {
         finally BucketDynamicPrune.enabled = true
       assert(a == b, s"seed=$seed jt=$jt: $a vs $b")
     }
+  }
+
+  test("a mutated destination label (base ⊖ tomb ⊕ delta) still prunes " +
+      "its base scan at runtime") {
+    val sess = graft.GraphLiteSpark.open(spark, persisted()).session("m")
+      .useGraph("/pr/g1")
+    sess.execute("MATCH (a:acct {id: 2357}) SET a.bal = 1.5")
+    sess.execute("INSERT (:acct {id: 5001, bal: 2.5})")
+    val acct = sess.graph.nodeTables("acct")
+    val own = sess.graph.edgeTables("own")._2
+    // non-seeded: the selective side is a filter on a non-key column
+    def q() = own.filter(col("eid") === 77L)
+      .join(acct, col("dst") === col("id"))
+      .agg(count(lit(1)).as("n"), sum("bal").as("sb"))
+    val rows = q().collect().toSeq
+    val base = executedScans(q()).filter(
+      _.relation.location.rootPaths.head.toString.contains("nodes_acct"))
+    assert(base.nonEmpty && base.forall(dynamic),
+      s"the view's base scan has no dynamic __ixb filter: ${base.map(_.partitionFilters)}")
+    BucketDynamicPrune.enabled = false
+    try assert(q().collect().toSeq == rows)
+    finally BucketDynamicPrune.enabled = true
+    // eid 77 runs 78 -> (77 * 31) % 4000 + 1 = 2388; a SET row would read 1.5
+    assert(rows == Seq(org.apache.spark.sql.Row(1L, (2388 % 97).toDouble)))
   }
 }

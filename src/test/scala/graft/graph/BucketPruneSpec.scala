@@ -329,4 +329,47 @@ class BucketPruneSpec extends AnyFunSuite with TempDirs {
     assert(pruned, "GQL point lookup should plan an __ixb filter")
     assert(parts == 1, s"GQL point lookup read $parts buckets")
   }
+
+  test("an explicit-id INSERT and a SET read only their key's bucket, " +
+      "each in one job") {
+    val (cat, wh, _) = numericFixture()
+    val sizes = spark.read.parquet(cat.loadGraph("pr", "g1").origin.get +
+      "/nodes_customer").groupBy("__ixb").count().collect().map(_.getLong(1))
+    val sess = graft.GraphLiteSpark.open(spark, wh).session("dml")
+      .useGraph("/pr/g1")
+    /** Jobs and input rows of `stmt`. */
+    def run(stmt: String): (Int, Long) = {
+      val sc = spark.sparkContext
+      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val read = new java.util.concurrent.atomic.AtomicLong
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+        override def onTaskEnd(
+            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(t.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+      }
+      sc.addSparkListener(l)
+      try {
+        sess.execute(stmt)
+        org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+        (jobs.get, read.get)
+      } finally sc.removeSparkListener(l)
+    }
+    // the store holds at most the SET's row and its ghost
+    val (setJobs, setRead) = run("MATCH (c:customer {id: 1234}) SET c.acctbal = 1.0")
+    val (insJobs, insRead) = run("INSERT (:customer {id: 5001, acctbal: 2.0, nm: 'x'})")
+    intercept[Exception](sess.execute("INSERT (:customer {id: 3456, acctbal: 3.0})"))
+    assert(setJobs == 1 && insJobs == 1, s"jobs: SET $setJobs, INSERT $insJobs")
+    // a SET reads its hit base rows twice (their new version and their
+    // ghost), each from the key's bucket alone
+    assert(setRead <= 2 * sizes.max && insRead <= sizes.max + 2,
+      s"rows read: SET $setRead, INSERT $insRead, buckets hold ${sizes.toSeq}")
+    assert(sess.gql("MATCH (c:customer) WHERE c.id IN [1234, 5001] " +
+      "RETURN c.acctbal AS b ORDER BY b").collect().map(_.getDouble(0)).toSeq ==
+      Seq(1.0, 2.0))
+  }
 }
+

@@ -98,4 +98,27 @@ class CodegenReuseSpec extends AnyFunSuite with TempDirs {
     assert(s.gql("MATCH (c:customer) RETURN count(c) AS n").collect()
       .head.getLong(0) == 605L)
   }
+
+  test("an incremental save that touches other buckets compiles no new " +
+      "class") {
+    val s = session()
+    var next = 800000L
+    /** SET the given customers, insert an order, save incrementally. */
+    def saveAfter(ids: Seq[Long], v: Double): Unit = {
+      ids.foreach(c => s.execute(s"MATCH (c:customer {id: $c}) SET c.acctbal = $v"))
+      s.execute(s"INSERT (:orders {id: $next, totalprice: $v, status: 'O'})")
+      next += 1
+      s.saveGraphAs("/cg/g")
+    }
+    saveAfter(Seq(10L), 1.5) // warm-up: the first save of this shape
+    saveAfter(Seq(460L), 2.5)
+    val before = compiles
+    saveAfter(Seq(160L, 310L), 3.5) // other buckets, and two of them
+    assert(compiles == before,
+      s"${compiles - before} classes compiled by the third save")
+    assert(s.gql("MATCH (c:customer) WHERE c.id IN [10, 160, 460] " +
+      "RETURN c.acctbal AS b ORDER BY b").collect().map(_.getDouble(0)).toSeq ==
+      Seq(1.5, 2.5, 3.5))
+  }
 }
+

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main (driver contract): times every SparkEntry
   * query at SPARK_GRAFT_SF_DIR and prints one JSON line.
   * Session warm-up runs first so the first query is not charged JVM /
@@ -24,16 +22,8 @@ object Bench {
 
   private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.cpus(4)
+    val spark = LocalSpark(cpus, "WARN")
     // warm-up: JVM + whole-stage codegen + one shuffle + parquet footers,
     // through the same accessors queries use (so the events ns→µs
     // conversion and the documents/embeddings scan widening warm too)
@@ -135,18 +125,7 @@ object Bench {
     // regression claim can first be checked against the machine state
     // that produced it.
     val cals = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def probeGate(): Unit = {
-      var p = cpuProbe(cpus.toInt)
-      var tries = 0
-      while (p > 1.2 * CalibrationQuiet && tries < 3) {
-        System.err.println(f"[bench] cpu probe $p%.3f s > 1.2x " +
-          f"$CalibrationQuiet%.3f s quiet constant — waiting out load")
-        Thread.sleep(15000)
-        tries += 1
-        p = cpuProbe(cpus.toInt)
-      }
-      cals += p
-    }
+    def probeGate(): Unit = cals += cpuGate(cpus, "bench")
     probeGate()
     val pass1 = timeAll()
     probeGate()
@@ -356,6 +335,24 @@ object Bench {
     }
     ts.foreach(_.join())
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** A [[cpuProbe]] reading taken once the box is quiet: a reading over
+    * 1.2x [[CalibrationQuiet]] means other tenants hold cores right now,
+    * so it is waited out (up to 3x15 s, logged under `tag`) before the
+    * caller spends a measured pass. Returns the last reading.
+    */
+  private[graft] def cpuGate(threads: Int, tag: String): Double = {
+    var p = cpuProbe(threads)
+    var tries = 0
+    while (p > 1.2 * CalibrationQuiet && tries < 3) {
+      System.err.println(f"[$tag] cpu probe $p%.3f s > 1.2x " +
+        f"$CalibrationQuiet%.3f s quiet constant — waiting out load")
+      Thread.sleep(15000)
+      tries += 1
+      p = cpuProbe(threads)
+    }
+    p
   }
 
   /** Per-query times from the newest BENCH_r*.json in the working

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Infra micro-benchmarks mirroring the reference's two bench programs
   * (benches/session_throughput.rs:24-70 — 1,000 sessions created /
   * queried / removed; benches/catalog_cache_throughput.rs:26-60 — 5
@@ -21,16 +19,10 @@ import org.apache.spark.sql.SparkSession
   */
 object InfraBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark(LocalSpark.cpus(8), "ERROR")
     import spark.implicits._
 
-    val wh = java.nio.file.Files.createTempDirectory("graft-infra").toString
+    val wh = LocalSpark.scratchDir("infra").toString
     val gls = GraphLiteSpark.open(spark, wh)
 
     // small shared graph (the reference bench runs MATCH (n) RETURN

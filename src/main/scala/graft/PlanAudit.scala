@@ -20,15 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed cores: PLANS.md's exchange partition counts must not move
+    // with the box
+    val spark = LocalSpark(8, "ERROR")
 
     val out = new StringBuilder
     out ++= "# PLANS — physical-plan audit evidence\n\n"
@@ -547,11 +541,7 @@ object PlanAudit {
     // pinned once per audit run.
     if (!fragmented) {
       import org.apache.spark.sql.functions.col
-      val wh = java.nio.file.Files.createTempDirectory("graft-pa-bprune")
-        .toString
-      // the audit's scratch warehouse goes when the audit's JVM does
-      sys.addShutdownHook(
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh)))
+      val wh = LocalSpark.scratchDir("pa-bprune").toString
       val cat = new graft.graph.GraphCatalog(spark, wh)
       val nodes = spark.range(1, 4001)
         .selectExpr("id", "cast(id % 97 as double) as bal")

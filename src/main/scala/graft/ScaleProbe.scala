@@ -135,48 +135,6 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
   }
 
-  /** Per-task duration tracker: exposes, per probe run, the heaviest
-    * stage's partition count and its median/max task time — the skew
-    * signal a 1000-executor rollout would watch (a straggler task shows
-    * up as max ≫ median long before wall-clock degrades).
-    */
-  private final class TaskStats extends org.apache.spark.scheduler.SparkListener {
-    private val byStage = scala.collection.mutable.Map
-      .empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
-    // input records read across the pass (file-source rows decoded;
-    // shuffle reads excluded): on a page-cached local box wall time
-    // hides an N× I/O-reduction (a pruned 1-file scan loses on
-    // PARALLELISM to a hot 16-file scan), so read-path probes need the
-    // work metric, not just the wall metric — this is what a
-    // 1000-executor cluster pays for. Records, not bytes: Hadoop FS
-    // byte statistics underreport on local `file://` reads, while
-    // recordsRead is counted by the parquet reader itself.
-    private var inputRecords = 0L
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      synchronized {
-        byStage.getOrElseUpdate(t.stageId,
-          scala.collection.mutable.ArrayBuffer.empty) += t.taskInfo.duration
-        if (t.taskMetrics != null)
-          inputRecords += t.taskMetrics.inputMetrics.recordsRead
-      }
-    def reset(): Unit = synchronized { byStage.clear(); inputRecords = 0L }
-    def readRows: Long = synchronized { inputRecords }
-    /** (stages, tasks in heaviest stage, median ms, max ms, skew). */
-    def summary(): (Int, Int, Long, Long, Double) = synchronized {
-      if (byStage.isEmpty) (0, 0, 0L, 0L, 0.0)
-      else {
-        // heaviest stage = largest total task time (the bottleneck
-        // stage, where skew would bite first)
-        val (_, ds) = byStage.maxBy(_._2.sum)
-        val sorted = ds.sorted
-        val med = sorted(sorted.size / 2)
-        (byStage.size, ds.size, med, sorted.last,
-          sorted.last.toDouble / math.max(med.toDouble, 1.0))
-      }
-    }
-  }
-
   /** See the r16 probe registration comment: one-row DML + incremental
     * save on a persisted customer label, with (`buckets` > 0) or without
     * a bucketed clustered index. Setup is marker-gated per (dir,
@@ -646,16 +604,10 @@ object ScaleProbe {
     val nCopies = if (args.length > 2) args(2).toInt else 10
     val outDir =
       if (args.length > 1) args(1) else s"/tmp/graft_scale${nCopies}x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSpark.cpus(32)
+    // the driver heap is the forked JVM's -Xmx (SPARK_DRIVER_MEM, see
+    // build.sbt): a client-mode driver cannot resize its own heap
+    val spark = LocalSpark(cpus, "ERROR")
 
     if (!new java.io.File(s"$outDir/lineitem.parquet").exists()) {
       buildScaled(spark, sfDir, outDir, nCopies)
@@ -900,9 +852,6 @@ object ScaleProbe {
     // session startup
     SparkEntry.queries("q01_agg_groupby")(spark, sfDir).count()
 
-    val stats = new TaskStats
-    spark.sparkContext.addSparkListener(stats)
-
     def time(fn: => Long): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = fn
@@ -917,19 +866,8 @@ object ScaleProbe {
     // probe reading taken right before its measured passes, vs the
     // committed quiet constant — a contested cross-round move checks its
     // own machine state first. >1.2x spikes are waited out like Bench.
-    def calGate(): Double = {
-      var p = Bench.cpuProbe(cpus.toInt)
-      var tries = 0
-      while (p > 1.2 * Bench.CalibrationQuiet && tries < 3) {
-        System.err.println(f"[probe] cpu probe $p%.3f s loaded — waiting")
-        Thread.sleep(15000); tries += 1
-        p = Bench.cpuProbe(cpus.toInt)
-      }
-      p
-    }
-
     probesRun.foreach { case (name, q) =>
-      val cal = calGate()
+      val cal = Bench.cpuGate(cpus, "probe")
       // min-of-two per tier, task stats from the WARM big-tier pass
       // (Bench's convention): the first 10× run pays cold page-cache +
       // JIT for ~600 MB it has never touched, which round-13 diagnosis
@@ -941,17 +879,13 @@ object ScaleProbe {
       val (tb2, _) = once(sfDir)
       val tBase = math.min(tb1, tb2)
       val (tCold, nBig) = once(outDir)
-      // drain the async listener bus BEFORE reset: straggler cold-pass
-      // task events arriving after reset would be recorded as warm-pass
-      // stats — the exact cold-cache artifact the warm pass exists to
-      // exclude
-      Thread.sleep(500)
-      stats.reset()
-      val (tWarm, _) = once(outDir)
+      // the warm pass's own task stats: a straggler cold-pass event
+      // counted here would be the exact cold-cache artifact the warm
+      // pass exists to exclude
+      val ((tWarm, _), stats) =
+        graft.obs.ExecStats.during(spark.sparkContext)(once(outDir))
       val tBig = math.min(tCold, tWarm)
-      Thread.sleep(500) // drain the async listener bus before summarizing
-      val (stages, tasks, medMs, maxMs, skew) = stats.summary()
-      val readRows = stats.readRows
+      val heavy = stats.heaviestStage
       val plan = q(spark, outDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val cartesian = plan.contains("CartesianProduct")
@@ -963,9 +897,10 @@ object ScaleProbe {
       println(f"""{"query":"$name","t_sf01":$tBase%.2f,"rows_sf01":$nBase,""" +
         f""""t_${nCopies}x":$tBig%.2f,"t_${nCopies}x_cold":$tCold%.2f,""" +
         f""""rows_${nCopies}x":$nBig,""" +
-        f""""ratio":$ratio%.2f,"stages":$stages,"heaviest_stage_tasks":$tasks,""" +
-        f""""med_task_ms":$medMs,"max_task_ms":$maxMs,"skew":$skew%.2f,""" +
-        s""""read_rows":$readRows,""" +
+        f""""ratio":$ratio%.2f,"stages":${stats.stages},""" +
+        f""""heaviest_stage_tasks":${heavy.n},""" +
+        f""""med_task_ms":${heavy.medMs},"max_task_ms":${heavy.maxMs},""" +
+        f""""skew":${heavy.skew}%.2f,"read_rows":${stats.readRows},""" +
         f""""cal":$cal%.3f,"cal0":${Bench.CalibrationQuiet}%.2f,""" +
         s""""cartesian":$cartesian}""")
     }

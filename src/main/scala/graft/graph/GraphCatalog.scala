@@ -373,11 +373,8 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
           else Seq(() => mainFull())
         }
     // 2-3 concurrent jobs is the guide's sweet spot (enough to fill the
-    // tail, not enough to fight for executors); parameterised for
-    // cluster deploys, local default 3
-    val par = math.max(1, math.min(writeTasks.size,
-      spark.conf.getOption("spark.graft.save.parallelism")
-        .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(3)))
+    // tail, not enough to fight for executors)
+    val par = math.max(1, math.min(writeTasks.size, 3))
     if (par <= 1) writeTasks.foreach(t => stages ++= t())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par,
@@ -1398,8 +1395,9 @@ object GraphCatalog {
     * `write:<dataset>:<bucket_scoped|full>`; `link_clean` for the
     * hard-link pass, `commit` for the pointer write. Diagnostic
     * single-slot (same contract as PropertyGraph.lastPathPrune):
-    * ScaleProbe's dml_save rows print it so a warehouse-write regression
-    * names its stage.
+    * ScaleProbe's dml_save rows and Evidence's stats line print it so a
+    * warehouse-write regression names its stage; BucketedIndexSpec and
+    * MirrorPruneSpec assert its stage names.
     */
   @volatile var lastSaveStages: Seq[(String, Double)] = Seq.empty
 

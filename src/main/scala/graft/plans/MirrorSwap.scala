@@ -39,7 +39,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   */
 object MirrorSwap extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** A/B toggle (ScaleProbe, specs). */
+  /** A/B toggle (ScaleProbe, Evidence's `@-MirrorSwap` items, specs). */
   @volatile var enabled: Boolean = true
 
   override def apply(plan: LogicalPlan): LogicalPlan =

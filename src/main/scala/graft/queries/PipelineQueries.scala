@@ -62,15 +62,13 @@ object PipelineQueries {
     * convention while a broken 2-level assign/probe (recall ~0) trips.
     */
   private val HierRecallFloor = 0.6
-  // package-visible: PlanDump regenerates the e10/d25 plan evidence and
-  // must dump the SAME configuration the board rows run (ADVICE r20 —
-  // re-literal-ing these in the dump tool let the two silently diverge)
-  private[graft] val HierK = 256
-  private[graft] val HierNprobe = 96
-  private[graft] val NearN = 3
-  private[graft] val NearHashes = 32
-  private[graft] val NearBands = 8
-  private[graft] val NearTau = 0.7
+  // one definition per configuration the e08/e10 and d25/d26 rows share
+  private val HierK = 256
+  private val HierNprobe = 96
+  private val NearN = 3
+  private val NearHashes = 32
+  private val NearBands = 8
+  private val NearTau = 0.7
   /** e09: hierarchical IVF at k=4096 — the k-past-the-driver-draw shape
     * that motivated the 2-level trainer, on the driver board instead of
     * probe-only evidence (r19 verdict #6). Measured recall@10 at sf0.01,
@@ -103,32 +101,15 @@ object PipelineQueries {
   // by-chance-collision phrase length.
   private val SubstrK = 8
 
-  /** Scratch state dirs for the incremental/streaming dedup queries.
-    * Each invocation needs a FRESH dir (the query's contract is "commit
-    * batch 1 into empty state"), but the returned frame reads the state
-    * lazily, so deletion can't happen inline — a process-level shutdown
-    * hook reaps every dir instead. Without this, bench reruns +
-    * delta-guard passes + scale probes leaked parquet history into /tmp
-    * across rounds.
+  /** A fresh scratch state dir for the incremental/streaming dedup
+    * queries. Each invocation needs a FRESH dir (the query's contract is
+    * "commit batch 1 into empty state"), but the returned frame reads
+    * the state lazily, so deletion can't happen inline — it goes when
+    * the JVM exits. Without this, bench reruns + delta-guard passes +
+    * scale probes leaked parquet history into /tmp across rounds.
     */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  locally {
-    sys.addShutdownHook {
-      scratchDirs.forEach { root =>
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        if (Files.exists(root))
-          Files.walk(root).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-      }
-    }
-  }
-  private def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    scratchDirs.add(p)
-    p.toString
-  }
+  private def scratchDir(tag: String): String =
+    graft.LocalSpark.scratchDir(tag).toString
 
   /** The brute-force exact top-`k` answer the e04/e05/e06 recall gates
     * compare against, cached per (dataset, query set, k) the way d14
@@ -548,7 +529,7 @@ object PipelineQueries {
     "d14_incremental_dedup" -> ((s: SparkSession, d: String) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val state = scratchDir("graft-incdedup")
+      val state = scratchDir("incdedup")
       graft.dedup.IncrementalDedup.dedupeExact(
         docs.filter($"doc_id" < 250), "doc_id", "text", state).count()
       graft.dedup.IncrementalDedup.dedupeExact(
@@ -568,7 +549,7 @@ object PipelineQueries {
     "d25_incremental_near" -> ((s: SparkSession, d: String) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val state = scratchDir("graft-incnear")
+      val state = scratchDir("incnear")
       val run2 = docs.filter($"doc_id" >= 250)
         .unionByName(docs.filter($"doc_id" < 20)
           .select(($"doc_id" + 1000000L).as("doc_id"), $"text"))
@@ -594,7 +575,7 @@ object PipelineQueries {
     "d26_retry_idempotent" -> ((s: SparkSession, d: String) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val state = scratchDir("graft-incretry")
+      val state = scratchDir("incretry")
       val run1 = docs.filter($"doc_id" < 250)
       val run2 = docs.filter($"doc_id" >= 250)
         .unionByName(docs.filter($"doc_id" < 20)
@@ -624,7 +605,7 @@ object PipelineQueries {
     "d19_stream_dedup" -> ((s: SparkSession, d: String) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val state = scratchDir("graft-streamdedup")
+      val state = scratchDir("streamdedup")
       graft.dedup.IncrementalDedup.dedupeExact(
         docs.filter($"doc_id" < 250), "doc_id", "text", state).count()
       val withTs = docs.withColumn("ts",

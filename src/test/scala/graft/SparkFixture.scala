@@ -11,13 +11,8 @@ import graft.graph.{EdgeType, PropertyGraph}
   */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
+    val s = LocalSpark.builder(8)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // plan-text assertions grep scan locations: print them whole
       .config("spark.sql.maxMetadataStringLength", "1000")
       .getOrCreate()

@@ -183,24 +183,13 @@ class CacheSpec extends AnyFunSuite with TempDirs {
     // warm compile-time memos (anchor rowcounts etc.) on an unrelated
     // statement so only the subquery path is under the job counter
     s.explain("MATCH (a:Account) RETURN count(a) AS n")
-    val sc = SparkFixture.spark.sparkContext
-    org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val trace = s.explain(q)
-      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-      // the plan-only compile takes the LAZY subquery arm — the trace
-      // shows the join-shaped plan and no job ever ran
-      assert(jobs.get() == 0,
-        s"EXPLAIN launched ${jobs.get()} job(s); must be plan-only")
-      assert(trace.contains("Physical plan"))
-    } finally sc.removeSparkListener(l)
+    val (trace, st) =
+      graft.obs.ExecStats.during(SparkFixture.spark.sparkContext)(s.explain(q))
+    // the plan-only compile takes the LAZY subquery arm — the trace
+    // shows the join-shaped plan and no job ever ran
+    assert(st.jobs == 0,
+      s"EXPLAIN launched ${st.jobs} job(s); must be plan-only")
+    assert(trace.contains("Physical plan"))
     // and the EXECUTED statement still gets the memoized-literal win
     val n = s.execute(q).collect().head.getLong(0)
     assert(n > 0)

@@ -339,24 +339,8 @@ class BucketPruneSpec extends AnyFunSuite with TempDirs {
       .useGraph("/pr/g1")
     /** Jobs and input rows of `stmt`. */
     def run(stmt: String): (Int, Long) = {
-      val sc = spark.sparkContext
-      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val read = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          Option(t.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
-      }
-      sc.addSparkListener(l)
-      try {
-        sess.execute(stmt)
-        org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-        (jobs.get, read.get)
-      } finally sc.removeSparkListener(l)
+      val (_, st) = graft.obs.ExecStats.during(spark.sparkContext)(sess.execute(stmt))
+      (st.jobs, st.readRows)
     }
     // the store holds at most the SET's row and its ghost
     val (setJobs, setRead) = run("MATCH (c:customer {id: 1234}) SET c.acctbal = 1.0")

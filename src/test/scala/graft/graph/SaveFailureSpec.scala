@@ -58,7 +58,7 @@ class SaveFailureSpec extends AnyFunSuite with TempDirs {
       val secs = (System.nanoTime() - t0) / 1e9
       assert(String.valueOf(err.getMessage).contains("injected write failure") ||
         String.valueOf(err.getCause).contains("injected write failure"), err)
-      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+      org.apache.spark.sql.graft.Listeners.drain(sc)
       import scala.jdk.CollectionConverters._
       // the peer's job is cancelled while it runs, or — when the failure
       // came first — refused at submission: either way no job of the

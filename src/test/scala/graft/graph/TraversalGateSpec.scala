@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -18,24 +17,9 @@ import graft.{SparkFixture, TempDirs}
 class TraversalGateSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
-  /** Jobs started while `body` runs, with the listener bus drained on
-    * both sides so async delivery can neither hide nor leak a job.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-      counter.get()
-    } finally sc.removeSparkListener(l)
-  }
+  /** Jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int =
+    graft.obs.ExecStats.during(spark.sparkContext)(body)._2.jobs
 
   /** A chain graph persisted to parquet so the edge frame carries real
     * (file-size) Catalyst statistics — 3000 edges is tiny on disk but

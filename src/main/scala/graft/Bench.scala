@@ -340,17 +340,20 @@ object Bench {
   /** A [[cpuProbe]] reading taken once the box is quiet: a reading over
     * 1.2x [[CalibrationQuiet]] means other tenants hold cores right now,
     * so it is waited out (up to 3x15 s, logged under `tag`) before the
-    * caller spends a measured pass. Returns the last reading.
+    * caller spends a measured pass. Probes with at most one thread per
+    * core: more threads than cores read as load on a quiet box. Returns
+    * the last reading.
     */
   private[graft] def cpuGate(threads: Int, tag: String): Double = {
-    var p = cpuProbe(threads)
+    val probeThreads = math.min(threads, Runtime.getRuntime.availableProcessors)
+    var p = cpuProbe(probeThreads)
     var tries = 0
     while (p > 1.2 * CalibrationQuiet && tries < 3) {
       System.err.println(f"[$tag] cpu probe $p%.3f s > 1.2x " +
         f"$CalibrationQuiet%.3f s quiet constant — waiting out load")
       Thread.sleep(15000)
       tries += 1
-      p = cpuProbe(threads)
+      p = cpuProbe(probeThreads)
     }
     p
   }

@@ -39,4 +39,9 @@ object LocalSpark {
       org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     p
   }
+
+  /** The warehouse the board's GQL rows save their graphs into: one
+    * [[scratchDir]] per JVM, so concurrent runs never overwrite each
+    * other's graphs and none outlives its run. */
+  lazy val warehouse: String = scratchDir("warehouse").toString
 }

@@ -782,7 +782,7 @@ object ScaleProbe {
         val sub = new PropertyGraph(
           Map("customer" -> g.nodeTables("customer")),
           Map("NEXT" -> g.edgeTables("NEXT")))
-        val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+        val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
         val sess = gls.session("driver").useGraph(sub)
         sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
         sess.saveGraphAs("/probe/custfact", force = true)

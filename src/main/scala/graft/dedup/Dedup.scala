@@ -79,17 +79,24 @@ object Dedup {
     df.groupBy(TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .agg(count(lit(1)).as("n_dups"), min(col(idCol)).as("keep_id"))
 
+  /** `keep` plus (band, bucket), one row per LSH band of the signature:
+    * the bucket is the engine-stable hash of the band's slice.
+    */
+  def bandBuckets(df: DataFrame, sigCol: String, bands: Int,
+      rowsPerBand: Int, keep: Column*): DataFrame =
+    df.select(keep :+ posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        b => slice(col(sigCol), b * rowsPerBand + 1, lit(rowsPerBand)))): _*)
+      .withColumnRenamed("pos", "band")
+      .withColumn("bucket", TextAnalysis.stableHash60(to_json(col("col"))))
+      .drop("col")
+
   /** LSH candidate pairs: band the signature, bucket-join within bands.
     * `bands * rowsPerBand` must equal the signature length. Output
     * (id_a, id_b) with id_a < id_b, distinct across bands.
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, sigCol: String,
       bands: Int, rowsPerBand: Int): DataFrame = {
-    val banded = df.select(col(idCol).as("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => slice(col(sigCol), b * rowsPerBand + 1, lit(rowsPerBand)))))
-      .select(col("id"), col("pos").as("band"),
-        TextAnalysis.stableHash60(to_json(col("col"))).as("bucket"))
+    val banded = bandBuckets(df, sigCol, bands, rowsPerBand, col(idCol).as("id"))
     val l = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
     val r = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
     l.join(r, Seq("band", "bucket"))

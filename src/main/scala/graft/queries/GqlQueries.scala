@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.GraphLiteSpark
+import graft.{GraphLiteSpark, LocalSpark}
 import graft.graph.TpchGraph
 
 /** End-to-end GQL queries over the TPC-H property graph: text → lexer →
@@ -14,12 +14,12 @@ object GqlQueries {
   private type Q = (SparkSession, String) => DataFrame
 
   private def run(s: SparkSession, d: String, q: String): DataFrame =
-    GraphLiteSpark.open(s, "/tmp/graft-warehouse").session("driver")
+    GraphLiteSpark.open(s, LocalSpark.warehouse).session("driver")
       .useGraph(TpchGraph.build(s, d)).gql(q)
 
   /** Statement-level execution (NEXT chains etc.). */
   private def exec(s: SparkSession, d: String, q: String): DataFrame =
-    GraphLiteSpark.open(s, "/tmp/graft-warehouse").session("driver")
+    GraphLiteSpark.open(s, LocalSpark.warehouse).session("driver")
       .useGraph(TpchGraph.build(s, d)).execute(q)
 
   val queries: Map[String, Q] = Map(
@@ -193,7 +193,7 @@ object GqlQueries {
         Map("nation" -> g.nodeTables("nation"),
           "region" -> g.nodeTables("region")),
         Map("IN_REGION" -> g.edgeTables("IN_REGION")))
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       gls.catalog.createSchema("verify")
       gls.catalog.saveGraph("verify", "natreg", sub, force = true)
       gls.session("driver")
@@ -222,7 +222,7 @@ object GqlQueries {
       val g = TpchGraph.build(s, d)
       val sub = new PropertyGraph(
         Map("customer" -> g.nodeTables("customer")), Map.empty)
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       // IF NOT EXISTS: the warehouse path is fixed, and CREATE now
       // errors on an existing schema (reference DDL semantics) — this
@@ -354,7 +354,7 @@ object GqlQueries {
     // property from an expression, REMOVE nulls one out, DETACH DELETE
     // drops nodes with their edges
     "gql26_mutation_pipeline" -> ((s: SparkSession, d: String) => {
-      val t = GraphLiteSpark.open(s, "/tmp/graft-warehouse").session("driver")
+      val t = GraphLiteSpark.open(s, LocalSpark.warehouse).session("driver")
         .useGraph(TpchGraph.build(s, d))
       t.execute("MATCH (n:nation) WHERE n.id < 10 SET n.name = '*' || n.name")
       t.execute("MATCH (n:nation) WHERE n.id < 3 REMOVE n.regionkey")
@@ -403,7 +403,7 @@ object GqlQueries {
     // are single-row). Each statement's predicate must confine the
     // mutation to its 5-of-25 nation slice or the read-back diverges.
     "gql28_simple_dml" -> ((s: SparkSession, d: String) => {
-      val t = GraphLiteSpark.open(s, "/tmp/graft-warehouse").session("driver")
+      val t = GraphLiteSpark.open(s, LocalSpark.warehouse).session("driver")
         .useGraph(TpchGraph.build(s, d))
       t.execute("MATCH (n:nation {regionkey: 2}) SET n.name = n.name || '!'")
       t.execute("MATCH (n:nation {regionkey: 0}) REMOVE n.regionkey")
@@ -417,7 +417,7 @@ object GqlQueries {
     // then a hop-target DETACH DELETE removes one nation's customers
     // (the round-14 hop-target routing) — final customer state read back
     "gql29_hop_dml" -> ((s: SparkSession, d: String) => {
-      val t = GraphLiteSpark.open(s, "/tmp/graft-warehouse").session("driver")
+      val t = GraphLiteSpark.open(s, LocalSpark.warehouse).session("driver")
         .useGraph(TpchGraph.build(s, d))
       t.execute("MATCH (c:customer {mktsegment: 'BUILDING'})-[:IN_NATION]->" +
         "(n:nation {regionkey: 3}) SET c.acctbal = 0.0")
@@ -432,7 +432,7 @@ object GqlQueries {
     // one priority class's totalprice, DELETE drops another class's
     // edges entirely; the grouped read-back sees both effects at once
     "gql30_edge_dml" -> ((s: SparkSession, d: String) => {
-      val t = GraphLiteSpark.open(s, "/tmp/graft-warehouse").session("driver")
+      val t = GraphLiteSpark.open(s, LocalSpark.warehouse).session("driver")
         .useGraph(TpchGraph.build(s, d))
       t.execute("MATCH (:customer)-[r:PLACED {priority: '1-URGENT'}]->" +
         "(:orders) SET r.totalprice = 1.0")
@@ -457,7 +457,7 @@ object GqlQueries {
       val g = TpchGraph.build(s, d)
       val sub = new PropertyGraph(
         Map("customer" -> g.nodeTables("customer")), Map.empty)
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /bdml")
       // index + bucket option BEFORE the first save: the save then
@@ -488,7 +488,7 @@ object GqlQueries {
       val g = TpchGraph.build(s, d)
       val sub = new PropertyGraph(
         Map("customer" -> g.nodeTables("customer")), Map.empty)
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /bprune")
       sess.execute("CREATE GRAPH INDEX bprune_id ON nodes_customer (id)")
@@ -517,7 +517,7 @@ object GqlQueries {
         Map("customer" -> g.nodeTables("customer"),
           "orders" -> g.nodeTables("orders")),
         Map("PLACED" -> g.edgeTables("PLACED")))
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /bprune")
       sess.execute("CREATE GRAPH INDEX hop_src ON edges_PLACED (src)")
@@ -551,7 +551,7 @@ object GqlQueries {
       val sub = new PropertyGraph(
         Map("customer" -> g.nodeTables("customer")),
         Map("NEXT" -> g.edgeTables("NEXT")))
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /bprune")
       sess.execute("CREATE GRAPH INDEX vp_src ON edges_NEXT (src)")
@@ -582,7 +582,7 @@ object GqlQueries {
         Map("customer" -> g.nodeTables("customer")),
         Map("LINK" -> (EdgeType("LINK", "customer", "customer"),
           g.edgeTables("NEXT")._2)))
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /bprune")
       sess.execute("CREATE GRAPH INDEX vpb_src ON edges_LINK (src)")
@@ -610,7 +610,7 @@ object GqlQueries {
         Map("customer" -> g.nodeTables("customer"),
           "orders" -> g.nodeTables("orders")),
         Map("PLACED" -> g.edgeTables("PLACED")))
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /bprune")
       sess.execute("CREATE GRAPH INDEX rev_src ON edges_PLACED (src)")
@@ -642,7 +642,7 @@ object GqlQueries {
         Map("customer" -> g.nodeTables("customer")),
         Map("LINKH" -> (EdgeType("LINKH", "customer", "customer"),
           g.edgeTables("HOP")._2)))
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /bprune")
       sess.execute("CREATE GRAPH INDEX srh_src ON edges_LINKH (src)")
@@ -671,7 +671,7 @@ object GqlQueries {
       val cust = g.nodeTables("customer").withColumn("id",
         concat(lit("C"), lpad(col("id").cast("string"), 6, "0")))
       val sub = new PropertyGraph(Map("customer" -> cust), Map.empty)
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-warehouse")
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
       sess.execute("CREATE SCHEMA IF NOT EXISTS /sdml")
       sess.execute("CREATE GRAPH INDEX sdml_id ON nodes_customer (id)")

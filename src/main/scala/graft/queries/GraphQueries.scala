@@ -190,7 +190,7 @@ object GraphQueries {
     // GraphIndexScan): the session-API path the reference's clients use,
     // driver-gated against a window-function oracle over the NEXT chain
     "g16_call_neighbors" -> ((s: SparkSession, d: String) => {
-      graft.GraphLiteSpark.open(s, "/tmp/graft-warehouse").session("driver")
+      graft.GraphLiteSpark.open(s, graft.LocalSpark.warehouse).session("driver")
         .useGraph(TpchGraph.build(s, d))
         .call("gql.find_neighbors", Seq("NEXT", "1", "5"))
     })

@@ -17,15 +17,6 @@ class EvidenceSpec extends AnyFunSuite with TempDirs {
   // a runtime bucket filter
   private val q = "gql39_seeded_reverse_hop"
 
-  // the board's GQL rows save to one fixed warehouse: it goes after the
-  // suite unless it was there before
-  private val boardWarehouse = new java.io.File("/tmp/graft-warehouse")
-  private val hadBoardWarehouse = boardWarehouse.exists()
-  override protected def afterAll(): Unit =
-    try super.afterAll()
-    finally if (!hadBoardWarehouse)
-      org.apache.commons.io.FileUtils.deleteQuietly(boardWarehouse)
-
   private def flags =
     Seq(BucketPrune.enabled, BucketDynamicPrune.enabled, MirrorSwap.enabled)
 

@@ -11,6 +11,8 @@ import graft.dedup.IncrementalDedup
   * content in state that no successful run's output ever carried).
   * Other batches' entries still drop duplicates as before, and legacy
   * exact-state files (no rid column) keep the old always-drop rule.
+  * Also pinned here: the state's life cycle (a path that does not exist
+  * yet, a state in the pre-`near` layout) and the jobs a batch runs.
   */
 class IncrementalRetrySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
@@ -81,5 +83,85 @@ class IncrementalRetrySpec extends AnyFunSuite with TempDirs {
       .toDF("doc_id", "text")
     assert(run(b2) == Seq(11L)) // 10 drops vs batch-1 state
     assert(run(b2) == Seq(11L)) // and its retry is stable too
+  }
+
+  private def near(st: String, df: org.apache.spark.sql.DataFrame) =
+    IncrementalDedup.dedupeNear(df, "doc_id", "text", st,
+        n = 2, numHashes = 16, bands = 4, tau = 0.7)
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  test("both entry points create a state path that does not exist yet") {
+    import spark.implicits._
+    val root = tempDir("fresh")
+    val b = Seq((1L, "aa bb cc dd ee"), (2L, "aa bb cc dd ee"),
+      (3L, "zz yy xx ww vv")).toDF("doc_id", "text")
+    val exactSt = root.resolve("exact/state").toString
+    assert(IncrementalDedup.dedupeExact(b, "doc_id", "text", exactSt)
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
+    assert(near(root.resolve("near/state").toString, b) == Seq(1L, 3L))
+  }
+
+  test("a state in the buckets + shingles layout gives the same " +
+      "admissions, and is moved into near once") {
+    import spark.implicits._
+    val b1 = Seq((1L, "aa bb cc dd ee"), (2L, "zz yy xx ww vv"),
+      (3L, "mm nn oo pp qq")).toDF("doc_id", "text")
+    val b2 = Seq((10L, "aa bb cc dd ee"), (11L, "qq rr ss tt uu"),
+      (12L, "zz yy xx ww vv ww")).toDF("doc_id", "text")
+    val fresh = state()
+    assert(near(fresh, b1) == Seq(1L, 2L, 3L))
+    // the same committed batch, written as the old layout did: bucket
+    // rows and shingle sets in two datasets, ids in the batch's type
+    val legacy = state()
+    val rows = spark.read.parquet(s"$fresh/near")
+    rows.select($"id".cast("long").as("id"), $"band", $"bucket")
+      .write.parquet(s"$legacy/buckets")
+    rows.filter($"band" === 0).select($"id".cast("long").as("id"), $"shingles")
+      .write.parquet(s"$legacy/shingles")
+    val want = near(fresh, b2)
+    assert(want == Seq(11L)) // 10 and 12 drop against batch 1
+    assert(near(legacy, b2) == want)
+    val dirs = new java.io.File(legacy).list().toSet
+    assert(dirs("near") && !dirs("buckets") && !dirs("shingles"), dirs)
+    // migrated ids still exclude a retried batch's own rows
+    assert(near(legacy, b1) == Seq(1L, 2L, 3L))
+    // compaction folds near (migrated and appended rows alike) in place
+    IncrementalDedup.compactState(spark, legacy)
+    assert(new java.io.File(legacy).list().toSet == dirs)
+    val b3 = Seq((20L, "qq rr ss tt uu"), (21L, "ab cd ef gh ij"))
+      .toDF("doc_id", "text")
+    assert(near(legacy, b3) == near(fresh, b3))
+    assert(near(legacy, b3) == Seq(21L))
+  }
+
+  test("a batch with history runs at most 7 exact jobs, and at most 15 " +
+      "near jobs with one state append") {
+    import spark.implicits._
+    val st = state()
+    val words = (0 until 40).map(i => s"w$i")
+    // every 5th doc copies an earlier text, every 7th edits one word
+    def docs(ids: Range): org.apache.spark.sql.DataFrame =
+      ids.map { i =>
+        val r = new scala.util.Random(if (i % 5 == 0) i % 150 else i)
+        val text = Seq.fill(12)(words(r.nextInt(words.size)))
+        (i.toLong, (if (i % 7 == 0) text.updated(0, "edit") else text).mkString(" "))
+      }.toDF("doc_id", "text")
+    IncrementalDedup.dedupeNear(
+      IncrementalDedup.dedupeExact(docs(0 until 200), "doc_id", "text", st),
+      "doc_id", "text", st).collect()
+    /** Write-job ids of the near dataset's files (part-<n>-<uuid>-c000). */
+    def appends(): Set[String] = new java.io.File(s"$st/near").list().toSet
+      .filter(_.endsWith(".parquet")).map(_.split("-").slice(2, 7).mkString("-"))
+    val before = appends()
+    val sc = spark.sparkContext
+    val (exact, ex) = graft.obs.ExecStats.during(sc)(
+      IncrementalDedup.dedupeExact(docs(200 until 400), "doc_id", "text", st))
+    assert(ex.jobs <= 7, s"dedupeExact ran ${ex.jobs} jobs")
+    val (admitted, nr) = graft.obs.ExecStats.during(sc)(
+      IncrementalDedup.dedupeNear(exact, "doc_id", "text", st)
+        .select("doc_id").collect())
+    assert(nr.jobs <= 15, s"dedupeNear + collect ran ${nr.jobs} jobs")
+    assert(admitted.nonEmpty && admitted.length < 200)
+    assert((appends() -- before).size == 1)
   }
 }

@@ -20,11 +20,11 @@ object LocalSpark {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
 
-  /** A session from [[builder]] that logs at `logLevel`. */
+  /** A session from [[builder]] that logs at `logLevel`, its context's
+    * start-up included. */
   def apply(cpus: Int, logLevel: String): SparkSession = {
-    val s = builder(cpus).getOrCreate()
-    s.sparkContext.setLogLevel(logLevel)
-    s
+    org.apache.spark.sql.graft.Logs.setLevel(logLevel)
+    builder(cpus).getOrCreate()
   }
 
   /** Cores from `SPARK_GRAFT_CPUS`, else `default`. */

@@ -39,13 +39,13 @@ object Repl {
         case w => warehouse = w; i += 1
       }
     }
+    org.apache.spark.sql.graft.Logs.setLevel("ERROR")
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val gls = GraphLiteSpark.open(spark, warehouse)
     // -u/-p authenticate against the security catalog before any
     // statement runs (graphlite gql -u admin -p …; anonymous when

@@ -79,16 +79,21 @@ object Dedup {
     df.groupBy(TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .agg(count(lit(1)).as("n_dups"), min(col(idCol)).as("keep_id"))
 
-  /** `keep` plus (band, bucket), one row per LSH band of the signature:
-    * the bucket is the engine-stable hash of the band's slice.
+  /** The LSH bucket of each band of a signature, in band order: the
+    * engine-stable hash of the band's slice. One expression per band, so
+    * the array compiles with its stage (a lambda over the bands would run
+    * interpreted).
     */
-  def bandBuckets(df: DataFrame, sigCol: String, bands: Int,
-      rowsPerBand: Int, keep: Column*): DataFrame =
-    df.select(keep :+ posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => slice(col(sigCol), b * rowsPerBand + 1, lit(rowsPerBand)))): _*)
-      .withColumnRenamed("pos", "band")
-      .withColumn("bucket", TextAnalysis.stableHash60(to_json(col("col"))))
-      .drop("col")
+  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map(b => TextAnalysis.stableHash60(
+      to_json(slice(sig, b * rowsPerBand + 1, rowsPerBand)))): _*)
+
+  /** `keep` plus (band, bucket), one row per band of `keys`, an array
+    * from [[bandKeys]].
+    */
+  def bandBuckets(df: DataFrame, keys: Column, keep: Column*): DataFrame =
+    df.select(keep :+ posexplode(keys): _*)
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** LSH candidate pairs: band the signature, bucket-join within bands.
     * `bands * rowsPerBand` must equal the signature length. Output
@@ -96,7 +101,8 @@ object Dedup {
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, sigCol: String,
       bands: Int, rowsPerBand: Int): DataFrame = {
-    val banded = bandBuckets(df, sigCol, bands, rowsPerBand, col(idCol).as("id"))
+    val banded = bandBuckets(df, bandKeys(col(sigCol), bands, rowsPerBand),
+      col(idCol).as("id"))
     val l = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
     val r = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
     l.join(r, Seq("band", "bucket"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.Sessions
 import graft.text.TextAnalysis
 
 /** Cross-run deduplication: a persisted sketch of everything already
@@ -80,14 +81,17 @@ object IncrementalDedup {
     // behavior).
     // v2 sidecar: keys are xxhash64(fp), built DISTRIBUTED by Spark's
     // BloomFilterAggregate and probed by the native BloomFilterMightContain
-    // predicate (codegen stage, no Scala UDF, no driver-side build). The
+    // predicate (no Scala UDF, no driver-side build). The
     // retired v1 sidecar hashed raw strings — incompatible key space, so
     // its presence is simply ignored and a fresh v2 rebuilds from history.
     val bloomPath = Paths.get(s"$statePath/exact_bloom2")
-    val fp = batch.withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-    val w = Window.partitionBy(col("__fp")).orderBy(col(idCol))
-    val batchKeep = fp.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    // the batch's fingerprints are its one compiled plan, the same for
+    // every batch; everything after them is bookkeeping over the batch's
+    // survivors and runs without code generation (Sessions), so a warm
+    // batch compiles nothing and leaves the codegen cache to the stages
+    // that are compute-bound
+    val fp = Sessions.compiled(
+      batch.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))))
     val hasHistory = Files.exists(Paths.get(path))
     lazy val history = spark.read.schema(ExactSchema).parquet(path)
     // a sidecar whose insert count has run far past its (possibly conf-
@@ -101,6 +105,20 @@ object IncrementalDedup {
         s"(inserted ${meta.get._2} > 4x capacity ${meta.get._1}); " +
         "probing skipped — raise spark.sql.optimizer.runtime.bloomFilter." +
         "maxNumItems/maxNumBits to restore the pre-filter at this corpus size")
+    // NULL fingerprints hash to the seed constant: at worst they probe
+    // "maybe seen" and take the authoritative anti-join, where NULL never
+    // equi-matches — so they survive, exactly like the plain path. The
+    // verdict is a column below the window, so neither branch's filter
+    // is pushed beneath it and both read the window's one shuffle.
+    val seen =
+      if (hasHistory && Files.exists(bloomPath) && !bloomSaturated)
+        graft.functions.BloomFunctions.mightContain(spark,
+          Files.readAllBytes(bloomPath), col("__fp"))
+      else lit(true)
+    val w = Window.partitionBy(col("__fp")).orderBy(col(idCol))
+    val batchKeep = fp.withColumn("__seen", seen)
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
     val keep =
       if (!hasHistory) batchKeep
       else {
@@ -108,24 +126,13 @@ object IncrementalDedup {
         // drop iff some history row carries this fingerprint under a
         // DIFFERENT (or legacy-unknown) id — a doc's own committed row
         // does not suppress its retry
-        def dropRule(b: DataFrame) =
-          b.join(hist, b("__fp") === col("__hfp") &&
+        val candidates = batchKeep.filter(col("__seen"))
+        batchKeep.filter(!col("__seen")).unionByName(
+          candidates.join(hist, candidates("__fp") === col("__hfp") &&
             (col("__rid").isNull ||
-              col("__rid") =!= b(idCol).cast("string")), "left_anti")
-        if (Files.exists(bloomPath) && !bloomSaturated) {
-          val bytes = Files.readAllBytes(bloomPath)
-          // NULL fingerprints hash to the seed constant: at worst they
-          // probe "maybe seen" and take the authoritative anti-join,
-          // where NULL never equi-matches — so they survive, exactly
-          // like the plain path
-          val mightSeen =
-            graft.functions.BloomFunctions.mightContain(spark, bytes, col("__fp"))
-          val novel = batchKeep.filter(!mightSeen)
-          val candidates = dropRule(batchKeep.filter(mightSeen))
-          novel.unionByName(candidates)
-        } else dropRule(batchKeep)
+              col("__rid") =!= candidates(idCol).cast("string")), "left_anti"))
       }
-    val out = keep.localCheckpoint(true)
+    val out = Sessions.localCheckpointWithoutCodegen(keep.drop("__seen"))
     // Bloom invariants:
     //  - the sidecar must NEVER under-cover the history table (a false
     //    negative would skip the authoritative anti-join and admit a
@@ -143,8 +150,9 @@ object IncrementalDedup {
     // The filter and the row count of `df`, in one aggregate (the bytes
     // are null on empty input).
     def buildBloom(df: DataFrame, capacity: Long): (Array[Byte], Long) = {
-      val r = df.agg(graft.functions.BloomFunctions
-        .agg(spark, col("__fp"), capacity, 0.01), count(lit(1))).head()
+      val agg = df.agg(graft.functions.BloomFunctions
+        .agg(spark, col("__fp"), capacity, 0.01), count(lit(1)))
+      val r = Sessions.interpreted(agg)(_.head())
       (r.getAs[Array[Byte]](0), r.getLong(1))
     }
     // capacity is clamped to what BloomFilterAggregate will actually
@@ -174,7 +182,7 @@ object IncrementalDedup {
       val full =
         if (hasHistory) history.select(col("fp").as("__fp")).unionByName(fps)
         else fps
-      val cap = nextCapacity(full.count())
+      val cap = nextCapacity(Sessions.interpreted(full)(_.count()))
       val (bytes, total) = buildBloom(full, cap)
       (bytes, (cap, total))
     }
@@ -204,9 +212,8 @@ object IncrementalDedup {
       writeAtomically(bloomMetaPath(bloomPath),
         s"${newMeta._1},${newMeta._2}".getBytes("UTF-8"))
     }
-    out.select(col("__fp").as("fp"),
-        col(idCol).cast("string").as("rid"))
-      .write.mode("append").parquet(path)
+    Sessions.interpreted(out.select(col("__fp").as("fp"),
+      col(idCol).cast("string").as("rid")))(_.write.mode("append").parquet(path))
     out.drop("__fp")
   }
 
@@ -325,18 +332,22 @@ object IncrementalDedup {
     // d22 convention, r19 verdict #3: the full array made the partition
     // sort compare hundreds of longs per doc; collisions are beyond
     // corpus-scale odds).
-    val sigs = batch
+    // The per-doc hashing (shingles, signature bands, digest) is
+    // compiled, one plan for every batch; the collapse is bookkeeping and
+    // runs without code generation.
+    val hashed = Sessions.compiled(batch
       .withColumn("__sh", Dedup.shingleHashes(col(textCol), n))
-      .withColumn("__sig", Dedup.minhashFromHashes(col("__sh"), numHashes))
+      .withColumn("__bk", Dedup.bandKeys(
+        Dedup.minhashFromHashes(col("__sh"), numHashes), nBands, rpb))
+      .withColumn("__dg", unhex(md5(to_json(array_sort(col("__sh")))))))
+    val sigs = Sessions.localCheckpointWithoutCodegen(hashed
       .withColumn("__rn", row_number().over(
-        Window.partitionBy(unhex(md5(to_json(array_sort(col("__sh"))))))
-          .orderBy(col(idCol))))
-      .filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint(true)
+        Window.partitionBy(col("__dg")).orderBy(col(idCol))))
+      .filter(col("__rn") === 1).drop("__rn", "__dg"))
     // (__id, __sh, band, bucket): one row per doc and band, carrying the
     // doc's set so a bucket match confirms without a lookup
     def keyed(df: DataFrame, id: Column): DataFrame =
-      Dedup.bandBuckets(df, "__sig", nBands, rpb, id.as("__id"), col("__sh"))
+      Dedup.bandBuckets(df, col("__bk"), id.as("__id"), col("__sh"))
     val banded = keyed(sigs, col(idCol))
 
     // within-batch: higher id of each confirmed pair drops
@@ -369,14 +380,17 @@ object IncrementalDedup {
           .select("__id")
         innerDrop.unionByName(stateDrop)
       }
-    val out = sigs.join(drops, sigs(idCol) === drops("__id"), "left_anti")
-      .localCheckpoint(true)
+    // the Jaccard confirmations are compiled; the anti-join of the
+    // survivors is bookkeeping
+    val dropped = Sessions.compiled(drops)
+    val out = Sessions.localCheckpointWithoutCodegen(
+      sigs.join(dropped, sigs(idCol) === dropped("__id"), "left_anti"))
     // the batch's one state append
-    keyed(out, col(idCol).cast("string"))
+    Sessions.interpreted(keyed(out, col(idCol).cast("string"))
       .select(col("__id").as("id"), col("band"), col("bucket"),
-        when(col("band") === 0, col("__sh")).as("shingles"))
-      .write.mode("append").parquet(nearPath)
-    out.drop("__sh", "__sig")
+        when(col("band") === 0, col("__sh")).as("shingles")))(
+      _.write.mode("append").parquet(nearPath))
+    out.drop("__sh", "__bk")
   }
 
   /** Streaming front door for the cross-run exact dedup: fingerprint a

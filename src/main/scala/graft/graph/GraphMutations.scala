@@ -93,13 +93,20 @@ object GraphMutations {
   // ---- the statement kinds, each one restatement job ----
 
   /** Hit = rows matching `pred` (TRUE only, 3VL); each assignment is
-    * applied to them, the base ones leave a ghost. */
+    * applied to them, the base ones leave a ghost. The hit base rows are
+    * read once and forked: `__pre` marks the copy that stays the ghost
+    * (the pre-image), which no assignment touches. */
   private def setBy(d: LabelDelta, pred: Column,
       assignments: Map[String, Column]): (LabelDelta, LabelDelta.Outcome) = {
     val hitBase = d.visibleBase.filter(pred)
-    val live = union(Seq(hitBase, d.visibleDelta), s"SET on ${d.key}-keyed rows")
-    run(d, union(Seq(applyAssigns(live, pred, assignments),
-      tag(hitBase, Keep | IsGhost), ghosts(d)), "SET"))
+      .withColumn("__pre", explode(array(lit(false), lit(true))))
+    val live = union(Seq(hitBase, d.visibleDelta.withColumn("__pre", lit(false))),
+      s"SET on ${d.key}-keyed rows")
+    val assigned = applyAssigns(live, pred && !col("__pre"), assignments)
+      .withColumn(LabelDelta.Tag,
+        when(col("__pre"), lit(Keep | IsGhost)).otherwise(col(LabelDelta.Tag)))
+      .drop("__pre")
+    run(d, union(Seq(assigned, ghosts(d)), "SET"))
   }
 
   /** Hit = rows matching `pred` (TRUE only); they leave the view. With

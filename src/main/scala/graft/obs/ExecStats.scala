@@ -2,12 +2,14 @@ package graft.obs
 
 import scala.collection.mutable
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.graft.Listeners
 
 /** What the Spark jobs of a stretch of driver code did: the jobs started,
-  * the finished tasks' durations per stage, and the input records those
-  * tasks read (file-source rows decoded; shuffle reads excluded).
+  * the finished tasks' durations per stage, the input records those
+  * tasks read (file-source rows decoded; shuffle reads excluded), and the
+  * classes Spark's code generator compiled meanwhile.
   *
   * Records, not bytes: Hadoop FS byte statistics underreport on local
   * `file://` reads, while recordsRead is counted by the parquet reader
@@ -17,12 +19,15 @@ import org.apache.spark.sql.graft.Listeners
   * 1000-executor cluster pays for.
   *
   * A listener sees every job of its SparkContext: jobs that other
-  * threads run meanwhile are counted too.
+  * threads run meanwhile are counted too. The compile count is wider
+  * still: Spark's codegen cache and its counter are JVM-wide, so it
+  * also counts classes compiled for other threads and other contexts.
   */
 final class ExecStats extends SparkListener {
   private var jobCount = 0
   private var inputRecords = 0L
   private val byStage = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
+  private var compiled = 0L
 
   override def onJobStart(j: SparkListenerJobStart): Unit =
     synchronized { jobCount += 1 }
@@ -37,6 +42,11 @@ final class ExecStats extends SparkListener {
   def jobs: Int = synchronized(jobCount)
   def readRows: Long = synchronized(inputRecords)
   def stages: Int = synchronized(byStage.size)
+
+  /** Classes compiled by Spark's code generator (Janino compiles, each
+    * a miss of the JVM-wide codegen cache) while [[ExecStats.during]]
+    * ran its body; a warm plan whose classes are all cached reads 0. */
+  def codegenCompiles: Long = synchronized(compiled)
 
   /** Every finished task. */
   def tasks: ExecStats.Tasks =
@@ -71,8 +81,12 @@ object ExecStats {
     val stats = new ExecStats
     Listeners.drain(sc)
     sc.addSparkListener(stats)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       val a = body
+      stats.synchronized {
+        stats.compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+      }
       Listeners.drain(sc)
       (a, stats)
     } finally sc.removeSparkListener(stats)

@@ -421,8 +421,12 @@ object Similarity {
         queries: DataFrame, qidCol: String, qvecCol: String,
         topK: Int): DataFrame = {
       val spark = corpus.sparkSession
-      val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-        .withColumn("cid", cidCol(col("vec"), supers, children))
+      // a vector has a list exactly when it is not NULL: filtering on the
+      // vector and stating the cid non-NULL keeps the join's inferred
+      // not-NULL filter from evaluating the cid a second time
+      val assigned = corpus.filter(col(vecCol).isNotNull)
+        .select(col(idCol).as("id"), col(vecCol).as("vec"))
+        .withColumn("cid", coalesce(cidCol(col("vec"), supers, children), lit(-1)))
       val probed = queries
         .select(col(qidCol).as("qid"), col(qvecCol).as("qvec"))
         .withColumn("cid", explode(probeCids(col("qvec"), supers, children)))
@@ -432,7 +436,9 @@ object Similarity {
         .cosine(spark, col("qvec"), col("vec"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("id"))
+      // one exchange by query serves both the distinct and the ranking
       cands.select(col("qid"), col("cand_id").as("id"), cos.as("score"))
+        .repartition(col("qid"))
         .distinct()
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= topK)

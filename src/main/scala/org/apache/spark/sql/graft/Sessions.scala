@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.SQLExecution
 
@@ -44,5 +44,37 @@ object Sessions {
       }
     }
     w.withActive(SQLExecution.withSQLConfPropagated(w)(body(w)))
+  }
+
+  /** `df`'s plan as a frame of session `s`. */
+  private def on(s: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
+
+  /** `action` on `df`, planned and run without code generation
+    * ([[withoutCodegen]]). For small bookkeeping plans, whose generated
+    * classes would cost more to compile than they save and would take
+    * slots in Spark's JVM-wide codegen cache that compute-heavy stages
+    * need.
+    */
+  def interpreted[A](df: DataFrame)(action: DataFrame => A): A =
+    withoutCodegen(df.sparkSession)(w => action(on(w, df)))
+
+  /** `df` materialized by an eager local checkpoint that is planned and
+    * run without code generation, read back as a frame of `df`'s own
+    * session. */
+  def localCheckpointWithoutCodegen(df: DataFrame): DataFrame =
+    on(df.sparkSession, interpreted(df)(_.localCheckpoint(true)))
+
+  /** `df` as a frame over the rows of its own physical plan, compiled as
+    * `df`'s session compiles it. A plan built on the result reads them
+    * as an RDD instead of re-planning `df`, so a plan run through
+    * [[withoutCodegen]] can start from compiled work. Adaptive execution
+    * runs `df`'s shuffle stages, if any, when this is called; its last
+    * stage is not materialized and runs inside the jobs that read the
+    * result, once per read.
+    */
+  def compiled(df: DataFrame): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    s.internalCreateDataFrame(df.queryExecution.toRdd.map(_.copy()), df.schema)
   }
 }

@@ -11,13 +11,12 @@ import graft.graph.{EdgeType, PropertyGraph}
   */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = LocalSpark.builder(8)
+    org.apache.spark.sql.graft.Logs.setLevel("WARN")
+    LocalSpark.builder(8)
       .appName("graft-test")
       // plan-text assertions grep scan locations: print them whole
       .config("spark.sql.maxMetadataStringLength", "1000")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   /** Fraud dataset (test_fixture.rs:135-190): 50 Account + 20 Merchant

@@ -1,19 +1,21 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.metrics.source.CodegenMetrics
 import graft.{SparkFixture, TempDirs}
+import graft.obs.ExecStats
 
 /** Writes stop forcing recompiles: once each statement kind ran once, a
   * mutated label reads as a view of constant shape (`base ⊖ tomb ⊕
   * delta`) and query constants bind by reference, so reads with fresh
   * keys, reads after more DML and repeated DML all reuse the generated
-  * classes already compiled — Janino's compile counter does not move.
+  * classes already compiled — `ExecStats.codegenCompiles` reads 0.
   */
 class CodegenReuseSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkFixture.spark
 
-  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  /** Classes compiled while `body` ran. */
+  private def compiles(body: => Unit): Long =
+    ExecStats.during(spark.sparkContext)(body)._2.codegenCompiles
 
   /** A persisted customer/orders/PLACED graph with bucketed layouts (the
     * shape of the write benchmark), and a session over it. */
@@ -65,13 +67,13 @@ class CodegenReuseSpec extends AnyFunSuite with TempDirs {
     reads(1, 10001L)
     round(10, 1.5) // warm-up: every statement kind once
     round(20, 2.5) // a label's first restatement leaves its view in its final shape
-    val before = compiles
-    reads(101, 10101L)
-    reads(202, 10202L)
-    round(30, 3.5)
-    round(40, 4.5)
-    assert(compiles == before,
-      s"${compiles - before} classes compiled after the warm-up")
+    val n = compiles {
+      reads(101, 10101L)
+      reads(202, 10202L)
+      round(30, 3.5)
+      round(40, 4.5)
+    }
+    assert(n == 0, s"$n classes compiled after the warm-up")
     // the statements took effect
     assert(node(30).map(_.getDouble(0)).toSeq == Seq(3.5))
     assert(order(10030L).isEmpty)
@@ -112,10 +114,8 @@ class CodegenReuseSpec extends AnyFunSuite with TempDirs {
     }
     saveAfter(Seq(10L), 1.5) // warm-up: the first save of this shape
     saveAfter(Seq(460L), 2.5)
-    val before = compiles
-    saveAfter(Seq(160L, 310L), 3.5) // other buckets, and two of them
-    assert(compiles == before,
-      s"${compiles - before} classes compiled by the third save")
+    val n = compiles(saveAfter(Seq(160L, 310L), 3.5)) // other buckets, and two of them
+    assert(n == 0, s"$n classes compiled by the third save")
     assert(s.gql("MATCH (c:customer) WHERE c.id IN [10, 160, 460] " +
       "RETURN c.acctbal AS b ORDER BY b").collect().map(_.getDouble(0)).toSeq ==
       Seq(1.5, 2.5, 3.5))

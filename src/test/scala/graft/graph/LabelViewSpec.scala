@@ -98,7 +98,6 @@ class LabelViewSpec extends AnyFunSuite with TempDirs {
 
   test("a statement runs without code generation and leaves the shared " +
       "session's conf alone") {
-    import org.apache.spark.metrics.source.CodegenMetrics
     val key = "spark.sql.codegen.wholeStage"
     val before = spark.conf.getOption(key)
     val items = (1L to 50L).map(i => (i, i * 2.0, s"n$i")).toDF("id", "w", "tag")
@@ -108,11 +107,11 @@ class LabelViewSpec extends AnyFunSuite with TempDirs {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val reader = new Thread(() => while (!done) seen.add(spark.conf.getOption(key)))
     reader.start()
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val (g2, n) = try GraphMutations.setNodePropsCounted(g, "item",
-      col("w") > 60.0, Map("tag" -> concat(col("tag"), lit("-x"))))
+    val ((g2, n), st) = try graft.obs.ExecStats.during(spark.sparkContext)(
+      GraphMutations.setNodePropsCounted(g, "item",
+        col("w") > 60.0, Map("tag" -> concat(col("tag"), lit("-x")))))
     finally { done = true; reader.join() }
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == c0)
+    assert(st.codegenCompiles == 0)
     assert(n == 20L)
     assert(seen.asScala.forall(_ == before) && spark.conf.getOption(key) == before)
     assert(g2.nodeScan("item", Some(col("tag").endsWith("-x"))).count() == 20L)

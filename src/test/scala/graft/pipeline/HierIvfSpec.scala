@@ -155,4 +155,23 @@ class HierIvfSpec extends AnyFunSuite {
       s"content-equal reconstruction grew the function cache: " +
         s"$before -> $after")
   }
+
+  test("a probe assigns each corpus row its list once, above the " +
+      "corpus's own exchange") {
+    import spark.implicits._
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
+    val idx = new Similarity.HierIvfIndex(k = 64, nprobe = 24)
+    val (sups, chs) = idx.train(emb, "vec_id", "embedding")
+    val df = idx.annTopKTrained(sups, chs, emb, "vec_id", "embedding",
+      emb.filter($"vec_id" < 5), "vec_id", "embedding", 10)
+    assert(df.collect().nonEmpty)
+    // the post-AQE plan alone: the initial plan repeats every expression
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString
+      case p => p.toString
+    }
+    assert("graft_hier_cid_ref\\(".r.findAllMatchIn(plan).size == 1,
+      s"the list id is not evaluated exactly once:\n$plan")
+  }
 }

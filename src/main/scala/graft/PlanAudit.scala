@@ -49,8 +49,8 @@ object PlanAudit {
     // 100×-tier pin (round-14 verdict #8): gql13's correlated-ALL
     // join-back carries no broadcast hint — AQE picks the strategy from
     // the aggregate's RUNTIME size, so a static explain can't prove the
-    // choice. Execute on the 100× scaled corpus (when present — built by
-    // ScaleProbe) and grep the FINAL adaptive plan: the per-part
+    // choice. Execute on the 100× scaled corpus (when present — a tier
+    // built by `ScaleProbe`) and grep the FINAL adaptive plan: the per-part
     // aggregate is |part|-sized (a dimension) at every tier, so the
     // join-back must stay a broadcast even when the orders side is 100×,
     // and the round-13 wide-key regression (p_name in a join/group key)

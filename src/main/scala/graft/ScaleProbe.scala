@@ -2,16 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graph.{Direction, EdgeType, PropertyGraph, TpchGraph}
 
-/** Scale-headroom probe: measures how the heaviest queries respond to a
-  * 10× data blow-up, as evidence for the 100 TB design story beyond plan
-  * shape. Synthesizes a salted 10× copy of the fact/text/vector tables
-  * (dimensions stay small, as they would at cluster scale), runs each
-  * heavy query once at sf0.1 and once at 10×, and reports the wall-clock
-  * ratio plus a plan-shape guard (no cartesian products, no
-  * driver-collect loops sneaking in at the larger size).
+/** Scale tiers: a salted N× copy of a data directory, so board queries
+  * can be measured past the generated scale factors, as evidence for
+  * the 100 TB design point beyond plan shape. The fact, text, vector
+  * and event tables are copied N times; dimensions stay as they are,
+  * as they would at cluster scale.
   *
-  * The salting keeps workload characteristics honest at 10×:
+  * The salting keeps workload characteristics honest:
   *  - documents: every token gets a per-copy suffix, so copies are NOT
   *    near-duplicates of their originals — d08's candidate-pair volume
   *    scales with corpus size, not quadratically in the copy count;
@@ -20,12 +19,11 @@ import org.apache.spark.sql.functions._
   *  - customer/orders/lineitem: key-offset copies preserve join fan-out
   *    per key (each copy is a disjoint key range).
   *
-  * Run: `sbt "runMain graft.ScaleProbe [sfDir] [scaledDir] [copies]"`.
-  * `copies` defaults to 10; past 10 the probe narrows to the
-  * scale-critical shapes and adds straggler stats (heaviest-stage
-  * partition count, median/max task ms, skew ratio) so the first skew
-  * cliff is observable, not inferred. Output: one JSON line per query;
-  * consumed into BENCH_NOTES.md.
+  * Build a tier: `sbt "runMain graft.ScaleProbe <sfDir> <scaledDir>
+  * <copies>"`. Measure it with two [[Evidence]] runs over the same
+  * items, one over `<sfDir>` and one over `<scaledDir>`: an item is a
+  * board query, a [[shapes]] entry, or either with one rule off
+  * (`@-<Rule>`). plans/README.md ("Scale tier") lists the items.
   */
 object ScaleProbe {
   private val KeyOff = 10000000L
@@ -37,7 +35,7 @@ object ScaleProbe {
     // nCopies single-row-group partitions: a real warehouse at this size
     // is many files/row groups, and a row group lands entirely in the
     // split holding its midpoint — a 10-file layout capped every scan
-    // stage at ~10 live tasks on 32 cores, which the probe then misread
+    // stage at ~10 live tasks on 32 cores, which the old probe misread
     // as a 27× "skew" in gql02's scan+widen stage (round-13 diagnosis:
     // the post-exchange stages were perfectly even, max/med 1.09).
     def copies(df: DataFrame, salt: Int => DataFrame => DataFrame): DataFrame =
@@ -116,14 +114,12 @@ object ScaleProbe {
         .withColumn("vec_id", col("vec_id") + lit(i * KeyOff))
     }.reduce(_ unionByName _).repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    new java.io.File(s"$outDir/_embed_salt_v2").createNewFile()
   }
 
   /** Events: per-copy USER offset, timestamps unchanged — each copy is a
     * disjoint user population with the same per-user session structure,
     * so sessionization state (keyed on user) grows linearly and no
-    * single session inflates. Separate from [[buildScaled]] so dirs
-    * built before round 14 (no events) backfill without a full rebuild.
+    * single session inflates.
     */
   def buildScaledEvents(spark: SparkSession, sfDir: String, outDir: String,
       nCopies: Int): Unit = {
@@ -135,775 +131,159 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
   }
 
-  /** See the r16 probe registration comment: one-row DML + incremental
-    * save on a persisted customer label, with (`buckets` > 0) or without
-    * a bucketed clustered index. Setup is marker-gated per (dir,
-    * variant) so repeated measurement passes time only the maintenance
-    * operation.
+  /** Scale shapes with no board row: build stages the board reads from
+    * a cache, loops forced onto their distributed path, and saves and
+    * pruned loops over fact-sized graphs. Evidence runs these names
+    * like board queries; they save into [[LocalSpark.warehouse]].
+    * Indexes are keyed by dataset name across a warehouse, and the first
+    * matching index on a dataset decides its layout for every graph
+    * saved there, so the shapes that create indexes put them on labels
+    * of their own (`orders_<buckets>`, `BFS`, `BFS_BOTH`): those shapes
+    * and the board rows do not inherit each other's layouts.
     */
-  /** `mutateIndexed = true` SETs the clustered key itself (totalprice)
-    * — the worst case: the post-mutation range filter cannot push
-    * through the copy-on-write CASE projection, so the maintenance READ
-    * is O(table) even though the write stays O(touched buckets).
-    * `false` SETs a non-indexed property — the common case the layout
-    * optimizes: the key column passes through the projection untouched,
-    * the range pred pushes to the live bucketed scan, and read AND
-    * write are both O(touched buckets).
-    */
-  private def dmlSaveProbe(buckets: Int, mutateIndexed: Boolean = true,
-      keyOnId: Boolean = false)(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.graph.PropertyGraph
-    val variant = (if (buckets > 0) "bucketed" else "full") +
-      (if (keyOnId) "_id" else if (mutateIndexed) "" else "_prop")
-    val wh = "/tmp/graft-dml-save-probe-" + variant + "-" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) {
-      // the WIDE fact table (9 columns), where a full clustered rewrite
-      // actually costs what warehouse maintenance costs — on a 3-column
-      // dimension the bucket-map jobs' fixed overhead swamps the write
-      // savings and the probe would measure job-scheduling, not layout
-      val ord = Tables.orders(s, d).select(
-        col("o_orderkey").as("id"), col("o_custkey").as("custkey"),
-        col("o_orderstatus").as("status"), col("o_totalprice").as("totalprice"),
-        col("o_orderdate").as("orderdate"), col("o_orderpriority").as("priority"))
-      val sess = gls.session("driver")
-        .useGraph(new PropertyGraph(Map("orders" -> ord), Map.empty))
-      sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-      sess.saveGraphAs(s"/probe/dml_$variant", force = true)
-      // keyOnId clusters on the IDENTITY column (the gql32/35 board-row
-      // shape): the touched-key discovery then pushes to the live
-      // layout too, making the whole maintenance pass O(touched
-      // buckets) — read, discovery, and write
-      sess.execute(s"CREATE GRAPH INDEX dmlix_$variant ON nodes_orders " +
-        (if (keyOnId) "(id)" else "(totalprice)"))
-      if (buckets > 0)
-        sess.execute(s"ALTER INDEX dmlix_$variant SET OPTION buckets = $buckets")
-      sess.execute(s"OPTIMIZE INDEX dmlix_$variant")
-      marker.createNewFile()
-    }
-    val t = gls.session("driver").useGraph(s"/probe/dml_$variant")
-    t.execute(if (mutateIndexed)
-      "MATCH (o:orders {id: 7}) SET o.totalprice = 1.0"
-    else "MATCH (o:orders {id: 7}) SET o.status = 'Z'")
-    val t0 = System.nanoTime()
-    t.saveGraphAs(s"/probe/dml_$variant") // incremental maintenance save
-    val reload0 = System.nanoTime()
-    // cold reload: the third leg of the warehouse-write class (the
-    // gql32/34/35 rows all pay it after their saves)
-    gls.session("driver").useGraph(s"/probe/dml_$variant")
-      .gql("MATCH (o:orders {id: 7}) RETURN count(o) AS n").count()
-    val reloadS = (System.nanoTime() - reload0) / 1e9
-    // stage decomposition (r17 #5): one line per measured save, so a
-    // write-path regression names its stage — write (bucket_scoped vs
-    // full), clean-dataset hard-link, pointer commit, reload
-    val st = graft.graph.GraphCatalog.lastSaveStages
-      .map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")
-    println(f"""{"stage_probe":"dml_save_$variant","save_total":${
-      (reload0 - t0) / 1e9}%.3f,$st,"reload_query":$reloadS%.3f}""")
-    t.gql("MATCH (o:orders {id: 7}) RETURN count(o) AS n")
-  }
-
-  /** Read-side bucket pruning A/B (r17): one point lookup on the
-    * clustered key of a persisted 16-bucket fact label, with
-    * [[graft.plans.BucketPrune]] on (reads ONE `__ixb=K/` directory) vs
-    * off (lists and scans all 16). The scan executes INSIDE the probe
-    * (dmlSaveProbe pattern) so the toggle window covers it; the returned
-    * frame is a literal readback. The gap between the two rows is the
-    * read-path dividend of the bucketed layout — at 100K-file labels it
-    * is also the file-listing/footer-read amplification the pruning
-    * removes, which local NVMe underprices (same caveat as the
-    * write-side pair, BENCH_NOTES r16).
-    */
-  private def bpruneProbe(pruned: Boolean)(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.graph.PropertyGraph
-    val wh = "/tmp/graft-bprune-probe-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) {
-      val ord = Tables.orders(s, d).select(
-        col("o_orderkey").as("id"), col("o_custkey").as("custkey"),
-        col("o_orderstatus").as("status"), col("o_totalprice").as("totalprice"),
-        col("o_orderdate").as("orderdate"), col("o_orderpriority").as("priority"))
-      val sess = gls.session("driver")
-        .useGraph(new PropertyGraph(Map("orders" -> ord), Map.empty))
-      sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-      sess.execute("CREATE GRAPH INDEX bpix ON nodes_orders (id)")
-      sess.execute("ALTER INDEX bpix SET OPTION buckets = 16")
-      sess.saveGraphAs("/probe/bprune", force = true)
-      marker.createNewFile()
-    }
-    // one LOADED session per warehouse, shared by the pruned and full
-    // variants: re-loading per pass would re-pay the broadcast-sizing
-    // count() of the fresh PropertyGraph (a full-table metadata scan)
-    // on every measurement, drowning the query-side read delta the A/B
-    // exists to expose — with a shared session both variants run the
-    // same frames and differ ONLY in the optimizer toggle
-    val sess = bpSessions.getOrElseUpdate(wh,
-      gls.session("driver").useGraph("/probe/bprune"))
-    val prev = graft.plans.BucketPrune.enabled
-    graft.plans.BucketPrune.enabled = pruned
-    val n =
-      try sess.gql("MATCH (o:orders) WHERE o.id = 7 " +
-          "RETURN count(o) AS n, sum(o.totalprice) AS tp").count()
-      finally graft.plans.BucketPrune.enabled = prev
-    s.range(n).toDF("n")
-  }
-
-  // shared loaded sessions for the bprune A/B probes (see comment above)
-  private val bpSessions =
-    scala.collection.concurrent.TrieMap.empty[String, GqlSession]
-
-  /** Seeded 1-hop traversal over a 16-bucket EDGE label (r17): the
-    * graph-workload variant of [[bpruneProbe]]. The seed literal reaches
-    * the edge scan via InferFiltersFromConstraints (no broadcast of the
-    * seed needed — the filter is static), so with pruning on the hop
-    * lists and reads ONE `__ixb=K/` edge directory; off, all 16. This is
-    * the warehouse-scale replacement for the reference's in-memory
-    * adjacency index (graph_cache.rs:16-38) measured directly.
-    */
-  private def bpruneHopProbe(pruned: Boolean)(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.graph.PropertyGraph
-    val wh = "/tmp/graft-bprune-hop2-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) {
-      val cust = Tables.customer(s, d).select(
-        col("c_custkey").as("id"), col("c_acctbal").as("acctbal"),
-        col("c_mktsegment").as("mktsegment"))
-      val ord = Tables.orders(s, d)
-      val placed = ord.select(col("o_custkey").as("src"),
-        col("o_orderkey").as("dst"), col("o_orderkey").as("eid"),
-        col("o_totalprice").as("totalprice"))
-      val oNodes = ord.select(col("o_orderkey").as("id"),
-        col("o_totalprice").as("totalprice"),
-        col("o_orderdate").as("orderdate"))
-      val g = new PropertyGraph(
-        Map("customer" -> cust, "orders" -> oNodes),
-        Map("PLACED" -> (graft.graph.EdgeType("PLACED", "customer",
-          "orders"), placed)))
-      val sess = gls.session("driver").useGraph(g)
-      sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-      sess.execute("CREATE GRAPH INDEX hpix ON edges_PLACED (src)")
-      sess.execute("ALTER INDEX hpix SET OPTION buckets = 16")
-      // dst side too: the edge leg prunes STATICALLY (the seed literal
-      // propagates through the join), the orders-node leg prunes at
-      // RUNTIME (BucketDynamicPrune collects the matched edges' dst
-      // bucket ids) — together the whole hop is O(touched buckets)
-      sess.execute("CREATE GRAPH INDEX hpix_o ON nodes_orders (id)")
-      sess.execute("ALTER INDEX hpix_o SET OPTION buckets = 16")
-      sess.saveGraphAs("/probe/bprunehop", force = true)
-      marker.createNewFile()
-    }
-    val sess = bpSessions.getOrElseUpdate(wh,
-      gls.session("driver").useGraph("/probe/bprunehop"))
-    val prev = graft.plans.BucketPrune.enabled
-    graft.plans.BucketPrune.enabled = pruned
-    val n =
-      try sess.gql("MATCH (c:customer)-[p:PLACED]->(o:orders) WHERE c.id = 7 " +
-          "RETURN count(p) AS n, max(o.totalprice) AS hi").count()
-      finally graft.plans.BucketPrune.enabled = prev
-    s.range(n).toDF("n")
-  }
-
-  /** Seeded VAR-LENGTH traversal over a 16-bucket NEXT-chain edge label
-    * (r18, verdict #1): the path loop's per-level frontier-driven
-    * pruning A/B. With pruning on, every level's edge scan lists and
-    * reads only the frontier's bucket directories (the read_rows of the
-    * warm pass track the frontier, not |E| × levels); off, each level
-    * re-reads the full edge label. The NEXT chain keeps the frontier at
-    * one node per level, the hardest case for the full path (4 complete
-    * passes) and the best for the pruned one (4 single-directory reads).
-    */
-  private def bpruneVarPathProbe(pruned: Boolean)(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.graph.PropertyGraph
-    val wh = "/tmp/graft-bprune-vpath-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) {
-      val g = graft.graph.TpchGraph.build(s, d)
+  val shapes: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // the pair-graph BUILD stages: d08/d11 and e03/e07 read per-dataset
+    // persisted pair graphs, so the banded-LSH build needs its own rows
+    "d11_pair_build" -> ((s: SparkSession, d: String) =>
+      graft.queries.PipelineQueries.docPairGraph(s, d)),
+    "e03_pair_build" -> ((s: SparkSession, d: String) =>
+      graft.queries.PipelineQueries.embedPairGraph(s, d)
+        .filter(col("cos") >= 0.95)),
+    // the build decomposed: bucket assignment alone, then up to the
+    // banded candidate join, so a move in e03_pair_build names its stage
+    "e03_stage_buckets" -> ((s: SparkSession, d: String) =>
+      graft.queries.PipelineQueries.embedPairStages(s, d)._1),
+    "e03_stage_cand" -> ((s: SparkSession, d: String) =>
+      graft.queries.PipelineQueries.embedPairStages(s, d)._2),
+    // the distributed per-level BFS loop, forced past the local
+    // adjacency gate — the path a >2M-edge graph (or >1000-root batch)
+    // takes
+    "g08_distributed" -> ((s: SparkSession, d: String) => {
+      val g = TpchGraph.build(s, d)
+      val heads = g.nodeScan("customer")
+        .groupBy(col("nationkey")).agg(min(col("id")).as("root_id"))
+        .select(col("root_id"))
+      g.bfs(heads, "NEXT", 10, localEdgeLimit = 0L)
+        .select(col("root_id"), col("node_id"), col("dist"))
+    }),
+    // the distributed pointer-jumping loop, forced past the local-finish
+    // gate
+    "g13_distributed" -> ((s: SparkSession, d: String) =>
+      graft.graph.Analytics.connectedComponents(s, TpchGraph.build(s, d),
+        "customer", "NEXT", localEdgeLimit = 0L)),
+    // a FACT-sized storage roundtrip (the board's gql19 saves
+    // nation+region, which ride unscaled)
+    "gql19_save_fact" -> ((s: SparkSession, d: String) => {
+      val g = TpchGraph.build(s, d)
       val sub = new PropertyGraph(
         Map("customer" -> g.nodeTables("customer")),
         Map("NEXT" -> g.edgeTables("NEXT")))
+      val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
       val sess = gls.session("driver").useGraph(sub)
-      sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-      sess.execute("CREATE GRAPH INDEX vpix ON edges_NEXT (src)")
-      sess.execute("ALTER INDEX vpix SET OPTION buckets = 16")
-      // node label bucketed too: the traversal's destination join then
-      // prunes at runtime (BucketDynamicPrune), so the A/B isolates the
-      // loop's per-level edge reads instead of a fixed full node scan
-      sess.execute("CREATE GRAPH INDEX vpix_n ON nodes_customer (id)")
-      sess.execute("ALTER INDEX vpix_n SET OPTION buckets = 16")
-      sess.saveGraphAs("/probe/bprunevp", force = true)
-      marker.createNewFile()
-    }
-    val sess = bpSessions.getOrElseUpdate(wh,
-      gls.session("driver").useGraph("/probe/bprunevp"))
-    val prev = graft.plans.BucketPrune.enabled
-    graft.plans.BucketPrune.enabled = pruned
-    val n =
-      try sess.gql("MATCH (c:customer {id: 100})-[:NEXT*1..4]->(d:customer) " +
-          "RETURN count(d) AS n, min(d.id) AS lo").count()
-      finally graft.plans.BucketPrune.enabled = prev
-    s.range(n).toDF("n")
-  }
+      sess.execute("CREATE SCHEMA IF NOT EXISTS /scale")
+      sess.saveGraphAs("/scale/custfact", force = true)
+      gls.session("driver").useGraph("/scale/custfact")
+        .gql("""MATCH (a:customer)-[:NEXT]->(b:customer)
+          |WHERE a.acctbal > 9000
+          |RETURN count(b) AS n""".stripMargin)
+    }),
+    "e08_hier_bigk" -> hierIvfBigK,
+    // post-DML warehouse maintenance on the wide orders fact: one
+    // single-row SET, an incremental save, a fresh reload. _full SETs
+    // the clustered key of an unbucketed layout (a whole clustered
+    // rewrite); _bucketed_prop SETs a property of a 16-bucket layout
+    // (the touched range pushes to the live bucketed scan, so read and
+    // write are O(touched buckets)). gql32/gql35 are the bucketed
+    // identity-keyed shape.
+    "dml_save_full" -> dmlSave(buckets = 0, "o.totalprice = 1.0"),
+    "dml_save_bucketed_prop" -> dmlSave(buckets = 16, "o.status = 'Z'"),
+    // seeded distributed BFS over a 16-bucket NEXT chain: per-level
+    // frontier pruning (on) vs the one-time full-edge checkpoint
+    // (`@-BucketPrune`); the _both variant prunes both orientation
+    // branches through the mirror
+    "bprune_bfs" -> bfsOverChain(mirror = false),
+    "bprune_bfs_both" -> bfsOverChain(mirror = true))
 
-  /** REVERSE seeded hop A/B (r19): a range predicate on the
-    * NON-clustered endpoint of a 16-bucket PLACED label. With
-    * MirrorSwap on, the scan re-points at `.mirror_edges_PLACED` and
-    * prunes to the dst range's buckets; off, the src-clustered label
-    * is read whole (dst pushes only to useless row-group stats). The
-    * warehouse analog of the reference's adjacency_in index
-    * (graph_cache.rs:16-38) measured directly.
-    */
-  private def mirrorRevHopProbe(swapped: Boolean)(
+  /** Orders as a wide node label (6 columns): on a 3-column dimension
+    * the bucket-map jobs' fixed overhead swamps the write savings. */
+  private def dmlSave(buckets: Int, set: String)(
       s: SparkSession, d: String): DataFrame = {
-    // the measured body is the PURE edge scan (the swap's subject) —
-    // the GQL end-to-end shape is oracle-pinned by gql38; here the node
-    // joins would drown the edge read delta in unpruned node-scan rows
-    val lg = revHopGraph(s, d)
-    val e = lg.edgeTables("PLACED")._2
-    val prev = graft.plans.MirrorSwap.enabled
-    graft.plans.MirrorSwap.enabled = swapped
-    val n =
-      try e.filter(col("dst") <= lit(50L))
-        .agg(count(lit(1)), min("totalprice")).count()
-      finally graft.plans.MirrorSwap.enabled = prev
-    s.range(n).toDF("n")
+    val ord = Tables.orders(s, d).select(
+      col("o_orderkey").as("id"), col("o_custkey").as("custkey"),
+      col("o_orderstatus").as("status"), col("o_totalprice").as("totalprice"),
+      col("o_orderdate").as("orderdate"), col("o_orderpriority").as("priority"))
+    val label = s"orders_$buckets"
+    val graph = s"/scale/dml_$buckets"
+    val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
+    val sess = gls.session("driver")
+      .useGraph(new PropertyGraph(Map(label -> ord), Map.empty))
+    sess.execute("CREATE SCHEMA IF NOT EXISTS /scale")
+    sess.execute(s"CREATE GRAPH INDEX dmlix_$buckets ON nodes_$label (totalprice)")
+    if (buckets > 0)
+      sess.execute(s"ALTER INDEX dmlix_$buckets SET OPTION buckets = $buckets")
+    sess.saveGraphAs(graph, force = true)
+    val t = gls.session("driver").useGraph(graph)
+    t.execute(s"MATCH (o:$label {id: 7}) SET $set")
+    t.saveGraphAs(graph) // incremental maintenance save
+    gls.session("driver").useGraph(graph)
+      .gql(s"MATCH (o:$label {id: 7}) RETURN count(o) AS n")
   }
 
-  /** Marker-gated shared fixture for the reverse-hop probes: a
-    * 16-bucket src-clustered PLACED label with its `mirror = true`
-    * dual layout persisted, loaded once per warehouse path. */
-  private def revHopGraph(s: SparkSession,
-      d: String): graft.graph.PropertyGraph = {
-    import graft.graph.PropertyGraph
-    val wh = "/tmp/graft-mswap-rev-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) {
-      val g = graft.graph.TpchGraph.build(s, d)
-      val sub = new PropertyGraph(
-        Map("customer" -> g.nodeTables("customer"),
-          "orders" -> g.nodeTables("orders")),
-        Map("PLACED" -> g.edgeTables("PLACED")))
-      val sess = gls.session("driver").useGraph(sub)
-      sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-      sess.execute("CREATE GRAPH INDEX rvix ON edges_PLACED (src)")
-      sess.execute("ALTER INDEX rvix SET OPTION buckets = 16")
-      sess.execute("ALTER INDEX rvix SET OPTION mirror = true")
-      sess.saveGraphAs("/probe/revhop", force = true)
-      marker.createNewFile()
-    }
-    revGraphs.getOrElseUpdate(wh, gls.catalog.loadGraph("probe", "revhop"))
-  }
-
-  /** JOIN-SEEDED reverse expand A/B (r20, r19 verdict #1): the hop's
-    * dst keys arrive from a prior MATCH at RUNTIME (a persisted seed
-    * label filtered by a modulo predicate, on purpose — nothing
-    * constraint propagation can hand the static rules), so neither
-    * BucketPrune nor MirrorSwap can serve it. With BucketDynamicPrune
-    * on, the scan re-points at `.mirror_edges_PLACED` and a
-    * DynamicPruningSubquery keyed on the seed frame prunes to the
-    * seed's buckets under the MIRROR's key; off, the src-clustered
-    * label is read whole. The fixture mimics the real shape — a small
-    * watchlist of ~200 spread order ids, 64 mirror buckets, a handful
-    * of runtime survivors — so the read volume is O(seed buckets), and
-    * grows with the seed, not the label. The 1-hop runtime analog of
-    * `mirror_revhop_*` and the most common real graph query shape
-    * (ref: adjacency_in fetch, graph_cache.rs:16-38; Expand,
-    * executor.rs:6182-6337).
-    */
-  private def mirrorDppSeededProbe(pruned: Boolean)(
+  /** The customer NEXT chain, its edges bucketed on `src` (and, with
+    * `mirror`, also laid out on `dst`), saved and loaded back; a seeded
+    * BFS from customer 100. */
+  private def bfsOverChain(mirror: Boolean)(
       s: SparkSession, d: String): DataFrame = {
-    import graft.graph.PropertyGraph
-    val wh = "/tmp/graft-mdpp-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) {
-      val g = graft.graph.TpchGraph.build(s, d)
-      val orders = g.nodeTables("orders")
-      // ~200 pseudo-randomly spread order ids (deterministic): the
-      // persisted watchlist a prior MATCH would bind against
-      val hot = orders
-        .orderBy(pmod(col("id"), lit(104729L)), col("id"))
-        .limit(200).select(col("id"), col("totalprice"))
-      val sub = new PropertyGraph(
-        Map("customer" -> g.nodeTables("customer"),
-          "orders" -> orders, "hot" -> hot),
-        Map("PLACED" -> g.edgeTables("PLACED")))
-      val sess = gls.session("driver").useGraph(sub)
-      sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-      sess.execute("CREATE GRAPH INDEX mdix ON edges_PLACED (src)")
-      sess.execute("ALTER INDEX mdix SET OPTION buckets = 64")
-      sess.execute("ALTER INDEX mdix SET OPTION mirror = true")
-      sess.saveGraphAs("/probe/mdpp", force = true)
-      marker.createNewFile()
-    }
-    val lg = revGraphs.getOrElseUpdate(wh,
-      gls.catalog.loadGraph("probe", "mdpp"))
-    val seed = lg.nodeTables("hot")
-      .filter(pmod(col("id"), lit(41L)) === lit(0L))
-      .select(col("id").as("seed_id"))
-    val e = lg.edgeTables("PLACED")._2
-    val prev = graft.plans.BucketDynamicPrune.enabled
-    graft.plans.BucketDynamicPrune.enabled = pruned
-    val n =
-      try seed.join(e, col("seed_id") === col("dst"))
-        .agg(count(lit(1)), min("totalprice")).count()
-      finally graft.plans.BucketDynamicPrune.enabled = prev
-    s.range(n).toDF("n")
-  }
-
-  private val revGraphs = scala.collection.concurrent.TrieMap
-    .empty[String, graft.graph.PropertyGraph]
-
-  /** Seeded UNDIRECTED var-length traversal A/B over a 16-bucket NEXT
-    * chain WITH the dual-keyed mirror (r19, r18 watch #1): the last
-    * traversal shape without pruning economics. With pruning on, each
-    * level reads only the frontier's bucket directories of BOTH
-    * layouts (main src-keyed + `.mirror_edges_*` dst-keyed — the
-    * reference's adjacency_out/adjacency_in duality as layout,
-    * graph_cache.rs:16-38); off, each level re-reads the full edge
-    * label twice (both orientations of the checkpoint). read_rows of
-    * the warm pass is the evidence: O(frontier × levels) vs O(|E|).
-    */
-  private def bpruneVarPathBothProbe(pruned: Boolean)(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.graph.PropertyGraph
-    val wh = "/tmp/graft-bprune-vboth-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) {
-      val g = graft.graph.TpchGraph.build(s, d)
-      val sub = new PropertyGraph(
-        Map("customer" -> g.nodeTables("customer")),
-        Map("NEXT" -> g.edgeTables("NEXT")))
-      val sess = gls.session("driver").useGraph(sub)
-      sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-      sess.execute("CREATE GRAPH INDEX vbix ON edges_NEXT (src)")
-      sess.execute("ALTER INDEX vbix SET OPTION buckets = 16")
-      sess.execute("ALTER INDEX vbix SET OPTION mirror = true")
-      // node label bucketed too (bpruneVarPathProbe parity): the
-      // destination join prunes at runtime, so the A/B isolates the
-      // loop's per-level edge reads instead of a fixed full node scan
-      sess.execute("CREATE GRAPH INDEX vbix_n ON nodes_customer (id)")
-      sess.execute("ALTER INDEX vbix_n SET OPTION buckets = 16")
-      sess.saveGraphAs("/probe/bprunevboth", force = true)
-      marker.createNewFile()
-    }
-    val sess = bpSessions.getOrElseUpdate(wh,
-      gls.session("driver").useGraph("/probe/bprunevboth"))
-    val prev = graft.plans.BucketPrune.enabled
-    graft.plans.BucketPrune.enabled = pruned
-    val n =
-      try sess.gql("MATCH (c:customer {id: 100})-[:NEXT*1..4]-(d:customer) " +
-          "RETURN count(d) AS n, min(d.id) AS lo").count()
-      finally graft.plans.BucketPrune.enabled = prev
-    s.range(n).toDF("n")
-  }
-
-  /** Seeded distributed Both-BFS A/B over the mirrored chain fixture
-    * (r19): the bfs loop's two pruned orientation branches vs the
-    * one-time doubled full-edge checkpoint.
-    */
-  private def bpruneBfsBothProbe(pruned: Boolean)(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.graph.{Direction, PropertyGraph}
-    val wh = "/tmp/graft-bprune-vboth-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) { // shared fixture with bpruneVarPathBothProbe
-      bpruneVarPathBothProbe(pruned)(s, d)
-    }
+    val g = TpchGraph.build(s, d)
+    val label = if (mirror) "BFS_BOTH" else "BFS"
+    val sub = new PropertyGraph(
+      Map("customer" -> g.nodeTables("customer")),
+      Map(label -> (EdgeType(label, "customer", "customer"),
+        g.edgeTables("NEXT")._2)))
+    val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
+    val sess = gls.session("driver").useGraph(sub)
+    sess.execute("CREATE SCHEMA IF NOT EXISTS /scale")
+    sess.execute(s"CREATE GRAPH INDEX ${label}_src ON edges_$label (src)")
+    sess.execute(s"ALTER INDEX ${label}_src SET OPTION buckets = 16")
+    if (mirror) sess.execute(s"ALTER INDEX ${label}_src SET OPTION mirror = true")
+    sess.saveGraphAs(s"/scale/$label", force = true)
     import s.implicits._
-    val lg = gls.catalog.loadGraph("probe", "bprunevboth")
-    val prev = graft.plans.BucketPrune.enabled
-    graft.plans.BucketPrune.enabled = pruned
-    val n =
-      try lg.bfs(Seq(100L).toDF("root_id"), "NEXT", maxIter = 6,
-        direction = Direction.Both, localEdgeLimit = 0L).count()
-      finally graft.plans.BucketPrune.enabled = prev
-    s.range(n).toDF("n")
+    gls.catalog.loadGraph("scale", label).bfs(Seq(100L).toDF("root_id"),
+      label, maxIter = 6,
+      direction = if (mirror) Direction.Both else Direction.Out,
+      localEdgeLimit = 0L)
   }
 
-  /** Seeded distributed-BFS A/B over the same 16-bucket NEXT chain
-    * (r18): the bfs loop's per-level frontier pruning vs the one-time
-    * full-edge checkpoint. `localEdgeLimit = 0` forces the distributed
-    * loop at every tier — the path a warehouse-scale graph takes.
+  /** Hierarchical IVF past the flat trainer's 10K-draw cap: on a corpus
+    * of ≥50K vectors (the 30× tier holds 60K) it trains k=16384 lists,
+    * 128 superclusters of 128 children each trained distributed; below
+    * that, the e08 board shape (k=256). Recall@10 against the exact
+    * answer over 5 queries is gated in the item — a broken 2-level
+    * assign/probe scores ~1e-5 (chance) and throws. Returns the probe.
     */
-  private def bpruneBfsProbe(pruned: Boolean)(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.graph.PropertyGraph
-    val wh = "/tmp/graft-bprune-vpath-" + d.replaceAll("[^A-Za-z0-9]", "_")
-    val gls = GraphLiteSpark.open(s, wh)
-    val marker = new java.io.File(s"$wh/.setup_done")
-    if (!marker.exists()) { // shared fixture with bpruneVarPathProbe
-      bpruneVarPathProbe(pruned)(s, d)
-    }
-    import s.implicits._
-    val lg = gls.catalog.loadGraph("probe", "bprunevp")
-    val prev = graft.plans.BucketPrune.enabled
-    graft.plans.BucketPrune.enabled = pruned
-    val n =
-      try lg.bfs(Seq(100L).toDF("root_id"), "NEXT", maxIter = 6,
-        localEdgeLimit = 0L).count()
-      finally graft.plans.BucketPrune.enabled = prev
-    s.range(n).toDF("n")
-  }
-
-  /** Hierarchical-IVF at k PAST the flat driver-draw cap (r19, r18
-    * verdict #4): on the ≥30× tiers the index trains k=16384 lists
-    * (kSup=128 superclusters driver-side, 128 children each trained
-    * DISTRIBUTED via mapGroups), which a flat IvfIndex cannot reach
-    * from its bounded 10K sample. The probe measures recall@10 vs the
-    * exact brute-force answer over the same 5 queries and GATES it
-    * in-probe — a broken 2-level assign/probe scores ~1e-5 (chance)
-    * and throws. The base tier runs the e08 board shape (k=256) so the
-    * row stays comparable across tiers.
-    */
-  // trained 2-level quantizers, one per (dir, k) — training is a
-  // one-time build step (FAISS train/add/search separation), so the
-  // probe's measured passes time the SERVING path: assign + probe +
-  // rerank, the part that scales with the corpus
-  private val hierTrained = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), (Array[Array[Double]], Array[Array[Array[Double]]])]
-
-  private def hierIvfBigKProbe(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  private def hierIvfBigK(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val qs = emb.filter($"vec_id" < 5)
-    val n = emb.count()
-    // k PAST the flat trainer's 10K-draw cap on the scaled tiers (the
-    // 30× corpus holds 60K vectors — k=16384 lists is the k ≫ sample
-    // regime the 2-level trainer exists for); board shape at base
-    val (k, nprobe) = if (n >= 50000L) (16384, 2048) else (256, 96)
-    val idx = new graft.similarity.Similarity.HierIvfIndex(
-      k = k, nprobe = nprobe)
-    val (sup, ch) = hierTrained.getOrElseUpdate((d, k),
-      idx.train(emb, "vec_id", "embedding"))
+    val qs = emb.filter(col("vec_id") < 5)
+    val (k, nprobe) = if (emb.count() >= 50000L) (16384, 2048) else (256, 96)
+    val idx = new graft.similarity.Similarity.HierIvfIndex(k = k, nprobe = nprobe)
+    val (sup, ch) = idx.train(emb, "vec_id", "embedding")
     val approx = idx.annTopKTrained(sup, ch, emb, "vec_id", "embedding",
       qs, "vec_id", "embedding", 10)
     val exact = graft.queries.PipelineQueries.exactTopKCached(s, d, 10)
-    val recall = approx.join(exact.select($"qid", $"id"), Seq("qid", "id"))
+    val recall = approx.join(exact.select("qid", "id"), Seq("qid", "id"))
       .count().toDouble / math.max(1L, exact.count()).toDouble
-    println(f"[probe] e08_hier_bigk k=$k nprobe=$nprobe " +
-      f"recall@10=$recall%.3f on $d")
+    println(f"e08_hier_bigk k=$k nprobe=$nprobe recall@10=$recall%.3f on $d")
     require(recall >= 0.3,
       f"hier-IVF recall $recall%.3f below the 0.3 gate (k=$k)")
-    s.range(math.max(1L, (recall * 1000).toLong)).toDF("n")
+    approx
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val nCopies = if (args.length > 2) args(2).toInt else 10
-    val outDir =
-      if (args.length > 1) args(1) else s"/tmp/graft_scale${nCopies}x"
-    val cpus = LocalSpark.cpus(32)
+    require(args.length == 3, "usage: ScaleProbe <sfDir> <scaledDir> <copies>")
     // the driver heap is the forked JVM's -Xmx (SPARK_DRIVER_MEM, see
     // build.sbt): a client-mode driver cannot resize its own heap
-    val spark = LocalSpark(cpus, "ERROR")
-
-    if (!new java.io.File(s"$outDir/lineitem.parquet").exists()) {
-      buildScaled(spark, sfDir, outDir, nCopies)
-      // a build leaves the JVM write-heavy (old-gen shuffle garbage,
-      // page cache full of freshly written bytes) — measured directly in
-      // r17: a stage probed at 3.0 s in a clean JVM read 15.8 s in the
-      // builder's JVM. Drop what we can and say so in the output; rows
-      // from a builder run still deserve a fresh-JVM re-run when they
-      // look contested.
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      System.err.println("[probe] tier built in THIS JVM — rows below " +
-        "may run hot; prefer a fresh-JVM re-run for contested numbers")
-    } else {
-      if (!new java.io.File(s"$outDir/events.parquet").exists())
-        buildScaledEvents(spark, sfDir, outDir, nCopies) // r14 backfill
-      if (!new java.io.File(s"$outDir/_embed_salt_v2").exists())
-        buildScaledEmbeddings(spark, sfDir, outDir, nCopies) // salt-v2 backfill
-    }
-
-    val allProbes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      // d08/d11 read the per-dataset stored pair graph since r16 — the
-      // banded-LSH scale behavior they used to exercise lives in the
-      // cache-bypassing d11_pair_build probe below
-      "d11_pair_build" -> ((s: SparkSession, d: String) =>
-        graft.queries.PipelineQueries.docPairGraph(s, d)),
-      "e02_ann_lsh" -> SparkEntry.queries("e02_ann_lsh"),
-      "g08_bfs" -> SparkEntry.queries("g08_bfs"),
-      "g13_connected_components" -> SparkEntry.queries("g13_connected_components"),
-      // the distributed pointer-jumping loop, forced past the local-finish
-      // gate — the path a >2M-edge graph takes
-      "g13_distributed" -> ((s: SparkSession, d: String) => {
-        val g = graft.graph.TpchGraph.build(s, d)
-        graft.graph.Analytics.connectedComponents(s, g, "customer", "NEXT",
-          localEdgeLimit = 0L)
-      }),
-      // the distributed per-level BFS loop, forced past the local
-      // adjacency gate — the path a >2M-edge graph (or >1000-root batch)
-      // takes; keeps both g08 fallbacks measured, not just asserted
-      "g08_distributed" -> ((s: SparkSession, d: String) => {
-        import s.implicits._
-        val g = graft.graph.TpchGraph.build(s, d)
-        val heads = g.nodeScan("customer")
-          .groupBy($"nationkey").agg(min($"id").as("root_id"))
-          .select($"root_id")
-        g.bfs(heads, "NEXT", 10, localEdgeLimit = 0L)
-          .select($"root_id", $"node_id", $"dist")
-      }),
-      "gql02_twohop" -> SparkEntry.queries("gql02_twohop"),
-      // round-13 additions (graph-query family): path-array enumeration
-      // and grouped correlated-ALL broadcasts — the memory/shuffle
-      // profiles that change shape at 100× are path materialization and
-      // the per-group min/max broadcast join
-      "gql11_path_var" -> SparkEntry.queries("gql11_path_var"),
-      "gql13_quantified" -> SparkEntry.queries("gql13_quantified"),
-      // sequence packing: per-shard window + shared-partitioning agg —
-      // should scale ~linearly in corpus size (one hash shuffle)
-      "d10_seq_pack" -> SparkEntry.queries("d10_seq_pack"),
-      // line dedup: explode + broadcast anti-join — linear in corpus
-      // bytes; the frequent-set aggregation is the only shuffle
-      "d16_line_dedup" -> SparkEntry.queries("d16_line_dedup"),
-      // incremental dedup: the adaptive Bloom sidecar path — build via
-      // BloomFilterAggregate, probe via might_contain; capacity (and so
-      // filter bytes through the agg shuffle) must grow with the corpus,
-      // never ahead of it
-      "d14_incremental_dedup" -> SparkEntry.queries("d14_incremental_dedup"),
-      // round-12 additions: IVF-PQR (train + encode + probe + refine) and
-      // the streaming-dedup front door (batch-degradation shape) — both
-      // must stay posting-list / anti-join shaped as data grows
-      "e06_ivfpqr" -> SparkEntry.queries("e06_ivfpqr"),
-      "d19_stream_dedup" -> SparkEntry.queries("d19_stream_dedup"),
-      // round-13 additions: semantic dedup (pair graph + components over
-      // embeddings) and mixture sampling (per-source agg broadcast +
-      // narrow hash filter) — both must stay banding/broadcast shaped
-      "e07_semantic_dedup" -> SparkEntry.queries("e07_semantic_dedup"),
-      "d20_mixture_sample" -> SparkEntry.queries("d20_mixture_sample"),
-      // round-14: the event/sessionization family joins the probes —
-      // session_window state is keyed per user, so disjoint user copies
-      // must scale linearly (state rows ∝ users, no mega-session skew)
-      "ev03_session" -> SparkEntry.queries("ev03_session"),
-      // round-15: the four families the r14 verdict flagged as having no
-      // >1x evidence. q35 windows 30x orders; m02 stages 30x documents;
-      // gql22 re-clusters a 30x customer layout through CREATE/OPTIMIZE
-      // INDEX; the storage roundtrip probes a FACT-sized graph (the
-      // oracle-gated gql19 saves nation+region, which ride unscaled — a
-      // dimension-sized roundtrip shows nothing at any tier)
-      "q35_asof_scd2" -> SparkEntry.queries("q35_asof_scd2"),
-      "m02_multimodal_stages" -> SparkEntry.queries("m02_multimodal_stages"),
-      "gql22_index_cluster" -> SparkEntry.queries("gql22_index_cluster"),
-      // r15: the DML gates at scale — hop-pattern mutation over 30x
-      // customers and edge DML over 30x PLACED edges; the mutation
-      // pipeline's update-frame joins and copy-on-write rewrites are
-      // the memory/shuffle profile a 100 TB warehouse mutation has
-      "gql29_hop_dml" -> SparkEntry.queries("gql29_hop_dml"),
-      "gql30_edge_dml" -> SparkEntry.queries("gql30_edge_dml"),
-      // the pair-graph BUILD stage (corpus preparation): e03/e07 now
-      // read the per-dataset persisted artifact, so the expensive LSH
-      // bucket join + cosine rerank needs its own scale row — this
-      // probe bypasses the cache on purpose
-      "e03_pair_build" -> ((s: SparkSession, d: String) =>
-        graft.queries.PipelineQueries.embedPairGraph(s, d)
-          .filter(org.apache.spark.sql.functions.col("cos") >= 0.95)),
-      // r17: the build decomposed (verdict #4) — bucket assignment alone,
-      // then up to the banded candidate join, so a cross-round move in
-      // e03_pair_build attributes to a stage (projection vs band join vs
-      // cosine rerank) instead of staying "within past spread"
-      "e03_stage_buckets" -> ((s: SparkSession, d: String) =>
-        graft.queries.PipelineQueries.embedPairStages(s, d)._1),
-      "e03_stage_cand" -> ((s: SparkSession, d: String) =>
-        graft.queries.PipelineQueries.embedPairStages(s, d)._2),
-      // r16: post-DML warehouse maintenance, bucket-scoped vs full. Both
-      // probes run one single-row DML on a persisted customer label and
-      // save incrementally; the *_bucketed variant's label carries a
-      // 16-bucket clustered index, so the save rewrites ONLY the touched
-      // bucket(s) and hard-links the rest (GraphCatalog.touchedBuckets)
-      // while the *_full variant pays the label's whole clustered
-      // rewrite. The gap between the two rows is the incremental-
-      // maintenance dividend the bucketed layout exists for at 100 TB.
-      // One-time setup (ingest + index + initial layout) is marker-gated
-      // so the measured passes time only the DML + maintenance save.
-      "dml_save_full" -> dmlSaveProbe(buckets = 0),
-      "dml_save_bucketed" -> dmlSaveProbe(buckets = 16),
-      // r18: the common case — DML on a NON-indexed property, where the
-      // touched-range read pushes to the live bucketed scan and the
-      // whole maintenance pass is O(touched buckets), read and write
-      "dml_save_bucketed_prop" ->
-        dmlSaveProbe(buckets = 16, mutateIndexed = false),
-      // r18: the gql32/35 board-row shape — layout keyed on the IDENTITY
-      // column, DML on a property: discovery, read, and write are all
-      // O(touched buckets)
-      "dml_save_bucketed_id" ->
-        dmlSaveProbe(buckets = 16, mutateIndexed = false, keyOnId = true),
-      // r17: substring dedup (window-fingerprint explode + compact-key
-      // group-by) and the stream-stream interval join — the explode
-      // factor and the per-user join state are the profiles that change
-      // shape with corpus size
-      "d22_substring_dedup" -> SparkEntry.queries("d22_substring_dedup"),
-      "d23_substring_clean" -> SparkEntry.queries("d23_substring_clean"),
-      "ev04_stream_join" -> SparkEntry.queries("ev04_stream_join"),
-      // r18: cross-run NEAR dedup — run 2's bucket join against run 1's
-      // persisted survivor state is the leg that grows with state size
-      "d25_incremental_near" -> SparkEntry.queries("d25_incremental_near"),
-      // r17: read-side pruning A/B on the same bucketed-layout economics
-      "bprune_point_pruned" -> bpruneProbe(pruned = true),
-      "bprune_point_full" -> bpruneProbe(pruned = false),
-      // r17: the traversal variant — seeded hop through a bucketed edge label
-      "bprune_hop_pruned" -> bpruneHopProbe(pruned = true),
-      "bprune_hop_full" -> bpruneHopProbe(pruned = false),
-      // r18: the var-length loop's per-level pruning (verdict #1)
-      "bprune_varpath_pruned" -> bpruneVarPathProbe(pruned = true),
-      "bprune_varpath_full" -> bpruneVarPathProbe(pruned = false),
-      // r18: the distributed-BFS loop's per-level pruning
-      "bprune_bfs_pruned" -> bpruneBfsProbe(pruned = true),
-      "bprune_bfs_full" -> bpruneBfsProbe(pruned = false),
-      // r19: the UNDIRECTED loops' two-branch (main + mirror) pruning
-      "bprune_varpath_both_pruned" -> bpruneVarPathBothProbe(pruned = true),
-      "bprune_varpath_both_full" -> bpruneVarPathBothProbe(pruned = false),
-      "bprune_bfs_both_pruned" -> bpruneBfsBothProbe(pruned = true),
-      "bprune_bfs_both_full" -> bpruneBfsBothProbe(pruned = false),
-      // r19: hierarchical IVF at k=16384 (recall-gated in-probe)
-      "e08_hier_bigk" -> (hierIvfBigKProbe(_, _)),
-      // r19: the reverse seeded hop served by the mirror (MirrorSwap)
-      "mirror_revhop_swapped" -> mirrorRevHopProbe(swapped = true),
-      "mirror_revhop_full" -> mirrorRevHopProbe(swapped = false),
-      // r20: the JOIN-seeded variant — runtime keys through the mirror
-      // via BucketDynamicPrune's DPP subquery
-      "mirror_dpp_seeded_pruned" -> mirrorDppSeededProbe(pruned = true),
-      "mirror_dpp_seeded_full" -> mirrorDppSeededProbe(pruned = false),
-      "gql19_save_fact" -> ((s: SparkSession, d: String) => {
-        import graft.graph.PropertyGraph
-        val g = graft.graph.TpchGraph.build(s, d)
-        val sub = new PropertyGraph(
-          Map("customer" -> g.nodeTables("customer")),
-          Map("NEXT" -> g.edgeTables("NEXT")))
-        val gls = GraphLiteSpark.open(s, LocalSpark.warehouse)
-        val sess = gls.session("driver").useGraph(sub)
-        sess.execute("CREATE SCHEMA IF NOT EXISTS /probe")
-        sess.saveGraphAs("/probe/custfact", force = true)
-        gls.session("driver").useGraph("/probe/custfact")
-          .gql("""MATCH (a:customer)-[:NEXT]->(b:customer)
-            |WHERE a.acctbal > 9000
-            |RETURN count(b) AS n""".stripMargin)
-      }))
-
-    // past 10×, probe only the scale-critical shapes (the band join, the
-    // ANN bucket join, and the forced distributed graph loops) — the
-    // rest already showed flat-to-linear behavior at the 10× tier
-    val probes =
-      if (nCopies <= 10) allProbes
-      else allProbes.filter { case (n, _) =>
-        // d14 rides the >10× tiers since round 12: the adaptive Bloom
-        // capacity (and its runtime-conf clamp) is exactly the behavior
-        // the 100× tier exists to confirm
-        Set("d11_pair_build", "e02_ann_lsh", "g13_distributed",
-          "g08_distributed", "d10_seq_pack", "d14_incremental_dedup",
-          // graph-query family rides the 30× tier (round 13): path
-          // enumeration and correlated-ALL carry per-row path arrays
-          // and grouped broadcasts whose memory profile is what the
-          // larger tier exists to observe
-          "gql02_twohop", "gql11_path_var", "gql13_quantified",
-          // round-14: e07/d20 join the larger tiers like every other
-          // pipeline operator — e07's 10× skew 2.17 was attributed to
-          // bucket-count variance on sub-400 ms tasks, which only the
-          // 30×/100× tiers can confirm or refute
-          "e07_semantic_dedup", "d20_mixture_sample", "ev03_session",
-          // round-15: the storage/index/multimodal/bitemporal families
-          "q35_asof_scd2", "m02_multimodal_stages", "gql22_index_cluster",
-          "gql19_save_fact", "gql29_hop_dml", "gql30_edge_dml",
-          "e03_pair_build", "e03_stage_buckets", "e03_stage_cand",
-          // r16: the bucket-scoped maintenance dividend is a >10× story
-          "dml_save_full", "dml_save_bucketed", "dml_save_bucketed_prop",
-          "dml_save_bucketed_id",
-          // r17: window-explode dedup + interval-join state at >10×
-          "d22_substring_dedup", "d23_substring_clean", "ev04_stream_join",
-          "d25_incremental_near",
-          // r17: so is the read-side pruning dividend
-          "bprune_point_pruned", "bprune_point_full",
-          "bprune_hop_pruned", "bprune_hop_full",
-          // r18: per-level var-path/bfs pruning dividend is a >10× story
-          "bprune_varpath_pruned", "bprune_varpath_full",
-          "bprune_bfs_pruned", "bprune_bfs_full",
-          // r19: the undirected (main + mirror) variant of the same
-          "bprune_varpath_both_pruned", "bprune_varpath_both_full",
-          "bprune_bfs_both_pruned", "bprune_bfs_both_full",
-          // r19: big-k hierarchical IVF only exists past the 10K draw
-          "e08_hier_bigk",
-          // r19: the mirror-served reverse hop is a read-volume story
-          "mirror_revhop_swapped", "mirror_revhop_full",
-          // r20: the join-seeded (runtime-key) variant rides the same tiers
-          "mirror_dpp_seeded_pruned", "mirror_dpp_seeded_full")
-          .contains(n)
-      }
-
-    // SPARK_GRAFT_PROBE_ONLY=gql13,e07 — reconciliation loop for a single
-    // contested probe row (same warm-up and min-of-two, no full-sweep wait)
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val probesRun = probes.filter { case (n, _) =>
-      only.forall(os => os.contains(n) || os.exists(n.startsWith)) }
-
-    // warm the JVM/codegen once so the first measured pair isn't paying
-    // session startup
-    SparkEntry.queries("q01_agg_groupby")(spark, sfDir).count()
-
-    def time(fn: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = fn
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-
-    // Per-probe absolute-load calibration (Bench's round-15 protocol,
-    // extended to the sweeps in r17): the e03_pair_build investigation
-    // showed a probe row can inflate several-fold from transient context
-    // (external load, or the sweep's own JVM having just built a tier)
-    // and the sweep had no way to say so. Each row now carries the CPU
-    // probe reading taken right before its measured passes, vs the
-    // committed quiet constant — a contested cross-round move checks its
-    // own machine state first. >1.2x spikes are waited out like Bench.
-    probesRun.foreach { case (name, q) =>
-      val cal = Bench.cpuGate(cpus, "probe")
-      // min-of-two per tier, task stats from the WARM big-tier pass
-      // (Bench's convention): the first 10× run pays cold page-cache +
-      // JIT for ~600 MB it has never touched, which round-13 diagnosis
-      // showed masquerading as stage skew (gql02 scan max/med 1.65 cold
-      // vs 1.24 warm, same data) — the probe grades the plan's scaling,
-      // not the disk cache's state
-      def once(dir: String): (Double, Long) = time(q(spark, dir).count())
-      val (tb1, nBase) = once(sfDir)
-      val (tb2, _) = once(sfDir)
-      val tBase = math.min(tb1, tb2)
-      val (tCold, nBig) = once(outDir)
-      // the warm pass's own task stats: a straggler cold-pass event
-      // counted here would be the exact cold-cache artifact the warm
-      // pass exists to exclude
-      val ((tWarm, _), stats) =
-        graft.obs.ExecStats.during(spark.sparkContext)(once(outDir))
-      val tBig = math.min(tCold, tWarm)
-      val heavy = stats.heaviestStage
-      val plan = q(spark, outDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val cartesian = plan.contains("CartesianProduct")
-      // SPARK_GRAFT_PROBE_EXPLAIN=1: dump the big-tier physical plan per
-      // probe (plan-shape attribution for contested cross-round moves)
-      if (sys.env.contains("SPARK_GRAFT_PROBE_EXPLAIN"))
-        println(s"=== PLAN $name ===\n$plan\n=== END $name ===")
-      val ratio = tBig / math.max(tBase, 1e-9)
-      println(f"""{"query":"$name","t_sf01":$tBase%.2f,"rows_sf01":$nBase,""" +
-        f""""t_${nCopies}x":$tBig%.2f,"t_${nCopies}x_cold":$tCold%.2f,""" +
-        f""""rows_${nCopies}x":$nBig,""" +
-        f""""ratio":$ratio%.2f,"stages":${stats.stages},""" +
-        f""""heaviest_stage_tasks":${heavy.n},""" +
-        f""""med_task_ms":${heavy.medMs},"max_task_ms":${heavy.maxMs},""" +
-        f""""skew":${heavy.skew}%.2f,"read_rows":${stats.readRows},""" +
-        f""""cal":$cal%.3f,"cal0":${Bench.CalibrationQuiet}%.2f,""" +
-        s""""cartesian":$cartesian}""")
-    }
-    spark.stop()
+    val spark = LocalSpark(LocalSpark.cpus(32), "ERROR")
+    try buildScaled(spark, args(0), args(1), args(2).toInt)
+    finally spark.stop()
   }
 }

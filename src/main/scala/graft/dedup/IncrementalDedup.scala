@@ -278,12 +278,7 @@ object IncrementalDedup {
   }
 
   private def rmrf(d: Path): Unit =
-    if (Files.exists(d)) {
-      import scala.jdk.CollectionConverters._
-      val w = Files.walk(d) // closed: fd-leak class (ADVICE r16)
-      val all = try w.iterator.asScala.toSeq finally w.close()
-      all.reverse.foreach(Files.delete)
-    }
+    if (Files.exists(d)) org.apache.commons.io.FileUtils.forceDelete(d.toFile)
 
   private def deserializeBloom(bytes: Array[Byte]): org.apache.spark.util.sketch.BloomFilter =
     org.apache.spark.util.sketch.BloomFilter.readFrom(

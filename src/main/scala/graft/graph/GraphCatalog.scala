@@ -2,6 +2,7 @@ package graft.graph
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Multi-graph catalog over a warehouse directory.
@@ -612,11 +613,7 @@ final class GraphCatalog(spark: SparkSession, warehouse: String) {
   }
 
   private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val w = Files.walk(p) // closed: same handle-leak class as Files.list
-      val all = try w.iterator.asScala.toSeq finally w.close()
-      all.reverse.foreach(Files.delete)
-    }
+    if (Files.exists(p)) FileUtils.forceDelete(p.toFile)
 
   // ---- graph indexes (ast.rs:1707-1787 IndexStatement): the Spark-native
   // index is a CLUSTERED LAYOUT — the persisted dataset range-partitioned
@@ -1395,9 +1392,9 @@ object GraphCatalog {
     * `write:<dataset>:<bucket_scoped|full>`; `link_clean` for the
     * hard-link pass, `commit` for the pointer write. Diagnostic
     * single-slot (same contract as PropertyGraph.lastPathPrune):
-    * ScaleProbe's dml_save rows and Evidence's stats line print it so a
-    * warehouse-write regression names its stage; BucketedIndexSpec and
-    * MirrorPruneSpec assert its stage names.
+    * Evidence's stats line prints it so a warehouse-write regression
+    * names its stage; BucketedIndexSpec and MirrorPruneSpec assert its
+    * stage names.
     */
   @volatile var lastSaveStages: Seq[(String, Double)] = Seq.empty
 

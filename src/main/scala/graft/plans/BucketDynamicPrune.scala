@@ -55,8 +55,8 @@ import org.apache.spark.sql.types.{DoubleType, NumericType, StringType}
   */
 object BucketDynamicPrune extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Toggle for A/B measurement (ScaleProbe, and Evidence's
-    * `@-BucketDynamicPrune` items) and tests (BucketPrune.enabled gates
+  /** Toggle for A/B measurement (Evidence's `@-BucketDynamicPrune`
+    * items, at any data tier) and tests (BucketPrune.enabled gates
     * BOTH rules off — this one additionally on its own). */
   @volatile var enabled: Boolean = true
 

@@ -84,8 +84,8 @@ object BucketPrune extends Rule[LogicalPlan] with PredicateHelper {
   private val registry =
     scala.collection.concurrent.TrieMap.empty[String, Spec]
 
-  /** Pruning toggle for A/B measurement (ScaleProbe, and Evidence's
-    * `@-BucketPrune` items) and spec tests. */
+  /** Pruning toggle for A/B measurement (Evidence's `@-BucketPrune`
+    * items, at any data tier) and spec tests. */
   @volatile var enabled: Boolean = true
 
   def register(dir: String, spec: Spec): Unit =

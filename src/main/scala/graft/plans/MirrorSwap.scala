@@ -39,7 +39,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   */
 object MirrorSwap extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** A/B toggle (ScaleProbe, Evidence's `@-MirrorSwap` items, specs). */
+  /** A/B toggle (Evidence's `@-MirrorSwap` items at any data tier,
+    * specs). */
   @volatile var enabled: Boolean = true
 
   override def apply(plan: LogicalPlan): LogicalPlan =

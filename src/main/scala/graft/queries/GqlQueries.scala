@@ -239,11 +239,11 @@ object GqlQueries {
     }),
 
     // catalog + registry listings (system_procedures.rs:60-91) through
-    // the driver gate: a dedicated warehouse makes gql.list_schemas /
+    // the Verify gate: a fresh warehouse per call makes gql.list_schemas /
     // list_graphs deterministic; the function registry row pins a
     // stable subset of gql.list_functions
     "gql23_catalog_listing" -> ((s: SparkSession, d: String) => {
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-wh-listing")
+      val gls = GraphLiteSpark.open(s, LocalSpark.scratchDir("listing").toString)
       gls.catalog.createSchema("alpha")
       gls.catalog.createSchema("beta")
       val g = TpchGraph.build(s, d)
@@ -272,10 +272,8 @@ object GqlQueries {
     // aren't oracle-expressible)
     "gql24_security" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions.{col, lit}
-      val gls = GraphLiteSpark.open(s, "/tmp/graft-wh-security")
+      val gls = GraphLiteSpark.open(s, LocalSpark.scratchDir("security").toString)
       val admin = gls.session("admin")
-      // every step is idempotent (create/grant no-op on replay), so the
-      // row is deterministic across warehouse reuse
       admin.execute("CREATE USER IF NOT EXISTS alice")
       admin.execute("CREATE USER IF NOT EXISTS bob")
       admin.execute("CREATE USER IF NOT EXISTS carol IDENTIFIED BY 's3cret'")

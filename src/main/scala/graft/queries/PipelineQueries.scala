@@ -477,7 +477,8 @@ object PipelineQueries {
       // reads the per-dataset stored pair graph (one LSH build per
       // corpus snapshot, consumers fan out from parquet — the same
       // production shape as e03/e07's cosine graph); the build stage is
-      // probed separately (ScaleProbe d11_pair_build)
+      // measured separately (the d11_pair_build scale shape,
+      // ScaleProbe.shapes)
       docPairGraphCached(s, d).orderBy($"id_a", $"id_b")
     }),
 

@@ -40,7 +40,8 @@ class EvidenceSpec extends AnyFunSuite with TempDirs {
     assert(out.toFile.list().length == items.size)
     val texts = files.map(Files.readString)
     val stats = ("stats: wall [\\d.]+ s, jobs \\d+, stages \\d+, tasks \\d+, " +
-      "task ms median \\d+ max \\d+, input rows \\d+, save stages: .*commit=").r
+      "task ms median \\d+ max \\d+, heaviest stage tasks \\d+ median \\d+ " +
+      "max \\d+, input rows \\d+, save stages: .*commit=").r
     texts.foreach { t =>
       assert(formatted(t).contains("== Physical Plan =="), t)
       assert(t.contains("AdaptiveSparkPlan isFinalPlan=true"), t)
